@@ -156,8 +156,8 @@ def _fresh_jvm_recheck(repo_dir: str, sf_dir: str,
                        names: list[str]) -> dict[str, float]:
     """min-of-3 per named query in ONE fresh JVM (new driver, new
     executors, new codegen caches — nothing shared with the main
-    session), warmed the same way as the main pass. The session memos
-    are reset before every timed run (as the main loop does per pass),
+    session), warmed the same way as the main pass. The session registry
+    is released before every timed run (as the main loop does per pass),
     so a rechecked train-dependent query is never timed against the
     sf0.001 warmup's trained state."""
     import subprocess
@@ -170,8 +170,7 @@ def _fresh_jvm_recheck(repo_dir: str, sf_dir: str,
         f"names = {names!r}\n"
         f"sf_dir = {sf_dir!r}\n"
         "from bioio_spark.queries import REGISTRY\n"
-        "from bioio_spark.session import get_session\n"
-        "from bench import _reset_session_memos\n"
+        "from bioio_spark.session import get_session, release\n"
         "spark = get_session('bioio_spark_bench_recheck')\n"
         "warm = '/root/testdata/sf0.001'\n"
         "out = {}\n"
@@ -185,7 +184,7 @@ def _fresh_jvm_recheck(repo_dir: str, sf_dir: str,
         "    best = None\n"
         "    try:\n"
         "        for _ in range(3):\n"
-        "            _reset_session_memos(spark)\n"
+        "            release(spark)\n"
         "            t0 = time.perf_counter()\n"
         "            (REGISTRY[name].fn(spark, sf_dir)\n"
         "             .write.format('noop').mode('overwrite').save())\n"
@@ -231,54 +230,13 @@ def _fresh_jvm_recheck(repo_dir: str, sf_dir: str,
     return out
 
 
-def _reset_session_memos(spark) -> None:
-    """Release the session-lifetime trained-state memos (round 14, the
-    r13 verdict's What's-wrong #3): the IVF/PQ index cache
-    (similarity._train_ivf and friends, including the persisted
-    _assigned_frame) and the BPE merge cache would otherwise carry
-    pass-1 training into passes 2-3, so min-of-3 would time a
-    partially pre-trained query. Cleared at the START of every timed
-    pass, each pass recomputes all training from the parquet inputs;
-    shared-index semantics across queries WITHIN one pass (l3c trains,
-    l3d/l12/l12b reuse) are the library's declared behavior and are
-    unchanged."""
-    try:
-        d = spark.__dict__
-    except Exception:
-        d = {}
-    for v in d.pop("_bioio_ivf_cache", {}).values():
-        if hasattr(v, "unpersist"):
-            try:
-                v.unpersist()
-            except Exception:
-                pass
-    for entry in d.pop("_bioio_bpe_cache", {}).values():
-        for df in entry[2]:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    try:
-        from bioio_spark.functions import bpe as _bpe
-        for sess in _bpe._BPE_CACHE.values():
-            for entry in sess.values():
-                for df in entry[2]:
-                    try:
-                        df.unpersist()
-                    except Exception:
-                        pass
-        _bpe._BPE_CACHE.clear()
-    except Exception:
-        pass
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     loadavg_before = _read_loadavg()
 
     from bioio_spark.queries import REGISTRY
-    from bioio_spark.session import get_session
+    from bioio_spark.session import get_session, release
 
     bench_queries = sorted(REGISTRY)
 
@@ -321,7 +279,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     for _pass in range(3):
-        _reset_session_memos(spark)
+        # every pass starts from an empty session registry (trained
+        # indexes, memoized frames, held blocks), so min-of-3 never times
+        # a query against the previous pass's training; sharing WITHIN a
+        # pass (l3c trains, l3d/l12/l12b reuse) is unchanged
+        release(spark)
         for name in bench_queries:
             if name in errors:
                 continue

@@ -34,9 +34,9 @@ never the raw corpus. The corpus is scanned exactly once, in round 0
 ``tests/test_intensity.py::test_bpe_scans_corpus_once``); at a real
 30k-merge vocab each round stays one vocab-sized cached pass instead
 of the O(rounds²) re-derivation the unpersisted chain would cost.
-Memory hygiene is the pagerank release-registry pattern
-(``functions/clusters.py``): each NEW training releases every frame a
-previous invocation pinned, and results are memoized per
+Memory hygiene goes through the session registry (``session.memo``,
+namespace ``"bpe"``): each NEW training releases every frame a
+previous training pinned, and results are memoized per
 ``(cache_key, n_merges)`` so the l13/l13b pair trains once per
 session, not once per query.
 """
@@ -46,22 +46,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bioio_spark import session
+
 N_MERGES = 16
 CHECKPOINT_EVERY = 8
 WORD_RE = "^[a-z0-9]+$"
-
-# fallback registry for sessions whose __dict__ is unavailable
-# (connect-style proxies), keyed by session id — mirrors
-# _PAGERANK_PERSISTS in functions/clusters.py
-_BPE_CACHE: dict = {}
-
-
-def _session_cache(spark) -> dict:
-    try:
-        return spark.__dict__.setdefault("_bioio_bpe_cache", {})
-    except Exception:
-        return _BPE_CACHE.setdefault(id(spark), {})
-
 
 def _word_freqs(documents: DataFrame) -> DataFrame:
     word = F.explode(
@@ -96,24 +85,22 @@ def _run_merges(documents: DataFrame, n_merges: int,
     scanned once, in round 0. Every CHECKPOINT_EVERY rounds the frame
     is localCheckpoint(eager=False)-ed so lineage depth stays bounded
     at a real 30k-merge vocab. Results are memoized per
-    (cache_key, n_merges); a new training releases all frames earlier
-    invocations pinned (the pagerank release-registry pattern)."""
-    spark = documents.sparkSession
-    cache = _session_cache(spark)
+    (cache_key, n_merges) with session.memo (namespace "bpe"); a new
+    training releases all frames earlier trainings pinned."""
+    # an anonymous training still registers (under a key nothing can
+    # hit), so the next training releases its frames
     key = (cache_key, n_merges) if cache_key is not None \
         else ("anon", object())
-    if cache_key is not None and key in cache:
-        cur, merges, _held = cache[key]
-        return cur, merges
-    # a NEW training releases every other invocation's pinned frames —
+    cur, merges, _held = session.memo(
+        documents.sparkSession, "bpe", key,
+        lambda: _train_merges(documents, n_merges))
+    return cur, merges
+
+
+def _train_merges(documents: DataFrame, n_merges: int):
+    # a NEW training releases every other training's pinned frames —
     # the session holds at most one training's cache blocks
-    for other in [k for k in list(cache) if k != key]:
-        _cur, _m, held = cache.pop(other)
-        for old_df in held:
-            try:
-                old_df.unpersist()
-            except Exception:
-                pass
+    session.release(documents.sparkSession, "bpe")
     wf = _word_freqs(documents)
     seq0 = F.trim(F.regexp_replace("word", "(.)", "$1 "))
     cur = wf.withColumn("seq", seq0).persist()
@@ -146,8 +133,7 @@ def _run_merges(documents: DataFrame, n_merges: int,
         else:
             cur = cur.persist()
         held.append(cur)
-    cache[key] = (cur, merges, held)
-    return cur, merges
+    return cur, merges, held
 
 
 def bpe_vocab(documents: DataFrame, n_merges: int = N_MERGES,

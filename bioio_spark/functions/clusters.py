@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bioio_spark import session
+
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", max_iter: int = 25,
@@ -152,8 +154,6 @@ def dedup_clusters_oracle(pairs_cte: str) -> str:
 
 # -- G2: PageRank (integer fixed-point, Pregel-on-DataFrame) -----------------
 
-_PAGERANK_PERSISTS: dict = {}
-
 PR_SCALE = 1_000_000            # decimal fixed point
 PR_DAMP_PCT = 85                # damping factor as integer percent
 PR_ITERS = 3
@@ -183,24 +183,10 @@ def pagerank(edges: DataFrame, n_iters: int = PR_ITERS,
     # checkpoint the ranks table between rounds to cut lineage).
     # Persists are LAZY (one job computes the whole chain with cache
     # reuse — an eager per-round count() measured 8x slower at sf0.1);
-    # memory hygiene comes from the session-level release registry:
-    # each invocation frees the frames the PREVIOUS one pinned, so a
-    # long-lived session holds at most one invocation's blocks.
-    spark = edges.sparkSession
-    try:
-        held = spark.__dict__.setdefault("_bioio_pagerank_persists",
-                                         [])
-    except Exception:
-        # sessions whose __dict__ is unavailable (connect-style
-        # proxies) fall back to a module-level registry keyed by the
-        # session id, so release still happens across invocations
-        held = _PAGERANK_PERSISTS.setdefault(id(spark), [])
-    for old_df in held:
-        try:
-            old_df.unpersist()
-        except Exception:
-            pass
-    held.clear()
+    # memory hygiene comes from session.hold: each invocation frees the
+    # frames the PREVIOUS one pinned, so a long-lived session holds at
+    # most one invocation's blocks.
+    held = session.hold(edges.sparkSession, "pagerank")
     e = edges.select(F.col(src).alias("src"),
                      F.col(dst).alias("dst")).distinct().persist()
     nodes = (e.select(F.col("src").alias("node"))

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bioio_spark import session
 from bioio_spark.functions.hashing import (
     MINHASH_A,
     MINHASH_B,
@@ -51,36 +52,6 @@ _WS = r"\s+"
 import logging
 
 log = logging.getLogger(__name__)
-
-# module-level fallback registry for sessions whose __dict__ is unavailable
-# (connect-style proxies) — weak-keyed on the session so entries (and the
-# DataFrame lineage their held-lists pin) die with the session, and a
-# recycled id() can never hand a stale held-list to an unrelated session
-import weakref
-
-_HELD_FALLBACK: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def swap_held(spark, tag: str) -> list:
-    """Session-level persist release registry (the pagerank pattern,
-    clusters.py:186): unpersist every frame the PREVIOUS invocation of
-    the operator tagged `tag` pinned, and return the (now empty) list the
-    CURRENT invocation appends its own persisted frames to. A long-lived
-    session thus holds at most one invocation's cache blocks per tag."""
-    try:
-        held = spark.__dict__.setdefault(f"_bioio_held_{tag}", [])
-    except Exception:
-        try:
-            held = _HELD_FALLBACK.setdefault(spark, {}).setdefault(tag, [])
-        except TypeError:  # session not weakref-able: degrade to no-op list
-            held = []
-    for old_df in held:
-        try:
-            old_df.unpersist()
-        except Exception:
-            pass
-    held.clear()
-    return held
 
 
 # -- L1 exact dedup --------------------------------------------------------
@@ -178,20 +149,17 @@ def _dedup_reps(documents: DataFrame, *group_cols: str) -> DataFrame:
     The deduped corpus is a MULTI-CONSUMER materialization point (l2
     banding, l2c jaccard blocks, l6 cluster resolution all start from it),
     so the frame is persisted MEMORY_AND_DISK and memoized per
-    (input frame, group_cols) on the session — each consumer reads the
+    (input frame, group_cols) with session.memo — each consumer reads the
     materialized representatives instead of re-running the collapse. At
     100 TB this is the standard "write the deduped corpus once" stage of a
     training-data pipeline (disk-backed, spill-safe)."""
-    spark = documents.sparkSession
-    try:
-        cache = spark.__dict__.setdefault("_bioio_reps_cache", {})
-    except Exception:
-        cache = {}
-    key = (id(documents), group_cols)
-    hit = cache.get(key)
-    if hit is not None and hit[0] is documents:
-        return hit[1]
+    # a DataFrame hashes by identity, so the key pins this input frame
+    return session.memo(documents.sparkSession, "reps",
+                        (documents, group_cols),
+                        lambda: _collapse(documents, group_cols))
 
+
+def _collapse(documents: DataFrame, group_cols: tuple) -> DataFrame:
     keep = (documents
             .groupBy(*group_cols, F.md5("text").alias("_h"))
             .agg(F.min("doc_id").alias("doc_id"))
@@ -199,9 +167,7 @@ def _dedup_reps(documents: DataFrame, *group_cols: str) -> DataFrame:
     reps = documents.join(keep, "doc_id").select(
         "doc_id", *group_cols, "text")
     from pyspark import StorageLevel
-    reps = reps.persist(StorageLevel.MEMORY_AND_DISK)
-    cache[key] = (documents, reps)
-    return reps
+    return reps.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _bucket_pairs(df: DataFrame, bucket_cols: list[str], id_col: str,
@@ -863,13 +829,13 @@ def incremental_dedup(documents: DataFrame,
     a boilerplate-flooded ingest day contributes one bucket member per
     distinct text, not k — and the band artifacts are persisted (both
     gates consume them) with release via the session registry
-    (swap_held). Returns (doc_id, hit_exact, hit_index, hit_delta,
+    (session.hold). Returns (doc_id, hit_exact, hit_index, hit_delta,
     keep) for every delta doc by doc_id."""
     from pyspark import StorageLevel
 
     idx = documents.filter(F.col("doc_id") % delta_mod != 0)
     delta = documents.filter(F.col("doc_id") % delta_mod == 0)
-    held = swap_held(documents.sparkSession, "l2g")
+    held = session.hold(documents.sparkSession, "l2g")
     delta_md5 = (delta.select("doc_id", F.md5("text").alias("h"))
                  .persist(StorageLevel.MEMORY_AND_DISK))
     held.append(delta_md5)

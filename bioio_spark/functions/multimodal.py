@@ -454,9 +454,10 @@ def _banded_near_dups(h: DataFrame, max_hamming: int,
       Released by the next invocation via the session registry.
     Hamming is then evaluated only on candidates via two hash-keyed
     lookups."""
-    from bioio_spark.functions.dedup import _bucket_pairs, swap_held
+    from bioio_spark.functions.dedup import _bucket_pairs
+    from bioio_spark.session import hold
 
-    held = swap_held(h.sparkSession, "media_neardup")
+    held = hold(h.sparkSession, "media_neardup")
     h = h.persist()
     held.append(h)
     bands = F.array(*[
@@ -879,10 +880,11 @@ def crop_near_dups(media: DataFrame, codec=FakeCodec,
     the cap bounds to O(max_width^2) pairs), then best-offset aligned
     hamming with the (min_overlap, max_milli) gate. Returns
     (media_id_a, media_id_b, dy, dx, n_overlap, ham_milli), a < b."""
-    from bioio_spark.functions.dedup import _bucket_pairs, swap_held
+    from bioio_spark.functions.dedup import _bucket_pairs
+    from bioio_spark.session import hold
 
     th = crop_tile_hashes(media, codec, tile)
-    held = swap_held(th.sparkSession, "crop_neardup")
+    held = hold(th.sparkSession, "crop_neardup")
     th = th.persist()
     held.append(th)
     lf = th.select("media_id", "v").distinct()
@@ -1093,9 +1095,10 @@ def video_near_dups(media: DataFrame, codec=FakeCodec,
     oracle-mirrored — black-leader frames are the degenerate corpus
     here), one fidx-aligned join bounded by candidate count x frames.
     Returns (media_id_a, media_id_b, n_frames, hamming_sum), a < b."""
-    from bioio_spark.functions.dedup import _bucket_pairs, swap_held
+    from bioio_spark.functions.dedup import _bucket_pairs
+    from bioio_spark.session import hold
 
-    held = swap_held(media.sparkSession, "video_neardup")
+    held = hold(media.sparkSession, "video_neardup")
     fp_fn = fingerprint if fingerprint is not None else video_fingerprint
     fp = fp_fn(media, codec).persist()
     held.append(fp)

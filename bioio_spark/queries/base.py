@@ -86,42 +86,39 @@ def load(spark: SparkSession, sf_dir: str, *names: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from bioio_spark.session import ensure_engine_conf
+    from bioio_spark.session import ensure_engine_conf, memo
 
     ensure_engine_conf(spark)
+
+    def read(path: str, n: str):
+        df = spark.read.parquet(path)
+        if n == "events":
+            dt = df.schema["ts"].dataType
+            if isinstance(dt, T.LongType):
+                df = df.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000")))
+            elif isinstance(dt, T.TimestampNTZType):
+                # session tz is UTC, so NTZ -> TIMESTAMP is an identity
+                # relabel; downstream unix_micros/window code expects the
+                # tz-aware type (same as the nanos-long vintage produced)
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+            if not isinstance(df.schema["ts"].dataType, T.TimestampType):
+                raise TypeError(
+                    f"events.ts arrived as {df.schema['ts'].dataType}; "
+                    "expected a nanos-long, TIMESTAMP_NTZ, or TIMESTAMP "
+                    "vintage — unknown fixture layout would silently "
+                    "skew window/watermark queries")
+        return _fan_out(spark, df, n)
+
     # DataFrames are immutable logical plans, so the loaded (and fan-out
-    # adjusted) frame is cached per (session, path): repeat loads skip the
-    # schema read AND the rdd.getNumPartitions() probe in _fan_out, which
-    # forces an RDD conversion on the driver per call.
-    try:
-        cache = spark.__dict__.setdefault("_bioio_load_cache", {})
-    except Exception:
-        cache = {}
+    # adjusted) frame is memoized per (session, path) with session.memo:
+    # repeat loads skip the schema read AND the rdd.getNumPartitions()
+    # probe in _fan_out, which forces an RDD conversion on the driver per
+    # call.
     dfs = []
     for n in names:
         path = f"{sf_dir}/{n}.parquet"
-        df = cache.get(path)
-        if df is None:
-            df = spark.read.parquet(path)
-            if n == "events":
-                dt = df.schema["ts"].dataType
-                if isinstance(dt, T.LongType):
-                    df = df.withColumn(
-                        "ts", F.timestamp_micros(F.expr("ts div 1000")))
-                elif isinstance(dt, T.TimestampNTZType):
-                    # session tz is UTC, so NTZ -> TIMESTAMP is an identity
-                    # relabel; downstream unix_micros/window code expects the
-                    # tz-aware type (same as the nanos-long vintage produced)
-                    df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-                if not isinstance(df.schema["ts"].dataType, T.TimestampType):
-                    raise TypeError(
-                        f"events.ts arrived as {df.schema['ts'].dataType}; "
-                        "expected a nanos-long, TIMESTAMP_NTZ, or TIMESTAMP "
-                        "vintage — unknown fixture layout would silently "
-                        "skew window/watermark queries")
-            df = _fan_out(spark, df, n)
-            cache[path] = df
-        dfs.append(df)
+        dfs.append(memo(spark, "load", path, lambda: read(path, n)))
     return dfs[0] if len(dfs) == 1 else tuple(dfs)
 
 

@@ -1298,8 +1298,8 @@ def g3_triangle_count(spark, sf_dir):
     h = h32_col(F.concat(F.col("a").cast("string"), F.lit(":"),
                          F.col("b").cast("string")))
     edges = pairs.filter(h % _G3_SAMPLE_MOD == 0)
-    from bioio_spark.functions.dedup import swap_held
-    held = swap_held(spark, "g3")
+    from bioio_spark.session import hold
+    held = hold(spark, "g3")
     edges = edges.persist()
     held.append(edges)
     deg = (edges.select(F.col("a").alias("v"))
@@ -1765,9 +1765,9 @@ def _l22_oracle() -> str:
 def l22_minhash_gauge(spark, sf_dir):
     from bioio_spark.functions.dedup import (_dedup_reps, _shingled,
                                              minhash_candidate_pairs,
-                                             minhash_signatures,
-                                             swap_held)
+                                             minhash_signatures)
     from bioio_spark.functions.hashing import NUM_MINHASH
+    from bioio_spark.session import hold
 
     docs = load(spark, sf_dir, "documents")
     reps = _dedup_reps(docs)
@@ -1776,9 +1776,9 @@ def l22_minhash_gauge(spark, sf_dir):
     # (both inter sides, na, nb) — without a materialization point each
     # consumer re-runs the shingle/minhash pipeline from the persisted
     # reps (6 evaluations total, guide §5 caching-for-reuse; measured
-    # ~14% warm / 3x cold). swap_held unpersists the previous call's
+    # ~14% warm / 3x cold). session.hold unpersists the previous call's
     # frames, the g3/g5 discipline.
-    held = swap_held(spark, "l22")
+    held = hold(spark, "l22")
     sig = minhash_signatures(reps).persist()
     held.append(sig)
     sa = sig.select(F.col("doc_id").alias("doc_a"),
@@ -2407,8 +2407,9 @@ def _g4_oracle() -> str:
 )
 def g4_label_propagation(spark, sf_dir):
     from bioio_spark.functions.dedup import (MAX_BUCKET_WIDTH,
-                                             _bucket_pairs, swap_held)
+                                             _bucket_pairs)
     from bioio_spark.functions.hashing import h32_col
+    from bioio_spark.session import hold
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey",
                                                 "l_partkey")
@@ -2424,7 +2425,7 @@ def g4_label_propagation(spark, sf_dir):
     h = h32_col(F.concat(F.col("a").cast("string"), F.lit(":"),
                          F.col("b").cast("string")))
     edges = pairs.filter(h % _G3_SAMPLE_MOD == 0)
-    held = swap_held(spark, "g4")
+    held = hold(spark, "g4")
     und = (edges.select(F.col("a").alias("src"),
                         F.col("b").alias("dst"))
            .unionAll(edges.select(F.col("b").alias("src"),
@@ -2482,8 +2483,9 @@ def g4b_lpa_convergence(spark, sf_dir):
     from functools import reduce
 
     from bioio_spark.functions.dedup import (MAX_BUCKET_WIDTH,
-                                             _bucket_pairs, swap_held)
+                                             _bucket_pairs)
     from bioio_spark.functions.hashing import h32_col
+    from bioio_spark.session import hold
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey",
                                                 "l_partkey")
@@ -2499,7 +2501,7 @@ def g4b_lpa_convergence(spark, sf_dir):
     h = h32_col(F.concat(F.col("a").cast("string"), F.lit(":"),
                          F.col("b").cast("string")))
     edges = pairs.filter(h % _G3_SAMPLE_MOD == 0)
-    held = swap_held(spark, "g4b")
+    held = hold(spark, "g4b")
     # r14 (the g5 peel's two devices): the edge spine is
     # localCheckpoint-ed so the LSH pair-generation subtree appears in
     # NO round's plan, and the per-round diff aggregates are fused into
@@ -2616,8 +2618,9 @@ def g5_kcore_peel(spark, sf_dir):
     from functools import reduce
 
     from bioio_spark.functions.dedup import (MAX_BUCKET_WIDTH,
-                                             _bucket_pairs, swap_held)
+                                             _bucket_pairs)
     from bioio_spark.functions.hashing import h32_col
+    from bioio_spark.session import hold
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey",
                                                 "l_partkey")
@@ -2633,7 +2636,7 @@ def g5_kcore_peel(spark, sf_dir):
     h = h32_col(F.concat(F.col("a").cast("string"), F.lit(":"),
                          F.col("b").cast("string")))
     edges = pairs.filter(h % _G3_SAMPLE_MOD == 0)
-    held = swap_held(spark, "g5")
+    held = hold(spark, "g5")
     # Lineage truncation (r14, the CC family's localCheckpoint device,
     # guide §3.3 "materialise an intermediate to truncate the plan"):
     # nxt_r's logical tree contains cur's THREE times (two join sides +
@@ -2756,8 +2759,9 @@ G6_LINK_PREDICTION_ORACLE = _g6_oracle()
 )
 def g6_link_prediction(spark, sf_dir):
     from bioio_spark.functions.dedup import (MAX_BUCKET_WIDTH,
-                                             _bucket_pairs, swap_held)
+                                             _bucket_pairs)
     from bioio_spark.functions.hashing import h32_col
+    from bioio_spark.session import hold
 
     li = load(spark, sf_dir, "lineitem").select("l_orderkey",
                                                 "l_partkey")
@@ -2773,7 +2777,7 @@ def g6_link_prediction(spark, sf_dir):
     h = h32_col(F.concat(F.col("a").cast("string"), F.lit(":"),
                          F.col("b").cast("string")))
     edges = pairs.filter(h % _G3_SAMPLE_MOD == 0).persist()
-    swap_held(spark, "g6").append(edges)
+    hold(spark, "g6", edges)
     return common_neighbor_topk(edges)
 
 
@@ -2864,8 +2868,8 @@ def _l28_oracle() -> str:
         "libm-free so both engines hash-match",
 )
 def l28_dsir_weights(spark, sf_dir):
-    from bioio_spark.functions.dedup import swap_held
     from bioio_spark.functions.hashing import h32_col
+    from bioio_spark.session import hold
 
     docs = load(spark, sf_dir, "documents")
     toks = (docs.select(
@@ -2875,7 +2879,7 @@ def l28_dsir_weights(spark, sf_dir):
                 (h32_col(F.concat(F.lit("dsir:"), F.col("tok")))
                  % _L28_BUCKETS).cast("int").alias("b"))
         .persist())
-    swap_held(spark, "l28").append(toks)
+    hold(spark, "l28", toks)
     src = toks.groupBy("b").agg(F.count(F.lit(1)).alias("s"))
     tgt = (toks.filter(F.col("lang") == _L28_TARGET_LANG)
            .groupBy("b").agg(F.count(F.lit(1)).alias("t")))

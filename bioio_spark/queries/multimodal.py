@@ -673,10 +673,11 @@ def _banding_recall(spark, h, n_bands: int, tag: str):
     capped banded candidate set, reported per threshold as integer
     permille. Parameterized by band count exactly like
     _banded_near_dups, so one gauge definition serves every key width."""
-    from bioio_spark.functions.dedup import _bucket_pairs, swap_held
+    from bioio_spark.functions.dedup import _bucket_pairs
+    from bioio_spark.session import hold
     from bioio_spark.functions.multimodal import MEDIA_MAX_BUCKET_WIDTH
 
-    held = swap_held(spark, tag)
+    held = hold(spark, tag)
     h = h.persist()
     held.append(h)
     ha = h.select(F.col("media_id").alias("ma"),
@@ -1088,7 +1089,8 @@ def mm_crop_neardup(spark, sf_dir):
         "any-tile-match banding loses (exact for tile-aligned crops)",
 )
 def mm_crop_recall(spark, sf_dir):
-    from bioio_spark.functions.dedup import _bucket_pairs, swap_held
+    from bioio_spark.functions.dedup import _bucket_pairs
+    from bioio_spark.session import hold
     from bioio_spark.functions.multimodal import (AutoCodec,
                                                   CROP_MAX_MILLI,
                                                   MEDIA_MAX_BUCKET_WIDTH,
@@ -1098,7 +1100,7 @@ def mm_crop_recall(spark, sf_dir):
 
     media = synth_crop_twins(spark, _N_MEDIA)
     th = crop_tile_hashes(media, codec=AutoCodec)
-    held = swap_held(spark, "crop_recall")
+    held = hold(spark, "crop_recall")
     th = th.persist()
     held.append(th)
     ids = th.select("media_id").distinct()

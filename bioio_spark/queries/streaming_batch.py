@@ -1615,14 +1615,14 @@ def s16_stream_join_state_gauge(spark, sf_dir):
          .select(F.col("event_id").alias("ce"),
                  F.col("user_id").alias("c_user"),
                  F.col("tus").alias("ct"), F.col("g").alias("gc")))
-    from bioio_spark.functions.dedup import swap_held
+    from bioio_spark.session import hold
     truth = (p.join(c, (F.col("user_id") == F.col("c_user"))
                     & (F.col("ct") >= F.col("pt") - b_us)
                     & (F.col("ct") <= F.col("pt")))
              .select("pe", "ce", "pt", "ct", "gp", "gc",
                      F.greatest("gp", "gc").alias("k"))
              .persist())
-    swap_held(spark, "s16").append(truth)
+    hold(spark, "s16", truth)
     wkb = F.broadcast(wk)
     jt = (truth
           .join(wkb.select(F.col("k").alias("_kp2"),
@@ -2411,9 +2411,9 @@ def s19_stream_dedup_state_gauge(spark, sf_dir):
                 F.least(F.lit(nb - 1),
                         F.col("g1") + F.col("dd")).alias("g"),
                 F.lit(1).alias("is_dup"))))
-    from bioio_spark.functions.dedup import swap_held
+    from bioio_spark.session import hold
     inst = inst.persist()
-    swap_held(spark, "s19").append(inst)
+    hold(spark, "s19", inst)
     bm = inst.groupBy("g").agg(F.max("tus").alias("m"))
     ks = spark.range(nb).select(F.col("id").cast("int").alias("k"))
     wk = (ks.join(F.broadcast(bm), F.col("g") <= F.col("k"))

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults chosen for the local[N] harness; on a real cluster, shuffle
 # partitions are governed by AQE (advisory target) rather than a fixed count.
@@ -79,3 +79,68 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # exotic session proxies may reject attributes; just re-apply
     return spark
+
+
+# -- session-state registry ---------------------------------------------------
+# Everything the library keeps alive across calls on one session — trained
+# indexes, memoized frames, persisted blocks an operator pins until its next
+# call — lives in ONE attribute on the session object, as
+# {namespace: {key: value}}. A sibling session (spark.newSession()) is a
+# different Python object, so it neither sees nor releases these entries.
+
+def _state(spark: SparkSession) -> dict:
+    return spark.__dict__.setdefault("_bioio_state", {})
+
+
+def _frames(value) -> list:
+    """The DataFrames inside a registry value (a frame, or frames nested
+    in tuples/lists); everything else (trained dicts, floats) is inert."""
+    if isinstance(value, DataFrame):
+        return [value]
+    if isinstance(value, (tuple, list)):
+        return [df for v in value for df in _frames(v)]
+    return []
+
+
+def memo(spark: SparkSession, ns: str, key, build):
+    """Return the value memoized under (ns, key) on this session, calling
+    `build()` once to create it. key=None builds without storing."""
+    if key is None:
+        return build()
+    hit = _state(spark).get(ns, {})
+    if key in hit:
+        return hit[key]
+    value = build()
+    # build may itself release(spark, ns), so look the namespace up again
+    _state(spark).setdefault(ns, {})[key] = value
+    return value
+
+
+def hold(spark: SparkSession, tag: str, *dfs: DataFrame) -> list:
+    """Unpersist every frame the previous call under `tag` pinned, then
+    pin `dfs`. Returns the live list, so frames persisted later in the
+    same call can be appended; a session thus holds at most one call's
+    cache blocks per tag. Held frames sit in namespace "hold:<tag>"."""
+    ns = f"hold:{tag}"
+    release(spark, ns)
+    held = list(dfs)
+    _state(spark)[ns] = {tag: held}
+    return held
+
+
+def release(spark: SparkSession, ns: str | None = None) -> None:
+    """Unpersist and drop every registry entry of the session, or only
+    namespace `ns`. An unpersist error propagates."""
+    state = _state(spark)
+    names = list(state) if ns is None else [ns]
+    dropped = [state.pop(n, {}) for n in names]
+    for entries in dropped:
+        for df in _frames(list(entries.values())):
+            df.unpersist()
+
+
+def stats(spark: SparkSession) -> dict:
+    """{namespace: {"entries": n, "frames": [pinned DataFrames]}}."""
+    return {ns: {"entries": len(entries),
+                 "frames": _frames(list(entries.values()))}
+            for ns, entries in _state(spark).items()}

@@ -210,18 +210,19 @@ def test_video_cap_bounds_black_leader_corpus(spark):
 
 def test_media_neardup_fingerprints_persisted_and_released(spark):
     """The fingerprint frame is persisted (one Arrow decode feeds three
-    consumers) and the NEXT invocation releases the previous pin (the
-    pagerank release-registry pattern)."""
+    consumers) and the NEXT invocation releases the previous pin
+    (session.hold)."""
     from bioio_spark.functions.multimodal import image_near_dups
+    from bioio_spark.session import stats
 
     img = np.arange(192).reshape(12, 16) % 251
     df1 = image_near_dups(_media(spark, [_fkc(1, img), _fkc(2, img)]))
     df1.collect()
-    held = spark.__dict__.get("_bioio_held_media_neardup")
+    held = stats(spark)["hold:media_neardup"]["frames"]
     assert held and len(held) == 1
     first = held[0]
     assert first.storageLevel.useMemory or first.storageLevel.useDisk
     image_near_dups(_media(spark, [_fkc(3, img)])).collect()
-    held2 = spark.__dict__.get("_bioio_held_media_neardup")
+    held2 = stats(spark)["hold:media_neardup"]["frames"]
     assert len(held2) == 1 and held2[0] is not first
     assert not first.storageLevel.useMemory  # released

@@ -8,6 +8,7 @@ import json
 import os
 
 import bench
+from bioio_spark.session import hold, memo, release, stats
 
 
 def test_read_loadavg_shape():
@@ -75,29 +76,83 @@ def test_bench_local_schema_has_env_block():
 
 def test_reset_session_memos_releases_trained_state(spark):
     """r14 (verdict #6): between timed passes the bench releases the
-    session-lifetime trained-state memos, so min-of-3 never times a
-    query against the previous pass's training. Pin: a populated
-    IVF/BPE cache is emptied (persisted frames unpersisted) and the
-    next lookup recomputes instead of reusing the old object."""
+    session-lifetime trained-state memos (session.release), so min-of-3
+    never times a query against the previous pass's training. Pin: a
+    populated IVF/BPE memo is emptied (persisted frames unpersisted) and
+    the next lookup recomputes instead of reusing the old object."""
     from pyspark.sql import functions as F
 
-    from bioio_spark.functions import bpe as bpe_mod
-
     marker = spark.range(2).select(F.col("id")).persist()
-    spark.__dict__["_bioio_ivf_cache"] = {
-        ("k", 8, 4): {"0": [0.0]},            # plain trained dict
-        ("assigned", "k", 8, 4): marker,      # persisted frame
-    }
+    memo(spark, "ivf", ("k", 8, 4), lambda: {"0": [0.0]})  # trained dict
+    memo(spark, "ivf", ("assigned", "k", 8, 4), lambda: marker)
     bpe_frame = spark.range(3).persist()
     bpe_frame.count()
-    cache = bpe_mod._session_cache(spark)
-    cache[("corpus", 16)] = (bpe_frame, [(1, "a b", "ab", 2)],
-                             [bpe_frame])
+    memo(spark, "bpe", ("corpus", 16),
+         lambda: (bpe_frame, [(1, "a b", "ab", 2)], [bpe_frame]))
 
-    bench._reset_session_memos(spark)
+    release(spark)
 
-    assert "_bioio_ivf_cache" not in spark.__dict__
-    assert ("corpus", 16) not in bpe_mod._session_cache(spark)
+    assert "ivf" not in stats(spark)
+    assert memo(spark, "bpe", ("corpus", 16), lambda: "rebuilt") == "rebuilt"
     # the persisted frames were actually released
     assert marker.storageLevel.useMemory is False
     assert bpe_frame.storageLevel.useMemory is False
+    release(spark, "bpe")
+
+
+def test_release_unpersists_every_namespace(spark):
+    """release(spark) frees a memo value, a hold tag and a BPE entry."""
+    frames = [spark.range(n).persist() for n in (4, 5, 6)]
+    for df in frames:
+        df.count()
+    memo_df, held_df, bpe_df = frames
+    memo(spark, "test_memo", "k", lambda: memo_df)
+    hold(spark, "test_tag", held_df)
+    memo(spark, "bpe", ("test", 1), lambda: (bpe_df, [], [bpe_df]))
+    st = stats(spark)
+    assert st["test_memo"]["frames"][0] is memo_df
+    assert st["hold:test_tag"]["frames"][0] is held_df
+    assert st["bpe"]["entries"] == 1
+
+    release(spark)
+
+    assert stats(spark) == {}
+    for df in frames:
+        assert df.storageLevel.useMemory is False
+
+
+def test_sibling_session_has_its_own_registry(spark):
+    """A sibling session (spark.newSession()) neither sees nor releases
+    the first session's entries — the registry is per session object,
+    never keyed by a recyclable id()."""
+    sib = spark.newSession()
+    df = spark.range(7).persist()
+    df.count()
+    memo(spark, "test_sib", "k", lambda: df)
+
+    assert "test_sib" not in stats(sib)
+    assert memo(sib, "test_sib", "k", lambda: "own") == "own"
+    release(sib)
+
+    assert stats(spark)["test_sib"]["frames"][0] is df
+    assert df.storageLevel.useMemory is True
+    release(spark, "test_sib")
+    assert df.storageLevel.useMemory is False
+
+
+def test_cache_key_none_stores_nothing(spark):
+    """cache_key=None means "do not memoize": the trainer runs and the
+    session registry gains no entry."""
+    from bioio_spark.functions.similarity import _train_sq
+
+    emb = spark.createDataFrame([(0, [0.0, 1.0]), (1, [2.0, 3.0])],
+                                "vec_id long, e array<double>")
+    release(spark, "ivf")
+    assert _train_sq(emb, sample_mod=1, cache_key=None) == \
+        ([0.0, 1.0], [2.0, 3.0])
+    assert "ivf" not in stats(spark)
+    assert memo(spark, "test_none", None, lambda: 1) == 1
+    assert "test_none" not in stats(spark)
+    _train_sq(emb, sample_mod=1, cache_key="t")
+    assert stats(spark)["ivf"]["entries"] == 1
+    release(spark, "ivf")

@@ -118,7 +118,7 @@ def test_triangle_count_known_graph(spark):
     -> the degree-oriented count must agree with the closed form."""
     import pyspark.sql.functions as F
 
-    from bioio_spark.functions.dedup import swap_held  # noqa: F401
+    from bioio_spark.session import hold  # noqa: F401
     from bioio_spark.queries.llm import g3_triangle_count  # noqa: F401
 
     # replicate the query's counting core on an explicit edge list
@@ -198,12 +198,12 @@ def test_g4b_zero_changes_on_a_converged_graph(spark):
     churn."""
     from pyspark.sql import functions as F
 
-    from bioio_spark.functions.dedup import swap_held
     from bioio_spark.queries.llm import _G4_ROUNDS
+    from bioio_spark.session import hold
 
     tri = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
     edges = spark.createDataFrame(tri, "a long, b long")
-    held = swap_held(spark, "g4b_test")
+    held = hold(spark, "g4b_test")
     und = (edges.select(F.col("a").alias("src"),
                         F.col("b").alias("dst"))
            .unionAll(edges.select(F.col("b").alias("src"),
@@ -260,14 +260,14 @@ def test_g5_kcore_semantics_on_designed_graph(spark):
 
     from pyspark.sql import functions as F
 
-    from bioio_spark.functions.dedup import swap_held
     from bioio_spark.queries.llm import _G5_K, _G5_ROUNDS
+    from bioio_spark.session import hold
 
     # K4 on {1,2,3,4} + path 4-10-11
     e = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
          (4, 10), (10, 11)]
     edges = spark.createDataFrame(e, "a long, b long")
-    held = swap_held(spark, "g5_test")
+    held = hold(spark, "g5_test")
     cur = (edges.select(F.col("a").alias("src"),
                         F.col("b").alias("dst"))
            .unionAll(edges.select(F.col("b").alias("src"),

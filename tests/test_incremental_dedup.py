@@ -110,17 +110,17 @@ def test_identical_shingleless_delta_twins_collapse(spark):
 
 def test_l2g_persists_released_on_next_invocation(spark):
     """ADVICE r9: the persisted delta artifacts must not accumulate
-    across invocations — the session release registry frees the
-    previous pins (the pagerank pattern)."""
+    across invocations — session.hold frees the previous pins."""
     from bioio_spark.functions.dedup import incremental_dedup
+    from bioio_spark.session import stats
 
     rows = [(1, BASE), (10, BASE)]
     incremental_dedup(_docs(spark, rows)).collect()
-    held = spark.__dict__.get("_bioio_held_l2g")
+    held = stats(spark)["hold:l2g"]["frames"]
     assert held and len(held) == 2
     first = list(held)
     incremental_dedup(_docs(spark, rows)).collect()
-    held2 = spark.__dict__.get("_bioio_held_l2g")
+    held2 = stats(spark)["hold:l2g"]["frames"]
     assert len(held2) == 2
     for df in first:
         assert not df.storageLevel.useMemory and \

@@ -229,9 +229,11 @@ def test_l2_dedup_collapse_never_shuffles_text(spark):
     and joins the keeper ids back to the corpus: the dedup shuffle must not
     carry text (old shape: min(text) rode through the aggregate), and the
     shingle pipeline must stay spread on the doc_id hash partitioning."""
-    # fresh frames so the session-level reps cache can't hide the build plan
-    spark.__dict__.pop("_bioio_reps_cache", None)
-    spark.__dict__.pop("_bioio_load_cache", None)
+    from bioio_spark.session import release
+
+    # fresh frames so the session-level reps memo can't hide the build plan
+    release(spark, "reps")
+    release(spark, "load")
     try:
         df = q(spark, "l2_minhash_lsh")
         plan = physical_plan(df)
@@ -240,8 +242,8 @@ def test_l2_dedup_collapse_never_shuffles_text(spark):
         assert "hashpartitioning(doc_id" in plan, \
             "dedup output no longer spread on doc_id"
     finally:
-        spark.__dict__.pop("_bioio_reps_cache", None)
-        spark.__dict__.pop("_bioio_load_cache", None)
+        release(spark, "reps")
+        release(spark, "load")
 
 
 def test_zarr_reader_narrow_decode(spark, tmp_path):

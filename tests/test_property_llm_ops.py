@@ -152,8 +152,8 @@ def test_l28_weights_favor_target_exclusive_tokens(spark):
     target get the minimum smoothing weight — so a doc written purely
     in target vocabulary must outrank a doc of off-target vocabulary,
     regardless of length."""
-    from bioio_spark.functions.dedup import swap_held
     from bioio_spark.queries import REGISTRY
+    from bioio_spark.session import hold  # noqa: F401
 
     spark.createDataFrame(
         [(1, "alpha alpha beta", "en", "s", 16),
