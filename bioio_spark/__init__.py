@@ -24,360 +24,70 @@ from bioio_spark.bio_image import (BioImage, imread, imread_dask,
 __version__ = "0.1.0"
 
 
+# (plugin name, reader module, reader class) in registration order — the
+# order dump_plugins() lists and get_plugins() breaks ties by. Each
+# reader declares its suffixes once, as ``EXTENSIONS``; the directory-
+# probed readers (NDTiff, CellVoyager) and the glob reader declare none.
+_BUILTIN_READERS = (
+    ("bioio-ome-tiff-baseline", "tiff_image", "TiffImageReader"),
+    ("bioio-png-baseline", "png_image", "PngImageReader"),
+    ("bioio-ome-zarr-baseline", "zarr_image", "ZarrImageReader"),
+    ("bioio-jpeg-baseline", "jpeg_image", "JpegImageReader"),
+    ("bioio-nd2-baseline", "nd2_image", "Nd2ImageReader"),
+    ("bioio-lif-baseline", "lif_image", "LifImageReader"),
+    ("bioio-czi-baseline", "czi_image", "CziImageReader"),
+    ("bioio-pnm-baseline", "pnm_image", "PnmImageReader"),
+    ("bioio-gif-baseline", "gif_image", "GifImageReader"),
+    ("bioio-bmp-baseline", "bmp_image", "BmpImageReader"),
+    ("bioio-sldy-baseline", "sldy_image", "SldyImageReader"),
+    ("bioio-dv-baseline", "dv_image", "DvImageReader"),
+    ("bioio-lsm-baseline", "lsm_image", "LsmImageReader"),
+    ("bioio-stk-baseline", "stk_image", "StkImageReader"),
+    ("bioio-dng-baseline", "dng_image", "DngImageReader"),
+    ("bioio-svs-baseline", "svs_image", "SvsImageReader"),
+    ("bioio-scn-baseline", "scn_image", "ScnImageReader"),
+    ("bioio-oif-baseline", "oif_image", "OifImageReader"),
+    ("bioio-oib-baseline", "oib_image", "OibImageReader"),
+    ("bioio-ndpi-baseline", "ndpi_image", "NdpiImageReader"),
+    ("bioio-qptiff-baseline", "qptiff_image", "QptiffImageReader"),
+    ("bioio-ims-baseline", "ims_image", "ImsImageReader"),
+    ("bioio-ndtiff-baseline", "ndtiff_image", "NdtiffImageReader"),
+    ("bioio-dicom-baseline", "dicom_image", "DicomImageReader"),
+    ("bioio-lof-baseline", "lof_image", "LofImageReader"),
+    ("bioio-mrc-baseline", "mrc_image", "MrcImageReader"),
+    ("bioio-cellvoyager-baseline", "cellvoyager_image",
+     "CellVoyagerImageReader"),
+    ("bioio-avi-baseline", "avi_image", "AviImageReader"),
+    ("bioio-mp4-baseline", "mp4_image", "Mp4ImageReader"),
+    ("bioio-mkv-baseline", "mkv_image", "MkvImageReader"),
+    ("bioio-mpeg1-baseline", "mpeg_image", "MpegImageReader"),
+    ("bioio-biorad-pic-baseline", "pic_image", "PicImageReader"),
+    ("bioio-zvi-baseline", "zvi_image", "ZviImageReader"),
+    ("bioio-tiff-glob-baseline", "tiff_glob", "TiffGlobReader"),
+)
+
+
 def _register_builtin_plugins() -> None:
-    """Expose the built-in OME-TIFF reader through the plugin registry so
-    S11/S12 diagnostics (feasibility report, dump) list it alongside any
-    user plugins — the analog of the reference's bioio-ome-tiff entry
-    point (ref README.md:54-80). Routing itself also works without this
-    (built-in tier in bio_image._route), so tests that clear the registry
-    lose only the listing, not the capability."""
+    """Expose the built-in readers through the plugin registry so
+    S11/S12 diagnostics (feasibility report, dump) list them alongside
+    any user plugins — the analog of the reference's bioio-ome-tiff
+    entry point (ref README.md:54-80). Routing itself also works
+    without this (built-in tier in bio_image._route), so tests that
+    clear the registry lose only the listing, not the capability."""
+    from importlib import import_module
+
     from bioio_spark.plugins import (PluginEntry, _REGISTRY,
                                      register_plugin)
-    from bioio_spark.sources.png_image import PngImageReader
-    from bioio_spark.sources.tiff_image import TiffImageReader
 
     if any(e.name.startswith("bioio-") for e in _REGISTRY):
         return  # idempotent: already registered this session
-    register_plugin(PluginEntry(
-        name="bioio-ome-tiff-baseline",
-        reader=TiffImageReader,
-        extensions=[".ome.tiff", ".ome.tif", ".tiles.ome.tif",
-                    ".tiff", ".tif"],
-        is_supported_image=TiffImageReader.is_supported_image,
-        version=__version__,
-    ))
-    register_plugin(PluginEntry(
-        name="bioio-png-baseline",
-        reader=PngImageReader,
-        extensions=[".png"],
-        is_supported_image=PngImageReader.is_supported_image,
-        version=__version__,
-    ))
-    from bioio_spark.sources.zarr_image import ZarrImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-ome-zarr-baseline",
-        reader=ZarrImageReader,
-        extensions=[".zarr", ".ome.zarr"],
-        is_supported_image=ZarrImageReader.is_supported_image,
-        version=__version__,
-    ))
-    from bioio_spark.sources.jpeg_image import JpegImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-jpeg-baseline",
-        reader=JpegImageReader,
-        extensions=[".jpg", ".jpeg"],
-        is_supported_image=JpegImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.nd2_image import Nd2ImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-nd2-baseline",
-        reader=Nd2ImageReader,
-        extensions=[".nd2"],
-        is_supported_image=Nd2ImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.lif_image import LifImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-lif-baseline",
-        reader=LifImageReader,
-        extensions=[".lif"],
-        is_supported_image=LifImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.czi_image import CziImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-czi-baseline",
-        reader=CziImageReader,
-        extensions=[".czi"],
-        is_supported_image=CziImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.pnm_image import PnmImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-pnm-baseline",
-        reader=PnmImageReader,
-        extensions=[".pgm", ".ppm", ".pnm"],
-        is_supported_image=PnmImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.gif_image import GifImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-gif-baseline",
-        reader=GifImageReader,
-        extensions=[".gif"],
-        is_supported_image=GifImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.bmp_image import BmpImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-bmp-baseline",
-        reader=BmpImageReader,
-        extensions=[".bmp"],
-        is_supported_image=BmpImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.sldy_image import SldyImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-sldy-baseline",
-        reader=SldyImageReader,
-        extensions=[".sldy", ".dir"],
-        is_supported_image=SldyImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.dv_image import DvImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-dv-baseline",
-        reader=DvImageReader,
-        extensions=[".dv", ".r3d"],
-        is_supported_image=DvImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.lsm_image import LsmImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-lsm-baseline",
-        reader=LsmImageReader,
-        extensions=[".lsm"],
-        is_supported_image=LsmImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.stk_image import StkImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-stk-baseline",
-        reader=StkImageReader,
-        extensions=[".stk"],
-        is_supported_image=StkImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.dng_image import DngImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-dng-baseline",
-        reader=DngImageReader,
-        extensions=[".dng"],
-        is_supported_image=DngImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.svs_image import SvsImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-svs-baseline",
-        reader=SvsImageReader,
-        extensions=[".svs"],
-        is_supported_image=SvsImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.scn_image import ScnImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-scn-baseline",
-        reader=ScnImageReader,
-        extensions=[".scn"],
-        is_supported_image=ScnImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.oif_image import OifImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-oif-baseline",
-        reader=OifImageReader,
-        extensions=[".oif"],
-        is_supported_image=OifImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.oib_image import OibImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-oib-baseline",
-        reader=OibImageReader,
-        extensions=[".oib"],
-        is_supported_image=OibImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.ndpi_image import NdpiImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-ndpi-baseline",
-        reader=NdpiImageReader,
-        extensions=[".ndpi"],
-        is_supported_image=NdpiImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.qptiff_image import QptiffImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-qptiff-baseline",
-        reader=QptiffImageReader,
-        extensions=[".qptiff"],
-        is_supported_image=QptiffImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.ims_image import ImsImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-ims-baseline",
-        reader=ImsImageReader,
-        extensions=[".ims"],
-        is_supported_image=ImsImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.ndtiff_image import NdtiffImageReader
-
-    # no extension: NDTiff datasets are directories selected by their
-    # NDTiff.index (probe-based routing, like the reference's dir-shaped
-    # plugins)
-    register_plugin(PluginEntry(
-        name="bioio-ndtiff-baseline",
-        reader=NdtiffImageReader,
-        extensions=[],
-        is_supported_image=NdtiffImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.dicom_image import DicomImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-dicom-baseline",
-        reader=DicomImageReader,
-        extensions=[".dcm", ".dicom"],
-        is_supported_image=DicomImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.lof_image import LofImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-lof-baseline",
-        reader=LofImageReader,
-        extensions=[".lof"],
-        is_supported_image=LofImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.mrc_image import MrcImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-mrc-baseline",
-        reader=MrcImageReader,
-        extensions=[".mrc", ".st", ".map", ".rec"],
-        is_supported_image=MrcImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.cellvoyager_image import \
-        CellVoyagerImageReader
-
-    # directory-probed (MeasurementData.mlf), like NDTiff datasets
-    register_plugin(PluginEntry(
-        name="bioio-cellvoyager-baseline",
-        reader=CellVoyagerImageReader,
-        extensions=[],
-        is_supported_image=CellVoyagerImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.avi_image import AviImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-avi-baseline",
-        reader=AviImageReader,
-        extensions=[".avi"],
-        is_supported_image=AviImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.mp4_image import Mp4ImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-mp4-baseline",
-        reader=Mp4ImageReader,
-        extensions=[".mp4", ".mov"],
-        is_supported_image=Mp4ImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.mkv_image import MkvImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-mkv-baseline",
-        reader=MkvImageReader,
-        extensions=[".mkv"],
-        is_supported_image=MkvImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.mpeg_image import MpegImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-mpeg1-baseline",
-        reader=MpegImageReader,
-        extensions=[".mpg", ".mpeg"],
-        is_supported_image=MpegImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.pic_image import PicImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-biorad-pic-baseline",
-        reader=PicImageReader,
-        extensions=[".pic"],
-        is_supported_image=PicImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.zvi_image import ZviImageReader
-
-    register_plugin(PluginEntry(
-        name="bioio-zvi-baseline",
-        reader=ZviImageReader,
-        extensions=[".zvi"],
-        is_supported_image=ZviImageReader.is_supported_image,
-        version=__version__,
-    ))
-
-    from bioio_spark.sources.tiff_glob import TiffGlobReader
-
-    # no extensions: glob patterns aren't routable by suffix — like the
-    # reference's bioio-tiff-glob, callers select it with reader=
-    register_plugin(PluginEntry(
-        name="bioio-tiff-glob-baseline",
-        reader=TiffGlobReader,
-        extensions=[],
-        is_supported_image=TiffGlobReader.is_supported_image,
-        version=__version__,
-    ))
+    for name, module, cls_name in _BUILTIN_READERS:
+        cls = getattr(import_module(f"bioio_spark.sources.{module}"),
+                      cls_name)
+        register_plugin(PluginEntry(
+            name=name, reader=cls, extensions=list(cls.EXTENSIONS),
+            is_supported_image=cls.is_supported_image,
+            version=__version__))
 
 
 _register_builtin_plugins()

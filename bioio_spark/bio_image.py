@@ -27,7 +27,7 @@ from bioio_spark.operators.mosaic import (
 )
 from bioio_spark.operators.selectors import apply_selectors, to_ndarray
 from bioio_spark.operators.standardize import standardized_dims
-from bioio_spark.sources.array_like import ArrayLikeReader, ImageDataset
+from bioio_spark.sources.array_like import ImageDataset
 from bioio_spark.types import PhysicalPixelSizes, Scale
 
 
@@ -298,243 +298,42 @@ class BioImage:
         array<double>) — the scale representation (no per-pixel row
         amplification; compose with operators/planes.py).
 
-        Zarr- and non-mosaic-CZI-backed scenes decode STRAIGHT to
-        payload rows with zero shuffle (read_zarr_planes /
-        read_czi_planes, tile geometry = the store's own chunk/subblock
-        grid, so tile_h/tile_w are ignored); every other source falls
-        back to pixels_to_planes over the standardized frame (one
-        groupBy shuffle, honest and documented)."""
-        import os
-
+        Readers that plan their own chunks (TIFF, Zarr, CZI, DV, ND2,
+        LIF, SLDY, LSM) decode STRAIGHT to payload rows with zero
+        shuffle through their ``read_planes`` (tile geometry = the
+        store's own chunk/strip/subblock grid, so tile_h/tile_w are
+        ignored); every other source falls back to pixels_to_planes
+        over the standardized frame (one groupBy shuffle, honest and
+        documented)."""
         from bioio_spark.operators.planes import pixels_to_planes
 
-        reader = self._reader
-        path = getattr(reader, "_path", None)
         cols = ["t", "c", "z", "y0", "x0", "h", "w", "values"]
-        if isinstance(path, str):
-            from bioio_spark.sources.czi_image import (CziImageReader,
-                                                       read_czi_planes)
-            from bioio_spark.sources.tiff_image import (TiffImageReader,
-                                                        read_tiff_planes)
-            from bioio_spark.sources.zarr_image import (ZarrImageReader,
-                                                        _scene_roots)
-
-            if isinstance(reader, TiffImageReader) and os.path.isfile(
-                    path) and len(self.scenes) == 1 and \
-                    "S" not in self.dims.order:
-                try:
-                    return read_tiff_planes(
-                        self._spark, path,
-                        level=self._current_resolution_level,
-                    ).select(*cols)
-                except ValueError:
-                    pass  # dialect fallback (contiguous ImageJ etc.)
-            if isinstance(reader, ZarrImageReader):
-                from bioio_spark.sources.zarr_image import \
-                    read_zarr_planes
-
-                roots = _scene_roots(path)
-                if 0 <= self._current_scene_index < len(roots):
-                    return read_zarr_planes(
-                        self._spark, roots[self._current_scene_index],
-                        level=self._current_resolution_level,
-                    ).select(*cols)
-            if isinstance(reader, CziImageReader) and os.path.isfile(
-                    path) and self._current_resolution_level == 0 \
-                    and "M" not in self.dims.order:
-                return read_czi_planes(
-                    self._spark, path,
-                    scene=self._current_scene_index).select(*cols)
-
-            from bioio_spark.sources.dv_image import (DvImageReader,
-                                                      read_dv_planes)
-            from bioio_spark.sources.lif_image import (LifImageReader,
-                                                       read_lif_planes)
-            from bioio_spark.sources.nd2_image import (Nd2ImageReader,
-                                                       read_nd2_planes)
-
-            if isinstance(reader, DvImageReader) and os.path.isfile(
-                    path) and len(self.scenes) == 1:
-                return read_dv_planes(self._spark, path).select(*cols)
-            if isinstance(reader, Nd2ImageReader) and os.path.isfile(
-                    path):
-                return read_nd2_planes(
-                    self._spark, path,
-                    scene=self._current_scene_index).select(*cols)
-            if isinstance(reader, LifImageReader) and os.path.isfile(
-                    path) and "M" not in self.dims.order:
-                return read_lif_planes(
-                    self._spark, path,
-                    scene=self._current_scene_index).select(*cols)
-
-            from bioio_spark.sources.sldy_image import (SldyImageReader,
-                                                        read_sldy_planes)
-
-            if isinstance(reader, SldyImageReader):
-                return read_sldy_planes(
-                    self._spark, path,
-                    scene=self._current_scene_index).select(*cols)
-
-            from bioio_spark.sources.lsm_image import (LsmImageReader,
-                                                       read_lsm_planes)
-
-            if isinstance(reader, LsmImageReader) and os.path.isfile(
-                    path):
-                return read_lsm_planes(self._spark, path).select(*cols)
+        planes = self._pushdown("read_planes")
+        if planes is not None:
+            return planes.select(*cols)
         px, _dims = self._standard_pixels()
         return pixels_to_planes(px, tile_h=tile_h,
                                 tile_w=tile_w).select(*cols)
 
     def read_window(self, t=None, c=None, z=None, y=None,
                     x=None) -> DataFrame:
-        """Source-pruned window read: when the current scene is backed by
-        a single TIFF file or Zarr store, the selectors push down to the
-        SOURCE — only intersecting pages/strips/tiles (TIFF) or chunk
-        files (Zarr) are read, the Spark analog of the reference's lazy
-        dask slicing actually skipping chunks (ref bio_image.py:764-839).
-        Other sources (arrays, parquet, directories) fall back to a
-        Catalyst filter over the standardized pixel frame — same result,
-        scan-level pruning only where the format supports it. Returns the
-        long-form ``(t, c, z, y, x, value)`` frame for the window."""
-        import os
+        """Source-pruned window read: when the current scene's reader
+        can plan the window itself (its ``read_window``), the selectors
+        push down to the SOURCE — only intersecting pages/strips/tiles,
+        chunk files, sections or frames are read, the Spark analog of
+        the reference's lazy dask slicing actually skipping chunks
+        (ref bio_image.py:764-839). Other sources (arrays, parquet,
+        directories, multi-scene or pyramid levels a planner can't
+        address) fall back to a Catalyst filter over the standardized
+        pixel frame — same result, scan-level pruning only where the
+        format supports it. Returns the long-form
+        ``(t, c, z, y, x, value)`` frame for the window."""
+        from bioio_spark.sources.planned import norm_window
 
-        from pyspark.sql import functions as F
-
-        reader = self._reader
-        path = getattr(reader, "_path", None)
-        if isinstance(path, str):
-            from bioio_spark.sources.tiff_image import (TiffImageReader,
-                                                        read_tiff_window)
-            from bioio_spark.sources.zarr_image import (ZarrImageReader,
-                                                        read_zarr_window)
-
-            if isinstance(reader, TiffImageReader) and os.path.isfile(
-                    path) and len(self.scenes) == 1:
-                try:
-                    return read_tiff_window(
-                        self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                        level=self._current_resolution_level)
-                except ValueError:
-                    # dialects the page planner can't window (e.g.
-                    # contiguous one-IFD ImageJ stacks) fall back to
-                    # the Catalyst filter below — same rows, scan-level
-                    # pruning only where the layout supports it
-                    pass
-            if isinstance(reader, ZarrImageReader) and len(
-                    self.scenes) == 1 and any(
-                    os.path.exists(os.path.join(path, f))
-                    for f in ("zarr.json", ".zgroup", ".zarray")):
-                return read_zarr_window(
-                    self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                    level=self._current_resolution_level).select(
-                    "t", "c", "z", "y", "x", "value")
-
-            from bioio_spark.sources.dv_image import (DvImageReader,
-                                                      read_dv_window)
-
-            if isinstance(reader, DvImageReader) and os.path.isfile(
-                    path) and len(self.scenes) == 1:
-                return read_dv_window(self._spark, path,
-                                      t=t, c=c, z=z, y=y, x=x)
-
-            from bioio_spark.sources.czi_image import (CziImageReader,
-                                                       read_czi_window)
-
-            # the CZI window planner reads level-0 subblocks only, so a
-            # non-zero resolution level falls through to the Catalyst
-            # filter over standardized pixels (which honors the level)
-            # instead of silently returning full-res data
-            if isinstance(reader, CziImageReader) and os.path.isfile(
-                    path) and self._current_resolution_level == 0:
-                return read_czi_window(
-                    self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                    scene=self._current_scene_index).select(
-                    "t", "c", "z", "y", "x", "value")
-
-            from bioio_spark.sources.nd2_image import (Nd2ImageReader,
-                                                       read_nd2_window)
-
-            if isinstance(reader, Nd2ImageReader) and os.path.isfile(
-                    path):
-                return read_nd2_window(
-                    self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                    scene=self._current_scene_index)
-
-            from bioio_spark.sources.lif_image import (LifImageReader,
-                                                       read_lif_window)
-
-            # tile-scan scenes (M > 1) need mosaic/global coordinates —
-            # those fall through to the standardized-pixels filter
-            if isinstance(reader, LifImageReader) and os.path.isfile(
-                    path) and self.dims is not None and \
-                    "M" not in self.dims.order:
-                return read_lif_window(
-                    self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                    scene=self._current_scene_index)
-
-        from bioio_spark.sources.sldy_image import (SldyImageReader,
-                                                    read_sldy_window)
-
-        if isinstance(reader, SldyImageReader) and isinstance(path, str):
-            return read_sldy_window(
-                self._spark, path, t=t, c=c, z=z, y=y, x=x,
-                scene=self._current_scene_index)
-
-        # round-7 vendor dialects with plain single-scene TCZYX windows
-        # (strip/plane/stream/chunk pruning + y byte ranges); S-carrying
-        # pyramids (SVS/SCN/NDPI/QPTIFF) keep their own read_*_window
-        # entry points and fall through to the Catalyst filter here
-        if isinstance(path, str) and self._current_resolution_level == 0:
-            from bioio_spark.sources.ims_image import (ImsImageReader,
-                                                       read_ims_window)
-            from bioio_spark.sources.lsm_image import (LsmImageReader,
-                                                       read_lsm_window)
-            from bioio_spark.sources.oib_image import (OibImageReader,
-                                                       read_oib_window)
-            from bioio_spark.sources.oif_image import (OifImageReader,
-                                                       read_oif_window)
-            from bioio_spark.sources.stk_image import (StkImageReader,
-                                                       read_stk_window)
-
-            from bioio_spark.sources.dicom_image import (
-                DicomImageReader, read_dicom_window)
-            from bioio_spark.sources.mrc_image import (MrcImageReader,
-                                                       read_mrc_window)
-            from bioio_spark.sources.avi_image import (AviImageReader,
-                                                       read_avi_window)
-            from bioio_spark.sources.mkv_image import (MkvImageReader,
-                                                       read_mkv_window)
-            from bioio_spark.sources.mp4_image import (Mp4ImageReader,
-                                                       read_mp4_window)
-            from bioio_spark.sources.mpeg_image import (
-                MpegImageReader, read_mpeg_window)
-            from bioio_spark.sources.dng_image import (DngImageReader,
-                                                       read_dng_window)
-            from bioio_spark.sources.pic_image import (PicImageReader,
-                                                       read_pic_window)
-            from bioio_spark.sources.zvi_image import (ZviImageReader,
-                                                       read_zvi_window)
-
-            for cls, fn in ((LsmImageReader, read_lsm_window),
-                            (StkImageReader, read_stk_window),
-                            (OifImageReader, read_oif_window),
-                            (OibImageReader, read_oib_window),
-                            (ImsImageReader, read_ims_window),
-                            (DicomImageReader, read_dicom_window),
-                            (MrcImageReader, read_mrc_window),
-                            (ZviImageReader, read_zvi_window),
-                            (DngImageReader, read_dng_window),
-                            (PicImageReader, read_pic_window),
-                            (AviImageReader, read_avi_window),
-                            (Mp4ImageReader, read_mp4_window),
-                            (MpegImageReader, read_mpeg_window),
-                            (MkvImageReader, read_mkv_window)):
-                if isinstance(reader, cls) and len(self.scenes) == 1:
-                    return fn(self._spark, path,
-                              t=t, c=c, z=z, y=y, x=x)
-
-        from bioio_spark.sources.zarr_image import _norm_window
-
+        cols = ["t", "c", "z", "y", "x", "value"]
+        px = self._pushdown("read_window", t=t, c=c, z=z, y=y, x=x)
+        if px is not None:
+            return px.select(*cols)
         px, dims = self._standard_pixels()
         cond = F.lit(True)
         for name, sel in (("t", t), ("c", c), ("z", z), ("y", y),
@@ -542,9 +341,16 @@ class BioImage:
             if sel is None:
                 continue
             size = dims[name.upper()][0]
-            lo, hi = _norm_window(sel, size)
+            lo, hi = norm_window(sel, size)
             cond = cond & (F.col(name) >= lo) & (F.col(name) < hi)
-        return px.filter(cond).select("t", "c", "z", "y", "x", "value")
+        return px.filter(cond).select(*cols)
+
+    def _pushdown(self, method: str, **selectors) -> Optional[DataFrame]:
+        """The reader's own source-level read for the current scene, or
+        None when it has none (arrays, ImageDataset handles, plugins
+        without the method) or declines this scene/level."""
+        fn = getattr(self._reader, method, None)
+        return None if fn is None else fn(self._spark, self, **selectors)
 
     def get_image_data(self, dimension_order_out: Optional[str] = None,
                        **selectors) -> np.ndarray:

@@ -7,7 +7,6 @@ executor-side off a binaryFile scan (formats/bmp.py baseline codec)."""
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 from typing import Iterator
@@ -17,6 +16,8 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import PlannedReader
 
 
 def _read_bmp_header(path: str) -> tuple[int, int, int]:
@@ -49,40 +50,18 @@ def _read_bmp_header(path: str) -> tuple[int, int, int]:
     return abs(h), w, samples
 
 
-def _bmp_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(".bmp"))
-    return [image]
-
-
-class BmpImageReader:
+class BmpImageReader(PlannedReader):
     """BioImage reader over baseline BMP files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(".bmp"):
-            return True
-        return os.path.isdir(image) and bool(_bmp_paths(image))
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("BMP planes are always YX(S)")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    EXTENSIONS = (".bmp",)
+    DIM_ORDER_ERROR = "BMP planes are always YX(S)"
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
 
-        paths = _bmp_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No BMP files under {self._path}")
 

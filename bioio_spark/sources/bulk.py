@@ -203,10 +203,10 @@ def bulk_catalog(spark, paths, n_partitions: int = 0):
     the driver. Deterministic row content; no pixel IO."""
     import pandas as pd
 
+    from bioio_spark.sources.planned import plan_width
+
     paths = list(paths)
-    n = n_partitions or max(
-        1, min(len(paths),
-               spark.sparkContext.defaultParallelism))
+    n = n_partitions or max(1, plan_width(spark, len(paths)))
     pdf = spark.createDataFrame([(p,) for p in paths],
                                 "path string").repartition(n)
 

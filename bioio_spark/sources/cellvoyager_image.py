@@ -23,10 +23,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from bioio_spark.fsio import read_bytes
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bioio_spark.fsio import read_bytes
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         plan_pixels, plane_frame)
 
 
 def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -35,60 +37,38 @@ def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         for r in pdf.itertuples():
             planes, _desc = decode_tiff(read_bytes(r.path))
-            plane = planes[0]
-            y_n, x_n = plane.shape
-            yield pd.DataFrame({
-                "scene": r.scene,
-                "m": np.full(plane.size, r.m, np.int32),
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.full(plane.size, r.c, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(y_n, dtype=np.int32), x_n),
-                "x": np.tile(np.arange(x_n, dtype=np.int32), y_n),
-                "value": plane.ravel().astype(np.float64),
-            })
+            yield plane_frame(planes[0], r.t, r.c, r.z, scene=r.scene,
+                              m=r.m)
 
 
-class CellVoyagerImageReader:
+class CellVoyagerImageReader(PlannedReader):
     """BioImage reader over CellVoyager measurement directories."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str) or not os.path.isdir(image):
-            return False
+    # no extension: directory-probed (MeasurementData.mlf), like NDTiff
+    # datasets
+    DIM_ORDER_ERROR = "CellVoyager axes come from the mlf records"
+
+    @classmethod
+    def routes(cls, image: str) -> bool:
         from bioio_spark.formats.cellvoyager import MLF_NAME
 
-        if not os.path.isfile(os.path.join(image, MLF_NAME)):
-            return False
-        try:
-            from bioio_spark.formats.cellvoyager import \
-                read_cellvoyager_catalog
-            read_cellvoyager_catalog(image)
-            return True
-        except Exception:
-            return False
+        return os.path.isfile(os.path.join(image, MLF_NAME))
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("CellVoyager axes come from the mlf "
-                             "records")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
-
-    def to_dataset(self, spark: SparkSession):
+    @staticmethod
+    def catalog(path: str) -> dict:
         from bioio_spark.formats.cellvoyager import \
             read_cellvoyager_catalog
+
+        return read_cellvoyager_catalog(path)
+
+    def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_cellvoyager_catalog(self._path)
+        cat = self.catalog(self._path)
         # plane geometry from ONE record's TIFF header
         first = cat["records"][0]
         pg0 = iter_tiff_chunks(
@@ -154,12 +134,8 @@ class CellVoyagerImageReader:
                     "m": r["field"] if f_n > 1 else -1,
                     "t": r["t"], "c": r["c"], "z": r["z"]})
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _plane_batches,
-                  schema="scene string, m int, t int, c int, z int, "
-                         "y int, x int, value double")
+        px = (plan_pixels(spark, plan, _plane_batches,
+                          "scene string, m int, " + WINDOW_SCHEMA)
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",

@@ -19,7 +19,6 @@ CZIs the same way)."""
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 from typing import Iterator
@@ -30,12 +29,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _czi_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(".czi"))
-    return [image]
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         norm_window, payload_frame,
+                                         plan_pixels, plane_frame, trim)
 
 
 def _xml_channel_names(xml: str) -> list[str]:
@@ -59,6 +55,25 @@ def _start(dims: dict, name: str, default: int = 0) -> int:
     return dims[name]["start"] if name in dims else default
 
 
+def _subblock(r) -> np.ndarray:
+    """Decode the subblock a plan row points at (file_position,
+    pixel_type, compression, stored h x w)."""
+    from bioio_spark.formats.czi import read_czi_subblock
+
+    entry = {"file_position": int(r.file_position),
+             "pixel_type": int(r.pixel_type),
+             "compression": int(r.compression),
+             "dims": {"Y": {"stored": int(r.h), "size": int(r.h)},
+                      "X": {"stored": int(r.w), "size": int(r.w)}}}
+    return read_czi_subblock(r.path, entry)
+
+
+def _gray_subblock(r) -> np.ndarray:
+    """The window and planes paths are gray-only: first sample."""
+    plane = _subblock(r)
+    return plane[:, :, 0] if plane.ndim == 3 else plane
+
+
 def read_czi_window(spark: SparkSession, path: str,
                     t=None, c=None, z=None, y=None, x=None,
                     scene: int = 0):
@@ -73,7 +88,6 @@ def read_czi_window(spark: SparkSession, path: str,
     Selector forms match the other window readers: None, int, or
     (start, stop)/slice half-open windows."""
     from bioio_spark.formats.czi import read_czi_directory
-    from bioio_spark.sources.zarr_image import _norm_window
 
     path = os.path.abspath(path)
     entries = [e for e in read_czi_directory(path)
@@ -92,11 +106,11 @@ def read_czi_window(spark: SparkSession, path: str,
                 for e in entries) - y_min
     x_max = max(_start(e["dims"], "X") + e["dims"]["X"]["size"]
                 for e in entries) - x_min
-    t0, t1 = _norm_window(t, t_n)
-    c0, c1 = _norm_window(c, c_n)
-    z0, z1 = _norm_window(z, z_n)
-    y0, y1 = _norm_window(y, y_max)
-    x0, x1 = _norm_window(x, x_max)
+    t0, t1 = norm_window(t, t_n)
+    c0, c1 = norm_window(c, c_n)
+    z0, z1 = norm_window(z, z_n)
+    y0, y1 = norm_window(y, y_max)
+    x0, x1 = norm_window(x, x_max)
     plan = []
     for e in entries:
         d = e["dims"]
@@ -117,44 +131,18 @@ def read_czi_window(spark: SparkSession, path: str,
                      "compression": e["compression"],
                      "y0": ty0, "x0": tx0, "h": h, "w": w})
 
-    schema = ("t int, c int, z int, m int, y int, x int, value double")
+    schema = "m int, " + WINDOW_SCHEMA
     if not plan:
         return spark.createDataFrame([], schema)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.czi import read_czi_subblock
-
         for pdf in it:
             for r in pdf.itertuples():
-                entry = {"file_position": int(r.file_position),
-                         "pixel_type": int(r.pixel_type),
-                         "compression": int(r.compression),
-                         "dims": {"Y": {"stored": int(r.h),
-                                        "size": int(r.h)},
-                                  "X": {"stored": int(r.w),
-                                        "size": int(r.w)}}}
-                plane = read_czi_subblock(r.path, entry)
-                if plane.ndim == 3:
-                    plane = plane[:, :, 0]   # window path is gray-only
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "m": np.full(plane.size, r.m, np.int32),
-                    "y": np.repeat(np.arange(
-                        r.y0, r.y0 + int(r.h), dtype=np.int32),
-                        int(r.w)),
-                    "x": np.tile(np.arange(
-                        r.x0, r.x0 + int(r.w), dtype=np.int32),
-                        int(r.h)),
-                    "value": plane.ravel().astype(np.float64),
-                })
+                yield plane_frame(_gray_subblock(r), r.t, r.c, r.z,
+                                  y0=r.y0, x0=r.x0, m=r.m)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("y") >= y0) & (F.col("y") < y1)
-                     & (F.col("x") >= x0) & (F.col("x") < x1))
+    return trim(plan_pixels(spark, plan, batches, schema),
+                y=(y0, y1), x=(x0, x1))
 
 
 def read_czi_planes(spark: SparkSession, path: str,
@@ -194,61 +182,55 @@ def read_czi_planes(spark: SparkSession, path: str,
                      "w": d["X"]["stored"] or d["X"]["size"]})
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.czi import read_czi_subblock
-
         for pdf in it:
             for r in pdf.itertuples():
-                entry = {"file_position": int(r.file_position),
-                         "pixel_type": int(r.pixel_type),
-                         "compression": int(r.compression),
-                         "dims": {"Y": {"stored": int(r.h),
-                                        "size": int(r.h)},
-                                  "X": {"stored": int(r.w),
-                                        "size": int(r.w)}}}
-                plane = read_czi_subblock(r.path, entry)
-                if plane.ndim == 3:
-                    plane = plane[:, :, 0]   # planes path is gray-only
-                yield pd.DataFrame({
-                    "t": [int(r.t)], "c": [int(r.c)], "z": [int(r.z)],
-                    "m": [int(r.m)], "y0": [int(r.y0)],
-                    "x0": [int(r.x0)], "h": [int(r.h)],
-                    "w": [int(r.w)],
-                    "values": [plane.ravel().astype(np.float64)],
-                })
+                yield payload_frame(_gray_subblock(r), r.t, r.c, r.z,
+                                    y0=r.y0, x0=r.x0, m=r.m)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, m int, y0 int, x0 int, h int, "
-               "w int, values array<double>")
+    return plan_pixels(
+        spark, plan, batches,
+        "t int, c int, z int, m int, y0 int, x0 int, h int, w int, "
+        "values array<double>")
 
 
-class CziImageReader:
+class CziImageReader(PlannedReader):
     """BioImage reader over baseline (uncompressed) ZISRAW files."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
+    EXTENSIONS = (".czi",)
+    DIM_ORDER_ERROR = "CZI dimensions come from the subblock directory"
+
+    @classmethod
+    def is_supported_image(cls, image) -> bool:
         if not isinstance(image, str):
             return False
-        if not image.lower().endswith(".czi"):
-            return (os.path.isdir(image) and bool(_czi_paths(image)))
+        if not image.lower().endswith(cls.EXTENSIONS):
+            return (os.path.isdir(image) and bool(cls.paths(image)))
         try:
             with open(image, "rb") as f:
                 return f.read(10) == b"ZISRAWFILE"
         except OSError:
             return False
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "CZI dimensions come from the subblock directory")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        # the window planner reads level-0 subblocks only, so a non-zero
+        # resolution level falls through to the Catalyst filter over
+        # standardized pixels (which honors the level) instead of
+        # silently returning full-res data
+        if os.path.isfile(self._path) and \
+                img.current_resolution_level == 0:
+            return read_czi_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x,
+                                   scene=img.current_scene_index)
+        return None
+
+    def read_planes(self, spark, img):
+        if os.path.isfile(self._path) and \
+                img.current_resolution_level == 0 and \
+                "M" not in img.dims.order:
+            return read_czi_planes(spark, self._path,
+                                   scene=img.current_scene_index)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.czi import (DTYPE_OF_PIXEL_TYPE,
@@ -259,7 +241,7 @@ class CziImageReader:
                                                     ImageDataset)
         from bioio_spark.types import PhysicalPixelSizes
 
-        paths = _czi_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No CZI files under {self._path}")
         if len(paths) != 1:
@@ -383,20 +365,9 @@ class CziImageReader:
                 })
 
         def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bioio_spark.formats.czi import read_czi_subblock
-
             for pdf in it:
                 for r in pdf.itertuples():
-                    entry = {
-                        "file_position": int(r.file_position),
-                        "pixel_type": int(r.pixel_type),
-                        "compression": int(r.compression),
-                        "dims": {"Y": {"stored": int(r.h),
-                                       "size": int(r.h)},
-                                 "X": {"stored": int(r.w),
-                                       "size": int(r.w)}},
-                    }
-                    plane = read_czi_subblock(r.path, entry)
+                    plane = _subblock(r)
                     y_n, x_n = plane.shape[0], plane.shape[1]
                     s_n = plane.shape[2] if plane.ndim == 3 else 1
                     s_col = (np.full(plane.size, -1, dtype=np.int32)
@@ -419,13 +390,10 @@ class CziImageReader:
                         "value": plane.ravel().astype(np.float64),
                     })
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="scene string, res_level int, t int, c int, "
-                         "z int, m int, y int, x int, s int, "
-                         "value double")
+        px = (plan_pixels(
+                  spark, plan, batches,
+                  "scene string, res_level int, t int, c int, z int, "
+                  "m int, y int, x int, s int, value double")
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   "res_level", "t", "c", "z", "y", "x",

@@ -27,19 +27,17 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from bioio_spark.fsio import read_range
-
-_DNG_EXTS = (".dng",)
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         plane_frame, standardize, trim)
 
 
 def _plan_strips(path: str):
-    from bioio_spark.formats.dng import read_dng_catalog
-
-    cat = read_dng_catalog(path)
+    cat = DngImageReader.catalog(path)
     ap = os.path.abspath(path)
     plan = [{
         "path": ap, "offset": ch["offset"], "nbytes": ch["nbytes"],
@@ -61,17 +59,7 @@ def _strip_array(r) -> np.ndarray:
 def _strip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         for r in pdf.itertuples():
-            plane = _strip_array(r)
-            ny, nx = plane.shape
-            yield pd.DataFrame({
-                "t": np.zeros(plane.size, np.int32),
-                "c": np.zeros(plane.size, np.int32),
-                "z": np.zeros(plane.size, np.int32),
-                "y": np.repeat(np.arange(r.y0, r.y0 + ny,
-                                         dtype=np.int32), nx),
-                "x": np.tile(np.arange(nx, dtype=np.int32), ny),
-                "value": plane.ravel().astype(np.float64),
-            })
+            yield plane_frame(_strip_array(r), 0, 0, 0, y0=r.y0)
 
 
 def read_dng_window(spark: SparkSession, path: str,
@@ -80,14 +68,12 @@ def read_dng_window(spark: SparkSession, path: str,
     driver-side (uncompressed strips additionally narrow to the
     touched row byte range; SOF3 strips are the decode granularity);
     x/y trim is a residual codegen filter."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     cat, plan = _plan_strips(path)
-    t0, t1 = _norm_window(t, 1)
-    c0, c1 = _norm_window(c, 1)
-    z0, z1 = _norm_window(z, 1)
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    norm_window(t, 1)
+    norm_window(c, 1)
+    norm_window(z, 1)
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     pruned = []
     for r in plan:
         if r["y0"] + r["ny"] <= y0 or r["y0"] >= y1:
@@ -103,49 +89,34 @@ def read_dng_window(spark: SparkSession, path: str,
                            "y0": lo, "ny": hi - lo})
         else:
             pruned.append(r)
-    schema = "t int, c int, z int, y int, x int, value double"
-    if (not pruned or t0 >= t1 or c0 >= c1 or z0 >= z1
-            or x0 >= x1 or y0 >= y1):
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_strip_batches, schema=schema)
-    return px.filter(
-        (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1))
+    if not pruned:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA),
+                y=(y0, y1), x=(x0, x1))
 
 
-class DngImageReader:
+class DngImageReader(PlannedReader):
     """BioImage reader over Adobe DNG camera-RAW mosaics."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_DNG_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.dng import read_dng_catalog
-            read_dng_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".dng",)
+    DIM_ORDER_ERROR = "DNG raw mosaics are always single-plane YX"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("DNG raw mosaics are always single-plane "
-                             "YX")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.dng import read_dng_catalog
+
+        return read_dng_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_dng_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
 
         cat, plan = _plan_strips(self._path)
         scene = "Image:0"
@@ -174,18 +145,9 @@ class DngImageReader:
                          f"white={cat['white_level']} "
                          f"comp={cat['comp']}"),
         }]
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _strip_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

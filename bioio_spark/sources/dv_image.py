@@ -19,7 +19,6 @@ A directory of .dv files reads as a multi-scene image in sorted order.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 from typing import Iterator
 
@@ -29,16 +28,12 @@ import pandas as pd
 from bioio_spark.fsio import read_range
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_DV_EXTS = (".dv", ".r3d")
-
-
-def _dv_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(_DV_EXTS))
-    return [image]
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, empty_window,
+                                         norm_window, payload_frame,
+                                         plan_pixels, plane_frame,
+                                         standardize, trim)
 
 
 def _read_header(path: str) -> dict:
@@ -59,17 +54,14 @@ def read_dv_window(spark: SparkSession, path: str,
 
     Selector forms match read_tiff_window/read_zarr_window: None (all),
     int (one index), (start, stop) / slice (half-open window)."""
-    from bioio_spark.formats.dv import HEADER_SIZE, iter_dv_sections, \
-        parse_dv_header
-    from bioio_spark.sources.zarr_image import _norm_window
+    from bioio_spark.formats.dv import iter_dv_sections
 
-    with open(path, "rb") as f:
-        h = parse_dv_header(f.read(HEADER_SIZE))
-    t0, t1 = _norm_window(t, h["num_times"])
-    c0, c1 = _norm_window(c, h["num_waves"])
-    z0, z1 = _norm_window(z, h["num_z"])
-    y0, y1 = _norm_window(y, h["ny"])
-    x0, x1 = _norm_window(x, h["nx"])
+    h = _read_header(path)
+    t0, t1 = norm_window(t, h["num_times"])
+    c0, c1 = norm_window(c, h["num_waves"])
+    z0, z1 = norm_window(z, h["num_z"])
+    y0, y1 = norm_window(y, h["ny"])
+    x0, x1 = norm_window(x, h["nx"])
     row_bytes = h["nx"] * h["dtype"].itemsize
     plan = [
         {"path": os.path.abspath(path), "t": s["t"], "c": s["w"],
@@ -88,25 +80,12 @@ def read_dv_window(spark: SparkSession, path: str,
                 buf = read_range(r.path, r.offset, r.nbytes)
                 plane = np.frombuffer(
                     buf, dtype=np.dtype(dtype_str)).reshape(r.ny, r.nx)
-                vals = (plane.real if np.issubdtype(
-                    plane.dtype, np.complexfloating) else plane)
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                    "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                    "value": vals.ravel().astype(np.float64),
-                })
+                yield plane_frame(_real(plane), r.t, r.c, r.z, y0=r.y0)
 
-    schema = "t int, c int, z int, y int, x int, value double"
     if not plan:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+        return empty_window(spark)
+    return trim(plan_pixels(spark, plan, batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
 def read_dv_planes(spark: SparkSession, path: str):
@@ -114,12 +93,10 @@ def read_dv_planes(spark: SparkSession, path: str):
     DV section (a contiguous YX plane), the DV member of the planes
     family. Complex modes carry the real part, matching the long-form
     reader."""
-    from bioio_spark.formats.dv import HEADER_SIZE, iter_dv_sections, \
-        parse_dv_header
+    from bioio_spark.formats.dv import iter_dv_sections
 
     path = os.path.abspath(path)
-    with open(path, "rb") as f:
-        h = parse_dv_header(f.read(HEADER_SIZE))
+    h = _read_header(path)
     plan = [{"path": path, "t": s["t"], "c": s["w"], "z": s["z"],
              "offset": s["offset"]} for s in iter_dv_sections(h)]
     ny, nx = h["ny"], h["nx"]
@@ -132,52 +109,42 @@ def read_dv_planes(spark: SparkSession, path: str):
                 buf = read_range(r.path, r.offset, nbytes)
                 plane = np.frombuffer(
                     buf, dtype=np.dtype(dtype_str)).reshape(ny, nx)
-                vals = (plane.real if np.issubdtype(
-                    plane.dtype, np.complexfloating) else plane)
-                yield pd.DataFrame({
-                    "t": [int(r.t)], "c": [int(r.c)], "z": [int(r.z)],
-                    "y0": [0], "x0": [0], "h": [ny], "w": [nx],
-                    "values": [vals.ravel().astype(np.float64)],
-                })
+                yield payload_frame(_real(plane), r.t, r.c, r.z)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
 
 
-class DvImageReader:
+def _real(plane: np.ndarray) -> np.ndarray:
+    """Complex modes carry their real part."""
+    return (plane.real if np.issubdtype(plane.dtype, np.complexfloating)
+            else plane)
+
+
+class DvImageReader(PlannedReader):
     """BioImage reader over DeltaVision files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(_DV_EXTS):
-            return True
-        return os.path.isdir(image) and bool(_dv_paths(image))
+    EXTENSIONS = (".dv", ".r3d")
+    DIM_ORDER_ERROR = "DV dimension order comes from the header's ImgSequence"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "DV dimension order comes from the header's ImgSequence")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if os.path.isfile(self._path) and len(img.scenes) == 1:
+            return read_dv_window(spark, self._path,
+                                  t=t, c=c, z=z, y=y, x=x)
+        return None
+
+    def read_planes(self, spark, img):
+        if os.path.isfile(self._path) and len(img.scenes) == 1:
+            return read_dv_planes(spark, self._path)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.dv import iter_dv_sections
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        paths = _dv_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No DV files under {self._path}")
 
@@ -234,34 +201,13 @@ class DvImageReader:
                     plane = np.frombuffer(
                         buf, dtype=np.dtype(dtypes[r.path])).reshape(
                         r.ny, r.nx)
-                    if np.issubdtype(plane.dtype, np.complexfloating):
-                        vals = plane.real.ravel().astype(np.float64)
-                    else:
-                        vals = plane.ravel().astype(np.float64)
-                    yield pd.DataFrame({
-                        "scene": r.scene,
-                        "t": np.full(plane.size, r.t, np.int32),
-                        "c": np.full(plane.size, r.c, np.int32),
-                        "z": np.full(plane.size, r.z, np.int32),
-                        "y": np.repeat(
-                            np.arange(r.ny, dtype=np.int32), r.nx),
-                        "x": np.tile(
-                            np.arange(r.nx, dtype=np.int32), r.ny),
-                        "value": vals,
-                    })
+                    yield plane_frame(_real(plane), r.t, r.c, r.z,
+                                      scene=r.scene)
 
-        plan = spark.createDataFrame(pd.DataFrame(plan_rows)).repartition(
-            min(len(plan_rows),
-                spark.sparkContext.defaultParallelism))
-        px = (plan.mapInPandas(
-                  batches,
-                  schema="scene string, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan_rows, batches,
+                        "scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -10,7 +10,6 @@ reads geometry without LZW-decoding pixel data. Pixels: binaryFile scan
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 from typing import Iterator
@@ -20,6 +19,8 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import PlannedReader
 
 
 def _read_gif_header(path: str):
@@ -76,40 +77,18 @@ def _read_gif_header(path: str):
     return h, w, frames, delay, gray
 
 
-def _gif_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(".gif"))
-    return [image]
-
-
-class GifImageReader:
+class GifImageReader(PlannedReader):
     """BioImage reader over baseline GIF files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(".gif"):
-            return True
-        return os.path.isdir(image) and bool(_gif_paths(image))
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("GIF frames are always (T)YX(S)")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    EXTENSIONS = (".gif",)
+    DIM_ORDER_ERROR = "GIF frames are always (T)YX(S)"
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
 
-        paths = _gif_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No GIF files under {self._path}")
 

@@ -23,12 +23,13 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_IMS_EXTS = (".ims",)
+from bioio_spark.fsio import read_range
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         standardize, trim)
 
 
 def _plan_rows(path: str, cat: dict) -> list[dict]:
@@ -104,15 +105,12 @@ def read_ims_window(spark: SparkSession, path: str,
     prunes planes/chunks, and on contiguous datasets the y window
     narrows each plane read to its contiguous row range. The x trim is
     a residual codegen filter."""
-    from bioio_spark.formats.ims import read_ims_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_ims_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, cat["size_c"])
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    cat = ImsImageReader.catalog(path)
+    t0, t1 = norm_window(t, cat["size_t"])
+    c0, c1 = norm_window(c, cat["size_c"])
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     rows = []
     for r in _plan_rows(path, cat):
         if r["res_level"] != 0:
@@ -136,53 +134,38 @@ def read_ims_window(spark: SparkSession, path: str,
                          "full_y": ry1})
         else:
             rows.append(r)
-    schema = ("res_level int, t int, c int, z int, y int, x int, "
-              "value double")
     if not rows:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_decode_batches, schema=schema)
-    return px.filter(
-        (F.col("z") >= z0) & (F.col("z") < z1)
-        & (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1)).drop("res_level")
+        return empty_window(spark)
+    px = plan_pixels(spark, rows, _decode_batches,
+                     "res_level int, " + WINDOW_SCHEMA)
+    return trim(px, z=(z0, z1), y=(y0, y1), x=(x0, x1)).drop("res_level")
 
 
-class ImsImageReader:
+class ImsImageReader(PlannedReader):
     """BioImage reader over Imaris IMS (HDF5) files."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_IMS_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.ims import read_ims_catalog
-            read_ims_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".ims",)
+    DIM_ORDER_ERROR = "IMS dimensions come from /DataSetInfo"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("IMS dimensions come from /DataSetInfo")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.ims import read_ims_catalog
+
+        return read_ims_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_ims_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.ims import read_ims_catalog
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_ims_catalog(self._path)
+        cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or cat["channel_names"]
         channel_rows = [
@@ -212,18 +195,10 @@ class ImsImageReader:
             "metadata": "Imaris 5.5 (native HDF5 reader)",
         }]
         plan = _plan_rows(self._path, cat)
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _decode_batches,
-                  schema="res_level int, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  "res_level", "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, _decode_batches,
+                        "res_level int, " + WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

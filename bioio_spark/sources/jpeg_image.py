@@ -12,7 +12,6 @@ decode through the in-repo baseline codec; parallelism = file count.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 from typing import Iterator
@@ -23,7 +22,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_JPEG_EXTS = (".jpg", ".jpeg")
+from bioio_spark.sources.planned import PlannedReader
 
 
 def _read_jpeg_header(path: str) -> tuple[int, int, int]:
@@ -66,40 +65,18 @@ def _read_jpeg_header(path: str) -> tuple[int, int, int]:
     raise ValueError(f"{path}: no baseline SOF segment found")
 
 
-def _jpeg_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(_JPEG_EXTS))
-    return [image]
-
-
-class JpegImageReader:
+class JpegImageReader(PlannedReader):
     """BioImage reader over baseline JPEG files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(_JPEG_EXTS):
-            return True
-        return os.path.isdir(image) and bool(_jpeg_paths(image))
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("JPEG planes are always YX(S)")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    EXTENSIONS = (".jpg", ".jpeg")
+    DIM_ORDER_ERROR = "JPEG planes are always YX(S)"
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
 
-        paths = _jpeg_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No JPEG files under {self._path}")
 

@@ -13,22 +13,33 @@ README.md:62), over the in-repo pure-Python Leica block+XML codec
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, norm_window,
+                                         payload_frame, plan_pixels,
+                                         plane_frame)
 
-def _lif_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(".lif"))
-    return [image]
+
+def _read_planes(it: Iterator[pd.DataFrame], y0: int = 0, y1=None):
+    """(plan row, YX plane) per plan row (path, scene_i, m, t, c, z;
+    m = -1 outside tile scans), rows y0:y1 only; one header parse per
+    file."""
+    from bioio_spark.formats.lif import parse_lif_header, read_lif_plane
+
+    hdr_cache: dict = {}
+    for pdf in it:
+        for r in pdf.itertuples():
+            if r.path not in hdr_cache:
+                hdr_cache[r.path] = parse_lif_header(r.path)
+            yield r, read_lif_plane(
+                r.path, hdr_cache[r.path], r.scene_i, r.t, r.c, r.z,
+                m=max(r.m, 0), y0=y0, y1=y1)
 
 
 def read_lif_window(spark: SparkSession, path: str,
@@ -43,7 +54,6 @@ def read_lif_window(spark: SparkSession, path: str,
     from the stitch operator, so BioImage.read_window falls back to the
     standardized path for them."""
     from bioio_spark.formats.lif import parse_lif_header
-    from bioio_spark.sources.zarr_image import _norm_window
 
     path = os.path.abspath(path)
     header = parse_lif_header(path)
@@ -55,47 +65,23 @@ def read_lif_window(spark: SparkSession, path: str,
             "read_lif_window reads single-tile scenes; tile scans "
             "route through BioImage/mosaic semantics")
     t_n, c_n, z_n, y_n, x_n = sc["shape"]
-    t0, t1 = _norm_window(t, t_n)
-    c0, c1 = _norm_window(c, c_n)
-    z0, z1 = _norm_window(z, z_n)
-    y0, y1 = _norm_window(y, y_n)
-    x0, x1 = _norm_window(x, x_n)
-    plan = [{"path": path, "scene_i": scene, "t": ti, "c": ci, "z": zi}
+    t0, t1 = norm_window(t, t_n)
+    c0, c1 = norm_window(c, c_n)
+    z0, z1 = norm_window(z, z_n)
+    y0, y1 = norm_window(y, y_n)
+    x0, x1 = norm_window(x, x_n)
+    plan = [{"path": path, "scene_i": scene, "m": -1,
+             "t": ti, "c": ci, "z": zi}
             for ti in range(t0, t1)
             for ci in range(c0, c1)
             for zi in range(z0, z1)]
 
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or y0 >= y1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.lif import (parse_lif_header,
-                                             read_lif_plane)
+        for r, rows in _read_planes(it, y0=y0, y1=y1):
+            yield plane_frame(rows[:, x0:x1], r.t, r.c, r.z,  # numpy prune
+                              y0=y0, x0=x0)
 
-        hdr_cache: dict = {}
-        for pdf in it:
-            for r in pdf.itertuples():
-                if r.path not in hdr_cache:
-                    hdr_cache[r.path] = parse_lif_header(r.path)
-                rows = read_lif_plane(
-                    r.path, hdr_cache[r.path], r.scene_i,
-                    r.t, r.c, r.z, y0=y0, y1=y1)
-                plane = rows[:, x0:x1]               # exact numpy prune
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        y0, y1, dtype=np.int32), x1 - x0),
-                    "x": np.tile(np.arange(
-                        x0, x1, dtype=np.int32), y1 - y0),
-                    "value": plane.ravel().astype(np.float64),
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(batches, schema=schema)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
 
 
 def read_lif_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -114,44 +100,28 @@ def read_lif_planes(spark: SparkSession, path: str, scene: int = 0):
             "read_lif_planes reads single-tile scenes; tile scans "
             "route through BioImage/mosaic semantics")
     t_n, c_n, z_n, y_n, x_n = sc["shape"]
-    plan = [{"path": path, "scene_i": scene, "t": t, "c": c, "z": z}
+    plan = [{"path": path, "scene_i": scene, "m": -1,
+             "t": t, "c": c, "z": z}
             for t in range(t_n) for c in range(c_n)
             for z in range(z_n)]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.lif import (parse_lif_header,
-                                             read_lif_plane)
+        for r, plane in _read_planes(it):
+            yield payload_frame(plane, r.t, r.c, r.z)
 
-        hdr_cache: dict = {}
-        for pdf in it:
-            for r in pdf.itertuples():
-                if r.path not in hdr_cache:
-                    hdr_cache[r.path] = parse_lif_header(r.path)
-                plane = read_lif_plane(
-                    r.path, hdr_cache[r.path], r.scene_i,
-                    r.t, r.c, r.z)
-                yield pd.DataFrame({
-                    "t": [int(r.t)], "c": [int(r.c)], "z": [int(r.z)],
-                    "y0": [0], "x0": [0],
-                    "h": [plane.shape[0]], "w": [plane.shape[1]],
-                    "values": [plane.ravel().astype(np.float64)],
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
 
 
-class LifImageReader:
+class LifImageReader(PlannedReader):
     """BioImage reader over baseline LIF files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
+    EXTENSIONS = (".lif",)
+    DIM_ORDER_ERROR = "LIF dimensions come from the settings XML"
+
+    @classmethod
+    def is_supported_image(cls, image) -> bool:
         if not isinstance(image, str) or not \
-                image.lower().endswith(".lif"):
+                image.lower().endswith(cls.EXTENSIONS):
             return False
         try:
             import struct
@@ -163,16 +133,21 @@ class LifImageReader:
         except OSError:
             return False
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "LIF dimensions come from the settings XML")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        # tile-scan scenes (M > 1) need mosaic/global coordinates —
+        # those fall through to the standardized-pixels filter
+        if os.path.isfile(self._path) and "M" not in img.dims.order:
+            return read_lif_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x,
+                                   scene=img.current_scene_index)
+        return None
+
+    def read_planes(self, spark, img):
+        if os.path.isfile(self._path) and "M" not in img.dims.order:
+            return read_lif_planes(spark, self._path,
+                                   scene=img.current_scene_index)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.lif import parse_lif_header
@@ -181,7 +156,7 @@ class LifImageReader:
                                                     ImageDataset)
         from bioio_spark.types import PhysicalPixelSizes
 
-        paths = _lif_paths(self._path)
+        paths = self.paths(self._path)
         if len(paths) != 1:
             raise ValueError("LifImageReader reads one .lif file")
         path = os.path.abspath(paths[0])
@@ -240,37 +215,12 @@ class LifImageReader:
                                 "t": t, "c": c, "z": z})
 
         def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bioio_spark.formats.lif import (parse_lif_header,
-                                                 read_lif_plane)
+            for r, plane in _read_planes(it):
+                yield plane_frame(plane, r.t, r.c, r.z, scene=r.scene,
+                                  m=r.m)
 
-            hdr_cache: dict = {}
-            for pdf in it:
-                for r in pdf.itertuples():
-                    if r.path not in hdr_cache:
-                        hdr_cache[r.path] = parse_lif_header(r.path)
-                    plane = read_lif_plane(
-                        r.path, hdr_cache[r.path], r.scene_i,
-                        r.t, r.c, r.z, m=max(r.m, 0))
-                    y_n, x_n = plane.shape
-                    yield pd.DataFrame({
-                        "scene": r.scene,
-                        "m": np.full(plane.size, r.m, np.int32),
-                        "t": np.full(plane.size, r.t, np.int32),
-                        "c": np.full(plane.size, r.c, np.int32),
-                        "z": np.full(plane.size, r.z, np.int32),
-                        "y": np.repeat(
-                            np.arange(y_n, dtype=np.int32), x_n),
-                        "x": np.tile(
-                            np.arange(x_n, dtype=np.int32), y_n),
-                        "value": plane.ravel().astype(np.float64),
-                    })
-
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="scene string, m int, t int, c int, z int, "
-                         "y int, x int, value double")
+        px = (plan_pixels(spark, plan, batches,
+                          "scene string, m int, " + WINDOW_SCHEMA)
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",

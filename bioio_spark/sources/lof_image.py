@@ -15,14 +15,15 @@ from bioio_spark.sources.lif_image import LifImageReader
 class LofImageReader(LifImageReader):
     """BioImage reader over Leica LOF single-object files."""
 
+    EXTENSIONS = (".lof",)
+
+    @classmethod
+    def is_supported_image(cls, image) -> bool:
+        # the shared suffix-then-catalog probe, not LIF's block magic
+        return super(LifImageReader, cls).is_supported_image(image)
+
     @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str) or not \
-                image.lower().endswith(".lof"):
-            return False
-        try:
-            from bioio_spark.formats.lof import parse_lof_header
-            parse_lof_header(image)
-            return True
-        except Exception:
-            return False
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.lof import parse_lof_header
+
+        return parse_lof_header(path)

@@ -24,13 +24,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import SparkSession
 
 from bioio_spark.fsio import read_range
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-_LSM_EXTS = (".lsm",)
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, empty_window,
+                                         norm_window, payload_frame,
+                                         plain_scene, plan_pixels,
+                                         plane_frame, standardize, trim)
 
 
 def _plan_strips(path: str):
@@ -60,33 +61,28 @@ def _plan_strips(path: str):
     return info, cat["channel_names"], plan
 
 
-def _strip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Seek-read one channel-plane strip per plan row (raw bytes, or
+def _strip(r) -> np.ndarray:
+    """Seek-read the channel-plane strip of one plan row (raw bytes, or
     whole-strip LZW decode for wild compressed acquisitions — TIFF 6.0
     §13, optionally with the horizontal predictor)."""
     from bioio_spark.formats.tiff import (_undo_horizontal_predictor,
                                           decompress_tiff_chunk)
 
+    buf = read_range(r.path, r.offset, r.nbytes)
+    if r.comp != 1:
+        buf = decompress_tiff_chunk(buf, r.comp)
+    plane = np.frombuffer(
+        buf, dtype=np.dtype(r.dtype),
+        count=r.ny * r.nx).reshape(r.ny, r.nx)
+    if r.pred == 2:
+        plane = _undo_horizontal_predictor(plane)
+    return plane
+
+
+def _strip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         for r in pdf.itertuples():
-            buf = read_range(r.path, r.offset, r.nbytes)
-            comp = getattr(r, "comp", 1)
-            if comp != 1:
-                buf = decompress_tiff_chunk(buf, comp)
-            plane = np.frombuffer(
-                buf, dtype=np.dtype(r.dtype),
-                count=r.ny * r.nx).reshape(r.ny, r.nx)
-            if getattr(r, "pred", 1) == 2:
-                plane = _undo_horizontal_predictor(plane)
-            yield pd.DataFrame({
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.full(plane.size, r.c, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(
-                    r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                "value": plane.ravel().astype(np.float64),
-            })
+            yield plane_frame(_strip(r), r.t, r.c, r.z, y0=r.y0)
 
 
 def read_lsm_window(spark: SparkSession, path: str,
@@ -97,14 +93,12 @@ def read_lsm_window(spark: SparkSession, path: str,
     (strip rows are contiguous, so a y-window is a byte range). The x
     trim is a residual codegen filter. Selector forms match the other
     window readers (None / int / (start, stop) / slice)."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     info, _names, plan = _plan_strips(path)
-    t0, t1 = _norm_window(t, max(info["size_t"], 1))
-    c0, c1 = _norm_window(c, max(info["size_c"], 1))
-    z0, z1 = _norm_window(z, max(info["size_z"], 1))
-    y0, y1 = _norm_window(y, info["size_y"])
-    x0, x1 = _norm_window(x, info["size_x"])
+    t0, t1 = norm_window(t, max(info["size_t"], 1))
+    c0, c1 = norm_window(c, max(info["size_c"], 1))
+    z0, z1 = norm_window(z, max(info["size_z"], 1))
+    y0, y1 = norm_window(y, info["size_y"])
+    x0, x1 = norm_window(x, info["size_x"])
     pruned = []
     for r in plan:
         if not (t0 <= r["t"] < t1 and c0 <= r["c"] < c1
@@ -124,15 +118,10 @@ def read_lsm_window(spark: SparkSession, path: str,
         else:
             # LZW strips decode whole; y trims in the residual filter
             pruned.append(r)
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not pruned or x0 >= x1:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_strip_batches, schema=schema)
-    return px.filter(
-        (F.col("x") >= x0) & (F.col("x") < x1)
-        & (F.col("y") >= y0) & (F.col("y") < y1))
+    if not pruned:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA),
+                x=(x0, x1), y=(y0, y1))
 
 
 def read_lsm_planes(spark: SparkSession, path: str):
@@ -142,65 +131,40 @@ def read_lsm_planes(spark: SparkSession, path: str):
     _info, _names, plan = _plan_strips(path)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.tiff import (
-            _undo_horizontal_predictor, decompress_tiff_chunk)
-
         for pdf in it:
             for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                if getattr(r, "comp", 1) != 1:
-                    buf = decompress_tiff_chunk(buf, r.comp)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(r.dtype),
-                    count=r.ny * r.nx).reshape(r.ny, r.nx)
-                if getattr(r, "pred", 1) == 2:
-                    plane = _undo_horizontal_predictor(plane)
-                yield pd.DataFrame({
-                    "t": [int(r.t)], "c": [int(r.c)], "z": [int(r.z)],
-                    "y0": [int(r.y0)], "x0": [0],
-                    "h": [int(r.ny)], "w": [int(r.nx)],
-                    "values": [plane.ravel().astype(np.float64)],
-                })
+                yield payload_frame(_strip(r), r.t, r.c, r.z, y0=r.y0)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
 
 
-class LsmImageReader:
+class LsmImageReader(PlannedReader):
     """BioImage reader over Zeiss LSM files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_LSM_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.lsm import read_lsm_catalog
-            read_lsm_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".lsm",)
+    DIM_ORDER_ERROR = "LSM dimension order comes from CZ_LSMINFO"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "LSM dimension order comes from CZ_LSMINFO")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.lsm import read_lsm_catalog
+
+        return read_lsm_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_lsm_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
+
+    def read_planes(self, spark, img):
+        if os.path.isfile(self._path):
+            return read_lsm_planes(spark, self._path)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
         info, names, plan = _plan_strips(self._path)
@@ -237,18 +201,9 @@ class LsmImageReader:
                          f"DataType={info['data_type']}"),
         }]
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _strip_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

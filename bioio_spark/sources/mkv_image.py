@@ -1,152 +1,33 @@
-"""MKV (.mkv) reader — the Matroska/EBML video-container row of the
-reference's imageio tier (bioio-imageio routes .mkv through ffmpeg;
-ref README.md:82). Built on the public EBML (RFC 8794) + Matroska
-layout (bioio_spark.formats.mkv): frames map to T (the GIF/AVI/MP4
-rule), decoded samples to R,G,B channels, and the track's
-DefaultDuration becomes ``time_interval``.
-
-- **Catalog (driver-side)**: EBML header + Segment/Cluster walk — no
-  SimpleBlock payload IO (D8 contract).
-- **Pixels (executor-side)**: each SimpleBlock resolves to an
-  absolute byte range; one plan row per frame, seek-read + the
-  in-repo baseline JPEG codec (V_MJPEG samples) — zero shuffle, one
-  ranged GET per frame at object-store scale."""
+"""MKV (.mkv) reader — Matroska on the shared video reader
+(bioio_spark.sources.video). Built on the public EBML (RFC 8794) +
+Matroska layout (bioio_spark.formats.mkv): the Segment/Cluster walk
+resolves each SimpleBlock to a byte range, V_MJPEG samples decode with
+the in-repo baseline JPEG codec, and the track's DefaultDuration
+becomes ``time_interval``."""
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-
-from bioio_spark.fsio import read_range
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-_MKV_EXTS = (".mkv",)
+from bioio_spark.sources.video import VideoReader
 
 
-def _frame_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from bioio_spark.formats.mkv import decode_mkv_frame
-
-    for pdf in it:
-        for r in pdf.itertuples():
-            data = read_range(r.path, r.offset, r.nbytes)
-            frame = decode_mkv_frame(data, r.w, r.h)
-            h, w, _ = frame.shape
-            n = h * w
-            for c in range(3):
-                yield pd.DataFrame({
-                    "t": np.full(n, r.t, np.int32),
-                    "c": np.full(n, c, np.int32),
-                    "z": np.zeros(n, np.int32),
-                    "y": np.repeat(np.arange(h, dtype=np.int32), w),
-                    "x": np.tile(np.arange(w, dtype=np.int32), h),
-                    "value": frame[..., c].ravel().astype(np.float64),
-                })
-
-
-def _plan_rows(path: str, cat: dict) -> list:
-    ap = os.path.abspath(path)
-    return [{"path": ap, "t": t, "offset": off, "nbytes": size,
-             "w": cat["width"], "h": cat["height"]}
-            for t, (off, size) in enumerate(cat["frames"])]
-
-
-def read_mkv_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned MKV read: the t window prunes whole FRAMES
-    (byte ranges from the Cluster walk); c/y/x trim via codegen
-    filter after the per-frame decode."""
-    from bioio_spark.formats.mkv import read_mkv_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_mkv_catalog(path)
-    t0, t1 = _norm_window(t, cat["n_frames"])
-    c0, c1 = _norm_window(c, 3)
-    z0, z1 = _norm_window(z, 1)
-    y0, y1 = _norm_window(y, cat["height"])
-    x0, x1 = _norm_window(x, cat["width"])
-    rows = [r for r in _plan_rows(path, cat) if t0 <= r["t"] < t1]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not rows or c0 >= c1 or z0 >= z1 or y0 >= y1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_frame_batches, schema=schema)
-    return px.filter(
-        (F.col("c") >= c0) & (F.col("c") < c1)
-        & (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1))
-
-
-class MkvImageReader:
+class MkvImageReader(VideoReader):
     """BioImage reader over Matroska (MKV) video containers."""
 
+    EXTENSIONS = (".mkv",)
+    DIM_ORDER_ERROR = "MKV frames map to T; dim_order is fixed"
+    LABEL = "Matroska"
+
     @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_MKV_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.mkv import read_mkv_catalog
-            read_mkv_catalog(image)
-            return True
-        except Exception:
-            return False
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("MKV frames map to T; dim_order is fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
-
-    def to_dataset(self, spark: SparkSession):
+    def catalog(path: str) -> dict:
         from bioio_spark.formats.mkv import read_mkv_catalog
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
 
-        cat = read_mkv_catalog(self._path)
-        scene = "Image:0"
-        names = self._channel_names or ["Red", "Green", "Blue"]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": str(names[ci])}
-            for ci in range(3)]
-        pps = self._pps
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["n_frames"], "size_c": 3, "size_z": 1,
-            "size_y": cat["height"], "size_x": cat["width"],
-            "size_m": None, "size_s": None,
-            "dtype": "uint8", "ome_pixel_type": "uint8",
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": f"Matroska {cat['codec']}",
-        }]
-        rows = _plan_rows(self._path, cat)
-        plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-            min(len(rows), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _frame_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        return read_mkv_catalog(path)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+    @staticmethod
+    def decode(data: bytes, row):
+        from bioio_spark.formats.mkv import decode_mkv_frame
+
+        return decode_mkv_frame(data, row.w, row.h)
+
+
+read_mkv_window = MkvImageReader.window

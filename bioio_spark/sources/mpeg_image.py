@@ -1,151 +1,32 @@
-"""MPEG-1 (.mpg/.mpeg) reader — the elementary-stream twin of the
-MP4/MKV video rows (bioio-imageio routes .mpg through ffmpeg; ref
-README.md:84). Built on bioio_spark.formats.mpeg1 (ISO/IEC 11172-2,
-I-frames only): frames map to T, decoded RGB samples to channels.
-
-- **Catalog (driver-side)**: start-code scan — one (offset, nbytes)
-  per picture, sequence-header geometry; no entropy decode (D8).
-- **Pixels (executor-side)**: every picture is a closed intra GOP, so
-  frames decode independently: one plan row per frame, seek-read +
-  in-repo MPEG-1 decode — zero shuffle, one ranged GET per frame."""
+"""MPEG-1 (.mpg/.mpeg) reader — the elementary-stream member of the
+shared video reader (bioio_spark.sources.video). Built on
+bioio_spark.formats.mpeg1 (ISO/IEC 11172-2, I-frames only): a
+start-code scan gives one byte range per picture, and every picture is
+a closed intra GOP, so frames decode independently."""
 
 from __future__ import annotations
 
-import os
-from typing import Iterator
-
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from bioio_spark.fsio import read_range
-
-_MPEG_EXTS = (".mpg", ".mpeg")
+from bioio_spark.sources.video import VideoReader
 
 
-def _frame_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from bioio_spark.formats.mpeg1 import decode_mpeg1_frame
-
-    for pdf in it:
-        for r in pdf.itertuples():
-            data = read_range(r.path, r.offset, r.nbytes)
-            frame = decode_mpeg1_frame(data, r.w, r.h)
-            h, w, _ = frame.shape
-            n = h * w
-            for c in range(3):
-                yield pd.DataFrame({
-                    "t": np.full(n, r.t, np.int32),
-                    "c": np.full(n, c, np.int32),
-                    "z": np.zeros(n, np.int32),
-                    "y": np.repeat(np.arange(h, dtype=np.int32), w),
-                    "x": np.tile(np.arange(w, dtype=np.int32), h),
-                    "value": frame[..., c].ravel().astype(np.float64),
-                })
-
-
-def _plan_rows(path: str, cat: dict) -> list:
-    ap = os.path.abspath(path)
-    return [{"path": ap, "t": t, "offset": off, "nbytes": size,
-             "w": cat["width"], "h": cat["height"]}
-            for t, (off, size) in enumerate(cat["frames"])]
-
-
-def read_mpeg_window(spark: SparkSession, path: str,
-                     t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned MPEG-1 read: the t window prunes whole FRAMES
-    (byte ranges from the start-code catalog); c/y/x trim via codegen
-    filter after the per-frame decode (the picture is the read
-    granularity)."""
-    from bioio_spark.formats.mpeg1 import read_mpeg1_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_mpeg1_catalog(path)
-    t0, t1 = _norm_window(t, cat["n_frames"])
-    c0, c1 = _norm_window(c, 3)
-    z0, z1 = _norm_window(z, 1)
-    y0, y1 = _norm_window(y, cat["height"])
-    x0, x1 = _norm_window(x, cat["width"])
-    rows = [r for r in _plan_rows(path, cat) if t0 <= r["t"] < t1]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not rows or c0 >= c1 or z0 >= z1 or y0 >= y1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_frame_batches, schema=schema)
-    return px.filter(
-        (F.col("c") >= c0) & (F.col("c") < c1)
-        & (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1))
-
-
-class MpegImageReader:
+class MpegImageReader(VideoReader):
     """BioImage reader over MPEG-1 video elementary streams."""
 
+    EXTENSIONS = (".mpg", ".mpeg")
+    DIM_ORDER_ERROR = "MPEG-1 frames map to T; dim_order is fixed"
+    LABEL = "MPEG-1 ES"
+
     @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_MPEG_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.mpeg1 import read_mpeg1_catalog
-            read_mpeg1_catalog(image)
-            return True
-        except Exception:
-            return False
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("MPEG-1 frames map to T; dim_order is "
-                             "fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
-
-    def to_dataset(self, spark: SparkSession):
+    def catalog(path: str) -> dict:
         from bioio_spark.formats.mpeg1 import read_mpeg1_catalog
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
 
-        cat = read_mpeg1_catalog(self._path)
-        scene = "Image:0"
-        names = self._channel_names or ["Red", "Green", "Blue"]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": str(names[ci])}
-            for ci in range(3)]
-        pps = self._pps
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["n_frames"], "size_c": 3, "size_z": 1,
-            "size_y": cat["height"], "size_x": cat["width"],
-            "size_m": None, "size_s": None,
-            "dtype": "uint8", "ome_pixel_type": "uint8",
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": f"MPEG-1 ES {cat['codec']}",
-        }]
-        rows = _plan_rows(self._path, cat)
-        plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-            min(len(rows), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _frame_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        return read_mpeg1_catalog(path)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+    @staticmethod
+    def decode(data: bytes, row):
+        from bioio_spark.formats.mpeg1 import decode_mpeg1_frame
+
+        return decode_mpeg1_frame(data, row.w, row.h)
+
+
+read_mpeg_window = MpegImageReader.window

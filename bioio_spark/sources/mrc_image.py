@@ -11,44 +11,16 @@ pixel size converts to µm (1 Å = 1e-4 µm).
 
 from __future__ import annotations
 
-import glob as _glob
 import os
-from typing import Iterator
 
-import numpy as np
 import pandas as pd
-
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_MRC_EXTS = (".mrc", ".st", ".map", ".rec")
-
-
-def _mrc_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(_MRC_EXTS))
-    return [image]
-
-
-def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            buf = read_range(r.path, r.offset, r.nbytes)
-            plane = np.frombuffer(
-                buf, dtype=np.dtype(r.dtype),
-                count=r.ny * r.nx).reshape(r.ny, r.nx)
-            yield pd.DataFrame({
-                "scene": r.scene,
-                "t": np.zeros(plane.size, np.int32),
-                "c": np.zeros(plane.size, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(r.ny, dtype=np.int32), r.nx),
-                "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                "value": plane.ravel().astype(np.float64),
-            })
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         raw_plane_batches, standardize,
+                                         trim)
 
 
 def read_mrc_window(spark: SparkSession, path: str,
@@ -57,89 +29,55 @@ def read_mrc_window(spark: SparkSession, path: str,
     narrows each section to its contiguous row byte range; x trims via
     codegen filter."""
     from bioio_spark.formats.mrc import read_mrc_header
-    from bioio_spark.sources.zarr_image import _norm_window
 
     h = read_mrc_header(path)
-    t0, t1 = _norm_window(t, 1)
-    c0, c1 = _norm_window(c, 1)
-    z0, z1 = _norm_window(z, h["nz"])
-    y0, y1 = _norm_window(y, h["ny"])
-    x0, x1 = _norm_window(x, h["nx"])
+    norm_window(t, 1)
+    norm_window(c, 1)
+    z0, z1 = norm_window(z, h["nz"])
+    y0, y1 = norm_window(y, h["ny"])
+    x0, x1 = norm_window(x, h["nx"])
     row_bytes = h["nx"] * h["dtype"].itemsize
     ap = os.path.abspath(path)
-    plan = [{"path": ap, "scene": "Image:0", "z": z_,
+    plan = [{"path": ap, "t": 0, "c": 0, "z": z_,
              "offset": h["data_offset"] + z_ * h["section_bytes"]
              + y0 * row_bytes,
              "nbytes": (y1 - y0) * row_bytes,
              "y0": y0, "ny": y1 - y0, "nx": h["nx"],
              "dtype": h["dtype"].str}
             for z_ in range(z0, z1)]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or t0 >= t1 or c0 >= c1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(r.dtype),
-                    count=r.ny * r.nx).reshape(r.ny, r.nx)
-                yield pd.DataFrame({
-                    "t": np.zeros(plane.size, np.int32),
-                    "c": np.zeros(plane.size, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                    "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                    "value": plane.ravel().astype(np.float64),
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+    if not plan:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
-class MrcImageReader:
+class MrcImageReader(PlannedReader):
     """BioImage reader over MRC-2014 volumes (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        paths = _mrc_paths(image)
-        if not paths:
-            return False
-        if not os.path.isdir(image) and not \
-                image.lower().endswith(_MRC_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.mrc import read_mrc_header
-            read_mrc_header(paths[0])
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".mrc", ".st", ".map", ".rec")
+    DIM_ORDER_ERROR = "MRC sections map to Z; dim_order is fixed"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("MRC sections map to Z; dim_order is "
-                             "fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        """The first volume's header (a directory's first file)."""
+        from bioio_spark.formats.mrc import read_mrc_header
+
+        return read_mrc_header(MrcImageReader.paths(path)[0])
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_mrc_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.mrc import read_mrc_header
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        paths = _mrc_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No MRC files under {self._path}")
         scene_rows, channel_rows, plan = [], [], []
@@ -172,22 +110,15 @@ class MrcImageReader:
             ap = os.path.abspath(p)
             for z in range(h["nz"]):
                 plan.append({
-                    "path": ap, "scene": scene, "z": z,
+                    "path": ap, "scene": scene, "t": 0, "c": 0, "z": z,
                     "offset": h["data_offset"] + z * h["section_bytes"],
                     "nbytes": h["section_bytes"],
-                    "ny": h["ny"], "nx": h["nx"],
+                    "y0": 0, "ny": h["ny"], "nx": h["nx"],
                     "dtype": h["dtype"].str})
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _batches,
-                  schema="scene string, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, raw_plane_batches,
+                        "scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -27,7 +27,12 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, empty_window,
+                                         norm_window, payload_frame,
+                                         plan_pixels, plane_frame,
+                                         standardize)
 
 
 def read_nd2_window(spark: SparkSession, path: str,
@@ -47,7 +52,6 @@ def read_nd2_window(spark: SparkSession, path: str,
                                          read_nd2_chunkmap,
                                          read_nd2_experiment,
                                          resolve_nd2_loops)
-    from bioio_spark.sources.zarr_image import _norm_window
 
     path = os.path.abspath(path)
     attrs = read_nd2_attributes(path)
@@ -67,11 +71,11 @@ def read_nd2_window(spark: SparkSession, path: str,
     if not (0 <= scene < p_n):
         raise IndexError(f"{path}: no position {scene} "
                          f"({p_n} position(s))")
-    t0, t1 = _norm_window(t, t_n)
-    c0, c1 = _norm_window(c, c_n)
-    z0, z1 = _norm_window(z, z_n)
-    y0, y1 = _norm_window(y, y_n)
-    x0, x1 = _norm_window(x, x_n)
+    t0, t1 = norm_window(t, t_n)
+    c0, c1 = norm_window(c, c_n)
+    z0, z1 = norm_window(z, z_n)
+    y0, y1 = norm_window(y, y_n)
+    x0, x1 = norm_window(x, x_n)
     row_bytes = x_n * c_n * itemsize
     plan = []
     for seq in range(seq_n):
@@ -89,9 +93,8 @@ def read_nd2_window(spark: SparkSession, path: str,
                      "start": 8 + y0 * row_bytes,
                      "nbytes": (y1 - y0) * row_bytes})
 
-    schema = "t int, c int, z int, y int, x int, value double"
     if not plan:
-        return spark.createDataFrame([], schema)
+        return empty_window(spark)
     dt_name = "u1" if itemsize == 1 else "<u2"
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -106,21 +109,10 @@ def read_nd2_window(spark: SparkSession, path: str,
                         .reshape(y1 - y0, x_n, c_n))
                 win = rows[:, x0:x1, c0:c1]          # exact numpy prune
                 for ci in range(c1 - c0):
-                    plane = win[:, :, ci]
-                    yield pd.DataFrame({
-                        "t": np.full(plane.size, r.t, np.int32),
-                        "c": np.full(plane.size, c0 + ci, np.int32),
-                        "z": np.full(plane.size, r.z, np.int32),
-                        "y": np.repeat(np.arange(
-                            y0, y1, dtype=np.int32), x1 - x0),
-                        "x": np.tile(np.arange(
-                            x0, x1, dtype=np.int32), y1 - y0),
-                        "value": plane.ravel().astype(np.float64),
-                    })
+                    yield plane_frame(win[:, :, ci], r.t, c0 + ci, r.z,
+                                      y0=y0, x0=x0)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(batches, schema=schema)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
 
 
 def read_nd2_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -173,30 +165,23 @@ def read_nd2_planes(spark: SparkSession, path: str, scene: int = 0):
                 frame = (a.reshape(y_n, x_n, c_n)
                          .transpose(2, 0, 1))
                 for c in range(c_n):
-                    yield pd.DataFrame({
-                        "t": [int(r.t)], "c": [c], "z": [int(r.z)],
-                        "y0": [0], "x0": [0], "h": [y_n], "w": [x_n],
-                        "values": [frame[c].ravel()
-                                   .astype(np.float64)],
-                    })
+                    yield payload_frame(frame[c], r.t, c, r.z)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
 
 
-class Nd2ImageReader:
+class Nd2ImageReader(PlannedReader):
     """BioImage reader over baseline ND2 files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
+    EXTENSIONS = (".nd2",)
+    DIM_ORDER_ERROR = "ND2 dimensions come from the attribute chunks"
+
+    @classmethod
+    def is_supported_image(cls, image) -> bool:
         import struct
 
         if not isinstance(image, str) or not \
-                image.lower().endswith(".nd2"):
+                image.lower().endswith(cls.EXTENSIONS):
             return False
         try:
             with open(image, "rb") as f:
@@ -206,16 +191,19 @@ class Nd2ImageReader:
         except OSError:
             return False
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "ND2 dimensions come from the attribute chunks")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if os.path.isfile(self._path):
+            return read_nd2_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x,
+                                   scene=img.current_scene_index)
+        return None
+
+    def read_planes(self, spark, img):
+        if os.path.isfile(self._path):
+            return read_nd2_planes(spark, self._path,
+                                   scene=img.current_scene_index)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.nd2 import (decode_lv, nd2_seq_coords,
@@ -226,8 +214,7 @@ class Nd2ImageReader:
                                              read_nd2_time_interval,
                                              resolve_nd2_loops)
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
         path = os.path.abspath(self._path)
@@ -322,30 +309,13 @@ class Nd2ImageReader:
                     frame = (a.reshape(height, width, n_comp)
                              .transpose(2, 0, 1))
                     for c in range(n_comp):
-                        plane = frame[c]
-                        yield pd.DataFrame({
-                            "scene": r.scene,
-                            "t": np.full(plane.size, r.t, np.int32),
-                            "c": np.full(plane.size, c, np.int32),
-                            "z": np.full(plane.size, r.z, np.int32),
-                            "y": np.repeat(np.arange(
-                                height, dtype=np.int32), width),
-                            "x": np.tile(np.arange(
-                                width, dtype=np.int32), height),
-                            "value": plane.ravel().astype(np.float64),
-                        })
+                        yield plane_frame(frame[c], r.t, c, r.z,
+                                          scene=r.scene)
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="scene string, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, batches,
+                        "scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

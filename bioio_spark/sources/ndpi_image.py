@@ -24,9 +24,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from bioio_spark.sources.planned import PlannedReader, plan_pixels
 from bioio_spark.sources.svs_image import _decode_batches
-
-_NDPI_EXTS = (".ndpi",)
 
 
 def _chunk_plan(path: str):
@@ -62,32 +61,18 @@ def _chunk_plan(path: str):
     return cat, extras, plan
 
 
-class NdpiImageReader:
+class NdpiImageReader(PlannedReader):
     """BioImage reader over Hamamatsu NDPI whole-slide files."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_NDPI_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.ndpi import read_ndpi_catalog
-            read_ndpi_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".ndpi",)
+    DIM_ORDER_ERROR = ("NDPI is a 2D (optionally RGB) slide pyramid; "
+                       "dim_order is fixed")
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("NDPI is a 2D (optionally RGB) slide "
-                             "pyramid; dim_order is fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.ndpi import read_ndpi_catalog
+
+        return read_ndpi_catalog(path)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
@@ -135,10 +120,8 @@ class NdpiImageReader:
         for kind, pg, scene in extras:
             add_scene(int(scene.split(":")[1]), pg, [0], kind)
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _decode_batches,
+        px = (plan_pixels(
+                  spark, plan, _decode_batches,
                   schema="scene string, res_level int, y int, x int, "
                          "s int, value double")
               .select(

@@ -13,15 +13,15 @@
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plan_pixels, raw_plane_batches,
+                                         standardize, trim)
 
 
 def _plan(path: str, cat: dict) -> list[dict]:
@@ -35,27 +35,10 @@ def _plan(path: str, cat: dict) -> list[dict]:
             "z": a.get("z", 0),
             "offset": e["offset"],
             "nbytes": e["w"] * e["h"] * e["dtype"].itemsize,
-            "ny": e["h"], "nx": e["w"], "dtype": e["dtype"].str,
+            "y0": 0, "ny": e["h"], "nx": e["w"],
+            "dtype": e["dtype"].str,
         })
     return rows
-
-
-def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            buf = read_range(r.path, r.offset, r.nbytes)
-            plane = np.frombuffer(
-                buf, dtype=np.dtype(r.dtype),
-                count=r.ny * r.nx).reshape(r.ny, r.nx)
-            yield pd.DataFrame({
-                "scene": r.scene,
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.full(plane.size, r.c, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(r.ny, dtype=np.int32), r.nx),
-                "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                "value": plane.ravel().astype(np.float64),
-            })
 
 
 def read_ndtiff_window(spark: SparkSession, path: str,
@@ -64,19 +47,16 @@ def read_ndtiff_window(spark: SparkSession, path: str,
     """Window-pruned NDTiff read: t/c/z prune whole index entries, the
     y window narrows each surviving plane to its contiguous row range
     (index offsets address raw rows), x trims via codegen filter."""
-    from bioio_spark.formats.ndtiff import read_ndtiff_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_ndtiff_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, cat["size_c"])
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    cat = NdtiffImageReader.catalog(path)
+    t0, t1 = norm_window(t, cat["size_t"])
+    c0, c1 = norm_window(c, cat["size_c"])
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     key = f"Image:{scene}"
     rows = []
     for r in _plan(path, cat):
-        if r["scene"] != key:
+        if r.pop("scene") != key:
             continue
         if not (t0 <= r["t"] < t1 and c0 <= r["c"] < c1
                 and z0 <= r["z"] < z1):
@@ -85,69 +65,38 @@ def read_ndtiff_window(spark: SparkSession, path: str,
         rows.append({**r,
                      "offset": r["offset"] + y0 * row_bytes,
                      "nbytes": (y1 - y0) * row_bytes,
-                     "ny": y1 - y0})
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not rows or x0 >= x1:
-        return spark.createDataFrame([], schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(r.dtype),
-                    count=r.ny * r.nx).reshape(r.ny, r.nx)
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        y0, y0 + r.ny, dtype=np.int32), r.nx),
-                    "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                    "value": plane.ravel().astype(np.float64),
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(rows)).repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+                     "y0": y0, "ny": y1 - y0})
+    if not rows:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, rows, raw_plane_batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
-class NdtiffImageReader:
+class NdtiffImageReader(PlannedReader):
     """BioImage reader over Micro-Manager NDTiff dataset dirs."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str) or not os.path.isdir(image):
-            return False
+    # no extension: NDTiff datasets are directories selected by their
+    # NDTiff.index (probe-based routing, like the reference's
+    # dir-shaped plugins)
+    DIM_ORDER_ERROR = "NDTiff axes come from the index entries"
+
+    @classmethod
+    def routes(cls, image: str) -> bool:
         from bioio_spark.formats.ndtiff import INDEX_NAME
 
-        if not os.path.isfile(os.path.join(image, INDEX_NAME)):
-            return False
-        try:
-            from bioio_spark.formats.ndtiff import read_ndtiff_catalog
-            read_ndtiff_catalog(image)
-            return True
-        except Exception:
-            return False
+        return os.path.isfile(os.path.join(image, INDEX_NAME))
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("NDTiff axes come from the index entries")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.ndtiff import read_ndtiff_catalog
+
+        return read_ndtiff_catalog(path)
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.ndtiff import read_ndtiff_catalog
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
 
-        cat = read_ndtiff_catalog(self._path)
+        cat = self.catalog(self._path)
         pps = self._pps
         dt = np.dtype(cat["dtype"]).newbyteorder("=")
         scene_rows, channel_rows = [], []
@@ -172,18 +121,10 @@ class NdtiffImageReader:
                 "time_interval": None,
                 "metadata": "NDTiff (Micro-Manager NDTiffStorage)",
             })
-        plan = _plan(self._path, cat)
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _batches,
-                  schema="scene string, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, _plan(self._path, cat), raw_plane_batches,
+                        "scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

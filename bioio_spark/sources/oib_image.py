@@ -18,13 +18,13 @@ from __future__ import annotations
 import os
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_OIB_EXTS = (".oib",)
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         plane_frame, standardize, trim)
 
 
 def _read_extents(path: str, offsets, lengths) -> bytes:
@@ -40,16 +40,7 @@ def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for r in pdf.itertuples():
             planes, _desc = decode_tiff(
                 _read_extents(r.path, r.offsets, r.lengths))
-            plane = planes[0]
-            y_n, x_n = plane.shape
-            yield pd.DataFrame({
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.full(plane.size, r.c, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(y_n, dtype=np.int32), x_n),
-                "x": np.tile(np.arange(x_n, dtype=np.int32), y_n),
-                "value": plane.ravel().astype(np.float64),
-            })
+            yield plane_frame(planes[0], r.t, r.c, r.z)
 
 
 def read_oib_window(spark: SparkSession, path: str,
@@ -58,68 +49,50 @@ def read_oib_window(spark: SparkSession, path: str,
     (driver-side grid arithmetic over the CFB catalog); the y/x trim
     is a codegen filter after the per-plane decode (plane streams are
     whole TIFFs, so the stream is the read granularity)."""
-    from bioio_spark.formats.oib import read_oib_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_oib_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, cat["size_c"])
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    cat = OibImageReader.catalog(path)
+    t0, t1 = norm_window(t, cat["size_t"])
+    c0, c1 = norm_window(c, cat["size_c"])
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     ap = os.path.abspath(path)
     plan = [{"path": ap, "t": ti, "c": ci, "z": zi,
              "offsets": [o for o, _ in ext],
              "lengths": [n for _, n in ext]}
             for (ti, ci, zi), ext in sorted(cat["planes"].items())
             if t0 <= ti < t1 and c0 <= ci < c1 and z0 <= zi < z1]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or y0 >= y1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_plane_batches, schema=schema)
-    return px.filter(
-        (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1))
+    if not plan:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+                y=(y0, y1), x=(x0, x1))
 
 
-class OibImageReader:
+class OibImageReader(PlannedReader):
     """BioImage reader over Olympus OIB compound documents."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_OIB_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.oib import read_oib_catalog
-            read_oib_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".oib",)
+    DIM_ORDER_ERROR = "OIB axis sizes come from the embedded OIF INI"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("OIB axis sizes come from the embedded "
-                             "OIF INI")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.oib import read_oib_catalog
+
+        return read_oib_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_oib_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.oib import read_oib_catalog
         from bioio_spark.formats.tiff import decode_tiff
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_oib_catalog(self._path)
+        cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or cat["channel_names"]
         channel_rows = [
@@ -165,18 +138,9 @@ class OibImageReader:
                  "offsets": [o for o, _ in ext],
                  "lengths": [n for _, n in ext]}
                 for (t, c, z), ext in sorted(cat["planes"].items())]
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _plane_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -18,13 +18,14 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
-from bioio_spark.fsio import read_bytes, read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_OIF_EXTS = (".oif",)
+from bioio_spark.fsio import read_bytes
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         plane_frame, raw_plane_batches,
+                                         standardize, trim)
 
 
 def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -33,16 +34,7 @@ def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in it:
         for r in pdf.itertuples():
             planes, _desc = decode_tiff(read_bytes(r.path))
-            plane = planes[0]
-            y_n, x_n = plane.shape
-            yield pd.DataFrame({
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.full(plane.size, r.c, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(y_n, dtype=np.int32), x_n),
-                "x": np.tile(np.arange(x_n, dtype=np.int32), y_n),
-                "value": plane.ravel().astype(np.float64),
-            })
+            yield plane_frame(planes[0], r.t, r.c, r.z)
 
 
 def read_oif_window(spark: SparkSession, path: str,
@@ -54,14 +46,13 @@ def read_oif_window(spark: SparkSession, path: str,
     GET). Residual trim is a codegen filter."""
     from bioio_spark.formats.oif import read_oif_catalog
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.zarr_image import _norm_window
 
     cat = read_oif_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, cat["size_c"])
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    t0, t1 = norm_window(t, cat["size_t"])
+    c0, c1 = norm_window(c, cat["size_c"])
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     plan = []
     for (ti, ci, zi), p in cat["planes"].items():
         if not (t0 <= ti < t1 and c0 <= ci < c1 and z0 <= zi < z1):
@@ -87,69 +78,38 @@ def read_oif_window(spark: SparkSession, path: str,
                 raise ValueError(
                     f"{p}: compressed OIF planes not supported on the "
                     f"windowed path; use the full reader")
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or x0 >= x1:
-        return spark.createDataFrame([], schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(r.dtype),
-                    count=r.ny * r.nx).reshape(r.ny, r.nx)
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                    "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                    "value": plane.ravel().astype(np.float64),
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+    if not plan:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
-class OifImageReader:
+class OifImageReader(PlannedReader):
     """BioImage reader over Olympus OIF plane-file directories."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_OIF_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.oif import read_oif_catalog
-            read_oif_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".oif",)
+    DIM_ORDER_ERROR = "OIF axis sizes come from the INI's Axis sections"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("OIF axis sizes come from the INI's "
-                             "Axis sections")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.oif import read_oif_catalog
+
+        return read_oif_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_oif_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.oif import read_oif_catalog
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_oif_catalog(self._path)
+        cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or cat["channel_names"]
         channel_rows = [
@@ -187,18 +147,9 @@ class OifImageReader:
         }]
         plan = [{"path": os.path.abspath(p), "t": t, "c": c, "z": z}
                 for (t, c, z), p in sorted(cat["planes"].items())]
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _plane_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -13,35 +13,15 @@ axis maps to Z (Microns) or T (Seconds), the Bio-Formats rule.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import numpy as np
 import pandas as pd
-
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_PIC_EXTS = (".pic",)
-
-
-def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            buf = read_range(r.path, r.offset, r.nbytes)
-            plane = np.frombuffer(
-                buf, dtype=np.dtype(r.dtype),
-                count=r.ny * r.nx).reshape(r.ny, r.nx)
-            yield pd.DataFrame({
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.zeros(plane.size, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(
-                    r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                "value": plane.ravel().astype(np.float64),
-            })
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         raw_plane_batches, standardize,
+                                         trim)
 
 
 def read_pic_window(spark: SparkSession, path: str,
@@ -49,73 +29,58 @@ def read_pic_window(spark: SparkSession, path: str,
     """Window-pruned PIC read: the plane axis (T or Z per AXIS_4)
     prunes whole planes; the y window narrows each plane to its
     contiguous row byte range; x trims via codegen filter."""
-    from bioio_spark.formats.pic import HEADER_SIZE, read_pic_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
+    from bioio_spark.formats.pic import HEADER_SIZE
 
-    cat = read_pic_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, 1)
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    cat = PicImageReader.catalog(path)
+    t0, t1 = norm_window(t, cat["size_t"])
+    norm_window(c, 1)
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     row_bytes = cat["nx"] * cat["dtype"].itemsize
     t_axis = cat["size_t"] > 1
     lo, hi = (t0, t1) if t_axis else (z0, z1)
     ap = os.path.abspath(path)
     plan = [{"path": ap,
-             "t": p if t_axis else 0, "z": 0 if t_axis else p,
+             "t": p if t_axis else 0, "c": 0, "z": 0 if t_axis else p,
              "offset": HEADER_SIZE + p * cat["section_bytes"]
              + y0 * row_bytes,
              "nbytes": (y1 - y0) * row_bytes,
              "y0": y0, "ny": y1 - y0, "nx": cat["nx"],
              "dtype": cat["dtype"].str}
             for p in range(lo, hi)]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or c0 >= c1 or x0 >= x1 or \
-            (t_axis and z0 >= z1) or (not t_axis and t0 >= t1):
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+    if not plan:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
-class PicImageReader:
+class PicImageReader(PlannedReader):
     """BioImage reader over Bio-Rad PIC confocal stacks."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_PIC_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.pic import read_pic_catalog
-            read_pic_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".pic",)
+    DIM_ORDER_ERROR = "PIC plane axis comes from the AXIS_4 note"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("PIC plane axis comes from the AXIS_4 "
-                             "note")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.pic import read_pic_catalog
+
+        return read_pic_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_pic_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.pic import (HEADER_SIZE,
-                                             read_pic_catalog)
+        from bioio_spark.formats.pic import HEADER_SIZE
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_pic_catalog(self._path)
+        cat = self.catalog(self._path)
         scene = "Image:0"
         channel_rows = [
             {"image_id": self._image_id, "scene": scene,
@@ -146,24 +111,15 @@ class PicImageReader:
         t_axis = cat["size_t"] > 1
         ap = os.path.abspath(self._path)
         plan = [{"path": ap,
-                 "t": p if t_axis else 0, "z": 0 if t_axis else p,
+                 "t": p if t_axis else 0, "c": 0, "z": 0 if t_axis else p,
                  "offset": HEADER_SIZE + p * cat["section_bytes"],
                  "nbytes": cat["section_bytes"],
                  "y0": 0, "ny": cat["ny"], "nx": cat["nx"],
                  "dtype": cat["dtype"].str}
                 for p in range(cat["npic"])]
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -12,7 +12,6 @@ pandas frame per file; parallelism = file count.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 from typing import Iterator
@@ -20,8 +19,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import PlannedReader
 
 
 def _read_png_header(path: str) -> tuple[int, int, int, int]:
@@ -58,40 +59,18 @@ def _read_png_header(path: str) -> tuple[int, int, int, int]:
     return h, w, depth, _SAMPLES_OF_COLOR_TYPE[color]
 
 
-def _png_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(".png"))
-    return [image]
-
-
-class PngImageReader:
+class PngImageReader(PlannedReader):
     """BioImage reader over baseline grayscale PNG files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(".png"):
-            return True
-        return os.path.isdir(image) and bool(_png_paths(image))
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("PNG planes are always YX")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    EXTENSIONS = (".png",)
+    DIM_ORDER_ERROR = "PNG planes are always YX"
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
 
-        paths = _png_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No PNG files under {self._path}")
 

@@ -6,7 +6,6 @@ binaryFile scan."""
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 from typing import Iterator
@@ -17,7 +16,7 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_PNM_EXTS = (".pgm", ".ppm", ".pnm")
+from bioio_spark.sources.planned import PlannedReader
 
 
 def _read_pnm_header(path: str):
@@ -39,40 +38,18 @@ def _read_pnm_header(path: str):
     return h, w, samples, "uint16" if maxval > 255 else "uint8"
 
 
-def _pnm_paths(image: str) -> list[str]:
-    if os.path.isdir(image):
-        return sorted(p for p in _glob.glob(os.path.join(image, "*"))
-                      if p.lower().endswith(_PNM_EXTS))
-    return [image]
-
-
-class PnmImageReader:
+class PnmImageReader(PlannedReader):
     """BioImage reader over NetPBM files (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(_PNM_EXTS):
-            return True
-        return os.path.isdir(image) and bool(_pnm_paths(image))
-
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("NetPBM planes are always YX(S)")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    EXTENSIONS = (".pgm", ".ppm", ".pnm")
+    DIM_ORDER_ERROR = "NetPBM planes are always YX(S)"
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
                                                     ImageDataset)
 
-        paths = _pnm_paths(self._path)
+        paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No PGM/PPM files under {self._path}")
 

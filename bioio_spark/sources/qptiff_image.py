@@ -21,12 +21,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_QPTIFF_EXTS = (".qptiff",)
+from bioio_spark.fsio import read_range
+from bioio_spark.sources.planned import (PlannedReader, norm_window,
+                                         plan_pixels, trim)
 
 
 def _chunk_plan(path: str):
@@ -104,15 +104,13 @@ def read_qptiff_window(spark: SparkSession, path: str,
     """Tile-pruned windowed read of the fluorescence pyramid: c prunes
     whole channel PAGES, the (y, x) window selects intersecting tiles
     of the requested level."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     cat, _extras, plan = _chunk_plan(path)
     if not (0 <= level < len(cat["levels"])):
         raise IndexError(f"{path}: no pyramid level {level}")
     pg = cat["levels"][level][0]
-    c0, c1 = _norm_window(c, len(cat["channels"]))
-    y0, y1 = _norm_window(y, pg["h"])
-    x0, x1 = _norm_window(x, pg["w"])
+    c0, c1 = norm_window(c, len(cat["channels"]))
+    y0, y1 = norm_window(y, pg["h"])
+    x0, x1 = norm_window(x, pg["w"])
     pruned = [r for r in plan
               if r["scene"] == "Image:0" and r["res_level"] == level
               and c0 <= r["c"] < c1
@@ -122,41 +120,22 @@ def read_qptiff_window(spark: SparkSession, path: str,
               "s int, value double")
     if not pruned:
         return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_decode_batches, schema=schema)
-    return px.filter(
-        (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1)).drop(
-        "scene", "res_level", "s")
+    px = plan_pixels(spark, pruned, _decode_batches, schema=schema)
+    return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level", "s")
 
 
-class QptiffImageReader:
+class QptiffImageReader(PlannedReader):
     """BioImage reader over Vectra QPTIFF multiplexed slides."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_QPTIFF_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.qptiff import read_qptiff_catalog
-            read_qptiff_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".qptiff",)
+    DIM_ORDER_ERROR = ("QPTIFF channels come from the page grouping; "
+                       "dim_order is fixed")
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("QPTIFF channels come from the page "
-                             "grouping; dim_order is fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.qptiff import read_qptiff_catalog
+
+        return read_qptiff_catalog(path)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
@@ -211,10 +190,8 @@ class QptiffImageReader:
                 "metadata": f"QPTIFF {kind}",
             })
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _decode_batches,
+        px = (plan_pixels(
+                  spark, plan, _decode_batches,
                   schema="scene string, res_level int, c int, y int, "
                          "x int, s int, value double")
               .select(

@@ -247,21 +247,16 @@ class RawImageReader:
 
     def to_dataset(self, spark):
         import pandas as pd
-        from pyspark.sql import functions as F
 
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.planned import standardize
 
         register_raw_source(spark)
         manifest = _load_manifest(self._path)
         raw = spark.read.format("bioio_raw").option(
             "path", self._path).load()
-        px = raw.select(
-            F.lit(self._image_id).alias("image_id"), "scene",
-            F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-            F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value",
-        ).select(*PIXEL_COLUMNS)
+        px = standardize(raw, self._image_id)
 
         pps = self._pps
         scene_rows, channel_rows = [], []

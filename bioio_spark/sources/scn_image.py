@@ -20,12 +20,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_SCN_EXTS = (".scn",)
+from bioio_spark.fsio import read_range
+from bioio_spark.sources.planned import (PlannedReader, norm_window,
+                                         plan_pixels, trim)
 
 
 def _chunk_plan(path: str):
@@ -97,8 +97,6 @@ def read_scn_window(spark: SparkSession, path: str, scene: int = 0,
     """Tile-pruned windowed read of one image's level: z prunes whole
     focal-plane pages, the (y, x) window selects intersecting tiles.
     Residual trim is a codegen filter."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     cat, plan = _chunk_plan(path)
     if not (0 <= scene < len(cat["images"])):
         raise IndexError(f"{path}: no image {scene}")
@@ -107,9 +105,9 @@ def read_scn_window(spark: SparkSession, path: str, scene: int = 0,
     if not lv0:
         raise IndexError(f"{path}: image {scene} has no level {level}")
     h, w = lv0[0]["size_y"], lv0[0]["size_x"]
-    z0, z1 = _norm_window(z, im["z_n"])
-    y0, y1 = _norm_window(y, h)
-    x0, x1 = _norm_window(x, w)
+    z0, z1 = norm_window(z, im["z_n"])
+    y0, y1 = norm_window(y, h)
+    x0, x1 = norm_window(x, w)
     key = f"Image:{scene}"
     pruned = [r for r in plan
               if r["scene"] == key and r["res_level"] == level
@@ -120,41 +118,21 @@ def read_scn_window(spark: SparkSession, path: str, scene: int = 0,
               "s int, value double")
     if not pruned:
         return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_decode_batches, schema=schema)
-    return px.filter(
-        (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1)).drop(
-        "scene", "res_level")
+    px = plan_pixels(spark, pruned, _decode_batches, schema=schema)
+    return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level")
 
 
-class ScnImageReader:
+class ScnImageReader(PlannedReader):
     """BioImage reader over Leica SCN slide collections."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_SCN_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.scn import read_scn_catalog
-            read_scn_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".scn",)
+    DIM_ORDER_ERROR = "SCN dimensions come from the collection XML"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("SCN dimensions come from the collection "
-                             "XML")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.scn import read_scn_catalog
+
+        return read_scn_catalog(path)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
@@ -191,10 +169,8 @@ class ScnImageReader:
                 "metadata": f"SCN image {im['name']}",
             })
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _decode_batches,
+        px = (plan_pixels(
+                  spark, plan, _decode_batches,
                   schema="scene string, res_level int, z int, y int, "
                          "x int, s int, value double")
               .select(

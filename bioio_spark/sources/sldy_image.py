@@ -30,13 +30,13 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import SparkSession
 
 from bioio_spark.fsio import read_range
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-_SLDY_EXTS = (".sldy", ".dir")
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, norm_window,
+                                         payload_frame, plan_pixels,
+                                         plane_frame, standardize)
 _NPY_RE = re.compile(r"T(\d+)_C(\d+)\.npy$")
 
 
@@ -123,8 +123,6 @@ def read_sldy_window(spark: SparkSession, path: str,
     CONTIGUOUS BYTE RANGE per (z, y-run) — each task seek-reads exactly
     the window's rows; x prunes in numpy. Selector forms match the
     other window readers."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     dirs = _scene_dirs(path)
     if not (0 <= scene < len(dirs)):
         raise IndexError(f"{path}: no scene {scene}")
@@ -143,11 +141,11 @@ def read_sldy_window(spark: SparkSession, path: str,
         z_n, (y_n, x_n) = 1, shape
     else:
         z_n, y_n, x_n = shape
-    t0, t1 = _norm_window(t, t_n)
-    c0, c1 = _norm_window(c, c_n)
-    z0, z1 = _norm_window(z, z_n)
-    y0, y1 = _norm_window(y, y_n)
-    x0, x1 = _norm_window(x, x_n)
+    t0, t1 = norm_window(t, t_n)
+    c0, c1 = norm_window(c, c_n)
+    z0, z1 = norm_window(z, z_n)
+    y0, y1 = norm_window(y, y_n)
+    x0, x1 = norm_window(x, x_n)
     row_bytes = x_n * dtype.itemsize
     plan = [{"path": files[(ti, ci)], "t": ti, "c": ci, "z": zi,
              # one contiguous row range per (z, y-window)
@@ -156,9 +154,6 @@ def read_sldy_window(spark: SparkSession, path: str,
             for ti in range(t0, t1) for ci in range(c0, c1)
             for zi in range(z0, z1)]
 
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not plan or y0 >= y1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
     dtype_str = dtype.str
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -168,21 +163,10 @@ def read_sldy_window(spark: SparkSession, path: str,
                 rows = np.frombuffer(
                     buf, dtype=np.dtype(dtype_str)).reshape(
                     y1 - y0, x_n)
-                plane = rows[:, x0:x1]           # exact numpy prune
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.full(plane.size, r.c, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        y0, y1, dtype=np.int32), x1 - x0),
-                    "x": np.tile(np.arange(
-                        x0, x1, dtype=np.int32), y1 - y0),
-                    "value": plane.ravel().astype(np.float64),
-                })
+                yield plane_frame(rows[:, x0:x1], r.t, r.c, r.z,  # prune
+                                  y0=y0, x0=x0)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(batches, schema=schema)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
 
 
 def read_sldy_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -209,48 +193,38 @@ def read_sldy_planes(spark: SparkSession, path: str, scene: int = 0):
                 if stack.ndim == 2:
                     stack = stack[None]
                 for z in range(stack.shape[0]):
-                    yield pd.DataFrame({
-                        "t": [int(r.t)], "c": [int(r.c)], "z": [z],
-                        "y0": [0], "x0": [0],
-                        "h": [stack.shape[1]], "w": [stack.shape[2]],
-                        "values": [stack[z].ravel()
-                                   .astype(np.float64)],
-                    })
+                    yield payload_frame(stack[z], r.t, r.c, z)
 
-    plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-        min(len(plan), spark.sparkContext.defaultParallelism))
-    return plan_df.mapInPandas(
-        batches,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
 
 
-class SldyImageReader:
+class SldyImageReader(PlannedReader):
     """BioImage reader over SlideBook npy-export directories."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
+    EXTENSIONS = (".sldy", ".dir")
+    DIM_ORDER_ERROR = "SlideBook stacks are ZYX per (T, C) npy file"
+
+    @classmethod
+    def is_supported_image(cls, image) -> bool:
         if not isinstance(image, str):
             return False
-        if not image.lower().rstrip("/").endswith(_SLDY_EXTS):
+        if not image.lower().rstrip("/").endswith(cls.EXTENSIONS):
             return False
         return bool(_scene_dirs(image))
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError(
-                "SlideBook stacks are ZYX per (T, C) npy file")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        return read_sldy_window(spark, self._path,
+                                t=t, c=c, z=z, y=y, x=x,
+                                scene=img.current_scene_index)
+
+    def read_planes(self, spark, img):
+        return read_sldy_planes(spark, self._path,
+                                scene=img.current_scene_index)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
         dirs = _scene_dirs(self._path)
@@ -350,17 +324,10 @@ class SldyImageReader:
                         "value": stack.ravel().astype(np.float64),
                     })
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="scene string, t int, c int, z int, y int, "
-                         "x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, batches,
+                        "scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -15,17 +15,16 @@ public UIC-tag layout (bioio_spark.formats.stk).
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_STK_EXTS = (".stk",)
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         raw_plane_batches, standardize,
+                                         trim)
 
 
 def _plan_planes(path: str):
@@ -37,28 +36,11 @@ def _plan_planes(path: str):
     z_axis = cat["axis"] == "Z"
     plan = [{
         "path": ap,
-        "t": 0 if z_axis else i, "z": i if z_axis else 0,
+        "t": 0 if z_axis else i, "c": 0, "z": i if z_axis else 0,
         "offset": off, "nbytes": cat["plane_bytes"],
-        "ny": pg["h"], "nx": pg["w"], "dtype": pg["dtype"],
+        "y0": 0, "ny": pg["h"], "nx": pg["w"], "dtype": pg["dtype"],
     } for i, off in enumerate(cat["plane_offsets"])]
     return cat, plan
-
-
-def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            buf = read_range(r.path, r.offset, r.nbytes)
-            plane = np.frombuffer(
-                buf, dtype=np.dtype(r.dtype),
-                count=r.ny * r.nx).reshape(r.ny, r.nx)
-            yield pd.DataFrame({
-                "t": np.full(plane.size, r.t, np.int32),
-                "c": np.zeros(plane.size, np.int32),
-                "z": np.full(plane.size, r.z, np.int32),
-                "y": np.repeat(np.arange(r.ny, dtype=np.int32), r.nx),
-                "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                "value": plane.ravel().astype(np.float64),
-            })
 
 
 def read_stk_window(spark: SparkSession, path: str,
@@ -67,17 +49,15 @@ def read_stk_window(spark: SparkSession, path: str,
     rule) prunes whole planes, the y window narrows each surviving
     plane to its contiguous row byte range; x trims via a residual
     codegen filter. Selector forms match the window-read family."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     cat, plan = _plan_planes(path)
     pg = cat["page"]
     n = cat["n_planes"]
     z_axis = cat["axis"] == "Z"
-    t0, t1 = _norm_window(t, n if not z_axis else 1)
-    c0, c1 = _norm_window(c, 1)
-    z0, z1 = _norm_window(z, n if z_axis else 1)
-    y0, y1 = _norm_window(y, pg["h"])
-    x0, x1 = _norm_window(x, pg["w"])
+    t0, t1 = norm_window(t, n if not z_axis else 1)
+    norm_window(c, 1)
+    z0, z1 = norm_window(z, n if z_axis else 1)
+    y0, y1 = norm_window(y, pg["h"])
+    x0, x1 = norm_window(x, pg["w"])
     row_bytes = pg["w"] * np.dtype(pg["dtype"]).itemsize
     pruned = []
     for r in plan:
@@ -87,64 +67,34 @@ def read_stk_window(spark: SparkSession, path: str,
                        "offset": r["offset"] + y0 * row_bytes,
                        "nbytes": (y1 - y0) * row_bytes,
                        "y0": y0, "ny": y1 - y0})
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not pruned or c0 >= c1 or x0 >= x1:
-        return spark.createDataFrame([], schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(r.dtype),
-                    count=r.ny * r.nx).reshape(r.ny, r.nx)
-                yield pd.DataFrame({
-                    "t": np.full(plane.size, r.t, np.int32),
-                    "c": np.zeros(plane.size, np.int32),
-                    "z": np.full(plane.size, r.z, np.int32),
-                    "y": np.repeat(np.arange(
-                        r.y0, r.y0 + r.ny, dtype=np.int32), r.nx),
-                    "x": np.tile(np.arange(r.nx, dtype=np.int32), r.ny),
-                    "value": plane.ravel().astype(np.float64),
-                })
-
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(batches, schema=schema)
-    return px.filter((F.col("x") >= x0) & (F.col("x") < x1))
+    if not pruned:
+        return empty_window(spark)
+    return trim(plan_pixels(spark, pruned, raw_plane_batches, WINDOW_SCHEMA),
+                x=(x0, x1))
 
 
-class StkImageReader:
+class StkImageReader(PlannedReader):
     """BioImage reader over MetaMorph STK plane stacks (plugin tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_STK_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.stk import read_stk_catalog
-            read_stk_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".stk",)
+    DIM_ORDER_ERROR = "STK axis mapping follows the UIC2 z-distance rule"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("STK axis mapping follows the UIC2 "
-                             "z-distance rule")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.stk import read_stk_catalog
+
+        return read_stk_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_stk_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
         cat, plan = _plan_planes(self._path)
@@ -178,18 +128,9 @@ class StkImageReader:
                          f"planes={cat['n_planes']}"),
         }]
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _plane_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

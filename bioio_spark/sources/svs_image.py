@@ -26,12 +26,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from bioio_spark.fsio import read_range
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-_SVS_EXTS = (".svs",)
+from bioio_spark.fsio import read_range
+from bioio_spark.sources.planned import (PlannedReader, norm_window,
+                                         plan_pixels, trim)
 
 
 def _chunk_plan(path: str):
@@ -117,14 +117,12 @@ def read_svs_window(spark: SparkSession, path: str,
     window selects only intersecting tiles of the requested level —
     reading a 10k x 10k region of a multi-GB slide touches
     O(window/tile) bytes. Residual trim is a codegen filter."""
-    from bioio_spark.sources.zarr_image import _norm_window
-
     cat, _extras, plan = _chunk_plan(path)
     if not (0 <= level < len(cat["levels"])):
         raise IndexError(f"{path}: no pyramid level {level}")
     pg = cat["levels"][level]
-    y0, y1 = _norm_window(y, pg["h"])
-    x0, x1 = _norm_window(x, pg["w"])
+    y0, y1 = norm_window(y, pg["h"])
+    x0, x1 = norm_window(x, pg["w"])
     pruned = [r for r in plan
               if r["scene"] == "Image:0" and r["res_level"] == level
               and r["y0"] < y1 and r["y0"] + r["ch"] > y0
@@ -133,41 +131,22 @@ def read_svs_window(spark: SparkSession, path: str,
               "value double")
     if not pruned:
         return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(pd.DataFrame(pruned)).repartition(
-        min(len(pruned), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_decode_batches, schema=schema)
-    return px.filter(
-        (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1)).drop(
-        "scene", "res_level")
+    px = plan_pixels(spark, pruned, _decode_batches, schema=schema)
+    return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level")
 
 
-class SvsImageReader:
+class SvsImageReader(PlannedReader):
     """BioImage reader over Aperio SVS whole-slide files."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_SVS_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.svs import read_svs_catalog
-            read_svs_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".svs",)
+    DIM_ORDER_ERROR = ("SVS is a 2D (optionally RGB) slide pyramid; "
+                       "dim_order is fixed")
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("SVS is a 2D (optionally RGB) slide "
-                             "pyramid; dim_order is fixed")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.svs import read_svs_catalog
+
+        return read_svs_catalog(path)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
@@ -216,10 +195,8 @@ class SvsImageReader:
         for kind, pg, scene in extras:
             add_scene(int(scene.split(":")[1]), pg, [0], kind)
 
-        plan_df = spark.createDataFrame(pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _decode_batches,
+        px = (plan_pixels(
+                  spark, plan, _decode_batches,
                   schema="scene string, res_level int, y int, x int, "
                          "s int, value double")
               .select(

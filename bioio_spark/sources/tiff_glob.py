@@ -32,7 +32,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, plane_frame,
+                                         standardize)
 
 _GLOB_MAGIC = re.compile(r"[*?\[]")
 
@@ -53,6 +55,10 @@ def _glob_paths(image) -> list[str]:
 
 class TiffGlobReader:
     """BioImage reader assembling a TIFF filename series into stacks."""
+
+    # no extensions: glob patterns aren't routable by suffix — like the
+    # reference's bioio-tiff-glob, callers select it with reader=
+    EXTENSIONS = ()
 
     @staticmethod
     def is_supported_image(image) -> bool:
@@ -84,8 +90,7 @@ class TiffGlobReader:
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
 
         # driver-side planning: indexer coordinates (string work) + one
         # seek-based IFD walk per file for page count / YX / dtype — a
@@ -157,33 +162,17 @@ class TiffGlobReader:
                     co = coords[local]
                     planes, _ = decode_tiff(bytes(content))
                     for pg, plane in enumerate(planes):
-                        y_n, x_n = plane.shape[0], plane.shape[1]
-                        yield pd.DataFrame({
-                            "scene": f"Image:{co['s']}",
-                            "t": np.full(plane.size, co["t"], np.int32),
-                            "c": np.full(plane.size, co["c"], np.int32),
-                            "z": np.full(plane.size,
-                                         co["z"] * n_pages + pg,
-                                         np.int32),
-                            "y": np.repeat(
-                                np.arange(y_n, dtype=np.int32), x_n),
-                            "x": np.tile(
-                                np.arange(x_n, dtype=np.int32), y_n),
-                            "value": plane.ravel().astype(np.float64),
-                        })
+                        yield plane_frame(plane, co["t"], co["c"],
+                                          co["z"] * n_pages + pg,
+                                          scene=f"Image:{co['s']}")
 
         binary = (spark.read.format("binaryFile")
                   .load([f"file://{os.path.abspath(p)}"
                          for p in self._paths]))
-        px = (binary.select("path", "content")
-              .mapInPandas(batches,
-                           schema="scene string, t int, c int, z int, "
-                                  "y int, x int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            binary.select("path", "content").mapInPandas(
+                batches, schema="scene string, " + WINDOW_SCHEMA),
+            self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

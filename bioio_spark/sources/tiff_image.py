@@ -22,7 +22,6 @@ physical sizes restored from the embedded OME-XML.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 from typing import Iterator, Optional
 
@@ -34,8 +33,9 @@ from bioio_spark.fsio import read_range
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-_TIFF_EXTS = (".tif", ".tiff", ".ome.tif", ".ome.tiff")
+from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
+                                         PlannedReader, empty_window,
+                                         norm_window, plan_pixels, trim)
 
 
 def local_path(path: str) -> str:
@@ -53,37 +53,38 @@ def local_path(path: str) -> str:
     return re.sub(r"^/+", "/", unquote(path))
 
 
-def _tiff_paths(image: str) -> list[str]:
-    """Expand a file or directory path to the sorted TIFF file list."""
-    if os.path.isdir(image):
-        return sorted(
-            p for p in _glob.glob(os.path.join(image, "*"))
-            if p.lower().endswith(_TIFF_EXTS))
-    return [image]
-
-
-class TiffImageReader:
+class TiffImageReader(PlannedReader):
     """BioImage reader over baseline OME-TIFF files (built-in tier)."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if image.lower().endswith(_TIFF_EXTS):
-            return True
-        # a directory of scene_*.ome.tiff (save_ome_tiff layout)
-        return os.path.isdir(image) and bool(_tiff_paths(image))
+    EXTENSIONS = (".ome.tiff", ".ome.tif", ".tiles.ome.tif", ".tiff",
+                  ".tif")
+    DIM_ORDER_ERROR = ("OME-TIFF dimension order comes from the "
+                       "embedded OME-XML; dim_order is not accepted")
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("OME-TIFF dimension order comes from the "
-                             "embedded OME-XML; dim_order is not accepted")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if not (os.path.isfile(self._path) and len(img.scenes) == 1):
+            return None
+        try:
+            return read_tiff_window(
+                spark, self._path, t=t, c=c, z=z, y=y, x=x,
+                level=img.current_resolution_level)
+        except ValueError:
+            # dialects the page planner can't window (e.g. contiguous
+            # one-IFD ImageJ stacks) fall back to the Catalyst filter —
+            # same rows, scan-level pruning only where the layout
+            # supports it
+            return None
+
+    def read_planes(self, spark, img):
+        if not (os.path.isfile(self._path) and len(img.scenes) == 1
+                and "S" not in img.dims.order):
+            return None
+        try:
+            return read_tiff_planes(spark, self._path,
+                                    level=img.current_resolution_level)
+        except ValueError:
+            return None   # dialect fallback (contiguous ImageJ etc.)
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import (parse_ome_xml_scenes,
@@ -330,13 +331,10 @@ class TiffImageReader:
                         "value": block.ravel().astype(np.float64),
                     })
 
-        plan_df = spark.createDataFrame(
-            pd.DataFrame(plan)).repartition(
-            min(len(plan), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  batches,
-                  schema="t int, c int, z int, y int, x int, s int, "
-                         "value double")
+        px = (plan_pixels(
+                  spark, plan, batches,
+                  "t int, c int, z int, y int, x int, s int, "
+                  "value double")
               .select(
                   F.lit(self._image_id).alias("image_id"),
                   F.lit(scene).alias("scene"),
@@ -346,6 +344,10 @@ class TiffImageReader:
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))
+
+
+# the directory expansion by the name to_dataset and tiff_source use
+_tiff_paths = TiffImageReader.paths
 
 
 def decode_tiff_files(spark: SparkSession, paths: list[str],
@@ -514,14 +516,6 @@ def read_tiff_planes(spark: SparkSession, path: str,
                           ch["y0"], ch["x0"], ch["h"], ch["w"],
                           pg["dtype"], pg["comp"], pg["pred"],
                           pg["h"], pg["w"], pg.get("jpeg_tables")))
-    task_df = spark.createDataFrame(
-        tasks,
-        "t int, c int, z int, offset long, nbytes long, y0 int, "
-        "x0 int, ch int, cw int, dtype string, comp int, pred int, "
-        "page_h int, page_w int, jpeg_tables binary",
-    ).repartition(min(len(tasks),
-                      spark.sparkContext.defaultParallelism))
-
     def decode(batches):
         import numpy as _np
         import pandas as _pd
@@ -567,10 +561,12 @@ def read_tiff_planes(spark: SparkSession, path: str,
                         "values": [block.astype(_np.float64).ravel()],
                     })
 
-    return task_df.mapInPandas(
-        decode,
-        schema="t int, c int, z int, y0 int, x0 int, h int, w int, "
-               "values array<double>")
+    return plan_pixels(
+        spark, tasks, decode, PLANES_SCHEMA,
+        row_schema="t int, c int, z int, offset long, nbytes long, "
+                   "y0 int, x0 int, ch int, cw int, dtype string, "
+                   "comp int, pred int, page_h int, page_w int, "
+                   "jpeg_tables binary")
 
 
 def read_tiff_window(spark: SparkSession, path: str,
@@ -595,8 +591,7 @@ def read_tiff_window(spark: SparkSession, path: str,
     import numpy as np
 
     from bioio_spark.formats.tiff import (decompress_tiff_chunk,
-                                          iter_tiff_chunks, parse_ome_xml)
-    from bioio_spark.sources.zarr_image import _norm_window
+                                          iter_tiff_chunks)
 
     p = local_path(path)
     pages = iter_tiff_chunks(p)
@@ -649,11 +644,11 @@ def read_tiff_window(spark: SparkSession, path: str,
             f"{size_t}*{size_c}*{size_z}")
     size_y, size_x = pages[0]["h"], pages[0]["w"]
 
-    tw = _norm_window(t, size_t)
-    cw = _norm_window(c, size_c)
-    zw = _norm_window(z, size_z)
-    yw = _norm_window(y, size_y)
-    xw = _norm_window(x, size_x)
+    tw = norm_window(t, size_t)
+    cw = norm_window(c, size_c)
+    zw = norm_window(z, size_z)
+    yw = norm_window(y, size_y)
+    xw = norm_window(x, size_x)
 
     tasks = []
     for pg in pages:
@@ -679,17 +674,8 @@ def read_tiff_window(spark: SparkSession, path: str,
                           pg["h"], pg["w"], bool(pg["tiled"]),
                           pg.get("jpeg_tables")))
 
-    schema = ("t int, c int, z int, y int, x int, value double")
     if not tasks:
-        return spark.createDataFrame([], schema)
-
-    task_df = spark.createDataFrame(
-        tasks,
-        "t int, c int, z int, offset long, nbytes long, y0 int, x0 int, "
-        "ch int, cw int, dtype string, comp int, pred int, "
-        "page_h int, page_w int, tiled boolean, jpeg_tables binary",
-    ).repartition(min(len(tasks),
-                      spark.sparkContext.defaultParallelism))
+        return empty_window(spark)
 
     def decode(batches):
         import pandas as _pd
@@ -739,7 +725,10 @@ def read_tiff_window(spark: SparkSession, path: str,
                         "value": block.ravel().astype(np.float64),
                     })
 
-    px = task_df.mapInPandas(decode, schema=schema)
-    return px.filter(
-        (F.col("y") >= yw[0]) & (F.col("y") < yw[1])
-        & (F.col("x") >= xw[0]) & (F.col("x") < xw[1]))
+    px = plan_pixels(
+        spark, tasks, decode, WINDOW_SCHEMA,
+        row_schema="t int, c int, z int, offset long, nbytes long, "
+                   "y0 int, x0 int, ch int, cw int, dtype string, "
+                   "comp int, pred int, page_h int, page_w int, "
+                   "tiled boolean, jpeg_tables binary")
+    return trim(px, y=yw, x=xw)

@@ -29,7 +29,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from bioio_spark.sources.planned import (PlannedReader, norm_window,
+                                         standardize, trim)
 
 
 def _scene_roots(image: str) -> list[str]:
@@ -52,8 +54,12 @@ def _read_doc(root: str, name: str) -> Optional[str]:
         return f.read()
 
 
-class ZarrImageReader:
+class ZarrImageReader(PlannedReader):
     """BioImage reader over OME-NGFF 0.4 / Zarr v2 stores (plugin tier)."""
+
+    EXTENSIONS = (".zarr", ".ome.zarr")
+    DIM_ORDER_ERROR = ("OME-Zarr dimension order comes from the NGFF "
+                       "axes metadata; dim_order not accepted")
 
     @staticmethod
     def is_supported_image(image) -> bool:
@@ -67,22 +73,27 @@ class ZarrImageReader:
             or _read_doc(r, "zarr.json") is not None
             for r in roots)
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("OME-Zarr dimension order comes from the "
-                             "NGFF axes metadata; dim_order not accepted")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if len(img.scenes) == 1 and any(
+                os.path.exists(os.path.join(self._path, f))
+                for f in ("zarr.json", ".zgroup", ".zarray")):
+            return read_zarr_window(
+                spark, self._path, t=t, c=c, z=z, y=y, x=x,
+                level=img.current_resolution_level)
+        return None
+
+    def read_planes(self, spark, img):
+        roots = _scene_roots(self._path)
+        if 0 <= img.current_scene_index < len(roots):
+            return read_zarr_planes(spark, roots[img.current_scene_index],
+                                    level=img.current_resolution_level)
+        return None
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.zarr import parse_ngff_attrs, parse_zarray
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
         roots = _scene_roots(self._path)
@@ -206,11 +217,8 @@ class ZarrImageReader:
                     "shard": lza.get("shard"),
                 }
 
-        px = decode_zarr_chunks(spark, arrays).select(
-            F.lit(self._image_id).alias("image_id"), "scene",
-            "res_level", "t", "c", "z", "y", "x",
-            F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value",
-        ).select(*PIXEL_COLUMNS)
+        px = standardize(decode_zarr_chunks(spark, arrays),
+                         self._image_id)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))
@@ -283,26 +291,6 @@ def decode_zarr_chunks(spark: SparkSession,
         batches,
         schema="scene string, res_level int, t int, c int, z int, y int, "
                "x int, value double")
-
-
-def _norm_window(sel, size: int) -> tuple[int, int]:
-    """Selector -> [start, stop) bounds. None = full dim; int = one index;
-    (start, stop) / slice / range = half-open window."""
-    if sel is None:
-        return 0, size
-    if isinstance(sel, int):
-        if not 0 <= sel < size:
-            raise IndexError(f"index {sel} out of range for size {size}")
-        return sel, sel + 1
-    if isinstance(sel, (slice, range)):
-        start, stop = sel.start or 0, sel.stop if sel.stop is not None \
-            else size
-    else:
-        start, stop = sel
-    start, stop = max(0, int(start)), min(size, int(stop))
-    if start >= stop:
-        raise ValueError(f"empty window [{start}, {stop})")
-    return start, stop
 
 
 def window_chunk_keys(shape, chunks, window) -> list[tuple[int, ...]]:
@@ -469,7 +457,7 @@ def read_zarr_window(spark: SparkSession, store: str,
 
     arr_dir, za, axes = _array_of(store, level)
     sel_of = {"t": t, "c": c, "z": z, "y": y, "x": x}
-    window = [_norm_window(sel_of.get(d), s)
+    window = [norm_window(sel_of.get(d), s)
               for d, s in zip(axes, za["shape"])]
     keys = window_chunk_keys(za["shape"], za["chunks"], window)
     sep = za["dimension_separator"]
@@ -497,9 +485,5 @@ def read_zarr_window(spark: SparkSession, store: str,
               "x int, value double")
     if not files:   # whole window lives in absent (all-fill) chunks
         return spark.createDataFrame([], schema)
-    px = decode_zarr_chunks(spark, arrays, files=files)
-    bounds = dict(zip(axes, window))
-    cond = F.lit(True)
-    for d, (start, stop) in bounds.items():
-        cond = cond & (F.col(d) >= start) & (F.col(d) < stop)
-    return px.filter(cond)
+    return trim(decode_zarr_chunks(spark, arrays, files=files),
+                **dict(zip(axes, window)))

@@ -22,11 +22,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-_ZVI_EXTS = (".zvi",)
+from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
+                                         empty_window, norm_window,
+                                         plain_scene, plan_pixels,
+                                         plane_frame, standardize, trim)
 
 
 def _read_extents(path: str, offsets, lengths) -> bytes:
@@ -48,26 +49,9 @@ def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     # channel block (multi-channel BGR grids: item c
                     # owns channels c*samples .. c*samples+samples-1)
                     c = int(r.c) * samples + ((2 - s) if s < 3 else s)
-                    vals = block[..., s]
-                    yield pd.DataFrame({
-                        "t": np.full(h * w, r.t, np.int32),
-                        "c": np.full(h * w, c, np.int32),
-                        "z": np.full(h * w, r.z, np.int32),
-                        "y": np.repeat(np.arange(h, dtype=np.int32),
-                                       w),
-                        "x": np.tile(np.arange(w, dtype=np.int32), h),
-                        "value": vals.ravel().astype(np.float64),
-                    })
+                    yield plane_frame(block[..., s], r.t, c, r.z)
             else:
-                yield pd.DataFrame({
-                    "t": np.full(h * w, r.t, np.int32),
-                    "c": np.full(h * w, r.c, np.int32),
-                    "z": np.full(h * w, r.z, np.int32),
-                    "y": np.repeat(np.arange(h, dtype=np.int32), w),
-                    "x": np.tile(np.arange(w, dtype=np.int32), h),
-                    "value": plane.reshape(h, w).ravel().astype(
-                        np.float64),
-                })
+                yield plane_frame(plane.reshape(h, w), r.t, r.c, r.z)
 
 
 def _plan_rows(path: str, cat: dict) -> list:
@@ -91,66 +75,47 @@ def read_zvi_window(spark: SparkSession, path: str,
     item payloads driver-side over the catalog grid; interleaved BGR
     items are the read granularity for any requested channel, with the
     c/y/x trim a codegen filter after the de-interleave."""
-    from bioio_spark.formats.zvi import read_zvi_catalog
-    from bioio_spark.sources.zarr_image import _norm_window
-
-    cat = read_zvi_catalog(path)
-    t0, t1 = _norm_window(t, cat["size_t"])
-    c0, c1 = _norm_window(c, cat["size_c"])
-    z0, z1 = _norm_window(z, cat["size_z"])
-    y0, y1 = _norm_window(y, cat["size_y"])
-    x0, x1 = _norm_window(x, cat["size_x"])
+    cat = ZviImageReader.catalog(path)
+    t0, t1 = norm_window(t, cat["size_t"])
+    c0, c1 = norm_window(c, cat["size_c"])
+    z0, z1 = norm_window(z, cat["size_z"])
+    y0, y1 = norm_window(y, cat["size_y"])
+    x0, x1 = norm_window(x, cat["size_x"])
     rows = [r for r in _plan_rows(path, cat)
             if t0 <= r["t"] < t1 and z0 <= r["z"] < z1
             and (cat["bgr"] or c0 <= r["c"] < c1)]
-    schema = "t int, c int, z int, y int, x int, value double"
-    if not rows or y0 >= y1 or x0 >= x1 or c0 >= c1:
-        return spark.createDataFrame([], schema)
-    plan_df = spark.createDataFrame(
-        pd.DataFrame(rows), schema=_PLAN_SCHEMA).repartition(
-        min(len(rows), spark.sparkContext.defaultParallelism))
-    px = plan_df.mapInPandas(_plane_batches, schema=schema)
-    return px.filter(
-        (F.col("c") >= c0) & (F.col("c") < c1)
-        & (F.col("y") >= y0) & (F.col("y") < y1)
-        & (F.col("x") >= x0) & (F.col("x") < x1))
+    if not rows:
+        return empty_window(spark)
+    px = plan_pixels(spark, rows, _plane_batches, WINDOW_SCHEMA,
+                     row_schema=_PLAN_SCHEMA)
+    return trim(px, c=(c0, c1), y=(y0, y1), x=(x0, x1))
 
 
-class ZviImageReader:
+class ZviImageReader(PlannedReader):
     """BioImage reader over Zeiss ZVI compound documents."""
 
-    @staticmethod
-    def is_supported_image(image) -> bool:
-        if not isinstance(image, str):
-            return False
-        if not image.lower().endswith(_ZVI_EXTS):
-            return False
-        try:
-            from bioio_spark.formats.zvi import read_zvi_catalog
-            read_zvi_catalog(image)
-            return True
-        except Exception:
-            return False
+    EXTENSIONS = (".zvi",)
+    DIM_ORDER_ERROR = "ZVI axis sizes come from the item coordinate tags"
 
-    def __init__(self, image: str, dim_order=None, channel_names=None,
-                 physical_pixel_sizes=None, image_id: str = "img",
-                 **_kwargs):
-        if dim_order is not None:
-            raise ValueError("ZVI axis sizes come from the item "
-                             "coordinate tags")
-        self._path = image
-        self._image_id = image_id
-        self._channel_names = channel_names
-        self._pps = physical_pixel_sizes
+    @staticmethod
+    def catalog(path: str) -> dict:
+        from bioio_spark.formats.zvi import read_zvi_catalog
+
+        return read_zvi_catalog(path)
+
+    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
+                    x=None):
+        if plain_scene(img):
+            return read_zvi_window(spark, self._path,
+                                   t=t, c=c, z=z, y=y, x=x)
+        return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.zvi import read_zvi_catalog
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+        from bioio_spark.sources.array_like import ImageDataset
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat = read_zvi_catalog(self._path)
+        cat = self.catalog(self._path)
         scene = "Image:0"
         channel_rows = [
             {"image_id": self._image_id, "scene": scene,
@@ -177,20 +142,11 @@ class ZviImageReader:
             "time_interval": None,
             "metadata": cat["description"] or "Zeiss ZVI (MS-CFB)",
         }]
-        rows = _plan_rows(self._path, cat)
-        plan_df = spark.createDataFrame(
-            pd.DataFrame(rows), schema=_PLAN_SCHEMA).repartition(
-            min(len(rows), spark.sparkContext.defaultParallelism))
-        px = (plan_df.mapInPandas(
-                  _plane_batches,
-                  schema="t int, c int, z int, y int, x int, "
-                         "value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"),
-                  F.lit(scene).alias("scene"),
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
+        px = standardize(
+            plan_pixels(spark, _plan_rows(self._path, cat),
+                        _plane_batches, WINDOW_SCHEMA,
+                        row_schema=_PLAN_SCHEMA),
+            self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
                             channels=pd.DataFrame(channel_rows))

@@ -136,7 +136,7 @@ def test_window_read_matches_numpy(spark, tmp_path):
 
 def test_window_read_empty_raises(spark, tmp_path):
     """Empty windows are rejected like the rest of the window family
-    (_norm_window contract)."""
+    (norm_window contract)."""
     p = _write(tmp_path)
     with pytest.raises(ValueError, match="empty window"):
         read_lsm_window(spark, p, y=(3, 3))

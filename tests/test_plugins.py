@@ -366,3 +366,63 @@ def test_determine_plugin_returns_entry():
         BioImage.determine_plugin("nope.unknown")
     with pytest.raises(UnsupportedFileFormatError):
         BioImage.determine_plugin(12345)
+
+
+# The built-in registry as it stood before the readers declared their
+# own EXTENSIONS: registration order (dump) and the S1 key order both
+# feed plugin priority, so they must not drift.
+BUILTIN_DUMP = [
+    "bioio-ome-tiff-baseline 0.1.0: .ome.tiff, .ome.tif, "
+    ".tiles.ome.tif, .tiff, .tif",
+    "bioio-png-baseline 0.1.0: .png",
+    "bioio-ome-zarr-baseline 0.1.0: .zarr, .ome.zarr",
+    "bioio-jpeg-baseline 0.1.0: .jpg, .jpeg",
+    "bioio-nd2-baseline 0.1.0: .nd2",
+    "bioio-lif-baseline 0.1.0: .lif",
+    "bioio-czi-baseline 0.1.0: .czi",
+    "bioio-pnm-baseline 0.1.0: .pgm, .ppm, .pnm",
+    "bioio-gif-baseline 0.1.0: .gif",
+    "bioio-bmp-baseline 0.1.0: .bmp",
+    "bioio-sldy-baseline 0.1.0: .sldy, .dir",
+    "bioio-dv-baseline 0.1.0: .dv, .r3d",
+    "bioio-lsm-baseline 0.1.0: .lsm",
+    "bioio-stk-baseline 0.1.0: .stk",
+    "bioio-dng-baseline 0.1.0: .dng",
+    "bioio-svs-baseline 0.1.0: .svs",
+    "bioio-scn-baseline 0.1.0: .scn",
+    "bioio-oif-baseline 0.1.0: .oif",
+    "bioio-oib-baseline 0.1.0: .oib",
+    "bioio-ndpi-baseline 0.1.0: .ndpi",
+    "bioio-qptiff-baseline 0.1.0: .qptiff",
+    "bioio-ims-baseline 0.1.0: .ims",
+    "bioio-ndtiff-baseline 0.1.0: ",
+    "bioio-dicom-baseline 0.1.0: .dcm, .dicom",
+    "bioio-lof-baseline 0.1.0: .lof",
+    "bioio-mrc-baseline 0.1.0: .mrc, .st, .map, .rec",
+    "bioio-cellvoyager-baseline 0.1.0: ",
+    "bioio-avi-baseline 0.1.0: .avi",
+    "bioio-mp4-baseline 0.1.0: .mp4, .mov",
+    "bioio-mkv-baseline 0.1.0: .mkv",
+    "bioio-mpeg1-baseline 0.1.0: .mpg, .mpeg",
+    "bioio-biorad-pic-baseline 0.1.0: .pic",
+    "bioio-zvi-baseline 0.1.0: .zvi",
+    "bioio-tiff-glob-baseline 0.1.0: ",
+]
+BUILTIN_KEYS = [
+    ".tiles.ome.tif", ".ome.tiff", ".ome.zarr", ".ome.tif", ".qptiff",
+    ".dicom", ".tiff", ".zarr", ".jpeg", ".sldy", ".ndpi", ".mpeg",
+    ".tif", ".png", ".jpg", ".nd2", ".lif", ".czi", ".pgm", ".ppm",
+    ".pnm", ".gif", ".bmp", ".dir", ".r3d", ".lsm", ".stk", ".dng",
+    ".svs", ".scn", ".oif", ".oib", ".ims", ".dcm", ".lof", ".mrc",
+    ".map", ".rec", ".avi", ".mp4", ".mov", ".mkv", ".mpg", ".pic",
+    ".zvi", ".dv", ".st",
+]
+
+
+def test_builtin_registry_pinned(clean_registry):
+    import bioio_spark
+
+    bioio_spark._register_builtin_plugins()
+    assert P.dump_plugins().split("\n") == BUILTIN_DUMP
+    assert list(P.get_plugins(use_cache=False)) == BUILTIN_KEYS
+    assert all(len(v) == 1 for v in P.get_plugins().values())

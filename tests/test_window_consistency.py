@@ -1,7 +1,10 @@
 """Cross-format window-read consistency: for EVERY planned source,
 ``BioImage.read_window`` (the pruned byte-range path) must return
 exactly the rows of the standardized pixel frame filtered to the same
-bounds — one invariant, six formats, several window shapes.
+bounds — one invariant, every pushdown format, several window shapes.
+Each case also pins that the reader's own ``read_window`` (and, where
+the format has one, ``read_planes``) answers, so a refactor can't fall
+back to the Catalyst filter while the rows still match.
 """
 
 import numpy as np
@@ -14,6 +17,23 @@ def _vol():
     idx = np.indices((2, 2, 3, 6, 7))        # t c z y x
     return (idx[0] * 10000 + idx[1] * 1000 + idx[2] * 100
             + idx[3] * 10 + idx[4]).astype(np.uint16)
+
+
+def _fixture_vol(fmt):
+    """The TCZYX volume a format's fixture holds: single-axis stacks
+    keep Z, video keeps T and three uint8 channels, DNG one plane."""
+    vol = _vol()
+    if fmt in ("stk", "dicom", "mrc", "pic"):
+        return vol[:1, :1]
+    if fmt == "dng":
+        return vol[:1, :1, :1]
+    if fmt in VIDEO:
+        rgb = (vol[:, :1, :1] % 256).astype(np.uint8)
+        return np.concatenate([rgb, 255 - rgb, rgb // 2], axis=1)
+    return vol
+
+
+VIDEO = ("avi", "mp4", "mpeg", "mkv")
 
 
 def _write_fixture(fmt, vol, tmp_path, spark):
@@ -83,6 +103,58 @@ def _write_fixture(fmt, vol, tmp_path, spark):
         p = tmp_path / "w.ims"
         p.write_bytes(encode_ims(vol, chunks=(2, 3, 4), gzip=True))
         return str(p)
+    if fmt == "stk":
+        from bioio_spark.formats.stk import encode_stk
+
+        p = tmp_path / "w.stk"
+        p.write_bytes(encode_stk(vol[0, 0], z_distance=0.5))
+        return str(p)
+    if fmt == "dicom":
+        from bioio_spark.formats.dicom import encode_dicom
+
+        p = tmp_path / "w.dcm"
+        p.write_bytes(encode_dicom(vol[0, 0]))
+        return str(p)
+    if fmt == "mrc":
+        from bioio_spark.formats.mrc import encode_mrc
+
+        p = tmp_path / "w.mrc"
+        p.write_bytes(encode_mrc(vol[0, 0]))
+        return str(p)
+    if fmt == "zvi":
+        from bioio_spark.formats.zvi import encode_zvi
+
+        p = tmp_path / "w.zvi"
+        p.write_bytes(encode_zvi(vol))
+        return str(p)
+    if fmt == "dng":
+        from bioio_spark.formats.dng import build_dng
+
+        p = tmp_path / "w.dng"
+        p.write_bytes(build_dng(vol[0, 0, 0], rows_per_strip=4))
+        return str(p)
+    if fmt == "pic":
+        from bioio_spark.formats.pic import encode_pic
+
+        p = tmp_path / "w.pic"
+        p.write_bytes(encode_pic(vol[0, 0], axis4="z"))
+        return str(p)
+    if fmt in VIDEO:
+        import importlib
+
+        codec = "mpeg1" if fmt == "mpeg" else fmt
+        encode = getattr(importlib.import_module(
+            f"bioio_spark.formats.{codec}"), f"encode_{codec}")
+        p = tmp_path / f"w.{'mpg' if fmt == 'mpeg' else fmt}"
+        p.write_bytes(encode(vol[:, :, 0].transpose(0, 2, 3, 1)))
+        return str(p)
+    if fmt == "sldy":
+        d = tmp_path / "w.sldy"
+        (d / "ImageData").mkdir(parents=True)
+        for t in range(vol.shape[0]):
+            for c in range(vol.shape[1]):
+                np.save(d / "ImageData" / f"T{t}_C{c}.npy", vol[t, c])
+        return str(d)
     raise AssertionError(fmt)
 
 
@@ -92,27 +164,56 @@ WINDOWS = [
     dict(t=0, c=0, z=0, y=2, x=(3, 7)),
 ]
 
+WINDOW_FORMATS = ["tiff", "zarr", "dv", "czi", "nd2", "lif", "lsm", "oif",
+                  "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
+                  *VIDEO, "sldy"]
+PLANES_FORMATS = {"tiff", "zarr", "dv", "czi", "nd2", "lif", "lsm", "sldy"}
 
-@pytest.mark.parametrize("fmt", ["tiff", "zarr", "dv", "czi", "nd2",
-                                 "lif", "lsm", "oif", "oib", "ims"])
+
+def _fit(win, sizes):
+    """The window with each selector moved inside a dim of ``sizes``
+    (a size-1 axis can only be read at index 0)."""
+    return {d: (min(s, sizes[d] - 1) if isinstance(s, int)
+                else (min(s[0], sizes[d] - 1), s[1]))
+            for d, s in win.items()}
+
+
+@pytest.mark.parametrize("fmt", WINDOW_FORMATS)
+def test_reader_owns_window_pushdown(spark, tmp_path, fmt):
+    """Plan-only pin (no Spark job): the format's reader answers
+    read_window itself for every window shape, and read_planes exactly
+    where the format plans its own chunks."""
+    vol = _fixture_vol(fmt)
+    img = BioImage(_write_fixture(fmt, vol, tmp_path, spark), spark=spark)
+    sizes = dict(zip("tczyx", vol.shape))
+    for win in (_fit(w, sizes) for w in WINDOWS):
+        px = img._reader.read_window(spark, img, **win)
+        assert px is not None, (fmt, win)
+        assert {"t", "c", "z", "y", "x", "value"} <= set(px.columns)
+    pushed = img._reader.read_planes(spark, img)
+    assert (pushed is not None) == (fmt in PLANES_FORMATS), fmt
+
+
+@pytest.mark.parametrize("fmt", WINDOW_FORMATS)
 def test_read_window_matches_filtered_frame(spark, tmp_path, fmt):
-    vol = _vol()
+    vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
     img = BioImage(path, spark=spark)
     assert (img.dims.T, img.dims.C, img.dims.Z,
             img.dims.Y, img.dims.X) == vol.shape
     from pyspark.sql import functions as F
 
+    sizes = dict(zip("tczyx", vol.shape))
     full = img.get_image_dataframe()
-    for win in WINDOWS:
+    for win in (_fit(w, sizes) for w in WINDOWS):
+        assert img._reader.read_window(spark, img, **win) is not None, \
+            (fmt, win)
         got = (img.read_window(**win)
                .orderBy("t", "c", "z", "y", "x").toPandas())
         cond = F.lit(True)
         for name, sel in win.items():
-            size = {"t": 2, "c": 2, "z": 3, "y": 6, "x": 7}[name]
             lo, hi = ((sel, sel + 1) if isinstance(sel, int)
-                      else (sel[0], sel[1] if sel[1] is not None
-                            else size))
+                      else (sel[0], min(sel[1], sizes[name])))
             cond = cond & (F.col(name) >= lo) & (F.col(name) < hi)
         want = (full.filter(cond)
                 .select("t", "c", "z", "y", "x", "value")
@@ -124,17 +225,19 @@ def test_read_window_matches_filtered_frame(spark, tmp_path, fmt):
                 err_msg=f"{fmt} {win} {col}")
 
 
-@pytest.mark.parametrize("fmt", ["tiff", "zarr", "dv", "czi", "nd2",
-                                 "lif", "lsm", "oif", "oib", "ims"])
+@pytest.mark.parametrize("fmt", WINDOW_FORMATS)
 def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
     """get_planes_dataframe's zero-shuffle fast path, exploded back to
     pixels, equals the standardized long-form frame — the planes
-    layout loses nothing for any source."""
+    layout loses nothing for any source. Formats with a planes
+    planner answer through it; the rest take pixels_to_planes."""
     from bioio_spark.operators.planes import planes_to_pixels
 
-    vol = _vol()
+    vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
     img = BioImage(path, spark=spark)
+    pushed = img._reader.read_planes(spark, img)
+    assert (pushed is not None) == (fmt in PLANES_FORMATS), fmt
     got = (planes_to_pixels(img.get_planes_dataframe())
            .select("t", "c", "z", "y", "x", "value")
            .orderBy("t", "c", "z", "y", "x").toPandas())

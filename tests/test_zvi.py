@@ -157,7 +157,7 @@ def test_zvi_window_prunes_items(spark, tmp_path):
 
 
 def test_zvi_window_empty_rejected(spark, tmp_path):
-    """Empty windows raise (the engine-wide _norm_window contract)."""
+    """Empty windows raise (the engine-wide norm_window contract)."""
     p = _write(tmp_path)
     with pytest.raises(ValueError, match="empty window"):
         read_zvi_window(spark, p, y=slice(4, 4))
