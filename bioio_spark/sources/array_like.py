@@ -20,7 +20,7 @@ partition-pruned on (scene, res_level) and predicate-pushed on t/c/z/y/x.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Mapping, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -39,16 +39,64 @@ from bioio_spark.types import PhysicalPixelSizes, dtype_to_ome_type
 PIXEL_DIM_COLS = ["t", "c", "z", "y", "x", "m", "s"]
 PIXEL_COLUMNS = ["image_id", "scene", "res_level", *PIXEL_DIM_COLS, "value"]
 
+# the scene catalog: one row per scene, the same columns for every reader
+# (absent axes and metadata are None; res_levels None = no pyramid)
+SCENE_COLUMNS = ["image_id", "scene", "scene_idx", "dim_order",
+                 *(f"size_{d}" for d in "tczyxms"), "dtype",
+                 "ome_pixel_type", "pps_z", "pps_y", "pps_x",
+                 "time_interval", "metadata", "res_levels"]
+CHANNEL_COLUMNS = ["image_id", "scene", "c", "channel_name"]
+
+
+def scene_row(image_id: str, scene: str, scene_idx: int, dtype,
+              sizes: Mapping[str, Optional[int]], dim_order: str = "TCZYX",
+              pps: Optional[PhysicalPixelSizes] = None,
+              time_interval: Optional[float] = None, metadata=None,
+              res_levels: Optional[list] = None) -> dict:
+    """One scene-catalog row. ``sizes`` maps dim letters to sizes (a
+    missing axis is None); the OME PixelType is always derived from
+    ``dtype`` (ref ome_utils.py:85-118), never passed in."""
+    dtype = np.dtype(dtype)
+    return {
+        "image_id": image_id, "scene": scene, "scene_idx": scene_idx,
+        "dim_order": dim_order,
+        **{f"size_{d.lower()}": sizes.get(d) for d in "TCZYXMS"},
+        "dtype": dtype.name, "ome_pixel_type": dtype_to_ome_type(dtype),
+        "pps_z": pps.Z if pps else None, "pps_y": pps.Y if pps else None,
+        "pps_x": pps.X if pps else None,
+        "time_interval": time_interval, "metadata": metadata,
+        "res_levels": res_levels,
+    }
+
+
+def channel_rows(image_id: str, scene: str, names) -> list[dict]:
+    """The channel-catalog rows of one scene: channel ``c`` is named
+    ``names[c]``."""
+    return [{"image_id": image_id, "scene": scene, "c": ci,
+             "channel_name": name} for ci, name in enumerate(names)]
+
+
+def _frame(rows, columns: list[str]) -> pd.DataFrame:
+    """A catalog frame from a row list (missing keys -> None), or the
+    frame itself."""
+    if isinstance(rows, pd.DataFrame):
+        return rows
+    return pd.DataFrame([{c: r.get(c) for c in columns} for r in rows],
+                        columns=columns)
+
 
 class ImageDataset:
-    """Bundle of lazy DataFrames backing one image: pixels + catalogs."""
+    """Bundle of lazy DataFrames backing one image: pixels + catalogs.
+    ``scenes`` / ``channels`` are catalog frames or lists of
+    ``scene_row`` / ``channel_rows`` dicts."""
 
-    def __init__(self, pixels: DataFrame, scenes: pd.DataFrame,
-                 channels: pd.DataFrame, tiles: Optional[pd.DataFrame] = None,
+    def __init__(self, pixels: DataFrame, scenes, channels,
+                 tiles: Optional[pd.DataFrame] = None,
                  coords: Optional[pd.DataFrame] = None):
         self.pixels = pixels
-        self.scenes = scenes          # small catalog: kept driver-side (pandas)
-        self.channels = channels
+        # small catalogs: kept driver-side (pandas)
+        self.scenes = _frame(scenes, SCENE_COLUMNS)
+        self.channels = _frame(channels, CHANNEL_COLUMNS)
         self.tiles = tiles
         self.coords = coords
 
@@ -109,7 +157,7 @@ class ArrayLikeReader:
 
     # -- relational materialization --------------------------------------
     def to_dataset(self, spark: SparkSession) -> ImageDataset:
-        pixel_frames, scene_rows, channel_rows = [], [], []
+        pixel_frames, scenes, channels = [], [], []
         for idx, arr in enumerate(self.arrays):
             order, dims = self.resolved[idx]
             scene = generate_ome_image_id(idx)
@@ -118,22 +166,11 @@ class ArrayLikeReader:
 
             size_c = dims.C if "C" in order else None
             names = resolve_channel_names(self.channel_names[idx], size_c, idx)
-            for ci, name in enumerate(names):
-                channel_rows.append(
-                    {"image_id": self.image_id, "scene": scene,
-                     "c": ci, "channel_name": name})
-
-            pps = self.physical_pixel_sizes
-            scene_rows.append({
-                "image_id": self.image_id, "scene": scene, "scene_idx": idx,
-                "dim_order": order,
-                **{f"size_{d.lower()}": (dims[d][0] if d in order else None)
-                   for d in "TCZYXMS"},
-                "dtype": arr.dtype.name,
-                "ome_pixel_type": dtype_to_ome_type(arr.dtype),
-                "pps_z": pps.Z, "pps_y": pps.Y, "pps_x": pps.X,
-                "time_interval": None, "metadata": None,
-            })
+            channels += channel_rows(self.image_id, scene, names)
+            scenes.append(scene_row(
+                self.image_id, scene, idx, arr.dtype,
+                {d: dims[d][0] for d in order}, dim_order=order,
+                pps=self.physical_pixel_sizes))
 
         pdf = pd.concat(pixel_frames, ignore_index=True)
         has_complex = "value_re" in pdf.columns
@@ -156,9 +193,6 @@ class ArrayLikeReader:
             *[F.col(d).cast("int").alias(d) for d in PIXEL_DIM_COLS],
             value_expr,
         )
-        scenes = pd.DataFrame(scene_rows)
-        channels = pd.DataFrame(
-            channel_rows, columns=["image_id", "scene", "c", "channel_name"])
         return ImageDataset(pixels, scenes, channels)
 
 

@@ -65,7 +65,8 @@ class CellVoyagerImageReader(PlannedReader):
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -83,7 +84,7 @@ class CellVoyagerImageReader(PlannedReader):
         for r in cat["records"]:
             by_well.setdefault((r["row"], r["column"]), []).append(r)
 
-        scene_rows, channel_rows, tile_rows, plan = [], [], [], []
+        scenes, channels, tile_rows, plan = [], [], [], []
         for si, key in enumerate(cat["wells"]):
             row, col = key
             recs = by_well[key]
@@ -93,11 +94,9 @@ class CellVoyagerImageReader(PlannedReader):
             z_n = max(r["z"] for r in recs) + 1
             scene = f"Well R{row:02d}C{col:02d}"
             names = self._channel_names or cat["channel_names"]
-            for ci, nm in enumerate(resolve_channel_names(
-                    names, c_n, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(names, c_n, si))
             # field stage positions (µm) -> pixel offsets for the
             # M1 stitch
             if f_n > 1 and pps and pps.Y and pps.X:
@@ -112,20 +111,12 @@ class CellVoyagerImageReader(PlannedReader):
                         "m": m,
                         "y_off": int(round((py_ - min(ys)) / pps.Y)),
                         "x_off": int(round((px_ - min(xs)) / pps.X))})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": ("M" if f_n > 1 else "") + "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": pg0["h"], "size_x": pg0["w"],
-                "size_m": f_n if f_n > 1 else None, "size_s": None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "pps_z": None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": f"CellVoyager well R{row}C{col}",
-            })
+            scenes.append(scene_row(
+                self._image_id, scene, si, dt,
+                dict(T=t_n, C=c_n, Z=z_n, Y=pg0["h"], X=pg0["w"],
+                     M=f_n if f_n > 1 else None),
+                dim_order=("M" if f_n > 1 else "") + "TCZYX", pps=pps,
+                metadata=f"CellVoyager well R{row}C{col}"))
             for r in recs:
                 plan.append({
                     "path": os.path.join(os.path.abspath(self._path),
@@ -143,6 +134,5 @@ class CellVoyagerImageReader(PlannedReader):
               .select(*PIXEL_COLUMNS))
 
         return ImageDataset(
-            pixels=px, scenes=pd.DataFrame(scene_rows),
-            channels=pd.DataFrame(channel_rows),
+            pixels=px, scenes=scenes, channels=channels,
             tiles=pd.DataFrame(tile_rows) if tile_rows else None)

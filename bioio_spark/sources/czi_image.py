@@ -238,7 +238,8 @@ class CziImageReader(PlannedReader):
                                              read_czi_metadata)
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
@@ -284,7 +285,7 @@ class CziImageReader(PlannedReader):
                                      Y=scaling.get("Y"),
                                      X=scaling.get("X"))
 
-        scene_rows, channel_rows, tile_rows, plan = [], [], [], []
+        scenes, channels, tile_rows, plan = [], [], [], []
         for si in scene_order:
             all_subs = by_scene[si]
             levels = sorted({e["level"] for e in all_subs})
@@ -326,29 +327,16 @@ class CziImageReader(PlannedReader):
             names = (self._channel_names or names_from_xml)
             if names is not None and len(names) < c_n:
                 names = None
-            for ci, nm in enumerate(resolve_channel_names(
-                    names, c_n, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            dtype = np.dtype(dt).newbyteorder("=").name
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": ("M" if has_m else "")
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(names, c_n, si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, dt,
+                dict(T=t_n, C=c_n, Z=z_n, Y=h, X=w, M=m_n,
+                     S=samples if samples > 1 else None),
+                dim_order=("M" if has_m else "")
                 + "TCZYX" + ("S" if samples > 1 else ""),
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": h, "size_x": w,
-                "size_m": m_n,
-                "size_s": samples if samples > 1 else None,
-                "res_levels": levels,
-                "dtype": dtype, "ome_pixel_type": dtype,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": xml,
-            })
+                pps=pps, metadata=xml, res_levels=levels))
             for e in all_subs:
                 d = e["dims"]
                 plan.append({
@@ -401,6 +389,5 @@ class CziImageReader(PlannedReader):
               .select(*PIXEL_COLUMNS))
 
         return ImageDataset(
-            pixels=px, scenes=pd.DataFrame(scene_rows),
-            channels=pd.DataFrame(channel_rows),
+            pixels=px, scenes=scenes, channels=channels,
             tiles=pd.DataFrame(tile_rows) if tile_rows else None)

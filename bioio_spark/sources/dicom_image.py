@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
@@ -77,21 +76,20 @@ class DicomImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.dicom import parse_dicom
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No DICOM files under {self._path}")
-        scene_rows, channel_rows, plan = [], [], []
+        scenes, channels, plan = [], [], []
         for si, p in enumerate(paths):
             attrs = parse_dicom(p)
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, 1, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, 1, si))
             pps = self._pps
             if pps is None and "pixel_spacing" in attrs:
                 # DICOM spacings are millimeters; catalog speaks µm
@@ -100,21 +98,11 @@ class DicomImageReader(PlannedReader):
                 pps = PhysicalPixelSizes(
                     Z=sz * 1000.0 if sz else None,
                     Y=ry * 1000.0, X=rx * 1000.0)
-            dt = attrs["dtype"].newbyteorder("=")
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": 1, "size_c": 1,
-                "size_z": attrs["n_frames"],
-                "size_y": attrs["rows"], "size_x": attrs["cols"],
-                "size_m": None, "size_s": None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": attrs.get("description"),
-            })
+            scenes.append(scene_row(
+                self._image_id, scene, si, attrs["dtype"],
+                dict(T=1, C=1, Z=attrs["n_frames"], Y=attrs["rows"],
+                     X=attrs["cols"]),
+                pps=pps, metadata=attrs.get("description")))
             ap = os.path.abspath(p)
             for z in range(attrs["n_frames"]):
                 plan.append({
@@ -129,5 +117,4 @@ class DicomImageReader(PlannedReader):
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

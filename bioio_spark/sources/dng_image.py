@@ -116,38 +116,27 @@ class DngImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
 
         cat, plan = _plan_strips(self._path)
         scene = "Image:0"
         names = self._channel_names
         if names is None and cat["cfa_pattern"]:
             names = [cat["cfa_pattern"]]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": 0, "channel_name": nm}
-            for nm in resolve_channel_names(names, 1, 0)]
-        dt = np.dtype(cat["dtype"]).newbyteorder("=")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": 1, "size_c": 1, "size_z": 1,
-            "size_y": cat["size_y"], "size_x": cat["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": self._pps.Z if self._pps else None,
-            "pps_y": self._pps.Y if self._pps else None,
-            "pps_x": self._pps.X if self._pps else None,
-            "time_interval": None,
-            "metadata": (f"DNG {cat['dng_version']} model="
-                         f"{cat['model']} cfa={cat['cfa_pattern']} "
-                         f"black={cat['black_level']} "
-                         f"white={cat['white_level']} "
-                         f"comp={cat['comp']}"),
-        }]
+        channels = channel_rows(self._image_id, scene,
+                                resolve_channel_names(names, 1, 0))
+        scenes = [scene_row(
+            self._image_id, scene, 0, cat["dtype"],
+            dict(T=1, C=1, Z=1, Y=cat["size_y"], X=cat["size_x"]),
+            pps=self._pps,
+            metadata=(f"DNG {cat['dng_version']} model="
+                      f"{cat['model']} cfa={cat['cfa_pattern']} "
+                      f"black={cat['black_level']} "
+                      f"white={cat['white_level']} "
+                      f"comp={cat['comp']}"))]
         px = standardize(
             plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

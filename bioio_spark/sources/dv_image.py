@@ -141,14 +141,15 @@ class DvImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.dv import iter_dv_sections
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No DV files under {self._path}")
 
-        scene_rows, channel_rows, plan_rows = [], [], []
+        scenes, channels, plan_rows = [], [], []
         dtypes: dict[str, str] = {}
         for si, p in enumerate(sorted(paths)):
             h = _read_header(p)
@@ -159,11 +160,9 @@ class DvImageReader(PlannedReader):
                 str(w) if w else None for w in h["waves"]]
             if all(n is None for n in names):
                 names = None
-            for ci, nm in enumerate(resolve_channel_names(
-                    names, h["num_waves"], si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(names, h["num_waves"], si))
             pps = self._pps
             if pps is None and any(
                     v not in (0.0, 1.0) for v in
@@ -171,21 +170,11 @@ class DvImageReader(PlannedReader):
                 pps = PhysicalPixelSizes(
                     Z=h["dz"] or None, Y=h["dy"] or None,
                     X=h["dx"] or None)
-            dt = h["dtype"].newbyteorder("=")
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": h["num_times"], "size_c": h["num_waves"],
-                "size_z": h["num_z"],
-                "size_y": h["ny"], "size_x": h["nx"],
-                "size_m": None, "size_s": None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": None,
-            })
+            scenes.append(scene_row(
+                self._image_id, scene, si, h["dtype"],
+                dict(T=h["num_times"], C=h["num_waves"], Z=h["num_z"],
+                     Y=h["ny"], X=h["nx"]),
+                pps=pps))
             for s in iter_dv_sections(h):
                 plan_rows.append({
                     "path": ap, "scene": scene,
@@ -209,5 +198,4 @@ class DvImageReader(PlannedReader):
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -5,22 +5,17 @@ animations the same way — and the first frame delay becomes
 as a multi-scene image in sorted-path order.
 
 Catalog: header + a bounded block walk per file counts frames and
-reads geometry without LZW-decoding pixel data. Pixels: binaryFile scan
-+ mapInPandas decode, one file per task."""
+reads geometry without LZW-decoding pixel data; pixels decode off
+``sources/raster.py``'s scan, one file per task."""
 
 from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from bioio_spark.sources.planned import PlannedReader
+from bioio_spark.sources.raster import RasterReader
 
 
 def _read_gif_header(path: str):
@@ -77,95 +72,20 @@ def _read_gif_header(path: str):
     return h, w, frames, delay, gray
 
 
-class GifImageReader(PlannedReader):
+class GifImageReader(RasterReader):
     """BioImage reader over baseline GIF files (plugin tier)."""
 
     EXTENSIONS = (".gif",)
     DIM_ORDER_ERROR = "GIF frames are always (T)YX(S)"
 
-    def to_dataset(self, spark: SparkSession):
-        from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+    @staticmethod
+    def header(path: str):
+        h, w, frames, delay, gray = _read_gif_header(path)
+        return (frames, h, w, 1 if gray else 3, "uint8",
+                delay / 100.0 if delay else None)
 
-        paths = self.paths(self._path)
-        if not paths:
-            raise FileNotFoundError(f"No GIF files under {self._path}")
+    @staticmethod
+    def decode(data: bytes) -> np.ndarray:
+        from bioio_spark.formats.gif import decode_gif
 
-        scene_rows, channel_rows = [], []
-        scene_of: dict[str, str] = {}
-        for si, p in enumerate(sorted(paths)):
-            h, w, frames, delay, gray = _read_gif_header(p)
-            scene = f"Image:{si}"
-            scene_of[os.path.abspath(p)] = scene
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, 1, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            pps = self._pps
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": "TCZYX" if gray else "TCZYXS",
-                "size_t": frames, "size_c": 1, "size_z": 1,
-                "size_y": h, "size_x": w, "size_m": None,
-                "size_s": None if gray else 3,
-                "dtype": "uint8", "ome_pixel_type": "uint8",
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": (delay / 100.0) if delay else None,
-                "metadata": None,
-            })
-
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bioio_spark.formats.gif import decode_gif
-            from bioio_spark.sources.tiff_image import local_path
-
-            for pdf in it:
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    local = local_path(path)
-                    if local not in scene_of:
-                        raise KeyError(
-                            f"GifImageReader: {path!r} not in the "
-                            f"catalog scene map")
-                    frames, _delays = decode_gif(bytes(content))
-                    for ti in range(frames.shape[0]):
-                        plane = frames[ti]
-                        y_n, x_n = plane.shape[0], plane.shape[1]
-                        s_n = plane.shape[2] if plane.ndim == 3 else 1
-                        zero = np.zeros(plane.size, dtype=np.int32)
-                        s_col = (np.full(plane.size, -1, dtype=np.int32)
-                                 if s_n == 1 else
-                                 np.tile(np.arange(s_n, dtype=np.int32),
-                                         y_n * x_n))
-                        yield pd.DataFrame({
-                            "scene": scene_of[local],
-                            "t": np.full(plane.size, ti, np.int32),
-                            "c": zero, "z": zero,
-                            "y": np.repeat(
-                                np.arange(y_n, dtype=np.int32),
-                                x_n * s_n),
-                            "x": np.tile(np.repeat(
-                                np.arange(x_n, dtype=np.int32), s_n),
-                                y_n),
-                            "s": s_col,
-                            "value": plane.ravel().astype(np.float64),
-                        })
-
-        binary = (spark.read.format("binaryFile")
-                  .option("pathGlobFilter", "*.gif")
-                  .load([f"file://{os.path.abspath(p)}" for p in paths]))
-        px = (binary.select("path", "content")
-              .mapInPandas(batches,
-                           schema="scene string, t int, c int, z int, "
-                                  "y int, x int, s int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  F.lit(-1).alias("m"), "s", "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return decode_gif(data)[0]

@@ -153,7 +153,8 @@ class LifImageReader(PlannedReader):
         from bioio_spark.formats.lif import parse_lif_header
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
@@ -164,16 +165,14 @@ class LifImageReader(PlannedReader):
         if not header["scenes"]:
             raise ValueError(f"{path}: LIF holds no images")
 
-        scene_rows, channel_rows, tile_rows, plan = [], [], [], []
+        scenes, channels, tile_rows, plan = [], [], [], []
         for si, sc in enumerate(header["scenes"]):
             t_n, c_n, z_n, y_n, x_n = sc["shape"]
             m_n = sc.get("m_n", 1)
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, c_n, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, c_n, si))
             pps = self._pps
             if pps is None and sc["pps"]:
                 pz, py, px_ = sc["pps"]
@@ -190,20 +189,12 @@ class LifImageReader(PlannedReader):
                         "m": m,
                         "y_off": int(round((py_ - min(ys)) / pps.Y)),
                         "x_off": int(round((px2 - min(xs)) / pps.X))})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": ("M" if m_n > 1 else "") + "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": y_n, "size_x": x_n,
-                "size_m": m_n if m_n > 1 else None, "size_s": None,
-                "dtype": sc["dtype"], "ome_pixel_type": sc["dtype"],
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": header["xml"],
-            })
+            scenes.append(scene_row(
+                self._image_id, scene, si, sc["dtype"],
+                dict(T=t_n, C=c_n, Z=z_n, Y=y_n, X=x_n,
+                     M=m_n if m_n > 1 else None),
+                dim_order=("M" if m_n > 1 else "") + "TCZYX", pps=pps,
+                metadata=header["xml"]))
             for m in range(m_n):
                 for t in range(t_n):
                     for c in range(c_n):
@@ -228,6 +219,5 @@ class LifImageReader(PlannedReader):
               .select(*PIXEL_COLUMNS))
 
         return ImageDataset(
-            pixels=px, scenes=pd.DataFrame(scene_rows),
-            channels=pd.DataFrame(channel_rows),
+            pixels=px, scenes=scenes, channels=channels,
             tiles=pd.DataFrame(tile_rows) if tile_rows else None)

@@ -164,18 +164,16 @@ class LsmImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         info, names, plan = _plan_strips(self._path)
         scene = "Image:0"
         c_n = max(info["size_c"], 1)
         use_names = self._channel_names or (names or None)
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": nm}
-            for ci, nm in enumerate(
-                resolve_channel_names(use_names, c_n, 0))]
+        channels = channel_rows(self._image_id, scene,
+                                resolve_channel_names(use_names, c_n, 0))
         pps = self._pps
         vx, vy, vz = info["voxel_m"]
         if pps is None and any((vx, vy, vz)):
@@ -184,26 +182,17 @@ class LsmImageReader(PlannedReader):
                 Z=vz * 1e6 if vz else None,
                 Y=vy * 1e6 if vy else None,
                 X=vx * 1e6 if vx else None)
-        dt = np.dtype(plan[0]["dtype"]).newbyteorder("=")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": max(info["size_t"], 1), "size_c": c_n,
-            "size_z": max(info["size_z"], 1),
-            "size_y": info["size_y"], "size_x": info["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": info["time_interval"] or None,
-            "metadata": (f"LSM ScanType={info['scan_type']} "
-                         f"DataType={info['data_type']}"),
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, plan[0]["dtype"],
+            dict(T=max(info["size_t"], 1), C=c_n,
+                 Z=max(info["size_z"], 1), Y=info["size_y"],
+                 X=info["size_x"]),
+            pps=pps, time_interval=info["time_interval"] or None,
+            metadata=(f"LSM ScanType={info['scan_type']} "
+                      f"DataType={info['data_type']}"))]
 
         px = standardize(
             plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

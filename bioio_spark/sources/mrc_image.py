@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
@@ -74,39 +73,28 @@ class MrcImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.mrc import read_mrc_header
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No MRC files under {self._path}")
-        scene_rows, channel_rows, plan = [], [], []
+        scenes, channels, plan = [], [], []
         for si, p in enumerate(paths):
             h = read_mrc_header(p)
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, 1, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, 1, si))
             pps = self._pps
             if pps is None and h["pixel_size_a"]:
                 um = h["pixel_size_a"] * 1e-4   # Å -> µm
                 pps = PhysicalPixelSizes(Z=um, Y=um, X=um)
-            dt = h["dtype"].newbyteorder("=")
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": 1, "size_c": 1, "size_z": h["nz"],
-                "size_y": h["ny"], "size_x": h["nx"],
-                "size_m": None, "size_s": None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": "; ".join(h["labels"]) or None,
-            })
+            scenes.append(scene_row(
+                self._image_id, scene, si, h["dtype"],
+                dict(T=1, C=1, Z=h["nz"], Y=h["ny"], X=h["nx"]),
+                pps=pps, metadata="; ".join(h["labels"]) or None))
             ap = os.path.abspath(p)
             for z in range(h["nz"]):
                 plan.append({
@@ -120,5 +108,4 @@ class MrcImageReader(PlannedReader):
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

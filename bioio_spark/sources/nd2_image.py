@@ -214,7 +214,8 @@ class Nd2ImageReader(PlannedReader):
                                              read_nd2_time_interval,
                                              resolve_nd2_loops)
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         path = os.path.abspath(self._path)
@@ -259,26 +260,16 @@ class Nd2ImageReader(PlannedReader):
                                      Y=cal, X=cal)
         time_interval = read_nd2_time_interval(path)
 
-        scenes = [f"Image:{p}" for p in range(p_n)]
-        channel_rows, scene_rows = [], []
-        for p, scene in enumerate(scenes):
-            channel_rows += [
-                {"image_id": self._image_id, "scene": scene, "c": ci,
-                 "channel_name": nm}
-                for ci, nm in enumerate(resolve_channel_names(
-                    names, c_n, p))]
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": p, "dim_order": "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": y_n, "size_x": x_n,
-                "size_m": None, "size_s": None,
-                "dtype": dtype, "ome_pixel_type": dtype,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": time_interval, "metadata": None,
-            })
+        scene_ids = [f"Image:{p}" for p in range(p_n)]
+        channels, scenes = [], []
+        for p, scene in enumerate(scene_ids):
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(names, c_n, p))
+            scenes.append(scene_row(
+                self._image_id, scene, p, dtype,
+                dict(T=t_n, C=c_n, Z=z_n, Y=y_n, X=x_n), pps=pps,
+                time_interval=time_interval))
         plan = []
         for seq in range(seq_n):
             name = f"ImageDataSeq|{seq}!"
@@ -288,7 +279,7 @@ class Nd2ImageReader(PlannedReader):
             # mixed-radix decomposition, innermost loop fastest
             co = nd2_seq_coords(kinds, seq)
             plan.append({"path": path, "seq": seq, "t": co["t"],
-                         "z": co["z"], "scene": scenes[co["p"]],
+                         "z": co["z"], "scene": scene_ids[co["p"]],
                          "offset": off, "size": size})
         n_comp, height, width, dt_name = c_n, y_n, x_n, dtype
 
@@ -317,5 +308,4 @@ class Nd2ImageReader(PlannedReader):
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -14,8 +14,6 @@ from __future__ import annotations
 
 import os
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
@@ -94,37 +92,26 @@ class NdtiffImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
 
         cat = self.catalog(self._path)
         pps = self._pps
-        dt = np.dtype(cat["dtype"]).newbyteorder("=")
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         for si in range(cat["n_positions"]):
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, cat["size_c"], si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": cat["size_t"], "size_c": cat["size_c"],
-                "size_z": cat["size_z"],
-                "size_y": cat["size_y"], "size_x": cat["size_x"],
-                "size_m": None, "size_s": None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": "NDTiff (Micro-Manager NDTiffStorage)",
-            })
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, cat["size_c"],
+                                      si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, cat["dtype"],
+                dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
+                     Y=cat["size_y"], X=cat["size_x"]),
+                pps=pps, metadata="NDTiff (Micro-Manager NDTiffStorage)"))
         px = standardize(
             plan_pixels(spark, _plan(self._path, cat), raw_plane_batches,
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -89,17 +89,16 @@ class OibImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import decode_tiff
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or cat["channel_names"]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": nm}
-            for ci, nm in enumerate(resolve_channel_names(
-                names, cat["size_c"], 0))]
+        channels = channel_rows(
+            self._image_id, scene,
+            resolve_channel_names(names, cat["size_c"], 0))
         pps = self._pps
         if pps is None and (cat["um_per_px"] or cat["z_step_um"]):
             pps = PhysicalPixelSizes(
@@ -113,26 +112,17 @@ class OibImageReader(PlannedReader):
                              [o for o, _ in first],
                              [n for _, n in first])
         pl0, _ = decode_tiff(head)
-        dt = pl0[0].dtype
         if pl0[0].shape != (cat["size_y"], cat["size_x"]):
             raise ValueError(
                 f"{self._path}: plane streams are "
                 f"{pl0[0].shape[1]}x{pl0[0].shape[0]}, INI says "
                 f"{cat['size_x']}x{cat['size_y']}")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["size_t"], "size_c": cat["size_c"],
-            "size_z": cat["size_z"],
-            "size_y": cat["size_y"], "size_x": cat["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": "OIB FLUOVIEW (MS-CFB container)",
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, pl0[0].dtype,
+            dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
+                 Y=cat["size_y"], X=cat["size_x"]),
+            pps=pps, time_interval=cat["time_interval"],
+            metadata="OIB FLUOVIEW (MS-CFB container)")]
         ap = os.path.abspath(self._path)
         plan = [{"path": ap, "t": t, "c": c, "z": z,
                  "offsets": [o for o, _ in ext],
@@ -142,5 +132,4 @@ class OibImageReader(PlannedReader):
             plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -106,17 +106,16 @@ class OifImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or cat["channel_names"]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": nm}
-            for ci, nm in enumerate(resolve_channel_names(
-                names, cat["size_c"], 0))]
+        channels = channel_rows(
+            self._image_id, scene,
+            resolve_channel_names(names, cat["size_c"], 0))
         pps = self._pps
         if pps is None and (cat["um_per_px"] or cat["z_step_um"]):
             pps = PhysicalPixelSizes(
@@ -125,31 +124,21 @@ class OifImageReader(PlannedReader):
                 X=cat["um_per_px"] or None)
         # dtype from one plane's IFD (a few bytes, no pixel IO)
         pg0 = iter_tiff_chunks(next(iter(cat["planes"].values())))[0]
-        dt = np.dtype(pg0["dtype"]).newbyteorder("=")
         if (pg0["h"], pg0["w"]) != (cat["size_y"], cat["size_x"]):
             raise ValueError(
                 f"{self._path}: plane files are "
                 f"{pg0['w']}x{pg0['h']}, INI says "
                 f"{cat['size_x']}x{cat['size_y']}")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["size_t"], "size_c": cat["size_c"],
-            "size_z": cat["size_z"],
-            "size_y": cat["size_y"], "size_x": cat["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": "OIF FLUOVIEW",
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, pg0["dtype"],
+            dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
+                 Y=cat["size_y"], X=cat["size_x"]),
+            pps=pps, time_interval=cat["time_interval"],
+            metadata="OIF FLUOVIEW")]
         plan = [{"path": os.path.abspath(p), "t": t, "c": c, "z": z}
                 for (t, c, z), p in sorted(cat["planes"].items())]
         px = standardize(
             plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

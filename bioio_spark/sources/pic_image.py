@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
@@ -77,37 +76,28 @@ class PicImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.pic import HEADER_SIZE
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
         scene = "Image:0"
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": 0, "channel_name": resolve_channel_names(
-                 self._channel_names, 1, 0)[0]}]
+        channels = channel_rows(
+            self._image_id, scene,
+            resolve_channel_names(self._channel_names, 1, 0))
         pps = self._pps
         if pps is None and (cat["um_per_px"] or cat["z_step_um"]):
             pps = PhysicalPixelSizes(
                 Z=cat["z_step_um"] or None,
                 Y=cat["um_per_px"] or None,
                 X=cat["um_per_px"] or None)
-        dt = cat["dtype"].newbyteorder("=")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["size_t"], "size_c": 1,
-            "size_z": cat["size_z"],
-            "size_y": cat["size_y"], "size_x": cat["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": f"Bio-Rad PIC: {cat['name']}" if cat["name"]
-            else "Bio-Rad PIC",
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, cat["dtype"],
+            dict(T=cat["size_t"], C=1, Z=cat["size_z"], Y=cat["size_y"],
+                 X=cat["size_x"]),
+            pps=pps, time_interval=cat["time_interval"],
+            metadata=f"Bio-Rad PIC: {cat['name']}" if cat["name"]
+            else "Bio-Rad PIC")]
         t_axis = cat["size_t"] > 1
         ap = os.path.abspath(self._path)
         plan = [{"path": ap,
@@ -121,5 +111,4 @@ class PicImageReader(PlannedReader):
             plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

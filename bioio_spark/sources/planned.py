@@ -10,8 +10,8 @@ it as a DataFrame, and decodes each row's byte range inside
 ``mapInPandas``. The helpers here are the pieces of that pattern:
 
 - ``norm_window``: a selector to half-open ``[start, stop)`` bounds;
-- ``plane_frame`` / ``payload_frame``: one decoded YX plane as
-  long-form pixel rows / as one planes-layout payload row;
+- ``plane_frame`` / ``payload_frame``: one decoded YX(S) / YX plane
+  as long-form pixel rows / as one planes-layout payload row;
 - ``raw_plane_batches``: the decode loop of plans of uncompressed
   planes;
 - ``plan_pixels``: plan rows -> repartitioned ``mapInPandas`` frame;
@@ -66,20 +66,27 @@ def norm_window(sel, size: int) -> tuple[int, int]:
 
 def plane_frame(plane: np.ndarray, t, c, z, y0: int = 0, x0: int = 0,
                 **const) -> pd.DataFrame:
-    """Long-form ``(*const, t, c, z, y, x, value)`` rows of one YX plane
-    whose first row/column sit at ``(y0, x0)``. ``const`` adds constant
-    columns (e.g. ``scene=``) ahead of the dims."""
-    h, w = plane.shape
+    """Long-form ``(*const, t, c, z, y, x[, s], value)`` rows of one YX
+    or YXS plane whose first row/column sit at ``(y0, x0)``, in the
+    plane's own order (y, then x, then s). A YXS plane adds the ``s``
+    column. ``const`` adds constant columns (e.g. ``scene=``) ahead of
+    the dims."""
+    h, w = plane.shape[:2]
+    s = plane.shape[2] if plane.ndim == 3 else 1
     n = plane.size
-    return pd.DataFrame({
+    cols = {
         **const,
         "t": np.full(n, t, np.int32),
         "c": np.full(n, c, np.int32),
         "z": np.full(n, z, np.int32),
-        "y": np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w),
-        "x": np.tile(np.arange(x0, x0 + w, dtype=np.int32), h),
-        "value": plane.ravel().astype(np.float64),
-    })
+        "y": np.repeat(np.arange(y0, y0 + h, dtype=np.int32), w * s),
+        "x": np.tile(np.repeat(np.arange(x0, x0 + w, dtype=np.int32), s),
+                     h),
+    }
+    if plane.ndim == 3:
+        cols["s"] = np.tile(np.arange(s, dtype=np.int32), h * w)
+    cols["value"] = plane.ravel().astype(np.float64)
+    return pd.DataFrame(cols)
 
 
 def raw_plane_batches(it):
@@ -133,16 +140,17 @@ def plan_pixels(spark: SparkSession, rows: list, batches, schema: str,
 def standardize(px: DataFrame, image_id: str,
                 scene: str | None = None) -> DataFrame:
     """A decoded ``(t, c, z, y, x, value)`` frame in the ``PIXEL_COLUMNS``
-    layout, with ``m``/``s`` = -1 (absent). ``scene`` names the frame's
-    one scene; without it the frame's own ``scene`` column is kept, as
-    is its ``res_level`` column when it has one (else level 0)."""
+    layout, with ``m`` = -1 (absent). ``scene`` names the frame's one
+    scene; without it the frame's own ``scene`` column is kept, as are
+    its ``res_level`` column (else level 0) and ``s`` column (else -1,
+    absent) when it has them."""
     return px.select(
         F.lit(image_id).alias("image_id"),
         F.lit(scene).alias("scene") if scene is not None else "scene",
         "res_level" if "res_level" in px.columns
         else F.lit(0).alias("res_level"),
-        "t", "c", "z", "y", "x",
-        F.lit(-1).alias("m"), F.lit(-1).alias("s"), "value",
+        "t", "c", "z", "y", "x", F.lit(-1).alias("m"),
+        "s" if "s" in px.columns else F.lit(-1).alias("s"), "value",
     ).select(*PIXEL_COLUMNS)
 
 

@@ -140,55 +140,32 @@ class QptiffImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
 
         cat, extras, plan = _chunk_plan(self._path)
         pps = self._pps
-        scene_rows, channel_rows = [], []
-
         pg0 = cat["levels"][0][0]
-        dt = np.dtype(pg0["dtype"]).newbyteorder("=")
-        names = self._channel_names or cat["channels"]
-        for ci, nm in enumerate(resolve_channel_names(
-                names, len(cat["channels"]), 0)):
-            channel_rows.append({
-                "image_id": self._image_id, "scene": "Image:0",
-                "c": ci, "channel_name": nm})
-        scene_rows.append({
-            "image_id": self._image_id, "scene": "Image:0",
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": 1, "size_c": len(cat["channels"]), "size_z": 1,
-            "size_y": pg0["h"], "size_x": pg0["w"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "res_levels": list(range(len(cat["levels"]))),
-            "pps_z": None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": None,
-            "metadata": "QPTIFF multiplexed slide",
-        })
+        c_n = len(cat["channels"])
+        channels = channel_rows(
+            self._image_id, "Image:0",
+            resolve_channel_names(self._channel_names or cat["channels"],
+                                  c_n, 0))
+        scenes = [scene_row(
+            self._image_id, "Image:0", 0, pg0["dtype"],
+            dict(T=1, C=c_n, Z=1, Y=pg0["h"], X=pg0["w"]), pps=pps,
+            metadata="QPTIFF multiplexed slide",
+            res_levels=list(range(len(cat["levels"]))))]
         for kind, pg, scene in extras:
-            si = int(scene.split(":")[1])
             spp = pg["spp"]
-            tdt = np.dtype(pg["dtype"]).newbyteorder("=")
-            channel_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "c": 0, "channel_name": f"{kind}:0"})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": "TCZYXS" if spp > 1 else "TCZYX",
-                "size_t": 1, "size_c": 1, "size_z": 1,
-                "size_y": pg["h"], "size_x": pg["w"],
-                "size_m": None,
-                "size_s": spp if spp > 1 else None,
-                "dtype": tdt.name, "ome_pixel_type": tdt.name,
-                "res_levels": [0],
-                "pps_z": None, "pps_y": None, "pps_x": None,
-                "time_interval": None,
-                "metadata": f"QPTIFF {kind}",
-            })
+            channels += channel_rows(self._image_id, scene, [f"{kind}:0"])
+            scenes.append(scene_row(
+                self._image_id, scene, int(scene.split(":")[1]),
+                pg["dtype"],
+                dict(T=1, C=1, Z=1, Y=pg["h"], X=pg["w"],
+                     S=spp if spp > 1 else None),
+                dim_order="TCZYXS" if spp > 1 else "TCZYX",
+                metadata=f"QPTIFF {kind}", res_levels=[0]))
 
         px = (plan_pixels(
                   spark, plan, _decode_batches,
@@ -202,5 +179,4 @@ class QptiffImageReader(PlannedReader):
                   F.lit(-1).alias("m"), "s", "value")
               .select(*PIXEL_COLUMNS))
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

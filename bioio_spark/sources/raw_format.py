@@ -246,10 +246,9 @@ class RawImageReader:
         self._pps = physical_pixel_sizes
 
     def to_dataset(self, spark):
-        import pandas as pd
-
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.sources.planned import standardize
 
         register_raw_source(spark)
@@ -258,28 +257,14 @@ class RawImageReader:
             "path", self._path).load()
         px = standardize(raw, self._image_id)
 
-        pps = self._pps
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         for sc in manifest["scenes"]:
-            t_n, c_n, z_n, y_n, x_n = sc["shape"]
-            names = resolve_channel_names(
-                self._channel_names or sc.get("channel_names"), c_n,
-                sc["scene_idx"])
-            for ci, nm in enumerate(names):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": sc["scene"],
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": sc["scene"],
-                "scene_idx": sc["scene_idx"], "dim_order": "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": y_n, "size_x": x_n, "size_m": None,
-                "size_s": None,
-                "dtype": sc["dtype"], "ome_pixel_type": "double",
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None, "metadata": None,
-            })
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+            channels += channel_rows(
+                self._image_id, sc["scene"],
+                resolve_channel_names(
+                    self._channel_names or sc.get("channel_names"),
+                    sc["shape"][1], sc["scene_idx"]))
+            scenes.append(scene_row(
+                self._image_id, sc["scene"], sc["scene_idx"], sc["dtype"],
+                dict(zip("TCZYX", sc["shape"])), pps=self._pps))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

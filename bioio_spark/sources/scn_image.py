@@ -137,37 +137,26 @@ class ScnImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
 
         cat, plan = _chunk_plan(self._path)
         pps = self._pps
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         for si, im in enumerate(cat["images"]):
             scene = f"Image:{si}"
             pg0 = im["levels"][0]["page"]
             spp = pg0["spp"]
-            dt = np.dtype(pg0["dtype"]).newbyteorder("=")
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, 1, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": "TCZYXS" if spp > 1 else "TCZYX",
-                "size_t": 1, "size_c": 1, "size_z": im["z_n"],
-                "size_y": im["size_y"], "size_x": im["size_x"],
-                "size_m": None,
-                "size_s": spp if spp > 1 else None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "res_levels": list(range(im["n_levels"])),
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": f"SCN image {im['name']}",
-            })
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, 1, si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, pg0["dtype"],
+                dict(T=1, C=1, Z=im["z_n"], Y=im["size_y"],
+                     X=im["size_x"], S=spp if spp > 1 else None),
+                dim_order="TCZYXS" if spp > 1 else "TCZYX", pps=pps,
+                metadata=f"SCN image {im['name']}",
+                res_levels=list(range(im["n_levels"]))))
 
         px = (plan_pixels(
                   spark, plan, _decode_batches,
@@ -181,5 +170,4 @@ class ScnImageReader(PlannedReader):
                   F.lit(-1).alias("m"), "s", "value")
               .select(*PIXEL_COLUMNS))
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -224,7 +224,8 @@ class SldyImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         dirs = _scene_dirs(self._path)
@@ -232,7 +233,7 @@ class SldyImageReader(PlannedReader):
             raise FileNotFoundError(
                 f"No SlideBook image dirs (ImageData/) under {self._path}")
 
-        scene_rows, channel_rows, plan = [], [], []
+        scenes, channels, plan = [], [], []
         for si, d in enumerate(dirs):
             files = {}
             for p in _glob.glob(os.path.join(d, "ImageData", "*.npy")):
@@ -281,25 +282,14 @@ class SldyImageReader(PlannedReader):
                         X=float(myx) if myx else None)
 
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    names, c_n, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": y_n, "size_x": x_n,
-                "size_m": None, "size_s": None,
-                "dtype": np.dtype(dtype).name,
-                "ome_pixel_type": np.dtype(dtype).name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": rec.get("time_interval"),
-                "metadata": meta_doc,
-            })
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(names, c_n, si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, dtype,
+                dict(T=t_n, C=c_n, Z=z_n, Y=y_n, X=x_n), pps=pps,
+                time_interval=rec.get("time_interval"),
+                metadata=meta_doc))
             for (t, c), p in files.items():
                 plan.append({"path": os.path.abspath(p), "scene": scene,
                              "t": t, "c": c})
@@ -329,5 +319,4 @@ class SldyImageReader(PlannedReader):
                         "scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

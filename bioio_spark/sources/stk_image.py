@@ -17,7 +17,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
@@ -94,7 +93,8 @@ class StkImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat, plan = _plan_planes(self._path)
@@ -103,34 +103,22 @@ class StkImageReader(PlannedReader):
         names = self._channel_names
         if names is None and cat["wavelength"]:
             names = [str(int(round(cat["wavelength"])))]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": 0, "channel_name": nm}
-            for nm in resolve_channel_names(names, 1, 0)]
+        channels = channel_rows(self._image_id, scene,
+                                resolve_channel_names(names, 1, 0))
         pps = self._pps
         if pps is None and cat["z_distance"]:
             pps = PhysicalPixelSizes(Z=cat["z_distance"], Y=None, X=None)
         z_axis = cat["axis"] == "Z"
-        dt = np.dtype(pg["dtype"]).newbyteorder("=")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": 1 if z_axis else cat["n_planes"], "size_c": 1,
-            "size_z": cat["n_planes"] if z_axis else 1,
-            "size_y": pg["h"], "size_x": pg["w"],
-            "size_m": None, "size_s": None,
-            "dtype": dt.name, "ome_pixel_type": dt.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": None,
-            "metadata": (f"STK axis={cat['axis']} "
-                         f"planes={cat['n_planes']}"),
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, pg["dtype"],
+            dict(T=1 if z_axis else cat["n_planes"], C=1,
+                 Z=cat["n_planes"] if z_axis else 1, Y=pg["h"],
+                 X=pg["w"]),
+            pps=pps,
+            metadata=f"STK axis={cat['axis']} planes={cat['n_planes']}")]
 
         px = standardize(
             plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

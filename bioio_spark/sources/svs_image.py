@@ -151,7 +151,8 @@ class SvsImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat, extras, plan = _chunk_plan(self._path)
@@ -161,34 +162,23 @@ class SvsImageReader(PlannedReader):
         if pps is None and mpp:
             pps = PhysicalPixelSizes(Z=None, Y=float(mpp), X=float(mpp))
 
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
 
         def add_scene(si, pg, res_levels, kind):
             scene = f"Image:{si}"
             spp = pg["spp"]
-            dt = np.dtype(pg["dtype"]).newbyteorder("=")
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, 1, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si,
-                "dim_order": "TCZYXS" if spp > 1 else "TCZYX",
-                "size_t": 1, "size_c": 1, "size_z": 1,
-                "size_y": pg["h"], "size_x": pg["w"],
-                "size_m": None,
-                "size_s": spp if spp > 1 else None,
-                "dtype": dt.name, "ome_pixel_type": dt.name,
-                "res_levels": res_levels,
-                "pps_z": None,
-                "pps_y": pps.Y if pps and si == 0 else None,
-                "pps_x": pps.X if pps and si == 0 else None,
-                "time_interval": None,
-                "metadata": (f"SVS {kind} AppMag="
-                             f"{meta.get('AppMag')} MPP={mpp}"),
-            })
+            channels.extend(channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, 1, si)))
+            scenes.append(scene_row(
+                self._image_id, scene, si, pg["dtype"],
+                dict(T=1, C=1, Z=1, Y=pg["h"], X=pg["w"],
+                     S=spp if spp > 1 else None),
+                dim_order="TCZYXS" if spp > 1 else "TCZYX",
+                pps=pps if si == 0 else None,
+                metadata=f"SVS {kind} AppMag={meta.get('AppMag')} "
+                         f"MPP={mpp}",
+                res_levels=res_levels))
 
         add_scene(0, cat["levels"][0],
                   list(range(len(cat["levels"]))), "slide")
@@ -207,5 +197,4 @@ class SvsImageReader(PlannedReader):
                   F.lit(-1).alias("m"), "s", "value")
               .select(*PIXEL_COLUMNS))
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

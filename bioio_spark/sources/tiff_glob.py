@@ -28,7 +28,6 @@ import os
 import re
 from typing import Callable, Iterator, Optional
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import SparkSession
@@ -90,7 +89,8 @@ class TiffGlobReader:
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
 
         # driver-side planning: indexer coordinates (string work) + one
         # seek-based IFD walk per file for page count / YX / dtype — a
@@ -114,9 +114,8 @@ class TiffGlobReader:
         layout0 = iter_tiff_chunks(self._paths[0])
         pages = len(layout0)
         h, w = layout0[0]["h"], layout0[0]["w"]
-        dtype = np.dtype(layout0[0]["dtype"]).newbyteorder("=").name
 
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         for si in sorted(scenes_seen):
             mine = [c for c in coords.values() if c["s"] == si]
             t_n = max(c["t"] for c in mine) + 1
@@ -127,24 +126,12 @@ class TiffGlobReader:
                     f"scene {si}: {len(mine)} files do not fill the "
                     f"{t_n}x{c_n}x{z_n // pages} (T, C, Z) grid")
             scene = f"Image:{si}"
-            for ci, nm in enumerate(resolve_channel_names(
-                    self._channel_names, c_n, si)):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            pps = self._pps
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": t_n, "size_c": c_n, "size_z": z_n,
-                "size_y": h, "size_x": w,
-                "size_m": None, "size_s": None,
-                "dtype": dtype, "ome_pixel_type": dtype,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None, "metadata": None,
-            })
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(self._channel_names, c_n, si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, layout0[0]["dtype"],
+                dict(T=t_n, C=c_n, Z=z_n, Y=h, X=w), pps=self._pps))
 
         n_pages = pages
 
@@ -174,5 +161,4 @@ class TiffGlobReader:
                 batches, schema="scene string, " + WINDOW_SCHEMA),
             self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -91,8 +91,9 @@ class TiffImageReader(PlannedReader):
                                               read_ome_header)
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
-        from bioio_spark.types import OME_TO_NUMPY_DTYPE
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
+        from bioio_spark.types import OME_TO_NUMPY_DTYPE, PhysicalPixelSizes
 
         paths = _tiff_paths(self._path)
         if not paths:
@@ -108,7 +109,7 @@ class TiffImageReader(PlannedReader):
             if xml0 is None or "<OME" not in xml0:
                 return self._non_ome_dataset(spark, paths[0])
 
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         # path -> ordered scene-name list; a file with several <Image>
         # elements (multi-scene single-file OME-TIFF, ref bio_image.py:
         # 433-498 scene model) contributes one entry per Image, pages
@@ -149,31 +150,22 @@ class TiffImageReader(PlannedReader):
                         scene = f"Image:{si}@{si}"
                 seen_scenes.add(scene)
                 file_scene_names.append(scene)
-                names = resolve_channel_names(
-                    self._channel_names or h["channel_names"],
-                    h["size_c"], si)
-                for ci, nm in enumerate(names):
-                    channel_rows.append({
-                        "image_id": self._image_id, "scene": scene,
-                        "c": ci, "channel_name": nm})
-                pps = self._pps
+                channels += channel_rows(
+                    self._image_id, scene,
+                    resolve_channel_names(
+                        self._channel_names or h["channel_names"],
+                        h["size_c"], si))
                 size_s = h.get("size_s") or 1
-                scene_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "scene_idx": si,
-                    "dim_order": "TCZYXS" if size_s > 1 else "TCZYX",
-                    "size_t": h["size_t"], "size_c": h["size_c"],
-                    "size_z": h["size_z"], "size_y": h["size_y"],
-                    "size_x": h["size_x"], "size_m": None,
-                    "size_s": size_s if size_s > 1 else None,
-                    "dtype": OME_TO_NUMPY_DTYPE[h["pixel_type"]],
-                    "ome_pixel_type": h["pixel_type"],
-                    "res_levels": list(range(n_sub + 1)),
-                    "pps_z": pps.Z if pps else h["pps_z"],
-                    "pps_y": pps.Y if pps else h["pps_y"],
-                    "pps_x": pps.X if pps else h["pps_x"],
-                    "time_interval": None, "metadata": xml,
-                })
+                scenes.append(scene_row(
+                    self._image_id, scene, si,
+                    OME_TO_NUMPY_DTYPE[h["pixel_type"]],
+                    dict(T=h["size_t"], C=h["size_c"], Z=h["size_z"],
+                         Y=h["size_y"], X=h["size_x"],
+                         S=size_s if size_s > 1 else None),
+                    dim_order="TCZYXS" if size_s > 1 else "TCZYX",
+                    pps=self._pps or PhysicalPixelSizes(
+                        h["pps_z"], h["pps_y"], h["pps_x"]),
+                    metadata=xml, res_levels=list(range(n_sub + 1))))
                 si += 1
             path_to_scene[os.path.abspath(p)] = file_scene_names
 
@@ -184,8 +176,7 @@ class TiffImageReader(PlannedReader):
             F.lit(-1).alias("m"), "s", "value",
         ).select(*PIXEL_COLUMNS)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
 
     def _non_ome_dataset(self, spark: SparkSession, path: str):
         """ImageJ-hyperstack / bare TIFF tier (the wild files
@@ -195,7 +186,8 @@ class TiffImageReader(PlannedReader):
                                               parse_imagej_description)
         from bioio_spark.ome_utils import resolve_channel_names
         from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset)
+                                                    ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         path = os.path.abspath(path)
@@ -267,32 +259,21 @@ class TiffImageReader(PlannedReader):
                         "spp": spp, "dtype": pg["dtype"]})
 
         scene = "Image:0"
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": nm}
-            for ci, nm in enumerate(resolve_channel_names(
-                self._channel_names, c_n, 0))]
+        channels = channel_rows(
+            self._image_id, scene,
+            resolve_channel_names(self._channel_names, c_n, 0))
         pps = self._pps
         if pps is None and ij and ij.get("spacing") and \
                 str(ij.get("unit", "")).lower() in ("micron", "um",
                                                     "µm"):
             pps = PhysicalPixelSizes(Z=float(ij["spacing"]),
                                      Y=None, X=None)
-        native = dt.newbyteorder("=")
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0,
-            "dim_order": "TCZYXS" if spp > 1 else "TCZYX",
-            "size_t": t_n, "size_c": c_n, "size_z": z_n,
-            "size_y": pg0["h"], "size_x": pg0["w"],
-            "size_m": None, "size_s": spp if spp > 1 else None,
-            "dtype": native.name, "ome_pixel_type": native.name,
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": None,
-            "metadata": desc,
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, dt,
+            dict(T=t_n, C=c_n, Z=z_n, Y=pg0["h"], X=pg0["w"],
+                 S=spp if spp > 1 else None),
+            dim_order="TCZYXS" if spp > 1 else "TCZYX", pps=pps,
+            metadata=desc)]
 
         def batches(it: Iterator[pd.DataFrame]
                     ) -> Iterator[pd.DataFrame]:
@@ -342,8 +323,7 @@ class TiffImageReader(PlannedReader):
                   F.lit(-1).alias("m"), "s", "value")
               .select(*PIXEL_COLUMNS))
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
 
 
 # the directory expansion by the name to_dataset and tiff_source use

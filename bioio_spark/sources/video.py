@@ -92,31 +92,21 @@ class VideoReader(PlannedReader):
         return None
 
     def to_dataset(self, spark: SparkSession):
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
 
         cat = self.catalog(self._path)
         scene = "Image:0"
         names = self._channel_names or ["Red", "Green", "Blue"]
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": str(names[ci])}
-            for ci in range(3)]
-        pps = self._pps
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["n_frames"], "size_c": 3, "size_z": 1,
-            "size_y": cat["height"], "size_x": cat["width"],
-            "size_m": None, "size_s": None,
-            "dtype": "uint8", "ome_pixel_type": "uint8",
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": cat["time_interval"],
-            "metadata": f"{self.LABEL} {cat['codec']}",
-        }]
+        channels = channel_rows(self._image_id, scene,
+                                [str(names[ci]) for ci in range(3)])
+        scenes = [scene_row(
+            self._image_id, scene, 0, "uint8",
+            dict(T=cat["n_frames"], C=3, Z=1, Y=cat["height"],
+                 X=cat["width"]),
+            pps=self._pps, time_interval=cat["time_interval"],
+            metadata=f"{self.LABEL} {cat['codec']}")]
         px = standardize(
             self._pixels(spark, self._plan_rows(self._path, cat)),
             self._image_id, scene)
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

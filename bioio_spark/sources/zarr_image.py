@@ -93,14 +93,15 @@ class ZarrImageReader(PlannedReader):
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.zarr import parse_ngff_attrs, parse_zarray
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         roots = _scene_roots(self._path)
         if not roots:
             raise FileNotFoundError(f"No .zarr stores under {self._path}")
 
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         arrays: dict[str, dict] = {}   # abs array dir -> decode info
         for si, root in enumerate(roots):
             v3_doc = _read_doc(root, "zarr.json")
@@ -175,28 +176,16 @@ class ZarrImageReader(PlannedReader):
                 if any(v != 1.0 for v in vals.values()):
                     pps = PhysicalPixelSizes(
                         Z=vals["z"], Y=vals["y"], X=vals["x"])
-            names = resolve_channel_names(
-                self._channel_names or attrs["channel_names"],
-                size["c"], si)
-            for ci, nm in enumerate(names):
-                channel_rows.append({
-                    "image_id": self._image_id, "scene": scene,
-                    "c": ci, "channel_name": nm})
-            scene_rows.append({
-                "image_id": self._image_id, "scene": scene,
-                "scene_idx": si, "dim_order": "TCZYX",
-                "size_t": size["t"], "size_c": size["c"],
-                "size_z": size["z"], "size_y": size["y"],
-                "size_x": size["x"], "size_m": None, "size_s": None,
-                "res_levels": [0] + [lv for lv, _, _ in extra_levels],
-                "dtype": np.dtype(za["dtype"]).name,
-                "ome_pixel_type": np.dtype(za["dtype"]).name,
-                "pps_z": pps.Z if pps else None,
-                "pps_y": pps.Y if pps else None,
-                "pps_x": pps.X if pps else None,
-                "time_interval": None,
-                "metadata": attrs_doc,
-            })
+            channels += channel_rows(
+                self._image_id, scene,
+                resolve_channel_names(
+                    self._channel_names or attrs["channel_names"],
+                    size["c"], si))
+            scenes.append(scene_row(
+                self._image_id, scene, si, za["dtype"],
+                {d.upper(): size[d] for d in "tczyx"}, pps=pps,
+                metadata=attrs_doc,
+                res_levels=[0] + [lv for lv, _, _ in extra_levels]))
             arrays[os.path.abspath(arr_dir)] = {
                 "scene": scene, "axes": axes, "res_level": 0,
                 "shape": za["shape"], "chunks": za["chunks"],
@@ -220,8 +209,7 @@ class ZarrImageReader(PlannedReader):
         px = standardize(decode_zarr_chunks(spark, arrays),
                          self._image_id)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
 
 
 def decode_zarr_chunks(spark: SparkSession,

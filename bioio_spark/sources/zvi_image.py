@@ -112,41 +112,31 @@ class ZviImageReader(PlannedReader):
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import ImageDataset
+        from bioio_spark.sources.array_like import (ImageDataset,
+                                                    channel_rows, scene_row)
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
         scene = "Image:0"
-        channel_rows = [
-            {"image_id": self._image_id, "scene": scene,
-             "c": ci, "channel_name": nm}
-            for ci, nm in enumerate(resolve_channel_names(
-                self._channel_names, cat["size_c"], 0))]
+        channels = channel_rows(
+            self._image_id, scene,
+            resolve_channel_names(self._channel_names, cat["size_c"], 0))
         pps = self._pps
         if pps is None and (cat["um_per_px"] or cat["z_step_um"]):
             pps = PhysicalPixelSizes(
                 Z=cat["z_step_um"] or None,
                 Y=cat["um_per_px"] or None,
                 X=cat["um_per_px"] or None)
-        scene_rows = [{
-            "image_id": self._image_id, "scene": scene,
-            "scene_idx": 0, "dim_order": "TCZYX",
-            "size_t": cat["size_t"], "size_c": cat["size_c"],
-            "size_z": cat["size_z"],
-            "size_y": cat["size_y"], "size_x": cat["size_x"],
-            "size_m": None, "size_s": None,
-            "dtype": cat["dtype"], "ome_pixel_type": cat["dtype"],
-            "pps_z": pps.Z if pps else None,
-            "pps_y": pps.Y if pps else None,
-            "pps_x": pps.X if pps else None,
-            "time_interval": None,
-            "metadata": cat["description"] or "Zeiss ZVI (MS-CFB)",
-        }]
+        scenes = [scene_row(
+            self._image_id, scene, 0, cat["dtype"],
+            dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
+                 Y=cat["size_y"], X=cat["size_x"]),
+            pps=pps,
+            metadata=cat["description"] or "Zeiss ZVI (MS-CFB)")]
         px = standardize(
             plan_pixels(spark, _plan_rows(self._path, cat),
                         _plane_batches, WINDOW_SCHEMA,
                         row_schema=_PLAN_SCHEMA),
             self._image_id, scene)
 
-        return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                            channels=pd.DataFrame(channel_rows))
+        return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -106,6 +106,9 @@ def save_parquet(img, uri: str, select_scenes=None) -> None:
     the cataloged dtype / pixel sizes instead of guessing."""
     import json
 
+    from bioio_spark.sources.array_like import channel_rows, scene_row
+    from bioio_spark.types import PhysicalPixelSizes
+
     scenes = list(img.scenes)
     if select_scenes is not None:
         sel = [s if isinstance(s, str) else scenes[s] for s in select_scenes]
@@ -126,31 +129,24 @@ def save_parquet(img, uri: str, select_scenes=None) -> None:
         # so the sidecar records the standardized per-scene dims — not the
         # raw catalog row — plus the native dtype / physical sizes the
         # relational layout cannot carry (value column is DOUBLE).
-        scene_rows, channel_rows = [], []
+        scene_recs, channel_recs = [], []
         for s in scenes:
             img.set_scene(s)
             d = img.dims
             base = img._scene_catalog_row()
-            scene_rows.append({
-                "image_id": base["image_id"], "scene": s,
-                "scene_idx": img.scenes.index(s),
-                "dim_order": d.order,
-                **{f"size_{c.lower()}":
-                   (d[c][0] if c in d.order else None) for c in "TCZYXMS"},
-                "dtype": base.get("dtype", "float64"),
-                "ome_pixel_type": base.get("ome_pixel_type"),
-                "pps_z": base.get("pps_z"), "pps_y": base.get("pps_y"),
-                "pps_x": base.get("pps_x"),
-                "time_interval": base.get("time_interval"),
-                "metadata": base.get("metadata"),
-            })
-            for ci, name in enumerate(img.channel_names):
-                channel_rows.append({
-                    "image_id": base["image_id"], "scene": s,
-                    "c": ci, "channel_name": name})
+            scene_recs.append(scene_row(
+                base["image_id"], s, img.scenes.index(s),
+                base.get("dtype", "float64"),
+                {c: d[c][0] for c in d.order}, dim_order=d.order,
+                pps=PhysicalPixelSizes(base.get("pps_z"), base.get("pps_y"),
+                                       base.get("pps_x")),
+                time_interval=base.get("time_interval"),
+                metadata=base.get("metadata")))
+            channel_recs += channel_rows(base["image_id"], s,
+                                         img.channel_names)
         sidecar = json.dumps({
-            "scenes": [_jsonable_record(r) for r in scene_rows],
-            "channels": [_jsonable_record(r) for r in channel_rows],
+            "scenes": [_jsonable_record(r) for r in scene_recs],
+            "channels": [_jsonable_record(r) for r in channel_recs],
         })
         spark = df.sparkSession
         (spark.createDataFrame([(sidecar,)], "v string")
@@ -1000,12 +996,12 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
     """
     import json
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     from bioio_spark.ome_utils import (generate_ome_image_id,
                                        resolve_channel_names)
-    from bioio_spark.sources.array_like import PIXEL_COLUMNS, ImageDataset
+    from bioio_spark.sources.array_like import (PIXEL_COLUMNS, ImageDataset,
+                                                channel_rows, scene_row)
 
     df = spark.read.parquet(uri)
     dim_cols = [c for c in ("t", "c", "z", "y", "x", "m", "s")
@@ -1019,9 +1015,8 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
         sidecar = None
 
     if sidecar is not None and sidecar.get("scenes"):
-        scene_rows = sidecar["scenes"]
-        channel_rows = sidecar["channels"]
-        idx_to_scene = {int(r["scene_idx"]): r["scene"] for r in scene_rows}
+        scenes, channels = sidecar["scenes"], sidecar["channels"]
+        idx_to_scene = {int(r["scene_idx"]): r["scene"] for r in scenes}
         scene_expr = F.create_map(
             *[F.lit(v) for kv in idx_to_scene.items() for v in kv]
         )[F.col("scene_idx").cast("int")]
@@ -1031,25 +1026,17 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
                   .agg(*[(F.max(d) + 1).alias(f"size_{d}")
                          for d in dim_cols])
                   .orderBy("scene_idx").collect())
-        scene_rows, channel_rows = [], []
+        scenes, channels = [], []
         for row in shapes:
             idx = int(row["scene_idx"])
             scene = generate_ome_image_id(idx)
             size_c = int(row["size_c"]) if "c" in dim_cols else None
-            for ci, name in enumerate(
-                    resolve_channel_names(None, size_c, idx)):
-                channel_rows.append({"image_id": image_id, "scene": scene,
-                                     "c": ci, "channel_name": name})
-            scene_rows.append({
-                "image_id": image_id, "scene": scene, "scene_idx": idx,
-                "dim_order": order,
-                **{f"size_{d.lower()}":
-                   (int(row[f"size_{d.lower()}"]) if d.lower() in dim_cols
-                    else None) for d in "TCZYXMS"},
-                "dtype": "float64", "ome_pixel_type": "double",
-                "pps_z": None, "pps_y": None, "pps_x": None,
-                "time_interval": None, "metadata": None,
-            })
+            channels += channel_rows(image_id, scene,
+                                     resolve_channel_names(None, size_c, idx))
+            scenes.append(scene_row(
+                image_id, scene, idx, "float64",
+                {d.upper(): int(row[f"size_{d}"]) for d in dim_cols},
+                dim_order=order))
         scene_expr = F.concat(F.lit("Image:"),
                               F.col("scene_idx").cast("string"))
 
@@ -1062,5 +1049,4 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
         F.col("value").cast("double").alias("value"),
     ).select(*PIXEL_COLUMNS)
 
-    return ImageDataset(pixels=px, scenes=pd.DataFrame(scene_rows),
-                        channels=pd.DataFrame(channel_rows))
+    return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -61,3 +61,29 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def raster_rows_match():
+    """Checker for the single-raster readers: the long-form
+    ``(t, c, z, y, x, s, value)`` rows a reader builds for a one-file
+    image equal its decoded ``(T, Y, X[, S])`` frames, in row order
+    y, x, s; a gray raster has no S axis (s = -1)."""
+    import numpy as np
+
+    def check(img, frames):
+        frames = np.asarray(frames)
+        got = (img._dataset.pixels
+               .select("t", "c", "z", "y", "x", "s", "value")
+               .orderBy("t", "y", "x", "s").toPandas())
+        idx = np.indices(frames.shape).reshape(frames.ndim, -1)
+        want = {"t": idx[0], "c": 0, "z": 0, "y": idx[1], "x": idx[2],
+                "s": idx[3] if frames.ndim == 4 else -1,
+                "value": frames.ravel()}
+        assert len(got) == frames.size
+        for col, val in want.items():
+            np.testing.assert_array_equal(
+                got[col].to_numpy(), np.broadcast_to(val, frames.size),
+                err_msg=col)
+
+    return check

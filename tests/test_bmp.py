@@ -105,3 +105,26 @@ def test_autocodec_sniffs_bmp():
     payload = BmpCodec.encode(3, "image", 6, 4, 1)
     out = AutoCodec.decode(payload)
     assert out.shape == (1, 4, 6)
+
+
+def _bgra_bmp(px):
+    """A top-down 32-bit BMP (BGRA quads) of the (H, W, 4) array."""
+    h, w = px.shape[:2]
+    body = px[:, :, [2, 1, 0, 3]].tobytes()
+    head = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, -h, 1, 32, 0,
+                       len(body), 0, 0, 0, 0)
+    return head + info + body
+
+
+@pytest.mark.parametrize("kind", ["gray", "rgb", "rgba"])
+def test_pixel_rows_match_decoded(spark, tmp_path, raster_rows_match, kind):
+    """The reader's (t, c, z, y, x, s, value) rows equal decode_bmp's
+    array for 8-bit gray, 24-bit RGB and 32-bit RGBA files."""
+    rng = np.random.default_rng(85)
+    shape = {"gray": (5, 7), "rgb": (5, 7, 3), "rgba": (5, 7, 4)}[kind]
+    px = rng.integers(0, 256, shape, dtype=np.uint8)
+    data = _bgra_bmp(px) if kind == "rgba" else encode_bmp(px)
+    p = tmp_path / f"{kind}.bmp"
+    p.write_bytes(data)
+    raster_rows_match(BioImage(str(p), spark=spark), decode_bmp(data)[None])

@@ -201,3 +201,17 @@ def test_gif_disposal_restore_previous():
     assert frames[2][0, 0] == 10            # REVERTED (not 20, not 0)
     assert frames[2][1, 1] == 30
     assert frames[2][0, 1] == 10
+
+
+@pytest.mark.parametrize("kind", ["gray", "rgb", "frames"])
+def test_pixel_rows_match_decoded(spark, tmp_path, raster_rows_match, kind):
+    """The reader's (t, c, z, y, x, s, value) rows equal decode_gif's
+    frames for a gray, an RGB and a multi-frame file."""
+    from bioio_spark import BioImage
+
+    rng = np.random.default_rng(86)
+    shape = {"gray": (4, 6), "rgb": (1, 4, 6, 3), "frames": (3, 4, 6)}[kind]
+    data = encode_gif(rng.integers(0, 256, shape, dtype=np.uint8) // 64)
+    p = tmp_path / f"{kind}.gif"
+    p.write_bytes(data)
+    raster_rows_match(BioImage(str(p), spark=spark), decode_gif(data)[0])

@@ -152,3 +152,18 @@ def test_decodes_wild_pngs(path):
         pytest.skip("wild sample not present")
     img = decode_png(open(path, "rb").read())
     assert img.dtype == np.uint8 and img.shape[2] == 4  # RGBA
+
+
+@pytest.mark.parametrize("kind", ["gray", "rgb"])
+def test_pixel_rows_match_decoded(spark, tmp_path, raster_rows_match, kind):
+    """The reader's (t, c, z, y, x, s, value) rows equal decode_jpeg's
+    array for gray and RGB files."""
+    from bioio_spark import BioImage
+
+    rng = np.random.default_rng(84)
+    shape = (9, 11) if kind == "gray" else (9, 11, 3)
+    data = encode_jpeg(rng.integers(0, 255, shape, dtype=np.uint8))
+    p = tmp_path / f"{kind}.jpg"
+    p.write_bytes(data)
+    raster_rows_match(BioImage(str(p), spark=spark),
+                      decode_jpeg(data)[None])

@@ -336,3 +336,26 @@ def test_paletted_png_through_bioimage(spark, tmp_path):
     p2.write_bytes(_encode_paletted(idx, pal, 4, trns=bytes([7] * 16)))
     img2 = BioImage(str(p2), spark=spark)
     assert img2.dims["S"] == (4,)
+
+
+@pytest.mark.parametrize("kind,name", [("gray16", "g.png"),
+                                       ("rgb", "c.png"), ("rgba", "a.png"),
+                                       ("rgb", "UPPER.PNG")])
+def test_pixel_rows_match_decoded(spark, tmp_path, raster_rows_match, kind,
+                                  name):
+    """The reader's (t, c, z, y, x, s, value) rows equal decode_png's
+    array for gray, RGB and RGBA files; a file whose suffix is upper
+    case is read too, not just catalogued."""
+    from bioio_spark import BioImage
+
+    rng = np.random.default_rng(83)
+    if kind == "gray16":
+        data = encode_png(rng.integers(0, 65535, (5, 7), dtype=np.uint16))
+    elif kind == "rgb":
+        data = encode_png(rng.integers(0, 255, (5, 7, 3), dtype=np.uint8))
+    else:
+        data = _encode_adam7(rng.integers(0, 255, (5, 7, 4),
+                                          dtype=np.uint8))
+    p = tmp_path / name
+    p.write_bytes(data)
+    raster_rows_match(BioImage(str(p), spark=spark), decode_png(data)[None])

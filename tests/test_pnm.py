@@ -69,3 +69,17 @@ def test_bioimage_ppm_s_dim(spark, tmp_path):
     assert bi.dims.order.endswith("S")
     np.testing.assert_array_equal(
         bi.get_image_data("YXS").astype(np.uint8), img)
+
+
+@pytest.mark.parametrize("kind", ["pgm16", "ppm"])
+def test_pixel_rows_match_decoded(spark, tmp_path, raster_rows_match, kind):
+    """The reader's (t, c, z, y, x, s, value) rows equal decode_pnm's
+    array for a 16-bit PGM and an RGB PPM."""
+    rng = np.random.default_rng(87)
+    px = (rng.integers(0, 65536, (4, 6)).astype(np.uint16)
+          if kind == "pgm16"
+          else rng.integers(0, 256, (4, 6, 3), dtype=np.uint8))
+    data = encode_pnm(px)
+    p = tmp_path / f"{kind}.{kind[:3]}"
+    p.write_bytes(data)
+    raster_rows_match(BioImage(str(p), spark=spark), decode_pnm(data)[None])

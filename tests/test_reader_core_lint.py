@@ -3,28 +3,45 @@ in bioio_spark/sources/planned.py. This stdlib-only scan fails if
 BioImage grows a type switch over readers again, if a source module
 re-inlines the ``createDataFrame(...).repartition(min(len(rows),
 defaultParallelism))`` plan idiom instead of calling ``plan_pixels`` /
-``plan_width``, or if anything reaches into the Zarr module for the
-window normalizer that ``planned.norm_window`` now owns."""
+``plan_width``, if anything reaches into the Zarr module for the
+window normalizer that ``planned.norm_window`` now owns, if a source
+module hand-writes a scene- or channel-catalog row instead of calling
+``array_like.scene_row`` / ``channel_rows``, or if a single-raster
+format module re-inlines the scan and decode loop that
+``sources/raster.py`` owns."""
 
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "bioio_spark")
 SOURCES = os.path.join(PKG, "sources")
+RASTER_MODULES = {f"{fmt}_image.py" for fmt in ("png", "jpeg", "bmp", "gif",
+                                                "pnm")}
+
+
+def _source_module(rel, allow=()):
+    return (os.path.dirname(rel) == os.path.join("bioio_spark", "sources")
+            and os.path.basename(rel) not in allow)
+
 
 # (files a rule applies to, forbidden text, why)
 RULES = [
     (lambda rel: rel == os.path.join("bioio_spark", "bio_image.py"),
      "isinstance(reader,",
      "BioImage dispatches through reader.read_window/read_planes"),
-    (lambda rel: os.path.dirname(rel) == os.path.join("bioio_spark",
-                                                      "sources")
-     and os.path.basename(rel) != "planned.py",
+    (lambda rel: _source_module(rel, allow=("planned.py",)),
      "defaultParallelism))",
      "plan rows go through planned.plan_pixels / plan_width"),
     (lambda rel: True,
      "zarr_image import _norm_window",
      "the window normalizer is planned.norm_window"),
+    *((lambda rel: _source_module(rel, allow=("array_like.py",)), pat,
+       "catalog rows come from array_like.scene_row / channel_rows")
+      for pat in ('"ome_pixel_type":', '"channel_name":')),
+    *((lambda rel: _source_module(rel)
+       and os.path.basename(rel) in RASTER_MODULES, pat,
+       "single-raster readers scan and decode through sources/raster.py")
+      for pat in ("binaryFile", "mapInPandas")),
 ]
 
 
@@ -70,8 +87,21 @@ def test_scan_catches_planted_violations(tmp_path):
         "from bioio_spark.sources.zarr_image import _norm_window\n")
     (src / "planned.py").write_text(
         "n = min(n, spark.sparkContext.defaultParallelism))\n")
+    catalog = ('row = {"ome_pixel_type": "uint8"}\n'
+               'ch = {"channel_name": "C:0"}\n')
+    (src / "fake_image.py").write_text(
+        (src / "fake_image.py").read_text() + catalog)
+    (src / "array_like.py").write_text(catalog)
+    raster = ('spark.read.format("binaryFile")\n'
+              'px.mapInPandas(batches, schema)\n')
+    (src / "gif_image.py").write_text(raster)
+    (src / "raster.py").write_text(raster)
     paths = [str(tmp_path / "bioio_spark" / "bio_image.py"),
-             str(src / "fake_image.py"), str(src / "planned.py")]
+             str(src / "fake_image.py"), str(src / "planned.py"),
+             str(src / "array_like.py"), str(src / "gif_image.py"),
+             str(src / "raster.py")]
     hits = _violations(paths, root=str(tmp_path))
-    assert len(hits) == 3, hits
-    assert not any("planned.py" in h for h in hits)
+    assert len(hits) == 7, hits
+    files = [os.path.basename(h.split(":")[0]) for h in hits]
+    assert not {"planned.py", "array_like.py", "raster.py"} & set(files)
+    assert files.count("gif_image.py") == 2

@@ -251,6 +251,68 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
             err_msg=f"{fmt} {col}")
 
 
+def _write_catalog_fixture(case, tmp_path, spark):
+    """A fixture for ``case``: a window-consistency format, a single-raster
+    file, a float32 MRC or plain TIFF, or (``ndarray``) the volume
+    itself."""
+    import importlib
+
+    vol = _vol()
+    plane = (vol[0, 0, 0] % 256).astype(np.uint8)
+    rgb = np.stack([plane, 255 - plane, plane // 2], axis=-1)
+    if case == "ndarray":
+        return vol
+    if case == "mrc_float32":
+        from bioio_spark.formats.mrc import encode_mrc
+
+        p = tmp_path / "f.mrc"
+        p.write_bytes(encode_mrc(vol[0, 0].astype(np.float32)))
+        return str(p)
+    if case == "tiff_float32":
+        from bioio_spark.formats.tiff import encode_tiff
+
+        p = tmp_path / "f.tif"
+        p.write_bytes(encode_tiff(list(vol[0, 0].astype(np.float32))))
+        return str(p)
+    if case in RASTER:
+        suffix, data = RASTER[case](plane, rgb)
+        encode = getattr(importlib.import_module(
+            f"bioio_spark.formats.{case}"), f"encode_{case}")
+        p = tmp_path / f"r{suffix}"
+        p.write_bytes(encode(data))
+        return str(p)
+    return _write_fixture(case, _fixture_vol(case), tmp_path, spark)
+
+
+# single-raster cases: (suffix, encoder input) from a gray and an RGB plane
+RASTER = {
+    "png": lambda g, rgb: (".png", g.astype(np.uint16) * 250),
+    "jpeg": lambda g, rgb: (".jpg", rgb),
+    "bmp": lambda g, rgb: (".bmp", rgb),
+    "gif": lambda g, rgb: (".gif", np.stack([g, g // 2])),
+    "pnm": lambda g, rgb: (".ppm", rgb),
+}
+
+
+@pytest.mark.parametrize("case", [*WINDOW_FORMATS, *RASTER, "ndarray",
+                                  "mrc_float32", "tiff_float32"])
+def test_scene_catalog_contract(spark, tmp_path, case):
+    """Catalog-only: every reader's scenes frame has exactly the
+    ``SCENE_COLUMNS`` set, and its OME PixelType is the one
+    ``dtype_to_ome_type`` derives from the scene's dtype (a float32
+    scene is ``"float"``, never ``"float32"``)."""
+    from bioio_spark.sources.array_like import SCENE_COLUMNS
+    from bioio_spark.types import dtype_to_ome_type
+
+    img = BioImage(_write_catalog_fixture(case, tmp_path, spark),
+                   spark=spark)
+    assert list(img._dataset.scenes.columns) == SCENE_COLUMNS
+    if case.endswith("float32"):
+        assert img.dtype == np.float32
+    assert img.standard_metadata["ome_pixel_type"] == \
+        dtype_to_ome_type(img.dtype)
+
+
 def test_a38_scd2_designed_history(spark, tmp_path):
     """A,A,B,A collapses to three half-open intervals: the repeated A
     run merges (n_events 2), the B interlude closes it, the final A
