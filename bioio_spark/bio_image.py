@@ -19,7 +19,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bioio_spark.dimensions import Dimensions
+from bioio_spark.dimensions import Dimensions, reshape_data
 from bioio_spark.operators.mosaic import (
     mosaic_tile_position,
     mosaic_tile_positions,
@@ -84,6 +84,9 @@ class BioImage:
             raise UnsupportedFileFormatError("Image contains no scenes")
         self._current_scene_index = 0
         self._current_resolution_level = 0
+        # levels > 0 derived by materialize_pyramid exist only in the
+        # pixel plan, not in the reader's source
+        self._derived_levels = False
         self._invalidate()
 
     # -- cache discipline (ref bio_image.py:415-418, :495-498) -----------
@@ -182,6 +185,7 @@ class BioImage:
         self._dataset.pixels = pyr
         self._dataset.scenes["res_levels"] = [
             list(range(n_levels))] * len(self._dataset.scenes)
+        self._derived_levels = True
         self._invalidate()
         return self
 
@@ -350,18 +354,24 @@ class BioImage:
         None when it has none (arrays, ImageDataset handles, plugins
         without the method) or declines this scene/level."""
         fn = getattr(self._reader, method, None)
-        return None if fn is None else fn(self._spark, self, **selectors)
+        if fn is None or (self._derived_levels
+                          and self._current_resolution_level > 0):
+            return None
+        return fn(self._spark, self, **selectors)
 
     def get_image_data(self, dimension_order_out: Optional[str] = None,
                        **selectors) -> np.ndarray:
-        """Eager ndarray (analog of get_image_data, ref bio_image.py:841-917).
-        Fast path: no args -> cached standardized array (ref :907-909)."""
+        """Eager ndarray (analog of get_image_data, ref bio_image.py:
+        841-917). As in the reference, this loads the whole current scene
+        once (``data``, memoized) and answers every call with numpy
+        selection over it (``dimensions.reshape_data``, ref :907-917).
+        For a window of a scene too big for the driver, use the lazy
+        ``read_window`` or ``get_image_dataframe``."""
         if dimension_order_out is None and not selectors:
             return self.data
-        px, dims = self._standard_pixels()
-        order = dimension_order_out or dims.order
-        plan, out_dims = apply_selectors(px, dims, order, selectors)
-        return to_ndarray(plan, out_dims, dtype=self.dtype)
+        dims = self.dims
+        return reshape_data(self.data, dims.order,
+                            dimension_order_out or dims.order, **selectors)
 
     def project(self, dim: str = "Z", op: str = "max",
                 **selectors) -> DataFrame:
@@ -379,15 +389,15 @@ class BioImage:
 
     def project_data(self, dim: str = "Z", op: str = "max",
                      **selectors) -> np.ndarray:
-        """Eager ndarray twin of project(). max/min preserve the native
-        dtype (numpy semantics); sum/mean promote to float64."""
-        from bioio_spark.operators.reductions import project as _project
+        """Eager ndarray twin of project(), in numpy over ``data`` (no
+        job once the scene is loaded). max/min preserve the native dtype
+        (numpy semantics); sum/mean promote to float64."""
+        from bioio_spark.operators.reductions import project_ndarray
 
-        px, dims = self._standard_pixels()
-        plan, out_dims = apply_selectors(px, dims, dims.order, selectors)
-        reduced, red_dims = _project(plan, out_dims, dim, op)
-        out_dtype = self.dtype if op in ("max", "min") else None
-        return to_ndarray(reduced, red_dims, dtype=out_dtype)
+        order = self.dims.order
+        return project_ndarray(
+            reshape_data(self.data, order, order, **selectors), order,
+            dim, op)
 
     def channel_histogram(self, nbins: int = 16) -> DataFrame:
         """Per-channel equal-width intensity histogram (c, bin, n_pixels)."""
@@ -564,12 +574,34 @@ class BioImage:
 
     @property
     def data(self) -> np.ndarray:
-        """Standardized eager array, memoized (ref bio_image.py:700-727)."""
-        if self._cached_array is None:
+        """Standardized eager array of the current scene and level,
+        memoized (ref bio_image.py:700-727). It is read in one job: from
+        the reader's ``read_planes`` and assembled in the native dtype,
+        or, for readers without one, from the standardized pixel
+        frame."""
+        from bioio_spark.operators.planes import assemble_ndarray
+
+        if self._cached_array is not None:
+            return self._cached_array
+        planes = self._scene_planes()
+        if planes is not None:
+            self._cached_array = assemble_ndarray(
+                planes, "TCZ", self.dims.shape, dtype=self.dtype)
+        else:
             px, dims = self._standard_pixels()
             plan, out_dims = apply_selectors(px, dims, dims.order, {})
             self._cached_array = to_ndarray(plan, out_dims, dtype=self.dtype)
         return self._cached_array
+
+    def _scene_planes(self) -> Optional[DataFrame]:
+        """The reader's planes read of the current scene and level, or
+        None where the planes layout can't carry the standardized scene
+        (S or M dims, a stitched mosaic, complex pixels) or the reader
+        has none."""
+        if (self.dims.order != "TCZYX" or self.dtype.kind not in "biuf"
+                or self._stitched_yx_size() is not None):
+            return None
+        return self._pushdown("read_planes")
 
     @property
     def dataframe(self) -> DataFrame:

@@ -186,3 +186,52 @@ def resolve_selector(sel, size: int) -> ResolvedSelector:
             return ResolvedSelector("fancy", indices=idx)
         return ResolvedSelector("stride", start=start, stop=stop, step=step)
     raise TypeError(f"Unsupported selector type: {type(sel)!r}")
+
+
+def reshape_data(data, given_dims: str, return_dims: str, **selectors):
+    """``data`` (an ndarray in ``given_dims`` order) with the selectors
+    applied and its axes arranged in ``return_dims`` order — the
+    reference's ``reshape_data`` (ref bio_image.py:907-917), in numpy
+    over an already loaded scene. Same algebra as the DataFrame plan of
+    ``operators.selectors.apply_selectors``:
+
+    - an int drops its dim, unless the dim is in ``return_dims``, where
+      it is kept with size 1;
+    - a list/tuple or range/slice keeps the listed indices, in order;
+    - a dim absent from ``return_dims`` without a selector takes index 0,
+      one with a list or slice takes its first listed index;
+    - a dim in ``return_dims`` but absent from ``given_dims`` is added
+      with size 1.
+    """
+    import numpy as np
+
+    unknown = set(selectors) - set(DIM_COLUMNS)
+    if unknown:
+        raise ValueError(f"Unknown selector dims: {sorted(unknown)}")
+    take, kept, empty = [], [], False
+    for letter, size in zip(given_dims, data.shape):
+        sel = selectors.get(letter)
+        idx = (range(size) if sel is None
+               else resolve_selector(sel, size).kept_indices)
+        if letter in return_dims:
+            kept.append(letter)
+        elif sel is None:
+            idx = (0,)
+        else:
+            # the dim is dropped: its first selected index remains, and
+            # an empty selection leaves nothing (the plan's empty frame
+            # assembles to zeros)
+            empty = empty or not idx
+            idx = tuple(idx)[:1] or (0,)
+        take.append(np.asarray(idx, dtype=np.intp))
+    out = data[np.ix_(*take)] if take else data
+    # squeeze the dropped axes, add the absent requested ones
+    out = out.reshape([len(t) for t, d in zip(take, given_dims)
+                       if d in return_dims] or ())
+    shape = {d: out.shape[i] for i, d in enumerate(kept)}
+    out = np.transpose(out, [kept.index(d) for d in return_dims
+                             if d in shape]) if kept else out
+    out = out.reshape([shape.get(d, 1) for d in return_dims])
+    if empty:
+        return np.zeros(out.shape, dtype=data.dtype)
+    return out

@@ -22,7 +22,6 @@ M1 stitch, and every record is a planned one-file read.
 from __future__ import annotations
 
 import os
-import re
 import xml.etree.ElementTree as ET
 from typing import Optional, Sequence
 

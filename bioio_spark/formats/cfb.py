@@ -16,7 +16,7 @@ This implements the subset OIB needs:
 from __future__ import annotations
 
 import struct
-from typing import Optional, Sequence
+from typing import Sequence
 
 MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 SECT = 512

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Optional, Sequence, Union
+from typing import Optional, Sequence
 
 import numpy as np
 

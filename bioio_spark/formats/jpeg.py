@@ -19,7 +19,6 @@ it by PSNR.
 from __future__ import annotations
 
 import struct
-from typing import Optional
 
 import numpy as np
 

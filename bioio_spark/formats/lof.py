@@ -17,7 +17,6 @@ mirrored by Bio-Formats' LOFReader):
 from __future__ import annotations
 
 import struct
-from typing import Optional
 
 import numpy as np
 

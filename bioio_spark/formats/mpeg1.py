@@ -35,8 +35,6 @@ BT.601 RGB<->YCbCr with 2x2-mean 4:2:0 chroma; grayscale content
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from bioio_spark.formats.jpeg import _ZIGZAG, _dct2, _idct2

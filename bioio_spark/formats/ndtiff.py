@@ -23,7 +23,6 @@ from __future__ import annotations
 import json
 import os
 import struct
-from typing import Optional, Sequence
 
 import numpy as np
 

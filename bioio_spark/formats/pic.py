@@ -22,7 +22,6 @@ Bio-Formats' BioRadReader and ImageJ's Bio-Rad reader):
 from __future__ import annotations
 
 import struct
-from typing import Optional
 
 import numpy as np
 

@@ -19,7 +19,7 @@ z = focal planes, and every (scene, level, z) names its IFD.
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Optional, Sequence
+from typing import Sequence
 
 import numpy as np
 

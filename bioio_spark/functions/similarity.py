@@ -1945,8 +1945,6 @@ def ivf_rpq_topk(embeddings: DataFrame, query_vec_id: int = 2,
     """Residual IVF-ADC top-k: probe-pruned lists ranked by the integer
     ADC of residual codes against PER-LIST query-residual LUTs. Returns
     (vec_id, label, adc_q) ordered adc_q ASC, vec_id ASC, k rows."""
-    import math
-
     emb = embeddings.select(
         "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
     cents = _train_ivf(emb, n_centroids, sample_mod,

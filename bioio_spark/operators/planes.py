@@ -89,22 +89,24 @@ def select_window(planes: DataFrame, y_lo: int, y_hi: int,
 
 
 def assemble_ndarray(planes: DataFrame, dims_order: str,
-                     shape: tuple[int, ...]) -> np.ndarray:
-    """Materialize a plane frame into a dense ndarray, scattering whole
-    tiles (one vectorized numpy copy per tile row, not per pixel).
+                     shape: tuple[int, ...], dtype=np.float64
+                     ) -> np.ndarray:
+    """Materialize a plane frame into a dense ``dtype`` ndarray,
+    scattering whole tiles (one vectorized numpy copy per tile row, not
+    per pixel). One Spark job: the tiles come back in a single Arrow
+    collect. Cells no tile covers stay 0.
 
     dims_order are the leading dims before Y/X, e.g. "TCZ" for a TCZYX
     output of the given shape.
     """
     lead = [d.lower() for d in dims_order]
-    arr = np.zeros(shape, dtype=np.float64)
-    cols = [*lead, "y0", "x0", "h", "w", "values"]
-    for row in planes.select(*cols).toLocalIterator():
-        idx = tuple(row[d] for d in lead)
-        tile = np.asarray(row["values"], dtype=np.float64).reshape(
-            row["h"], row["w"])
-        arr[idx + (slice(row["y0"], row["y0"] + row["h"]),
-                   slice(row["x0"], row["x0"] + row["w"]))] = tile
+    arr = np.zeros(shape, dtype=dtype)
+    pdf = planes.select(*lead, "y0", "x0", "h", "w", "values").toPandas()
+    for row in pdf.itertuples(index=False):
+        idx = tuple(getattr(row, d) for d in lead)
+        tile = np.asarray(row.values).reshape(row.h, row.w)
+        arr[idx + (slice(row.y0, row.y0 + row.h),
+                   slice(row.x0, row.x0 + row.w))] = tile
     return arr
 
 

@@ -8,7 +8,8 @@ aggregates, so they distribute: a max-Z projection of a 100 TB image is a
 partial-combining hash aggregate whose shuffle carries one row per output
 pixel, not a driver-side ndarray.
 
-- project: reduce one dim away (max/min/sum/mean) — MIP and friends.
+- project: reduce one dim away (max/min/sum/mean) — MIP and friends;
+  project_ndarray is its numpy twin over an already loaded scene.
 - channel_histogram: per-channel equal-width intensity histogram; the
   per-channel (min, max) range is a tiny aggregate broadcast back onto the
   pixel scan, then binning + counting is one partial-combining aggregate.
@@ -43,6 +44,28 @@ def project(px: DataFrame, dims: Dimensions, reduce_dim: str,
     plan = (px.groupBy(*group_cols)
             .agg(_OPS[op]("value").alias("value")))
     return plan, Dimensions(out_order, dims[out_order])
+
+
+def project_ndarray(arr, order: str, reduce_dim: str, op: str = "max"):
+    """``project`` over a loaded ``order``-ordered ndarray, in numpy: the
+    same ops and errors, and Spark's NaN ordering (NaN sorts above every
+    number, so max returns it and min skips it). max/min keep the dtype;
+    sum/mean return float64."""
+    import numpy as np
+
+    if op not in _OPS:
+        raise ValueError(f"unknown projection op {op!r}; "
+                         f"choose from {sorted(_OPS)}")
+    if reduce_dim not in order:
+        raise ValueError(
+            f"dim {reduce_dim!r} not in image dims {order!r}")
+    axis = order.index(reduce_dim)
+    if op == "max":
+        return arr.max(axis=axis)
+    if op == "min":
+        return np.fmin.reduce(arr, axis=axis)
+    values = arr.astype(np.float64)
+    return values.sum(axis=axis) if op == "sum" else values.mean(axis=axis)
 
 
 def channel_histogram(px: DataFrame, nbins: int = 16) -> DataFrame:

@@ -14,7 +14,6 @@ value = t*10000 + c*1000 + z*100 + y*10 + x.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from bioio_spark.queries.base import register

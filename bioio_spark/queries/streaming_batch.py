@@ -1980,7 +1980,6 @@ def stream_hll_store(spark, docs_dir: str, store: str) -> None:
     per-bucket register maxima under the batch's group partition."""
     import os
 
-    from bioio_spark.queries.llm import _hll_registers
 
     schema = spark.read.parquet(docs_dir).schema
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from bioio_spark.fsio import read_bytes
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         plan_pixels, plane_frame)
+                                         plan_pixels, plane_frame, scene_bytes)
 
 
 def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -126,7 +126,8 @@ class CellVoyagerImageReader(PlannedReader):
                     "t": r["t"], "c": r["c"], "z": r["z"]})
 
         px = (plan_pixels(spark, plan, _plane_batches,
-                          "scene string, m int, " + WINDOW_SCHEMA)
+                          "scene string, m int, " + WINDOW_SCHEMA,
+                          nbytes=scene_bytes(scenes))
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",

@@ -30,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         norm_window, payload_frame,
-                                         plan_pixels, plane_frame, trim)
+                                         grid_tile, norm_window,
+                                         payload_frame, plan_pixels,
+                                         plane_frame, trim, with_tile)
 
 
 def _xml_channel_names(xml: str) -> list[str]:
@@ -72,6 +73,16 @@ def _gray_subblock(r) -> np.ndarray:
     """The window and planes paths are gray-only: first sample."""
     plane = _subblock(r)
     return plane[:, :, 0] if plane.ndim == 3 else plane
+
+
+def _subblock_bytes(plan) -> int:
+    """Decoded size of a subblock plan (stored ``h`` x ``w`` of each
+    row's ``pixel_type``)."""
+    from bioio_spark.formats.czi import DTYPE_OF_PIXEL_TYPE
+
+    size = {pt: np.dtype(dt).itemsize * n
+            for pt, (dt, n) in DTYPE_OF_PIXEL_TYPE.items()}
+    return sum(r["h"] * r["w"] * size[r["pixel_type"]] for r in plan)
 
 
 def read_czi_window(spark: SparkSession, path: str,
@@ -141,7 +152,8 @@ def read_czi_window(spark: SparkSession, path: str,
                 yield plane_frame(_gray_subblock(r), r.t, r.c, r.z,
                                   y0=r.y0, x0=r.x0, m=r.m)
 
-    return trim(plan_pixels(spark, plan, batches, schema),
+    return trim(plan_pixels(spark, plan, batches, schema,
+                            nbytes=_subblock_bytes(plan)),
                 y=(y0, y1), x=(x0, x1))
 
 
@@ -187,10 +199,12 @@ def read_czi_planes(spark: SparkSession, path: str,
                 yield payload_frame(_gray_subblock(r), r.t, r.c, r.z,
                                     y0=r.y0, x0=r.x0, m=r.m)
 
-    return plan_pixels(
+    planes = plan_pixels(
         spark, plan, batches,
         "t int, c int, z int, m int, y0 int, x0 int, h int, w int, "
-        "values array<double>")
+        "values array<double>", nbytes=_subblock_bytes(plan))
+    return with_tile(planes, grid_tile(
+        (r["y0"], r["x0"], r["h"], r["w"]) for r in plan))
 
 
 class CziImageReader(PlannedReader):
@@ -381,7 +395,8 @@ class CziImageReader(PlannedReader):
         px = (plan_pixels(
                   spark, plan, batches,
                   "scene string, res_level int, t int, c int, z int, "
-                  "m int, y int, x int, s int, value double")
+                  "m int, y int, x int, s int, value double",
+                  nbytes=_subblock_bytes(plan))
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   "res_level", "t", "c", "z", "y", "x",

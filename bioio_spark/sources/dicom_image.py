@@ -20,9 +20,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         raw_plane_batches, standardize,
-                                         trim)
+                                         plain_scene, plan_pixels, plane_bytes,
+                                         raw_plane_batches, standardize, trim)
 
 
 def read_dicom_window(spark: SparkSession, path: str,
@@ -49,7 +48,8 @@ def read_dicom_window(spark: SparkSession, path: str,
             for z_ in range(z0, z1)]
     if not plan:
         return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(plan)),
                 x=(x0, x1))
 
 
@@ -114,7 +114,8 @@ class DicomImageReader(PlannedReader):
                     "dtype": attrs["dtype"].str})
         px = standardize(
             plan_pixels(spark, plan, raw_plane_batches,
-                        "scene string, " + WINDOW_SCHEMA),
+                        "scene string, " + WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

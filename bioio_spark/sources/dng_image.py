@@ -32,7 +32,7 @@ from pyspark.sql import SparkSession
 from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
+                                         plain_scene, plan_pixels, plane_bytes,
                                          plane_frame, standardize, trim)
 
 
@@ -91,7 +91,8 @@ def read_dng_window(spark: SparkSession, path: str,
             pruned.append(r)
     if not pruned:
         return empty_window(spark)
-    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(pruned)),
                 y=(y0, y1), x=(x0, x1))
 
 
@@ -136,7 +137,8 @@ class DngImageReader(PlannedReader):
                       f"white={cat['white_level']} "
                       f"comp={cat['comp']}"))]
         px = standardize(
-            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -33,7 +33,7 @@ from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, empty_window,
                                          norm_window, payload_frame,
                                          plan_pixels, plane_frame,
-                                         standardize, trim)
+                                         standardize, trim, with_tile)
 
 
 def _read_header(path: str) -> dict:
@@ -84,7 +84,8 @@ def read_dv_window(spark: SparkSession, path: str,
 
     if not plan:
         return empty_window(spark)
-    return trim(plan_pixels(spark, plan, batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
+                            nbytes=sum(r["nbytes"] for r in plan)),
                 x=(x0, x1))
 
 
@@ -111,7 +112,8 @@ def read_dv_planes(spark: SparkSession, path: str):
                     buf, dtype=np.dtype(dtype_str)).reshape(ny, nx)
                 yield payload_frame(_real(plane), r.t, r.c, r.z)
 
-    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
+    return with_tile(plan_pixels(spark, plan, batches, PLANES_SCHEMA,
+                                 nbytes=len(plan) * nbytes), (ny, nx))
 
 
 def _real(plane: np.ndarray) -> np.ndarray:
@@ -195,7 +197,8 @@ class DvImageReader(PlannedReader):
 
         px = standardize(
             plan_pixels(spark, plan_rows, batches,
-                        "scene string, " + WINDOW_SCHEMA),
+                        "scene string, " + WINDOW_SCHEMA,
+                        nbytes=sum(r["nbytes"] for r in plan_rows)),
             self._image_id)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

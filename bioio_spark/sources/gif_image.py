@@ -10,7 +10,6 @@ reads geometry without LZW-decoding pixel data; pixels decode off
 
 from __future__ import annotations
 
-import os
 import struct
 
 import numpy as np

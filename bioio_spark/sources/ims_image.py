@@ -99,6 +99,13 @@ def _decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             })
 
 
+def _decoded_bytes(plan) -> int:
+    """Decoded size of ``_plan_rows`` rows (``sh_z`` x ``sh_y`` x
+    ``sh_x`` blocks of ``dtype``)."""
+    return sum(r["sh_z"] * r["sh_y"] * r["sh_x"]
+               * np.dtype(r["dtype"]).itemsize for r in plan)
+
+
 def read_ims_window(spark: SparkSession, path: str,
                     t=None, c=None, z=None, y=None, x=None):
     """Window-pruned IMS read (level 0): t/c prune whole DATASETS, z
@@ -137,7 +144,8 @@ def read_ims_window(spark: SparkSession, path: str,
     if not rows:
         return empty_window(spark)
     px = plan_pixels(spark, rows, _decode_batches,
-                     "res_level int, " + WINDOW_SCHEMA)
+                     "res_level int, " + WINDOW_SCHEMA,
+                     nbytes=_decoded_bytes(rows))
     return trim(px, z=(z0, z1), y=(y0, y1), x=(x0, x1)).drop("res_level")
 
 
@@ -186,7 +194,8 @@ class ImsImageReader(PlannedReader):
         plan = _plan_rows(self._path, cat)
         px = standardize(
             plan_pixels(spark, plan, _decode_batches,
-                        "res_level int, " + WINDOW_SCHEMA),
+                        "res_level int, " + WINDOW_SCHEMA,
+                        nbytes=_decoded_bytes(plan)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, norm_window,
                                          payload_frame, plan_pixels,
-                                         plane_frame)
+                                         plane_frame, scene_bytes, with_tile)
 
 
 def _read_planes(it: Iterator[pd.DataFrame], y0: int = 0, y1=None):
@@ -81,7 +82,9 @@ def read_lif_window(spark: SparkSession, path: str,
             yield plane_frame(rows[:, x0:x1], r.t, r.c, r.z,  # numpy prune
                               y0=y0, x0=x0)
 
-    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
+                       nbytes=len(plan) * (y1 - y0) * x_n
+                       * np.dtype(sc["dtype"]).itemsize)
 
 
 def read_lif_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -109,7 +112,9 @@ def read_lif_planes(spark: SparkSession, path: str, scene: int = 0):
         for r, plane in _read_planes(it):
             yield payload_frame(plane, r.t, r.c, r.z)
 
-    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
+    nbytes = len(plan) * y_n * x_n * np.dtype(sc["dtype"]).itemsize
+    return with_tile(plan_pixels(spark, plan, batches, PLANES_SCHEMA,
+                                 nbytes=nbytes), (y_n, x_n))
 
 
 class LifImageReader(PlannedReader):
@@ -135,16 +140,16 @@ class LifImageReader(PlannedReader):
 
     def read_window(self, spark, img, t=None, c=None, z=None, y=None,
                     x=None):
-        # tile-scan scenes (M > 1) need mosaic/global coordinates —
-        # those fall through to the standardized-pixels filter
-        if os.path.isfile(self._path) and "M" not in img.dims.order:
+        # tile-scan scenes (M > 1), stitched or not, need mosaic/global
+        # coordinates — those fall through to the standardized pixels
+        if os.path.isfile(self._path) and img.mosaic_tile_dims is None:
             return read_lif_window(spark, self._path,
                                    t=t, c=c, z=z, y=y, x=x,
                                    scene=img.current_scene_index)
         return None
 
     def read_planes(self, spark, img):
-        if os.path.isfile(self._path) and "M" not in img.dims.order:
+        if os.path.isfile(self._path) and img.mosaic_tile_dims is None:
             return read_lif_planes(spark, self._path,
                                    scene=img.current_scene_index)
         return None
@@ -211,7 +216,8 @@ class LifImageReader(PlannedReader):
                                   m=r.m)
 
         px = (plan_pixels(spark, plan, batches,
-                          "scene string, m int, " + WINDOW_SCHEMA)
+                          "scene string, m int, " + WINDOW_SCHEMA,
+                          nbytes=scene_bytes(scenes))
               .select(
                   F.lit(self._image_id).alias("image_id"), "scene",
                   F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",

@@ -29,9 +29,10 @@ from pyspark.sql import SparkSession
 from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, empty_window,
-                                         norm_window, payload_frame,
-                                         plain_scene, plan_pixels,
-                                         plane_frame, standardize, trim)
+                                         grid_tile, norm_window, payload_frame,
+                                         plain_scene, plan_pixels, plane_bytes,
+                                         plane_frame, standardize, trim,
+                                         with_tile)
 
 
 def _plan_strips(path: str):
@@ -120,7 +121,8 @@ def read_lsm_window(spark: SparkSession, path: str,
             pruned.append(r)
     if not pruned:
         return empty_window(spark)
-    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(pruned)),
                 x=(x0, x1), y=(y0, y1))
 
 
@@ -135,7 +137,10 @@ def read_lsm_planes(spark: SparkSession, path: str):
             for r in pdf.itertuples():
                 yield payload_frame(_strip(r), r.t, r.c, r.z, y0=r.y0)
 
-    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
+    return with_tile(
+        plan_pixels(spark, plan, batches, PLANES_SCHEMA,
+                    nbytes=plane_bytes(plan)),
+        grid_tile((r["y0"], 0, r["ny"], r["nx"]) for r in plan))
 
 
 class LsmImageReader(PlannedReader):
@@ -192,7 +197,8 @@ class LsmImageReader(PlannedReader):
                       f"DataType={info['data_type']}"))]
 
         px = standardize(
-            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -31,8 +31,8 @@ from pyspark.sql import SparkSession
 from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, empty_window,
                                          norm_window, payload_frame,
-                                         plan_pixels, plane_frame,
-                                         standardize)
+                                         plan_pixels, plane_frame, scene_bytes,
+                                         standardize, with_tile)
 
 
 def read_nd2_window(spark: SparkSession, path: str,
@@ -112,7 +112,8 @@ def read_nd2_window(spark: SparkSession, path: str,
                     yield plane_frame(win[:, :, ci], r.t, c0 + ci, r.z,
                                       y0=y0, x0=x0)
 
-    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
+                       nbytes=sum(r["nbytes"] for r in plan))
 
 
 def read_nd2_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -167,7 +168,9 @@ def read_nd2_planes(spark: SparkSession, path: str, scene: int = 0):
                 for c in range(c_n):
                     yield payload_frame(frame[c], r.t, c, r.z)
 
-    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
+    nbytes = len(plan) * c_n * y_n * x_n * np.dtype(dt_name).itemsize
+    return with_tile(plan_pixels(spark, plan, batches, PLANES_SCHEMA,
+                                 nbytes=nbytes), (y_n, x_n))
 
 
 class Nd2ImageReader(PlannedReader):
@@ -305,7 +308,8 @@ class Nd2ImageReader(PlannedReader):
 
         px = standardize(
             plan_pixels(spark, plan, batches,
-                        "scene string, " + WINDOW_SCHEMA),
+                        "scene string, " + WINDOW_SCHEMA,
+                        nbytes=scene_bytes(scenes)),
             self._image_id)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -21,7 +21,8 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bioio_spark.sources.planned import PlannedReader, plan_pixels
+from bioio_spark.sources.planned import (PlannedReader, plan_pixels,
+                                         tile_bytes)
 from bioio_spark.sources.svs_image import _decode_batches
 
 
@@ -107,7 +108,7 @@ class NdpiImageReader(PlannedReader):
             add_scene(int(scene.split(":")[1]), pg, [0], kind)
 
         px = (plan_pixels(
-                  spark, plan, _decode_batches,
+                  spark, plan, _decode_batches, nbytes=tile_bytes(plan),
                   schema="scene string, res_level int, y int, x int, "
                          "s int, value double")
               .select(

@@ -18,8 +18,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plan_pixels, raw_plane_batches,
-                                         standardize, trim)
+                                         plan_pixels, plane_bytes,
+                                         raw_plane_batches, standardize, trim)
 
 
 def _plan(path: str, cat: dict) -> list[dict]:
@@ -66,7 +66,8 @@ def read_ndtiff_window(spark: SparkSession, path: str,
                      "y0": y0, "ny": y1 - y0})
     if not rows:
         return empty_window(spark)
-    return trim(plan_pixels(spark, rows, raw_plane_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, rows, raw_plane_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(rows)),
                 x=(x0, x1))
 
 
@@ -109,9 +110,11 @@ class NdtiffImageReader(PlannedReader):
                 dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
                      Y=cat["size_y"], X=cat["size_x"]),
                 pps=pps, metadata="NDTiff (Micro-Manager NDTiffStorage)"))
+        plan = _plan(self._path, cat)
         px = standardize(
-            plan_pixels(spark, _plan(self._path, cat), raw_plane_batches,
-                        "scene string, " + WINDOW_SCHEMA),
+            plan_pixels(spark, plan, raw_plane_batches,
+                        "scene string, " + WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

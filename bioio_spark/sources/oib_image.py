@@ -23,8 +23,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         plane_frame, standardize, trim)
+                                         plain_scene, plan_pixels, plane_frame,
+                                         scene_bytes, standardize, trim)
 
 
 def _read_extents(path: str, offsets, lengths) -> bytes:
@@ -63,7 +63,10 @@ def read_oib_window(spark: SparkSession, path: str,
             if t0 <= ti < t1 and c0 <= ci < c1 and z0 <= zi < z1]
     if not plan:
         return empty_window(spark)
-    return trim(plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+    # plane streams are uncompressed TIFFs: stored bytes ~ decoded
+    return trim(plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
+                            nbytes=sum(map(sum, (r["lengths"]
+                                                 for r in plan)))),
                 y=(y0, y1), x=(x0, x1))
 
 
@@ -129,7 +132,8 @@ class OibImageReader(PlannedReader):
                  "lengths": [n for _, n in ext]}
                 for (t, c, z), ext in sorted(cat["planes"].items())]
         px = standardize(
-            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
+                        nbytes=scene_bytes(scenes)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -23,9 +23,9 @@ from pyspark.sql import SparkSession
 from bioio_spark.fsio import read_bytes
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
+                                         plain_scene, plan_pixels, plane_bytes,
                                          plane_frame, raw_plane_batches,
-                                         standardize, trim)
+                                         scene_bytes, standardize, trim)
 
 
 def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -80,7 +80,8 @@ def read_oif_window(spark: SparkSession, path: str,
                     f"windowed path; use the full reader")
     if not plan:
         return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(plan)),
                 x=(x0, x1))
 
 
@@ -138,7 +139,8 @@ class OifImageReader(PlannedReader):
         plan = [{"path": os.path.abspath(p), "t": t, "c": c, "z": z}
                 for (t, c, z), p in sorted(cat["planes"].items())]
         px = standardize(
-            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
+                        nbytes=scene_bytes(scenes)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -6,8 +6,6 @@ after plugins).
 
 from __future__ import annotations
 
-from typing import Optional
-
 
 class ParquetImageReader:
     """Reader-protocol adapter over writers.read_parquet_image."""

@@ -18,9 +18,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         raw_plane_batches, standardize,
-                                         trim)
+                                         plain_scene, plan_pixels, plane_bytes,
+                                         raw_plane_batches, standardize, trim)
 
 
 def read_pic_window(spark: SparkSession, path: str,
@@ -50,7 +49,8 @@ def read_pic_window(spark: SparkSession, path: str,
             for p in range(lo, hi)]
     if not plan:
         return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(plan)),
                 x=(x0, x1))
 
 
@@ -108,7 +108,8 @@ class PicImageReader(PlannedReader):
                  "dtype": cat["dtype"].str}
                 for p in range(cat["npic"])]
         px = standardize(
-            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -14,7 +14,12 @@ it as a DataFrame, and decodes each row's byte range inside
   as long-form pixel rows / as one planes-layout payload row;
 - ``raw_plane_batches``: the decode loop of plans of uncompressed
   planes;
-- ``plan_pixels``: plan rows -> repartitioned ``mapInPandas`` frame;
+- ``plan_pixels``: plan rows -> an Arrow-built ``LocalTableScan``
+  decoded by ``mapInPandas``, with no exchange, in as many tasks as
+  Spark's file-split rule gives for the plan's decoded bytes (which
+  ``plane_bytes`` / ``tile_bytes`` / ``scene_bytes`` count);
+- ``grid_tile`` / ``with_tile`` / ``tile_of``: the regular YX tile
+  grid a planes-layout read declares on its ``values`` column;
 - ``standardize``: a decoded frame -> the ``PIXEL_COLUMNS`` layout;
 - ``trim``: the residual codegen filter on window bounds;
 - ``PlannedReader``: the shared reader surface. A reader that can push
@@ -27,6 +32,7 @@ from __future__ import annotations
 
 import functools
 import glob
+import math
 import operator
 import os
 
@@ -125,16 +131,92 @@ def plan_width(spark: SparkSession, n: int) -> int:
     return min(n, spark.sparkContext.defaultParallelism)
 
 
-def plan_pixels(spark: SparkSession, rows: list, batches, schema: str,
-                row_schema=None) -> DataFrame:
-    """Distribute the plan ``rows`` (dicts, or tuples) one row per task
-    and decode them with ``mapInPandas(batches, schema)``. ``row_schema``
-    types the plan's columns where inference can't (tuples, arrays)."""
-    plan = spark.createDataFrame(
-        pd.DataFrame(rows) if rows and isinstance(rows[0], dict) else rows,
-        row_schema)
-    return plan.repartition(plan_width(spark, len(rows))).mapInPandas(
+def split_tasks(spark: SparkSession, nbytes: int) -> int:
+    """Tasks for ``nbytes`` of decoded pixels under Spark's own file-split
+    rule: ``min(maxPartitionBytes, max(openCostInBytes, nbytes /
+    defaultParallelism))`` bytes per task. A small image reads in one
+    task; a large one spreads over every core."""
+    conf = spark._jconf
+    per_task = min(conf.filesMaxPartitionBytes(), max(
+        conf.filesOpenCostInBytes(),
+        nbytes / spark.sparkContext.defaultParallelism))
+    return max(1, -(-int(nbytes) // max(1, int(per_task))))
+
+
+def plan_pixels(spark: SparkSession, rows: list, batches, schema: str, *,
+                nbytes: int, row_schema=None) -> DataFrame:
+    """Decode the plan ``rows`` (dicts, or tuples named by ``row_schema``)
+    with ``mapInPandas(batches, schema)``.
+
+    The plan goes through pandas and Arrow, so it is a ``LocalTableScan``
+    with no exchange and no Python-RDD scan. ``nbytes``, the plan's
+    decoded size, sets its task count to ``split_tasks``: each Python
+    task has a fixed cost, so a small image reads in one task and a
+    large one over every core. ``row_schema`` types the plan's columns
+    where inference can't (tuples, arrays)."""
+    tuples = row_schema is not None and not (
+        rows and isinstance(rows[0], dict))
+    names = spark.createDataFrame([], row_schema).columns if tuples \
+        else None
+    plan = spark.createDataFrame(pd.DataFrame(rows, columns=names),
+                                 row_schema)
+    return plan.coalesce(split_tasks(spark, nbytes)).mapInPandas(
         batches, schema=schema)
+
+
+def plane_bytes(plan) -> int:
+    """Decoded size of a plan whose rows carry ``ny`` x ``nx`` planes or
+    strips of ``dtype``."""
+    return sum(int(r["ny"]) * int(r["nx"]) * np.dtype(r["dtype"]).itemsize
+               for r in plan)
+
+
+def tile_bytes(plan) -> int:
+    """Decoded size of a plan whose rows carry ``ch`` x ``cw`` chunks of
+    ``spp`` samples of ``dtype``."""
+    return sum(int(r["ch"]) * int(r["cw"]) * int(r["spp"])
+               * np.dtype(r["dtype"]).itemsize for r in plan)
+
+
+def scene_bytes(scenes) -> int:
+    """Decoded size of a full read of the ``scene_row`` catalogs
+    ``scenes``."""
+    return sum(math.prod(s[f"size_{d}"] or 1 for d in "tczyxms")
+               * np.dtype(s["dtype"]).itemsize for s in scenes)
+
+
+def grid_tile(boxes) -> tuple[int, int] | None:
+    """The (tile_h, tile_w) grid of ``(y0, x0, h, w)`` boxes — the
+    largest box — when every box starts on that grid anchored at (0, 0),
+    so each box sits inside one grid cell; else None."""
+    boxes = list(boxes)
+    if not boxes:
+        return None
+    th = max(int(b[2]) for b in boxes)
+    tw = max(int(b[3]) for b in boxes)
+    if all(int(y0) % th == 0 and int(x0) % tw == 0
+           for y0, x0, _h, _w in boxes):
+        return th, tw
+    return None
+
+
+def with_tile(planes: DataFrame, tile: tuple[int, int] | None
+              ) -> DataFrame:
+    """Declare that every row of a planes-layout frame is one cell of a
+    regular ``tile = (tile_h, tile_w)`` grid anchored at (0, 0), clipped
+    to the image. The declaration rides on the ``values`` column's
+    metadata, so it is read driver-side with no job and survives
+    ``select``. ``tile=None`` declares nothing."""
+    if tile is None:
+        return planes
+    return planes.withColumn("values", F.col("values").alias(
+        "values", metadata={"tile": [int(tile[0]), int(tile[1])]}))
+
+
+def tile_of(planes: DataFrame) -> tuple[int, int] | None:
+    """The (tile_h, tile_w) grid a planes frame declares, or None."""
+    tile = planes.schema["values"].metadata.get("tile")
+    return (int(tile[0]), int(tile[1])) if tile else None
 
 
 def standardize(px: DataFrame, image_id: str,

@@ -6,7 +6,6 @@ catalog parses only the three-token header; pixels decode off
 
 from __future__ import annotations
 
-import os
 import re
 
 import numpy as np

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import (PlannedReader, norm_window,
-                                         plan_pixels, trim)
+                                         plan_pixels, tile_bytes, trim)
 
 
 def _chunk_plan(path: str):
@@ -120,7 +120,8 @@ def read_qptiff_window(spark: SparkSession, path: str,
               "s int, value double")
     if not pruned:
         return spark.createDataFrame([], schema)
-    px = plan_pixels(spark, pruned, _decode_batches, schema=schema)
+    px = plan_pixels(spark, pruned, _decode_batches, schema=schema,
+                     nbytes=tile_bytes(pruned))
     return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level", "s")
 
 
@@ -168,7 +169,7 @@ class QptiffImageReader(PlannedReader):
                 metadata=f"QPTIFF {kind}", res_levels=[0]))
 
         px = (plan_pixels(
-                  spark, plan, _decode_batches,
+                  spark, plan, _decode_batches, nbytes=tile_bytes(plan),
                   schema="scene string, res_level int, c int, y int, "
                          "x int, s int, value double")
               .select(

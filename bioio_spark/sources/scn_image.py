@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import (PlannedReader, norm_window,
-                                         plan_pixels, trim)
+                                         plan_pixels, tile_bytes, trim)
 
 
 def _chunk_plan(path: str):
@@ -118,7 +118,8 @@ def read_scn_window(spark: SparkSession, path: str, scene: int = 0,
               "s int, value double")
     if not pruned:
         return spark.createDataFrame([], schema)
-    px = plan_pixels(spark, pruned, _decode_batches, schema=schema)
+    px = plan_pixels(spark, pruned, _decode_batches, schema=schema,
+                     nbytes=tile_bytes(pruned))
     return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level")
 
 
@@ -159,7 +160,7 @@ class ScnImageReader(PlannedReader):
                 res_levels=list(range(im["n_levels"]))))
 
         px = (plan_pixels(
-                  spark, plan, _decode_batches,
+                  spark, plan, _decode_batches, nbytes=tile_bytes(plan),
                   schema="scene string, res_level int, z int, y int, "
                          "x int, s int, value double")
               .select(

@@ -23,10 +23,9 @@ Metadata yaml parses driver-side with a dependency-free flat
 from __future__ import annotations
 
 import glob as _glob
-import io
 import os
 import re
-from typing import Iterator, Optional
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -36,7 +35,7 @@ from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, norm_window,
                                          payload_frame, plan_pixels,
-                                         plane_frame, standardize)
+                                         plane_frame, scene_bytes, standardize)
 _NPY_RE = re.compile(r"T(\d+)_C(\d+)\.npy$")
 
 
@@ -166,7 +165,8 @@ def read_sldy_window(spark: SparkSession, path: str,
                 yield plane_frame(rows[:, x0:x1], r.t, r.c, r.z,  # prune
                                   y0=y0, x0=x0)
 
-    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA)
+    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
+                       nbytes=sum(r["nbytes"] for r in plan))
 
 
 def read_sldy_planes(spark: SparkSession, path: str, scene: int = 0):
@@ -195,7 +195,9 @@ def read_sldy_planes(spark: SparkSession, path: str, scene: int = 0):
                 for z in range(stack.shape[0]):
                     yield payload_frame(stack[z], r.t, r.c, z)
 
-    return plan_pixels(spark, plan, batches, PLANES_SCHEMA)
+    return plan_pixels(spark, plan, batches, PLANES_SCHEMA,
+                       nbytes=sum(os.path.getsize(r["path"])
+                                  for r in plan))
 
 
 class SldyImageReader(PlannedReader):
@@ -316,7 +318,8 @@ class SldyImageReader(PlannedReader):
 
         px = standardize(
             plan_pixels(spark, plan, batches,
-                        "scene string, " + WINDOW_SCHEMA),
+                        "scene string, " + WINDOW_SCHEMA,
+                        nbytes=scene_bytes(scenes)),
             self._image_id)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -21,9 +21,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         raw_plane_batches, standardize,
-                                         trim)
+                                         plain_scene, plan_pixels, plane_bytes,
+                                         raw_plane_batches, standardize, trim)
 
 
 def _plan_planes(path: str):
@@ -68,7 +67,8 @@ def read_stk_window(spark: SparkSession, path: str,
                        "y0": y0, "ny": y1 - y0})
     if not pruned:
         return empty_window(spark)
-    return trim(plan_pixels(spark, pruned, raw_plane_batches, WINDOW_SCHEMA),
+    return trim(plan_pixels(spark, pruned, raw_plane_batches, WINDOW_SCHEMA,
+                            nbytes=plane_bytes(pruned)),
                 x=(x0, x1))
 
 
@@ -118,7 +118,8 @@ class StkImageReader(PlannedReader):
             metadata=f"STK axis={cat['axis']} planes={cat['n_planes']}")]
 
         px = standardize(
-            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA),
+            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
+                        nbytes=plane_bytes(plan)),
             self._image_id, scene)
 
         return ImageDataset(pixels=px, scenes=scenes, channels=channels)

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 
 from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
                                          PlannedReader, empty_window,
-                                         norm_window, plan_pixels, trim)
+                                         grid_tile, norm_window,
+                                         plan_pixels, trim, with_tile)
 
 
 def local_path(path: str) -> str:
@@ -315,7 +316,9 @@ class TiffImageReader(PlannedReader):
         px = (plan_pixels(
                   spark, plan, batches,
                   "t int, c int, z int, y int, x int, s int, "
-                  "value double")
+                  "value double",
+                  nbytes=sum(r["ch"] * r["cw"] * spp for r in plan)
+                  * dt.itemsize)
               .select(
                   F.lit(self._image_id).alias("image_id"),
                   F.lit(scene).alias("scene"),
@@ -541,12 +544,20 @@ def read_tiff_planes(spark: SparkSession, path: str,
                         "values": [block.astype(_np.float64).ravel()],
                     })
 
-    return plan_pixels(
+    planes = plan_pixels(
         spark, tasks, decode, PLANES_SCHEMA,
         row_schema="t int, c int, z int, offset long, nbytes long, "
                    "y0 int, x0 int, ch int, cw int, dtype string, "
                    "comp int, pred int, page_h int, page_w int, "
-                   "jpeg_tables binary")
+                   "jpeg_tables binary",
+        nbytes=_decoded_bytes(tasks))
+    return with_tile(planes, grid_tile(r[5:9] for r in tasks))
+
+
+def _decoded_bytes(tasks) -> int:
+    """Decoded size of chunk-plan tuples ``(t, c, z, offset, nbytes,
+    y0, x0, ch, cw, dtype, ...)``."""
+    return sum(r[7] * r[8] * np.dtype(r[9]).itemsize for r in tasks)
 
 
 def read_tiff_window(spark: SparkSession, path: str,
@@ -710,5 +721,6 @@ def read_tiff_window(spark: SparkSession, path: str,
         row_schema="t int, c int, z int, offset long, nbytes long, "
                    "y0 int, x0 int, ch int, cw int, dtype string, "
                    "comp int, pred int, page_h int, page_w int, "
-                   "tiled boolean, jpeg_tables binary")
+                   "tiled boolean, jpeg_tables binary",
+        nbytes=_decoded_bytes(tasks))
     return trim(px, y=yw, x=xw)

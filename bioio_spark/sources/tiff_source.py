@@ -20,7 +20,6 @@ under a `scene` column, itself prunable by equality.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 from typing import Iterator, List
 

@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession
 
 from bioio_spark.fsio import read_range
@@ -65,7 +64,8 @@ class VideoReader(PlannedReader):
                     for c in range(3):
                         yield plane_frame(frame[..., c], r.t, c, 0)
 
-        return plan_pixels(spark, rows, batches, WINDOW_SCHEMA)
+        return plan_pixels(spark, rows, batches, WINDOW_SCHEMA,
+                           nbytes=sum(r["h"] * r["w"] * 3 for r in rows))
 
     @classmethod
     def window(cls, spark: SparkSession, path: str,

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from bioio_spark.sources.planned import (PlannedReader, norm_window,
-                                         standardize, trim)
+                                         standardize, trim, with_tile)
 
 
 def _scene_roots(image: str) -> list[str]:
@@ -420,11 +420,16 @@ def read_zarr_planes(spark: SparkSession, store: str,
     binary = (spark.read.format("binaryFile")
               .option("recursiveFileLookup", "true")
               .load([f"file://{arr_abs}"]))
-    return binary.select("path", "content").mapInPandas(
+    planes = binary.select("path", "content").mapInPandas(
         batches,
         schema="image_id string, scene string, res_level int, t int, "
                "c int, z int, m int, s int, y0 int, x0 int, h int, "
                "w int, values array<double>")
+    if "y" not in axes or "x" not in axes:
+        return planes
+    # rows are decoded chunks: a shard's inner chunks when sharded
+    grid = za["shard"]["inner_chunks"] if za.get("shard") else za["chunks"]
+    return with_tile(planes, (grid[axes.index("y")], grid[axes.index("x")]))
 
 
 def read_zarr_window(spark: SparkSession, store: str,

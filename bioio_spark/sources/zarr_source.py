@@ -21,7 +21,7 @@ scene with a `scene` column (itself prunable by equality).
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator, List
 
 import numpy as np

@@ -26,8 +26,8 @@ from pyspark.sql import SparkSession
 
 from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
                                          empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         plane_frame, standardize, trim)
+                                         plain_scene, plan_pixels, plane_frame,
+                                         scene_bytes, standardize, trim)
 
 
 def _read_extents(path: str, offsets, lengths) -> bytes:
@@ -87,6 +87,9 @@ def read_zvi_window(spark: SparkSession, path: str,
     if not rows:
         return empty_window(spark)
     px = plan_pixels(spark, rows, _plane_batches, WINDOW_SCHEMA,
+                     nbytes=sum(r["h"] * r["w"] * r["samples"]
+                                * np.dtype(r["dtype"]).itemsize
+                                for r in rows),
                      row_schema=_PLAN_SCHEMA)
     return trim(px, c=(c0, c1), y=(y0, y1), x=(x0, x1))
 
@@ -136,6 +139,7 @@ class ZviImageReader(PlannedReader):
         px = standardize(
             plan_pixels(spark, _plan_rows(self._path, cat),
                         _plane_batches, WINDOW_SCHEMA,
+                        nbytes=scene_bytes(scenes),
                         row_schema=_PLAN_SCHEMA),
             self._image_id, scene)
 

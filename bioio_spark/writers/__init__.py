@@ -791,6 +791,11 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
     write parallelism is the total chunk count across scenes. At 100 TB
     this is the sink that saturates a 1000-executor cluster; edge chunks
     are padded to full chunk shape with fill_value per the Zarr v2 spec.
+    When every scene has a planes read (``read_planes``) whose declared
+    tile grid holds whole chunks, the chunks are instead encoded in
+    ``mapInPandas`` straight over the plane tiles: one job, no exchange.
+    Multiscale pyramids, shards and chunks that span tiles take the
+    grouped path; both write through one chunk encoder.
 
     Layout: `{uri}/scene_{i}.zarr/` group per scene — `.zgroup`, `.zattrs`
     (NGFF multiscales + omero channel labels), and one array dir per
@@ -840,6 +845,8 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
     if select_scenes is not None:
         sel = [s if isinstance(s, str) else scenes[s] for s in select_scenes]
         scenes = [s for s in scenes if s in sel]
+    if not scenes:
+        return []
 
     meta: dict[int, dict] = {}
     current = img.current_scene_index
@@ -901,6 +908,68 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
                                          m["chunks"], m["dtype"],
                                          compressor=compressor))
 
+    def write_chunk(idx: int, lv: int, grid: tuple, block) -> int:
+        """Encode and write the stored object (chunk, or shard) at chunk-
+        grid index ``grid`` of scene ``idx``, level ``lv``; its bytes."""
+        m = meta[idx]
+        if v3:
+            # v3 "default" chunk-key encoding: c/<i0>/<i1>/... nested dirs
+            path = os.path.join(uri, f"scene_{idx}.zarr", str(lv), "c",
+                                *[str(int(g)) for g in grid])
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            if m["shards"]:
+                payload = encode_shard(block, m["chunks"],
+                                       compressor=compressor)
+            else:
+                payload = encode_chunk_v3(block, compressor=compressor)
+        else:
+            path = os.path.join(uri, f"scene_{idx}.zarr", str(lv),
+                                chunk_key(grid))
+            payload = encode_chunk(block, compressor=compressor)
+        with open(path, "wb") as f:
+            f.write(payload)
+        return len(payload)
+
+    tiles = None if n_levels > 1 or shards is not None \
+        else _scene_tiles(img, meta)
+    if tiles is not None:
+        def encode_tiles(batches):
+            # each plane tile holds whole chunks: encode them in place,
+            # with no exchange, and count chunks and bytes per batch
+            for pdf in batches:
+                counts: dict = {}
+                for r in pdf.itertuples(index=False):
+                    m = meta[r.scene_idx]
+                    cy, cx = m["chunks"][3:]
+                    size_y, size_x = m["shape"][3:]
+                    tile = np.asarray(r.values).reshape(r.h, r.w)
+                    y1 = min(r.y0 + r.h, size_y)
+                    x1 = min(r.x0 + r.w, size_x)
+                    for gy in range(r.y0 // cy, -(-y1 // cy)):
+                        for gx in range(r.x0 // cx, -(-x1 // cx)):
+                            ys, ye = gy * cy, min(gy * cy + cy, size_y)
+                            xs, xe = gx * cx, min(gx * cx + cx, size_x)
+                            if ys < r.y0 or ye > y1 or xs < r.x0 \
+                                    or xe > x1:
+                                raise ValueError(
+                                    f"chunk ({gy}, {gx}) of scene "
+                                    f"{r.scene_idx} spans plane tiles: "
+                                    f"the read's declared tile grid is "
+                                    f"wrong")
+                            block = np.zeros(m["chunks"], m["dtype"])
+                            block[0, 0, 0, :ye - ys, :xe - xs] = tile[
+                                ys - r.y0:ye - r.y0, xs - r.x0:xe - r.x0]
+                            n = write_chunk(r.scene_idx, 0,
+                                            (r.t, r.c, r.z, gy, gx), block)
+                            k, b = counts.get(r.scene_idx, (0, 0))
+                            counts[r.scene_idx] = (k + 1, b + n)
+                yield pd.DataFrame(
+                    [(i, k, b) for i, (k, b) in counts.items()],
+                    columns=["scene_idx", "n_chunks", "n_bytes"])
+
+        rows = tiles.mapInPandas(encode_tiles, _REPORT_SCHEMA).collect()
+        return _zarr_report(uri, meta, rows)
+
     # chunk-grid bucketing: per-scene chunk sizes via a literal map (a few
     # scenes; stays a codegen projection, no extra shuffle beyond the
     # groupBy on the grid key)
@@ -947,37 +1016,69 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
         if lv > 0 and not np.issubdtype(np.dtype(m["dtype"]), np.floating):
             vals = np.rint(vals)   # block means back to the scene dtype
         block.ravel()[flat] = vals
-        if v3:
-            # v3 "default" chunk-key encoding: c/<i0>/<i1>/... nested dirs
-            path = os.path.join(uri, f"scene_{idx}.zarr", str(lv), "c",
-                                *[str(int(g)) for g in grid])
-            os.makedirs(os.path.dirname(path), exist_ok=True)
-            if m["shards"]:
-                payload = encode_shard(block, m["chunks"],
-                                       compressor=compressor)
-            else:
-                payload = encode_chunk_v3(block, compressor=compressor)
-        else:
-            path = os.path.join(uri, f"scene_{idx}.zarr", str(lv),
-                                chunk_key(grid))
-            payload = encode_chunk(block, compressor=compressor)
-        with open(path, "wb") as f:
-            f.write(payload)
-        return pd.DataFrame({"scene_idx": [idx], "n_bytes": [len(payload)]})
+        return pd.DataFrame({"scene_idx": [idx], "n_chunks": [1],
+                             "n_bytes": [write_chunk(idx, lv, grid, block)]})
 
-    per_chunk = (df.groupBy("scene_idx", "res_level",
-                            "ct", "cc", "cz", "cy", "cx")
-                 .applyInPandas(encode_one, "scene_idx int, n_bytes long")
-                 .groupBy("scene_idx")
-                 .agg(F.count(F.lit(1)).alias("n_chunks"),
-                      F.sum("n_bytes").alias("n_bytes"))
-                 .orderBy("scene_idx")
-                 .collect())
-    return [{"scene_idx": r["scene_idx"],
-             "scene": meta[r["scene_idx"]]["scene"],
-             "path": os.path.join(uri, f"scene_{r['scene_idx']}.zarr"),
-             "n_chunks": r["n_chunks"], "n_bytes": r["n_bytes"]}
-            for r in per_chunk]
+    rows = (df.groupBy("scene_idx", "res_level",
+                       "ct", "cc", "cz", "cy", "cx")
+            .applyInPandas(encode_one, _REPORT_SCHEMA)
+            .groupBy("scene_idx")
+            .agg(F.sum("n_chunks").alias("n_chunks"),
+                 F.sum("n_bytes").alias("n_bytes"))
+            .collect())
+    return _zarr_report(uri, meta, rows)
+
+
+_REPORT_SCHEMA = "scene_idx int, n_chunks long, n_bytes long"
+
+
+def _scene_tiles(img, meta: dict):
+    """The planes reads of ``meta``'s scenes, tagged with ``scene_idx`` —
+    or None unless every scene has a planes read that declares a tile
+    grid (``planned.with_tile``) and each of its stored chunks lies
+    inside one tile: chunks one plane deep, whose Y/X sizes divide the
+    tile's (or the tile spans the whole axis)."""
+    import functools
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from bioio_spark.sources.planned import tile_of
+
+    frames = []
+    current = img.current_scene_index
+    try:
+        for idx, m in meta.items():
+            img.set_scene(idx)
+            planes = img._scene_planes()
+            tile = None if planes is None else tile_of(planes)
+            if tile is None or tuple(m["chunks"][:3]) != (1, 1, 1):
+                return None
+            for size, chunk, cell in zip(m["shape"][3:], m["chunks"][3:],
+                                         tile):
+                if cell < size and cell % chunk:
+                    return None
+            frames.append(planes.select(
+                F.lit(idx).alias("scene_idx"), "t", "c", "z", "y0", "x0",
+                "h", "w", "values"))
+    finally:
+        img.set_scene(current)
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def _zarr_report(uri: str, meta: dict, rows) -> list:
+    """save_ome_zarr's report rows, one per scene that wrote chunks, from
+    per-scene ``(scene_idx, n_chunks, n_bytes)`` partial counts."""
+    import os
+
+    totals: dict = {}
+    for r in rows:
+        k, b = totals.get(r["scene_idx"], (0, 0))
+        totals[r["scene_idx"]] = (k + r["n_chunks"], b + r["n_bytes"])
+    return [{"scene_idx": idx, "scene": meta[idx]["scene"],
+             "path": os.path.join(uri, f"scene_{idx}.zarr"),
+             "n_chunks": k, "n_bytes": b}
+            for idx, (k, b) in sorted(totals.items())]
 
 
 def read_parquet_image(spark, uri: str, image_id: str = "img"):

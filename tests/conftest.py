@@ -87,3 +87,49 @@ def raster_rows_match():
                 err_msg=col)
 
     return check
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """Runner that calls ``fn()`` under a fresh job group and returns
+    ``(result, jobs, shuffle_bytes)``: the Spark jobs the call ran and
+    the shuffle bytes their stages read and wrote."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job and stage events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        store = sc._jsc.sc().statusStore()
+        jobs = tracker.getJobIdsForGroup(group)
+        shuffle = 0
+        for jid in jobs:
+            for sid in tracker.getJobInfo(jid).stageIds:
+                try:
+                    sd = store.lastStageAttempt(sid)
+                except Exception:  # py4j: a skipped stage has no attempt
+                    continue
+                shuffle += sd.shuffleReadBytes() + sd.shuffleWriteBytes()
+        return out, len(jobs), shuffle
+
+    return run
+
+
+@pytest.fixture
+def planned_read():
+    """Predicate on a planned read's physical plan string: no exchange of
+    any kind, and no Python-RDD scan — the plan rows are an Arrow-built
+    ``LocalTableScan`` (``Scan ExistingRDD`` would also mean a silent
+    fallback off Arrow)."""
+    def check(plan: str) -> bool:
+        return "Exchange" not in plan and "Scan ExistingRDD" not in plan
+
+    return check

@@ -351,3 +351,77 @@ def test_read_window_source_pushdown_and_fallback(spark, tmp_path):
 
     zarr_img = BioImage(str(zdir / "scene_0.zarr"), spark=spark)
     assert rows(zarr_img.read_window(**win)) == want
+
+
+def test_tiff_eager_tier_decodes_once(spark, tmp_path, count_jobs):
+    """A TIFF BioImage decodes its scene once: get_image_data loads it
+    through read_planes in one job and project_data is numpy over the
+    loaded array; save_ome_zarr encodes chunks over the plane tiles in
+    one job with no shuffle."""
+    from bioio_spark.dimensions import Dimensions
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.operators.selectors import to_ndarray
+    from bioio_spark.sources.zarr_image import ZarrImageReader
+    from bioio_spark.writers import save_ome_zarr
+
+    a = np.random.default_rng(8).integers(
+        0, 4000, (1, 2, 6, 32, 24)).astype(np.uint16)
+    p = tmp_path / "img.ome.tiff"
+    p.write_bytes(encode_ome_tiff(a))
+    img = BioImage(str(p), spark=spark)
+
+    (zyx, mip), jobs, _ = count_jobs(lambda: (
+        img.get_image_data("ZYX", T=0, C=0), img.project_data("Z", "max")))
+    assert jobs == 1
+    assert zyx.dtype == mip.dtype == np.uint16
+    np.testing.assert_array_equal(zyx, a[0, 0])
+    np.testing.assert_array_equal(mip, a.max(axis=2))
+
+    # sum/mean still promote to float64 and equal the lazy aggregate's
+    for op in ("sum", "mean"):
+        got = img.project_data("Z", op, C=1)
+        lazy = img.project("Z", op, C=1)
+        want = to_ndarray(lazy, Dimensions("TCYX", got.shape))
+        assert got.dtype == np.float64, op
+        np.testing.assert_array_equal(got, want)
+    np.testing.assert_array_equal(img.project_data("Z", "mean"),
+                                  a.mean(axis=2))
+
+    out = str(tmp_path / "store")
+    report, jobs, shuffle = count_jobs(lambda: save_ome_zarr(img, out))
+    assert (jobs, shuffle) == (1, 0)
+    assert report[0]["n_chunks"] == 1 * 2 * 6
+    back = BioImage(out, reader=ZarrImageReader, spark=spark)
+    np.testing.assert_array_equal(back.data, a)
+
+
+def test_planes_tier_follows_levels_and_derived_pyramids(spark, tmp_path):
+    """The planes-backed data stays equal to the pixel frame at every
+    level of a pyramidal TIFF, and a pyramid derived in the pixel plan
+    is never answered from the source's planes."""
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.operators.selectors import apply_selectors, to_ndarray
+    from bioio_spark.writers import save_ome_tiff
+
+    a = np.random.default_rng(9).integers(0, 255, (32, 48)).astype(np.uint8)
+    save_ome_tiff(BioImage(a, dim_order="YX", spark=spark),
+                  str(tmp_path / "tp"), tile=(16, 16), n_levels=2)
+    img = BioImage(str(tmp_path / "tp" / "scene_0.ome.tiff"), spark=spark)
+    for level in (0, 1):
+        img.set_resolution_level(level)
+        px, dims = img._standard_pixels()
+        plan, out_dims = apply_selectors(px, dims, dims.order, {})
+        np.testing.assert_array_equal(
+            img.data, to_ndarray(plan, out_dims, dtype=img.dtype))
+
+    p = tmp_path / "flat.ome.tiff"
+    p.write_bytes(encode_ome_tiff(a[None, None, None]))
+    flat = BioImage(str(p), spark=spark)
+    flat.materialize_pyramid(2)
+    flat.set_resolution_level(1)
+    assert flat._pushdown("read_planes") is None
+    px, dims = flat._standard_pixels()
+    plan, out_dims = apply_selectors(px, dims, dims.order, {})
+    assert flat.data.shape == (1, 1, 1, 16, 24)
+    np.testing.assert_array_equal(
+        flat.data, to_ndarray(plan, out_dims, dtype=flat.dtype))

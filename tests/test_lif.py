@@ -169,6 +169,15 @@ def test_lif_tile_scan_mosaic_stitches(spark, tmp_path):
         img.get_image_data("YX").astype(np.uint16),
         np.concatenate([tiles[0, 0, 0, 0], tiles[1, 0, 0, 0]], axis=1))
     assert img.get_mosaic_tile_positions() == [(0, 0), (0, 5)]
+    # the stitched scene's window and planes reads fall back to the
+    # standardized pixels instead of the single-tile source planner
+    win = img.read_window(x=(3, 7)).orderBy("y", "x").toPandas()
+    np.testing.assert_array_equal(
+        win["value"].to_numpy().reshape(4, 4),
+        np.concatenate([tiles[0, 0, 0, 0], tiles[1, 0, 0, 0]],
+                       axis=1)[:, 3:7])
+    planes = img.get_planes_dataframe().toPandas()
+    assert sum(len(v) for v in planes["values"]) == 4 * 10
     raw = BioImage(str(p), reconstruct_mosaic=False, spark=spark)
     assert "M" in raw.dims.order
     np.testing.assert_array_equal(

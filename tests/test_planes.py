@@ -43,6 +43,21 @@ def test_assemble_matches_numpy(spark):
     np.testing.assert_array_equal(out, arr)
 
 
+def test_assemble_is_one_job_in_native_dtype(spark, count_jobs):
+    """assemble_ndarray collects the tiles once (one Spark job, not one
+    per partition) and scatters them straight into the asked dtype."""
+    arr = np.arange(2 * 3 * 6 * 4).reshape(2, 3, 6, 4).astype(np.uint16)
+    planes = pixels_to_planes(_pixels(spark, arr), tile_h=4, tile_w=4)
+    planes = planes.repartition(4).cache()
+    planes.count()
+    out, jobs, _ = count_jobs(
+        lambda: assemble_ndarray(planes, "TC", arr.shape, dtype=np.uint16))
+    planes.unpersist()
+    assert jobs == 1
+    assert out.dtype == np.uint16
+    np.testing.assert_array_equal(out, arr)
+
+
 def test_window_prunes_tiles(spark):
     arr = np.arange(1 * 1 * 8 * 8, dtype=np.float64).reshape(1, 1, 8, 8)
     px = _pixels(spark, arr)
@@ -288,7 +303,7 @@ class TestPlaneReductionProperties:
 
 # -- BioImage.get_planes_dataframe dispatch --------------------------------
 
-def test_get_planes_dataframe_zarr_fast_path(spark, tmp_path):
+def test_get_planes_dataframe_zarr_fast_path(spark, tmp_path, planned_read):
     """Zarr-backed scenes produce planes rows with ZERO hash exchanges
     (the store's own chunk grid), equal to the shuffle fallback."""
     import numpy as np
@@ -305,7 +320,7 @@ def test_get_planes_dataframe_zarr_fast_path(spark, tmp_path):
     img = BioImage(out, reader=ZarrImageReader, spark=spark)
     pl = img.get_planes_dataframe()
     plan = pl._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    assert planned_read(plan), plan
     pdf = pl.toPandas()
     # chunk grid: 2c * 2z * ceil(6/4) * ceil(8/4) = 2*2*2*2 = 16 tiles
     assert len(pdf) == 16
@@ -318,7 +333,7 @@ def test_get_planes_dataframe_zarr_fast_path(spark, tmp_path):
     np.testing.assert_array_equal(np.array(row["values"]), want)
 
 
-def test_get_planes_dataframe_czi_fast_path(spark, tmp_path):
+def test_get_planes_dataframe_czi_fast_path(spark, tmp_path, planned_read):
     import numpy as np
 
     from bioio_spark import BioImage
@@ -333,7 +348,7 @@ def test_get_planes_dataframe_czi_fast_path(spark, tmp_path):
     img = BioImage(str(p), spark=spark)
     pl = img.get_planes_dataframe()
     plan = pl._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    assert planned_read(plan), plan
     pdf = pl.toPandas().sort_values("z")
     assert list(pdf["z"]) == [0, 1, 2]
     np.testing.assert_array_equal(
@@ -356,7 +371,7 @@ def test_get_planes_dataframe_fallback(spark):
     assert sum(len(v) for v in pdf["values"]) == block.size
 
 
-def test_get_planes_dataframe_tiff_fast_path(spark, tmp_path):
+def test_get_planes_dataframe_tiff_fast_path(spark, tmp_path, planned_read):
     """Tiled-TIFF-backed scenes produce planes rows zero-shuffle from
     the file's own tile grid, honoring the current resolution level."""
     import numpy as np
@@ -372,7 +387,7 @@ def test_get_planes_dataframe_tiff_fast_path(spark, tmp_path):
     img = BioImage(str(out / "scene_0.ome.tiff"), spark=spark)
     pl = img.get_planes_dataframe()
     plan = pl._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
+    assert planned_read(plan), plan
     pdf = pl.toPandas()
     assert len(pdf) == (32 // 16) * (48 // 16)          # 6 tiles
     row = pdf[(pdf.y0 == 16) & (pdf.x0 == 32)].iloc[0]
@@ -386,7 +401,7 @@ def test_get_planes_dataframe_tiff_fast_path(spark, tmp_path):
     assert sum(len(v) for v in pdf1["values"]) == want.size
 
 
-def test_get_planes_dataframe_vendor_fast_paths(spark, tmp_path):
+def test_get_planes_dataframe_vendor_fast_paths(spark, tmp_path, planned_read):
     """DV, ND2, and LIF scenes all decode to planes rows zero-shuffle
     — every planned source now has a planes fast path."""
     import numpy as np
@@ -411,7 +426,7 @@ def test_get_planes_dataframe_vendor_fast_paths(spark, tmp_path):
         img = BioImage(str(p), spark=spark)
         pl = img.get_planes_dataframe()
         plan = pl._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, name
+        assert planned_read(plan), name
         pdf = pl.toPandas()
         n_expected = (block.size if name != "a.nd2"
                       else block[:, 0].size)

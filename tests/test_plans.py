@@ -325,12 +325,11 @@ def test_l4i_line_dedup_broadcast_df_partial_agg(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_planned_read_sources_no_shuffle(spark, tmp_path):
+def test_planned_read_sources_no_shuffle(spark, tmp_path, planned_read):
     """DV / CZI / LIF / ND2 pixel scans are planned reads: the driver
     distributes (section/subblock/plane/frame -> byte-range) plan rows
-    and tasks seek-read independently — the PIXEL side of the plan must
-    stay shuffle-free (one round-robin repartition of the tiny plan
-    frame is allowed; no hash/range exchange of pixel rows)."""
+    and tasks seek-read independently — the plan has no exchange at
+    all, not even a round-robin repartition of the plan rows."""
     import numpy as np
 
     from bioio_spark import BioImage
@@ -361,14 +360,14 @@ def test_planned_read_sources_no_shuffle(spark, tmp_path):
         p.write_bytes(payload)
         df = BioImage(str(p), spark=spark).get_image_dataframe()
         plan = physical_plan(df)
-        hash_exchanges = plan.count("Exchange hashpartitioning")
-        assert hash_exchanges == 0, f"{name}: pixel-side shuffle\n{plan}"
+        assert planned_read(plan), \
+            f"{name}: exchange or RDD scan\n{plan}"
 
 
-def test_czi_planes_read_no_shuffle(spark, tmp_path):
-    """read_czi_planes (subblock -> payload rows) must plan with zero
-    hash exchanges — decode parallelism comes from the plan-row
-    round-robin, the payload never shuffles."""
+def test_czi_planes_read_no_shuffle(spark, tmp_path, planned_read):
+    """read_czi_planes (subblock -> payload rows) must plan with no
+    exchange — decode parallelism comes from the plan rows' own
+    partitions, the payload never shuffles."""
     import numpy as np
 
     from bioio_spark.formats.czi import encode_czi
@@ -380,12 +379,12 @@ def test_czi_planes_read_no_shuffle(spark, tmp_path):
          for z in range(4)], compression=6))
     df = read_czi_planes(spark, str(p))
     plan = physical_plan(df)
-    assert plan.count("Exchange hashpartitioning") == 0, plan
+    assert planned_read(plan), plan
     pdf = df.toPandas()
     assert len(pdf) == 4 and all(len(v) == 20 for v in pdf["values"])
 
 
-def test_nd2_lif_window_reads_no_shuffle(spark, tmp_path):
+def test_nd2_lif_window_reads_no_shuffle(spark, tmp_path, planned_read):
     """The new windowed ND2/LIF planned reads keep the pixel side
     shuffle-free, like every other planned-read source."""
     import numpy as np
@@ -400,20 +399,20 @@ def test_nd2_lif_window_reads_no_shuffle(spark, tmp_path):
         np.zeros((6, 4, 5), np.uint16),
         loops=[("TimeLoop", 3), ("ZStackLoop", 2)]))
     dfn = read_nd2_window(spark, str(pn), t=(0, 2), y=(1, 3))
-    assert physical_plan(dfn).count("Exchange hashpartitioning") == 0
+    assert planned_read(physical_plan(dfn))
 
     pl = tmp_path / "w.lif"
     pl.write_bytes(encode_lif(
         [{"name": "S",
           "data": np.zeros((2, 2, 2, 4, 5), np.uint16)}]))
     dfl = read_lif_window(spark, str(pl), c=1, y=(1, 3))
-    assert physical_plan(dfl).count("Exchange hashpartitioning") == 0
+    assert planned_read(physical_plan(dfl))
 
 
-def test_vendor_tiff_dialects_no_shuffle(spark, tmp_path):
+def test_vendor_tiff_dialects_no_shuffle(spark, tmp_path, planned_read):
     """LSM / STK / SVS / SCN / OIF pixel scans are planned reads like
     the rest of the vendor tier: plan rows distribute, tasks seek-read
-    their strips/planes/tiles — zero hash exchanges on the pixel side."""
+    their strips/planes/tiles — no exchange and no RDD scan."""
     import numpy as np
 
     from bioio_spark import BioImage
@@ -439,13 +438,12 @@ def test_vendor_tiff_dialects_no_shuffle(spark, tmp_path):
         p.write_bytes(payload)
         df = BioImage(str(p), spark=spark).get_image_dataframe()
         plan = physical_plan(df)
-        assert plan.count("Exchange hashpartitioning") == 0, \
-            f"{name}: pixel-side shuffle\n{plan}"
+        assert planned_read(plan), \
+            f"{name}: exchange or RDD scan\n{plan}"
     oif = encode_oif(block, str(tmp_path), name="a")
     df = BioImage(oif, spark=spark).get_image_dataframe()
     plan = physical_plan(df)
-    assert plan.count("Exchange hashpartitioning") == 0, \
-        f"a.oif: pixel-side shuffle\n{plan}"
+    assert planned_read(plan), f"a.oif: exchange or RDD scan\n{plan}"
     from bioio_spark.formats.ims import encode_ims
     from bioio_spark.formats.ndpi import encode_ndpi
     from bioio_spark.formats.oib import encode_oib
@@ -474,8 +472,8 @@ def test_vendor_tiff_dialects_no_shuffle(spark, tmp_path):
         p.write_bytes(payload)
         df = BioImage(str(p), spark=spark).get_image_dataframe()
         plan = physical_plan(df)
-        assert plan.count("Exchange hashpartitioning") == 0, \
-            f"{name}: pixel-side shuffle\n{plan}"
+        assert planned_read(plan), \
+            f"{name}: exchange or RDD scan\n{plan}"
 
 
 def test_l11_no_global_sort_window(spark):

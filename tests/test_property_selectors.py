@@ -3,9 +3,10 @@
 The reference pins `reshape_data` semantics with a hand-enumerated
 parametrize matrix (ref tests/test_array_like_reader.py:17-869); hypothesis
 explores the same space exhaustively: for random shapes, output orders, and
-per-dim selectors (point/fancy/strided with negative indices), the engine's
-DataFrame plan must produce exactly the ndarray that direct numpy indexing
-produces.
+per-dim selectors (point/fancy/strided with negative indices), the eager
+``get_image_data`` (numpy ``reshape_data`` over the loaded scene) and the
+lazy DataFrame plan (``apply_selectors``) must both produce exactly the
+ndarray that direct numpy indexing produces.
 """
 
 from __future__ import annotations
@@ -96,6 +97,35 @@ def test_selectors_match_numpy(spark, case):
     got = img.get_image_data(out, **sel)
     assert got.shape == expected.shape, (shape, out, sel)
     np.testing.assert_array_equal(got, expected)
+
+
+@pytest.mark.usefixtures("spark")
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(case=selector_cases())
+def test_reshape_data_matches_numpy_and_plan(spark, case):
+    """reshape_data equals the numpy reference and the DataFrame plan's
+    assembled array (to_ndarray over apply_selectors), shape and dtype
+    included."""
+    from bioio_spark.bio_image import BioImage
+    from bioio_spark.dimensions import reshape_data
+    from bioio_spark.operators.selectors import apply_selectors, to_ndarray
+
+    shape, out, sel = case
+    arr = np.arange(np.prod(shape), dtype=np.int32).reshape(shape)
+    got = reshape_data(arr, DIMS, out, **sel)
+    expected = _numpy_reference(arr, out, sel)
+    assert got.dtype == arr.dtype
+    assert got.shape == expected.shape, (shape, out, sel)
+    np.testing.assert_array_equal(got, expected)
+
+    px, dims = BioImage(arr, dim_order=DIMS,
+                        spark=spark)._standard_pixels()
+    plan, out_dims = apply_selectors(px, dims, out, sel)
+    planned = to_ndarray(plan, out_dims, dtype=arr.dtype)
+    assert planned.shape == got.shape, (shape, out, sel)
+    np.testing.assert_array_equal(got, planned)
 
 
 @st.composite

@@ -51,6 +51,16 @@ def _write_fixture(fmt, vol, tmp_path, spark):
         save_ome_zarr(BioImage(vol, spark=spark), str(out),
                       chunks=(1, 1, 2, 3, 4), compressor="zstd")
         return str(out / "scene_0.zarr")
+    if fmt == "zarr_sharded":
+        # a Zarr v3 store whose shards (stored objects) hold 2x2 inner
+        # chunks: reads decode inner chunks, so rows follow that grid
+        from bioio_spark.writers import save_ome_zarr
+
+        out = tmp_path / "w_zarr_sharded"
+        save_ome_zarr(BioImage(vol, spark=spark), str(out),
+                      chunks=(1, 1, 1, 3, 4), shards=(1, 1, 3, 6, 8),
+                      ngff_version="0.5")
+        return str(out / "scene_0.zarr")
     if fmt == "dv":
         from bioio_spark.formats.dv import encode_dv
 
@@ -164,10 +174,11 @@ WINDOWS = [
     dict(t=0, c=0, z=0, y=2, x=(3, 7)),
 ]
 
-WINDOW_FORMATS = ["tiff", "zarr", "dv", "czi", "nd2", "lif", "lsm", "oif",
-                  "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
-                  *VIDEO, "sldy"]
-PLANES_FORMATS = {"tiff", "zarr", "dv", "czi", "nd2", "lif", "lsm", "sldy"}
+WINDOW_FORMATS = ["tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
+                  "lsm", "oif", "oib", "ims", "stk", "dicom", "mrc", "zvi",
+                  "dng", "pic", *VIDEO, "sldy"]
+PLANES_FORMATS = {"tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
+                  "lsm", "sldy"}
 
 
 def _fit(win, sizes):
@@ -232,6 +243,7 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
     layout loses nothing for any source. Formats with a planes
     planner answer through it; the rest take pixels_to_planes."""
     from bioio_spark.operators.planes import planes_to_pixels
+    from bioio_spark.sources.planned import tile_of
 
     vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
@@ -249,6 +261,18 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
         np.testing.assert_array_equal(
             got[col].to_numpy(), want[col].to_numpy(),
             err_msg=f"{fmt} {col}")
+    # the eager tier, loaded through read_planes where there is one,
+    # holds the same values in TCZYX order
+    np.testing.assert_array_equal(
+        img.data.ravel().astype(np.float64), want["value"].to_numpy(),
+        err_msg=fmt)
+    # a declared tile grid holds every planes row in one grid cell
+    tile = None if pushed is None else tile_of(pushed)
+    if tile is not None:
+        th, tw = tile
+        for r in pushed.select("y0", "x0", "h", "w").collect():
+            assert r.y0 % th == 0 and r.x0 % tw == 0, (fmt, tile, r)
+            assert r.h <= th and r.w <= tw, (fmt, tile, r)
 
 
 def _write_catalog_fixture(case, tmp_path, spark):

@@ -185,3 +185,83 @@ def test_bioimage_save_tiff_writes_one_file(spark, tmp_path):
     only = BioImage(one, spark=spark)
     assert len(only.scenes) == 1
     np.testing.assert_array_equal(only.data[0, 0], b)
+
+
+def test_save_ome_zarr_tile_path_and_grouped_path_agree(spark, tmp_path,
+                                                        count_jobs):
+    """Chunks that fit the source's plane tiles encode straight over the
+    tiles (one job, no shuffle); chunks that span tiles, shards and
+    pyramids take the grouped path. Both write the same store."""
+    import numpy as np
+
+    from bioio_spark import BioImage
+    from bioio_spark.sources.planned import tile_of
+    from bioio_spark.sources.tiff_image import read_tiff_planes
+    from bioio_spark.sources.zarr_image import ZarrImageReader
+    from bioio_spark.writers import save_ome_tiff, save_ome_zarr
+
+    a = np.random.default_rng(3).integers(
+        0, 60000, (1, 2, 3, 40, 48)).astype(np.uint16)
+    save_ome_tiff(BioImage(a, spark=spark), str(tmp_path / "t"),
+                  tile=(16, 16))
+    path = str(tmp_path / "t" / "scene_0.ome.tiff")
+    planes = read_tiff_planes(spark, path)
+    assert tile_of(planes) == (16, 16)
+    assert all(r.y0 % 16 == 0 and r.x0 % 16 == 0
+               for r in planes.select("y0", "x0").collect())
+
+    img = BioImage(path, spark=spark)
+    cases = {"fits": dict(chunks=(1, 1, 1, 16, 8)),
+             "fits_v3": dict(chunks=(1, 1, 1, 8, 16), ngff_version="0.5"),
+             "spans": dict(chunks=(1, 1, 1, 32, 32)),
+             "deep": dict(chunks=(1, 1, 3, 16, 16))}
+    for name, kw in cases.items():
+        out = str(tmp_path / f"{name}_store")
+        report, jobs, shuffle = count_jobs(
+            lambda: save_ome_zarr(img, out, **kw))
+        if name.startswith("fits"):
+            assert (jobs, shuffle) == (1, 0), name
+        else:
+            assert shuffle > 0, name
+        cy, cx = kw["chunks"][3:]
+        assert report[0]["n_chunks"] == 2 * 3 // kw["chunks"][2] * \
+            -(-40 // cy) * -(-48 // cx), name
+        back = BioImage(out, reader=ZarrImageReader, spark=spark)
+        np.testing.assert_array_equal(back.data, a, err_msg=name)
+
+
+def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
+    """A sharded Zarr source's planes read declares its inner-chunk grid,
+    not its shard shape: a re-save takes the tile path only for chunks
+    inside one inner chunk, and round-trips either way. An empty scene
+    selection writes nothing and runs no job."""
+    from bioio_spark import BioImage
+    from bioio_spark.sources.planned import tile_of
+    from bioio_spark.sources.zarr_image import ZarrImageReader
+    from bioio_spark.writers import save_ome_zarr
+
+    a = np.random.default_rng(5).integers(
+        0, 60000, (1, 2, 2, 8, 8)).astype(np.uint16)
+    src = tmp_path / "src"
+    save_ome_zarr(BioImage(a, spark=spark), str(src),
+                  chunks=(1, 1, 1, 4, 4), shards=(1, 1, 1, 8, 8),
+                  ngff_version="0.5")
+    img = BioImage(str(src / "scene_0.zarr"), reader=ZarrImageReader,
+                   spark=spark)
+    assert tile_of(img._scene_planes()) == (4, 4)
+    # default chunks are the whole 8x8 plane: larger than an inner chunk
+    cases = {"default": {}, "wider": dict(chunks=(1, 1, 1, 4, 8)),
+             "fits": dict(chunks=(1, 1, 1, 2, 4))}
+    for name, kw in cases.items():
+        out = str(tmp_path / name)
+        report, jobs, shuffle = count_jobs(
+            lambda: save_ome_zarr(img, out, **kw))
+        if name == "fits":
+            assert (jobs, shuffle) == (1, 0)
+        else:
+            assert shuffle > 0, name
+        back = BioImage(out, reader=ZarrImageReader, spark=spark)
+        np.testing.assert_array_equal(back.data, a, err_msg=name)
+    report, jobs, _ = count_jobs(lambda: save_ome_zarr(
+        img, str(tmp_path / "none"), select_scenes=[]))
+    assert (report, jobs) == ([], 0)
