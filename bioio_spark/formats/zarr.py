@@ -569,3 +569,16 @@ def parse_ngff_attrs(doc: str) -> dict:
 
 def chunk_key(indices: Sequence[int], separator: str = ".") -> str:
     return separator.join(str(int(i)) for i in indices)
+
+
+def place_rows(block: np.ndarray, origin: Sequence[int],
+               coords: Sequence[np.ndarray], values) -> np.ndarray:
+    """Write long-form rows into a chunk: ``block`` is a C-order chunk
+    whose first element sits at array index ``origin``, ``coords`` one
+    integer array per axis of the rows' array indices. Returns the rows'
+    flat positions in the block; a row outside it raises ValueError."""
+    flat = np.ravel_multi_index(
+        tuple(np.asarray(c) - o for c, o in zip(coords, origin)),
+        block.shape)
+    block.ravel()[flat] = values
+    return flat

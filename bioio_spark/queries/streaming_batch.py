@@ -372,8 +372,9 @@ def s8_stream_ingest_stats(spark, sf_dir):
 )
 def s9_stream_ngff_sink(spark, sf_dir):
     """Streams the s8 acquisition fixture into an OME-Zarr store via
-    streaming_ngff_sink (chunk = one file's plane set so every chunk
-    completes within one micro-batch), then reads the store back with
+    streaming_ngff_sink (chunk = one file's plane set, so every chunk
+    is written by the task that decoded its file: one job per trigger,
+    no exchange), then reads the store back with
     the batch Zarr reader — the hash pins the full stream->store->scan
     chain. Streaming sinks are not SQL-expressible, but the SINK OUTPUT
     is deterministic, so the oracle checks the store contents."""

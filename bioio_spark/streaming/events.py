@@ -16,6 +16,7 @@ Kafka/files; tests stream parquet files through the file source.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,7 +41,7 @@ def _event_schema(spark: SparkSession, path: str) -> T.StructType:
     files yet (batch inference raises AnalysisException on empty dirs)."""
     try:
         return spark.read.parquet(path).schema
-    except Exception:
+    except AnalysisException:
         return _STATIC_EVENT_SCHEMA
 
 

@@ -9,9 +9,16 @@ files into long-form pixel rows through the same Arrow-batched decode the
 batch reader uses — so a downstream windowed aggregate / sink sees pixels
 within one trigger of a file landing.
 
+`streaming_ngff_sink` writes those rows into a live OME-Zarr store:
+each micro-batch is one `mapInPandas` pass (`assemble_chunks`) that
+writes every chunk in the task that decoded its pixels, so an ingest
+whose chunks are no larger than one arriving file is one Spark job with
+no exchange; chunks split across partitions take a keyed second pass.
+
 Scale: each micro-batch parallelizes over its files; the decode is the
-batch path's mapInPandas (per-page emission bounds executor memory), and
-the file-source checkpoint gives exactly-once file processing.
+batch path's mapInPandas (per-page emission bounds executor memory), the
+sink holds only the chunks still open in a task, and the file-source
+checkpoint gives exactly-once file processing.
 """
 
 from __future__ import annotations
@@ -68,7 +75,7 @@ def bounded_stream_partitions(spark: SparkSession, default: int = 8):
     try:
         n = int(spark.conf.get("spark.bioio.stream.statePartitions",
                                str(default)))
-    except Exception:
+    except ValueError:
         n = default
     old = spark.conf.get(key)
     spark.conf.set(key, str(n))
@@ -147,18 +154,35 @@ def streaming_ngff_sink(pixels: DataFrame, store: str,
     driver-side, from the declared final `shape` — NGFF has no append
     metadata, so a live store declares its full extent up front and
     chunks materialize as data arrives (readers see fill_value where
-    nothing has landed yet, the standard sparse-Zarr semantics).
+    nothing has landed yet, the standard sparse-Zarr semantics). A row
+    outside `shape` fails the micro-batch with a ValueError naming its
+    chunk.
+
+    Each micro-batch is one `mapInPandas` over its pixel rows
+    (`assemble_chunks`): a task places rows into their chunk's block as
+    they stream past and writes the chunk the moment all of its
+    positions (clipped at the array edge) have been seen, so a chunk
+    whose pixels one partition holds whole is written in the task that
+    decoded it: one job, no exchange. Chunk-batch alignment is a SPEED
+    property, not a correctness one: the ids of chunks still incomplete
+    at the end of a partition (their pixels split across partitions)
+    come back to the driver, which re-runs the same kernel over just
+    their rows, hash-partitioned by chunk — a second pass that re-reads
+    the micro-batch and exchanges those rows once — after which a chunk
+    still partial (its pixels not all in this micro-batch) is
+    zero-filled and written. Align chunk geometry to the per-file
+    arrival unit (e.g. chunks=(1,1,1,Y,X) when each arriving file is one
+    plane) to keep every trigger on the one-job path.
+
+    Memory: the chunks still open in one task, each a chunk-shaped block
+    plus one byte per position — one or two chunks when a partition's
+    rows arrive chunk by chunk.
 
     Exactly-once WITHOUT a transaction log: a chunk's filename is a
-    pure function of its grid position, and each foreachBatch call
-    rewrites its chunks from the batch's full row set — so a replayed
-    micro-batch (post-crash re-run from the file-source checkpoint)
-    overwrites identical bytes instead of duplicating. The invariant a
-    caller must keep is chunk-batch ALIGNMENT: every pixel of a chunk
-    arrives in one micro-batch (acquisition convention: chunks no
-    larger than one file's plane set — e.g. chunks=(1,1,1,Y,X) when
-    each arriving file is one plane). Misaligned chunks would be
-    half-written; align chunk geometry to the per-file unit.
+    pure function of its grid position and its bytes a function of the
+    micro-batch's rows, so a replayed micro-batch (post-crash re-run
+    from the file-source checkpoint) overwrites identical bytes instead
+    of duplicating.
 
     Returns the StreamingQuery (caller awaits/stops)."""
     import os
@@ -166,10 +190,8 @@ def streaming_ngff_sink(pixels: DataFrame, store: str,
     from pyspark.sql import functions as F
 
     from bioio_spark.formats.zarr import (ZGROUP, build_ngff_attrs,
-                                          build_zarray, chunk_key,
-                                          encode_chunk)
+                                          build_zarray)
 
-    t_n, c_n, z_n, y_n, x_n = shape
     root = store
     os.makedirs(os.path.join(root, "0"), exist_ok=True)
     with open(os.path.join(root, ".zgroup"), "w") as f:
@@ -179,36 +201,29 @@ def streaming_ngff_sink(pixels: DataFrame, store: str,
     with open(os.path.join(root, "0", ".zarray"), "w") as f:
         f.write(build_zarray(shape, chunks, dtype))
 
+    shape = tuple(int(s) for s in shape)
     cs = tuple(int(c) for c in chunks)
+    grid = tuple(-(-s // c) for s, c in zip(shape, cs))
+    cols = ("t", "c", "z", "y", "x", "value")
+    # the kernel's linear chunk id (C order over the chunk grid) as a
+    # column, for the fallback's filter and partitioning
+    cid = sum((F.col(d) / c).cast("long") * int(np.prod(grid[i + 1:]))
+              for i, (d, c) in enumerate(zip("tczyx", cs)))
+
+    def kernel(flush: bool):
+        return lambda batches: assemble_chunks(batches, root, shape, cs,
+                                               dtype, flush)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import numpy as np
-        import pandas as pd
-
-        grid_cols = [(F.col(d) / cs[i]).cast("int").alias(f"g{d}")
-                     for i, d in enumerate("tczyx")]
-
-        def encode_one(pdf: pd.DataFrame) -> pd.DataFrame:
-            grid = tuple(int(pdf[f"g{d}"].iloc[0]) for d in "tczyx")
-            off = tuple(g * c for g, c in zip(grid, cs))
-            block = np.zeros(cs, dtype=dtype)
-            flat = ((pdf["t"].to_numpy() - off[0])
-                    * (cs[1] * cs[2] * cs[3] * cs[4])
-                    + (pdf["c"].to_numpy() - off[1])
-                    * (cs[2] * cs[3] * cs[4])
-                    + (pdf["z"].to_numpy() - off[2]) * (cs[3] * cs[4])
-                    + (pdf["y"].to_numpy() - off[3]) * cs[4]
-                    + (pdf["x"].to_numpy() - off[4]))
-            block.ravel()[flat] = pdf["value"].to_numpy()
-            path = os.path.join(root, "0", chunk_key(grid))
-            with open(path, "wb") as f:
-                f.write(encode_chunk(block))
-            return pd.DataFrame({"n": [len(pdf)]})
-
-        (batch_df.select("t", "c", "z", "y", "x", "value", *grid_cols)
-         .groupBy(*[f"g{d}" for d in "tczyx"])
-         .applyInPandas(encode_one, "n long")
-         .count())
+        rows = batch_df.select(*cols)
+        open_ids = list({r.cid for r in rows.mapInPandas(
+            kernel(False), "cid long").collect()})
+        if open_ids:
+            (rows.withColumn("cid", cid)
+             .filter(F.col("cid").isin(open_ids))
+             .repartition("cid")
+             .mapInPandas(kernel(True), "cid long")
+             .collect())
 
     return (pixels.writeStream
             .foreachBatch(write_batch)
@@ -216,3 +231,73 @@ def streaming_ngff_sink(pixels: DataFrame, store: str,
                     checkpoint or os.path.join(root, "_checkpoint"))
             .trigger(availableNow=True)
             .start())
+
+
+def assemble_chunks(batches: Iterator[pd.DataFrame], root: str,
+                    shape: tuple, chunks: tuple, dtype: str,
+                    flush: bool) -> Iterator[pd.DataFrame]:
+    """`streaming_ngff_sink`'s chunk-assembly kernel: a `mapInPandas`
+    body over long-form pixel rows (t, c, z, y, x, value).
+
+    Each row is placed into its chunk's zero block and its position
+    marked seen; a chunk is encoded to ``{root}/0/<chunk key>`` once its
+    count of DISTINCT seen positions reaches its extent (the chunk shape
+    clipped at the array edge), then dropped. At the end of the
+    partition the ids (linear, C order over the chunk grid) of chunks
+    still incomplete are yielded — or, with ``flush``, those chunks are
+    written as they are, zero-filled where no row landed."""
+    import os
+
+    from bioio_spark.formats.zarr import chunk_key, encode_chunk, place_rows
+
+    grid = tuple(-(-s // c) for s, c in zip(shape, chunks))
+    size = int(np.prod(chunks))
+    open_chunks: dict = {}   # chunk id -> (block, seen positions)
+
+    def write(key: int, block) -> None:
+        pos = np.unravel_index(key, grid)
+        with open(os.path.join(root, "0", chunk_key(pos)), "wb") as f:
+            f.write(encode_chunk(block))
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        coords = [pdf[d].to_numpy() for d in "tczyx"]
+        values = pdf["value"].to_numpy()
+        outside = np.zeros(len(pdf), dtype=bool)
+        for c, s in zip(coords, shape):
+            outside |= (c < 0) | (c >= s)
+        if outside.any():
+            row = tuple(int(c[np.argmax(outside)]) for c in coords)
+            raise ValueError(
+                f"pixel row (t, c, z, y, x) = {row} lies outside the "
+                f"sink's declared shape {shape}: its chunk "
+                f"{chunk_key(r // c for r, c in zip(row, chunks))} is not "
+                f"in the store's chunk grid {grid}")
+        ids = np.ravel_multi_index(
+            [c // k for c, k in zip(coords, chunks)], grid)
+        if (ids == ids[0]).all():   # the whole batch is one chunk
+            groups = [(int(ids[0]), slice(None))]
+        else:
+            order = np.argsort(ids, kind="stable")
+            groups = [(int(ids[sel[0]]), sel) for sel in np.split(
+                order, np.flatnonzero(np.diff(ids[order])) + 1)]
+        for key, sel in groups:
+            pos = np.unravel_index(key, grid)
+            block, seen = open_chunks.pop(key, (None, None))
+            if block is None:
+                block = np.zeros(chunks, dtype=dtype)
+                seen = np.zeros(size, dtype=bool)
+            seen[place_rows(block, [p * c for p, c in zip(pos, chunks)],
+                            [c[sel] for c in coords], values[sel])] = True
+            extent = np.prod([min(c, s - p * c)
+                              for p, c, s in zip(pos, chunks, shape)])
+            if np.count_nonzero(seen) == extent:
+                write(key, block)
+            else:
+                open_chunks[key] = (block, seen)
+    if flush:
+        for key, (block, _) in open_chunks.items():
+            write(key, block)
+    elif open_chunks:
+        yield pd.DataFrame({"cid": list(open_chunks)}, dtype="int64")

@@ -829,7 +829,8 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
                                           build_zarr3_array,
                                           build_zarr3_group, build_zarray,
                                           chunk_key, encode_chunk,
-                                          encode_chunk_v3, encode_shard)
+                                          encode_chunk_v3, encode_shard,
+                                          place_rows)
 
     if ngff_version not in ("0.4", "0.5"):
         raise ValueError(f"unsupported NGFF version {ngff_version!r}; "
@@ -1005,17 +1006,12 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
         cs = m["shards"] or m["chunks"]
         grid = tuple(int(pdf[k].iloc[0]) for k in
                      ("ct", "cc", "cz", "cy", "cx"))
-        off = tuple(g * c for g, c in zip(grid, cs))
         block = np.zeros(cs, dtype=m["dtype"])  # fill_value 0 padding
-        flat = ((pdf["t"].to_numpy() - off[0]) * (cs[1] * cs[2] * cs[3] * cs[4])
-                + (pdf["c"].to_numpy() - off[1]) * (cs[2] * cs[3] * cs[4])
-                + (pdf["z"].to_numpy() - off[2]) * (cs[3] * cs[4])
-                + (pdf["y"].to_numpy() - off[3]) * cs[4]
-                + (pdf["x"].to_numpy() - off[4]))
         vals = pdf["value"].to_numpy()
         if lv > 0 and not np.issubdtype(np.dtype(m["dtype"]), np.floating):
             vals = np.rint(vals)   # block means back to the scene dtype
-        block.ravel()[flat] = vals
+        place_rows(block, tuple(g * c for g, c in zip(grid, cs)),
+                   [pdf[d].to_numpy() for d in "tczyx"], vals)
         return pd.DataFrame({"scene_idx": [idx], "n_chunks": [1],
                              "n_bytes": [write_chunk(idx, lv, grid, block)]})
 

@@ -89,6 +89,26 @@ def raster_rows_match():
     return check
 
 
+def _jobs_in_group(sc, group: str) -> tuple:
+    """``(jobs, shuffle_bytes)`` of the Spark jobs run under job group
+    ``group``: their count and the shuffle bytes their stages read and
+    wrote."""
+    # job and stage events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    jobs = tracker.getJobIdsForGroup(group)
+    shuffle = 0
+    for jid in jobs:
+        for sid in tracker.getJobInfo(jid).stageIds:
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Exception:  # py4j: a skipped stage has no attempt
+                continue
+            shuffle += sd.shuffleReadBytes() + sd.shuffleWriteBytes()
+    return len(jobs), shuffle
+
+
 @pytest.fixture
 def count_jobs(spark):
     """Runner that calls ``fn()`` under a fresh job group and returns
@@ -105,22 +125,18 @@ def count_jobs(spark):
             out = fn()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        # job and stage events reach the status store asynchronously
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        store = sc._jsc.sc().statusStore()
-        jobs = tracker.getJobIdsForGroup(group)
-        shuffle = 0
-        for jid in jobs:
-            for sid in tracker.getJobInfo(jid).stageIds:
-                try:
-                    sd = store.lastStageAttempt(sid)
-                except Exception:  # py4j: a skipped stage has no attempt
-                    continue
-                shuffle += sd.shuffleReadBytes() + sd.shuffleWriteBytes()
-        return out, len(jobs), shuffle
+        return (out, *_jobs_in_group(sc, group))
 
     return run
+
+
+@pytest.fixture
+def stream_jobs(spark):
+    """``(jobs, shuffle_bytes)`` of a finished streaming query: Spark
+    runs a stream's micro-batch jobs under the job group
+    ``str(query.runId)``."""
+    return lambda query: _jobs_in_group(spark.sparkContext,
+                                        str(query.runId))
 
 
 @pytest.fixture

@@ -454,6 +454,175 @@ def test_streaming_ngff_sink_exactly_once(spark, tmp_path):
     np.testing.assert_allclose(img2.get_image_data("TYX"), planes)
 
 
+def _ngff_ingest(spark, tmp_path, planes, shape, chunks,
+                 max_files_per_trigger=8):
+    """Land ``planes`` (a dict t -> YX float64 plane) as one-plane TIFFs
+    ``t<t>.tif`` and run one availableNow ``streaming_ngff_sink`` ingest
+    of them; returns the finished query and the store's TYX array."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from bioio_spark import BioImage
+    from bioio_spark.formats.tiff import encode_tiff
+    from bioio_spark.sources.zarr_image import ZarrImageReader
+    from bioio_spark.streaming.ingest import (read_image_stream,
+                                              streaming_decode_pixels,
+                                              streaming_ngff_sink)
+
+    acq = tmp_path / "acq"
+    acq.mkdir()
+    for t, plane in planes.items():
+        (acq / f"t{t}.tif").write_bytes(
+            encode_tiff([np.asarray(plane, dtype=np.float64)]))
+    store = str(tmp_path / "live.zarr")
+    stream = read_image_stream(spark, str(acq),
+                               max_files_per_trigger=max_files_per_trigger)
+    px = (streaming_decode_pixels(stream)
+          .select(F.regexp_extract("scene", r"t(\d+)", 1)
+                  .cast("int").alias("t"),
+                  F.lit(0).alias("c"), F.col("page").alias("z"),
+                  "y", "x", "value"))
+    q = streaming_ngff_sink(px, store, shape=shape, chunks=chunks,
+                            checkpoint=str(tmp_path / "ckpt"))
+    q.awaitTermination(60)
+    img = BioImage(store, reader=ZarrImageReader, spark=spark)
+    return q, img.get_image_data("TYX")
+
+
+def _data_batches(query) -> int:
+    return sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
+
+
+def test_ngff_sink_aligned_ingest_is_one_job_per_trigger(
+        spark, tmp_path, stream_jobs):
+    """Chunks no larger than one arriving file: every chunk is written
+    in the task that decoded it, so each trigger is one Spark job with
+    no shuffle."""
+    import numpy as np
+
+    planes = np.random.default_rng(3).random((2, 6, 8))
+    q, got = _ngff_ingest(spark, tmp_path, dict(enumerate(planes)),
+                          shape=(2, 1, 1, 6, 8), chunks=(1, 1, 1, 6, 8),
+                          max_files_per_trigger=1)
+    np.testing.assert_array_equal(got, planes)
+    assert _data_batches(q) == 2
+    assert stream_jobs(q) == (2, 0)
+
+
+def test_ngff_sink_chunks_spanning_files_take_fallback(
+        spark, tmp_path, stream_jobs):
+    """Chunks two timepoints deep over one-plane files (each file its own
+    partition) are incomplete in every decoding task; the keyed fallback
+    assembles them over one exchange (adaptive execution runs its map
+    side as a job of its own: two more jobs), and the store reproduces
+    the planes exactly, edge chunks included."""
+    import numpy as np
+
+    planes = np.random.default_rng(5).random((4, 6, 8))
+    q, got = _ngff_ingest(spark, tmp_path, dict(enumerate(planes)),
+                          shape=(4, 1, 1, 6, 8), chunks=(2, 1, 1, 4, 5))
+    np.testing.assert_array_equal(got, planes)
+    assert _data_batches(q) == 1
+    jobs, shuffle = stream_jobs(q)
+    assert jobs == 3 and shuffle > 0
+
+
+def test_ngff_sink_partial_chunk_is_zero_filled(spark, tmp_path):
+    """A chunk only part of whose pixels arrive in the micro-batch is
+    written zero-filled where nothing landed (the fill_value)."""
+    import numpy as np
+
+    planes = np.random.default_rng(7).random((4, 6, 8)) + 1
+    _, got = _ngff_ingest(spark, tmp_path, {0: planes[0], 3: planes[3]},
+                          shape=(4, 1, 1, 6, 8), chunks=(2, 1, 1, 6, 8))
+    np.testing.assert_array_equal(got[[0, 3]], planes[[0, 3]])
+    assert (got[[1, 2]] == 0).all()
+
+
+def test_ngff_sink_row_outside_shape_fails_the_stream(spark, tmp_path):
+    """A pixel row outside the declared shape fails the micro-batch
+    loudly, naming its chunk, instead of writing a chunk file no reader
+    opens."""
+    import numpy as np
+    from pyspark.errors import StreamingQueryException
+
+    planes = np.random.default_rng(9).random((2, 6, 8))
+    with pytest.raises(StreamingQueryException,
+                       match=r"outside the sink's declared shape.*"
+                             r"chunk 1\.0\.0\.0\.0"):
+        _ngff_ingest(spark, tmp_path, dict(enumerate(planes)),
+                     shape=(1, 1, 1, 6, 8), chunks=(1, 1, 1, 6, 8))
+    assert not (tmp_path / "live.zarr" / "0" / "1.0.0.0.0").exists()
+
+
+def _rows(pixels: dict):
+    """Long-form sink rows from ``{(t, c, z, y, x): value}``."""
+    import pandas as pd
+
+    pos = list(pixels)
+    return pd.DataFrame({
+        **{d: [p[i] for p in pos] for i, d in enumerate("tczyx")},
+        "value": [float(v) for v in pixels.values()]})
+
+
+def test_assemble_chunks_counts_distinct_positions(tmp_path):
+    """A chunk is written once its DISTINCT positions fill its extent
+    (clipped at the array edge), across Arrow batches; duplicate rows
+    cannot complete it early, and ``flush`` zero-fills what is left."""
+    import numpy as np
+
+    from bioio_spark.formats.zarr import decode_chunk
+    from bioio_spark.streaming.ingest import assemble_chunks
+
+    (tmp_path / "0").mkdir()
+    shape, chunks = (1, 1, 1, 3, 2), (1, 1, 1, 2, 2)
+
+    def run(batches, flush=False):
+        out = list(assemble_chunks(iter(batches), str(tmp_path), shape,
+                                   chunks, "float64", flush))
+        return sorted(int(i) for pdf in out for i in pdf["cid"])
+
+    def stored(key):
+        return decode_chunk((tmp_path / "0" / key).read_bytes(),
+                            "float64", chunks).reshape(2, 2)
+
+    # chunk 0 completes over two batches; edge chunk 1 (one row of Y
+    # inside the array) completes with its two positions
+    full = {(0, 0, 0, y, x): 10 * y + x for y in range(3) for x in range(2)}
+    first = {k: v for k, v in full.items() if k[3] == 0}
+    rest = {k: v for k, v in full.items() if k[3] > 0}
+    assert run([_rows(first), _rows(rest)]) == []
+    np.testing.assert_array_equal(stored("0.0.0.0.0"), [[0, 1], [10, 11]])
+    np.testing.assert_array_equal(stored("0.0.0.1.0"), [[20, 21], [0, 0]])
+
+    # four rows, three distinct positions: chunk 0 stays open
+    for key in ("0.0.0.0.0", "0.0.0.1.0"):
+        (tmp_path / "0" / key).unlink()
+    dup = _rows({(0, 0, 0, 0, 0): 1, (0, 0, 0, 0, 1): 2,
+                 (0, 0, 0, 1, 0): 3})
+    dup = dup.iloc[[0, 1, 2, 0]]
+    assert run([dup]) == [0]
+    assert not (tmp_path / "0" / "0.0.0.0.0").exists()
+    assert run([dup], flush=True) == []
+    np.testing.assert_array_equal(stored("0.0.0.0.0"), [[1, 2], [3, 0]])
+
+
+def test_assemble_chunks_rejects_rows_outside_shape(tmp_path):
+    """A row past the declared shape — even one inside its edge chunk's
+    stored block — raises, naming the row's chunk."""
+    from bioio_spark.streaming.ingest import assemble_chunks
+
+    (tmp_path / "0").mkdir()
+    for row, key in (((0, 0, 0, 3, 1), r"chunk 0\.0\.0\.1\.0"),
+                     ((0, 0, 0, 4, 0), r"chunk 0\.0\.0\.2\.0"),
+                     ((0, 0, 0, 0, -1), r"chunk 0\.0\.0\.0\.-1")):
+        with pytest.raises(ValueError, match=key):
+            list(assemble_chunks(iter([_rows({row: 1})]), str(tmp_path),
+                                 (1, 1, 1, 3, 2), (1, 1, 1, 2, 2),
+                                 "float64", False))
+    assert list((tmp_path / "0").iterdir()) == []
+
+
 def test_s20_cross_batch_carry_and_replay_idempotence(spark, tmp_path):
     """s20: a user whose events span micro-batches still yields the
     boundary transition exactly once (the carried one-row state), and
