@@ -302,13 +302,15 @@ class BioImage:
         array<double>) — the scale representation (no per-pixel row
         amplification; compose with operators/planes.py).
 
-        Readers that plan their own chunks (TIFF, Zarr, CZI, DV, ND2,
-        LIF, SLDY, LSM) decode STRAIGHT to payload rows with zero
-        shuffle through their ``read_planes`` (tile geometry = the
-        store's own chunk/strip/subblock grid, so tile_h/tile_w are
-        ignored); every other source falls back to pixels_to_planes
-        over the standardized frame (one groupBy shuffle, honest and
-        documented)."""
+        Readers that plan their own chunks (TIFF, Zarr and every
+        ``PlannedReader``: CZI, ND2, LIF, SLDY, DV, LSM, OIB, OIF, IMS,
+        STK, DICOM, MRC, ZVI, DNG, PIC, NDTiff, the slide formats and
+        video) decode STRAIGHT to payload rows with zero shuffle
+        through their ``read_planes`` (tile geometry = the store's own
+        chunk/strip/subblock grid, so tile_h/tile_w are ignored) for a
+        scene without S or M; every other source falls back to
+        pixels_to_planes over the standardized frame (one groupBy
+        shuffle, honest and documented)."""
         from bioio_spark.operators.planes import pixels_to_planes
 
         cols = ["t", "c", "z", "y0", "x0", "h", "w", "values"]
@@ -331,10 +333,12 @@ class BioImage:
         address) fall back to a Catalyst filter over the standardized
         pixel frame — same result, scan-level pruning only where the
         format supports it. Returns the long-form
-        ``(t, c, z, y, x, value)`` frame for the window."""
+        ``(t, c, z, y, x, value)`` frame for the window, with ``s``
+        before ``value`` for a scene with samples (RGB)."""
         from bioio_spark.sources.planned import norm_window
 
-        cols = ["t", "c", "z", "y", "x", "value"]
+        cols = ["t", "c", "z", "y", "x"] + (
+            ["s"] if "S" in self.dims.order else []) + ["value"]
         px = self._pushdown("read_window", t=t, c=c, z=z, y=y, x=x)
         if px is not None:
             return px.select(*cols)

@@ -2361,13 +2361,15 @@ def img_czi_large(spark, sf_dir):
         "amplification), reduced JVM-side",
 )
 def img_czi_large_planes(spark, sf_dir):
-    """The scale-path twin of img_czi_large: read_czi_planes emits one
-    row per subblock with the dense payload; per-row higher-order
-    reduction + a 16-row groupBy replace 12.3M long-form rows. Same
-    oracle — hash-equality proves the two decode paths agree."""
-    from bioio_spark.sources.czi_image import read_czi_planes
+    """The scale-path twin of img_czi_large: the CZI reader's planes
+    read (``get_planes_dataframe``) emits one row per subblock with
+    the dense payload; per-row higher-order reduction + a 16-row
+    groupBy replace 12.3M long-form rows. Same oracle — hash-equality
+    proves the two decode paths agree."""
+    from bioio_spark import BioImage
 
-    planes = read_czi_planes(spark, _czi_large_fixture())
+    planes = BioImage(_czi_large_fixture(),
+                      spark=spark).get_planes_dataframe()
     per_row = planes.select(
         "c", "z",
         F.size("values").alias("n"),
@@ -2555,7 +2557,7 @@ def img_nd2_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.formats.nd2 import encode_nd2
-    from bioio_spark.sources.nd2_image import read_nd2_window
+    from bioio_spark import BioImage
 
     idx = np.indices((3, 4, 5, 6, 2))    # t z y x c interleaved
     vol = (idx[0] * 10000 + idx[1] * 1000 + idx[4] * 500
@@ -2572,7 +2574,8 @@ def img_nd2_window_read(spark, sf_dir):
                 vol.reshape(12, 5, 6, 2),
                 loops=[("TimeLoop", 3), ("ZStackLoop", 4)]))
         os.replace(tmp, path)
-    px = read_nd2_window(spark, path, t=1, z=(1, 3), c=1, y=(2, 4))
+    px = BioImage(path, spark=spark).read_window(
+        t=1, z=(1, 3), c=1, y=(2, 4))
     return (px.groupBy("z", "y")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -2611,7 +2614,7 @@ def img_lif_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.formats.lif import encode_lif
-    from bioio_spark.sources.lif_image import read_lif_window
+    from bioio_spark import BioImage
 
     idx = np.indices((2, 3, 4, 5, 6))    # t c z y x
     vol = (idx[0] * 10000 + idx[1] * 1000 + idx[2] * 100
@@ -2626,7 +2629,8 @@ def img_lif_window_read(spark, sf_dir):
         with open(tmp, "wb") as f:
             f.write(encode_lif([{"name": "S", "data": vol}]))
         os.replace(tmp, path)
-    px = read_lif_window(spark, path, t=1, c=(1, 3), z=2, y=(1, 3))
+    px = BioImage(path, spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 3))
     return (px.groupBy("c", "z")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -2659,15 +2663,15 @@ def img_lif_window_read(spark, sf_dir):
 def img_czi_window_read(spark, sf_dir):
     """The CZI member of the window-read family: t/c/z prune whole
     subblocks via the directory; surviving (zstd-compressed) blocks
-    seek-read + decompress executor-side; y/x trim is a codegen
-    residual. Ref README.md:59 (bioio-czi)."""
+    seek-read + decompress executor-side and are sliced to the y/x
+    window in the same task. Ref README.md:59 (bioio-czi)."""
     import os
     import shutil
 
     import numpy as np
 
     from bioio_spark.formats.czi import encode_czi
-    from bioio_spark.sources.czi_image import read_czi_window
+    from bioio_spark import BioImage
 
     idx = np.indices(_RTZ_SHAPE)
     block = (idx[0] * 100000 + idx[1] * 10000 + idx[2] * 1000
@@ -2687,8 +2691,8 @@ def img_czi_window_read(spark, sf_dir):
         with open(tmp, "wb") as f:
             f.write(encode_czi(subs, compression=6))
         os.replace(tmp, path)
-    px = read_czi_window(spark, path, t=1, c=0, z=(1, 3), y=(2, 5),
-                         x=(1, 4))
+    px = BioImage(path, spark=spark).read_window(
+        t=1, c=0, z=(1, 3), y=(2, 5), x=(1, 4))
     return (px.groupBy("z", "y")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -2727,7 +2731,7 @@ def img_dv_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.formats.dv import encode_dv
-    from bioio_spark.sources.dv_image import read_dv_window
+    from bioio_spark import BioImage
 
     idx = np.indices(_RTZ_SHAPE)
     block = (idx[0] * 10000 + idx[1] * 1000 + idx[2] * 100
@@ -2742,8 +2746,8 @@ def img_dv_window_read(spark, sf_dir):
         with open(tmp, "wb") as f:
             f.write(encode_dv(block))
         os.replace(tmp, path)
-    px = read_dv_window(spark, path, t=0, z=(1, 3), y=(1, 4),
-                        x=(2, 6))
+    px = BioImage(path, spark=spark).read_window(
+        t=0, z=(1, 3), y=(1, 4), x=(2, 6))
     return (px.groupBy("c", "z")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -3008,7 +3012,7 @@ def img_lsm_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.formats.lsm import encode_lsm
-    from bioio_spark.sources.lsm_image import read_lsm_window
+    from bioio_spark import BioImage
 
     idx = np.indices((2, 3, 4, 5, 6))
     block = (idx[0] * 10000 + idx[1] * 1000 + idx[2] * 100
@@ -3023,8 +3027,8 @@ def img_lsm_window_read(spark, sf_dir):
         with open(tmp, "wb") as f:
             f.write(encode_lsm(block, thumbnails=False))
         os.replace(tmp, path)
-    px = read_lsm_window(spark, path, t=1, c=(0, 2), z=(1, 3),
-                         y=(1, 4), x=(2, 5))
+    px = BioImage(path, spark=spark).read_window(
+        t=1, c=(0, 2), z=(1, 3), y=(1, 4), x=(2, 5))
     return (px.groupBy("c", "z")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -4085,10 +4089,11 @@ def img_mrc_roundtrip(spark, sf_dir):
 def img_svs_large_window(spark, sf_dir):
     """The pruning proof on the throughput fixture: compare this row's
     time to img_svs_large (full decode) in BENCH_LOCAL."""
-    from bioio_spark.sources.svs_image import read_svs_window
+    from bioio_spark import BioImage
 
-    px = read_svs_window(spark, _svs_large_fixture(),
-                         y=(1000, 1256), x=(1000, 1256))
+    img = BioImage(_svs_large_fixture(), spark=spark)
+    img.set_resolution_level(0)
+    px = img.read_window(y=(1000, 1256), x=(1000, 1256))
     return px.agg(
         F.count(F.lit(1)).alias("n_px"),
         F.sum("value").alias("sum_val"),
@@ -4815,7 +4820,7 @@ def img_dng_window(spark, sf_dir):
     import shutil
 
     from bioio_spark.formats.dng import build_dng
-    from bioio_spark.sources.dng_image import read_dng_window
+    from bioio_spark import BioImage
 
     idx = np.indices((12, 16))
     mosaic = (idx[0] * 257 + idx[1] * 13 + (idx[0] % 2) * 2048
@@ -4830,7 +4835,7 @@ def img_dng_window(spark, sf_dir):
         with open(tmp, "wb") as f:
             f.write(build_dng(mosaic, compression=1, rows_per_strip=4))
         os.replace(tmp, path)
-    return (read_dng_window(spark, path, y=(5, 9), x=(2, 10))
+    return (BioImage(path, spark=spark).read_window(y=(5, 9), x=(2, 10))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_px"),
                  F.sum("value").alias("sum_val"),
                  F.min("y").cast("bigint").alias("min_y"),

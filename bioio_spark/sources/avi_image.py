@@ -35,5 +35,3 @@ class AviImageReader(VideoReader):
         return decode_avi_frame(data, row.codec, row.w, row.h,
                                 bool(row.topdown))
 
-
-read_avi_window = AviImageReader.window

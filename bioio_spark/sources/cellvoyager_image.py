@@ -18,27 +18,12 @@ the public mlf/mrf XML catalog (bioio_spark.formats.cellvoyager).
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
 from bioio_spark.fsio import read_bytes
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         plan_pixels, plane_frame, scene_bytes)
-
-
-def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from bioio_spark.formats.tiff import decode_tiff
-
-    for pdf in it:
-        for r in pdf.itertuples():
-            planes, _desc = decode_tiff(read_bytes(r.path))
-            yield plane_frame(planes[0], r.t, r.c, r.z, scene=r.scene,
-                              m=r.m)
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
 class CellVoyagerImageReader(PlannedReader):
@@ -61,12 +46,19 @@ class CellVoyagerImageReader(PlannedReader):
 
         return read_cellvoyager_catalog(path)
 
-    def to_dataset(self, spark: SparkSession):
+    @staticmethod
+    def decode_tiles(rows):
+        """Each record's single-plane TIFF, decoded whole."""
+        from bioio_spark.formats.tiff import decode_tiff
+
+        for r in rows.itertuples(index=False):
+            planes, _desc = decode_tiff(read_bytes(r.path))
+            yield r, planes[0]
+
+    def plan(self) -> Plan:
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -125,15 +117,5 @@ class CellVoyagerImageReader(PlannedReader):
                     "m": r["field"] if f_n > 1 else -1,
                     "t": r["t"], "c": r["c"], "z": r["z"]})
 
-        px = (plan_pixels(spark, plan, _plane_batches,
-                          "scene string, m int, " + WINDOW_SCHEMA,
-                          nbytes=scene_bytes(scenes))
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  "m", F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(
-            pixels=px, scenes=scenes, channels=channels,
-            tiles=pd.DataFrame(tile_rows) if tile_rows else None)
+        return Plan(plan, scenes, channels,
+                    tiles=pd.DataFrame(tile_rows) if tile_rows else None)

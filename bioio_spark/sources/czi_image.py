@@ -19,20 +19,13 @@ CZIs the same way)."""
 
 from __future__ import annotations
 
+import math
 import os
 import re
-from typing import Iterator
 
-import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         grid_tile, norm_window,
-                                         payload_frame, plan_pixels,
-                                         plane_frame, trim, with_tile)
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
 def _xml_channel_names(xml: str) -> list[str]:
@@ -56,157 +49,6 @@ def _start(dims: dict, name: str, default: int = 0) -> int:
     return dims[name]["start"] if name in dims else default
 
 
-def _subblock(r) -> np.ndarray:
-    """Decode the subblock a plan row points at (file_position,
-    pixel_type, compression, stored h x w)."""
-    from bioio_spark.formats.czi import read_czi_subblock
-
-    entry = {"file_position": int(r.file_position),
-             "pixel_type": int(r.pixel_type),
-             "compression": int(r.compression),
-             "dims": {"Y": {"stored": int(r.h), "size": int(r.h)},
-                      "X": {"stored": int(r.w), "size": int(r.w)}}}
-    return read_czi_subblock(r.path, entry)
-
-
-def _gray_subblock(r) -> np.ndarray:
-    """The window and planes paths are gray-only: first sample."""
-    plane = _subblock(r)
-    return plane[:, :, 0] if plane.ndim == 3 else plane
-
-
-def _subblock_bytes(plan) -> int:
-    """Decoded size of a subblock plan (stored ``h`` x ``w`` of each
-    row's ``pixel_type``)."""
-    from bioio_spark.formats.czi import DTYPE_OF_PIXEL_TYPE
-
-    size = {pt: np.dtype(dt).itemsize * n
-            for pt, (dt, n) in DTYPE_OF_PIXEL_TYPE.items()}
-    return sum(r["h"] * r["w"] * size[r["pixel_type"]] for r in plan)
-
-
-def read_czi_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None,
-                    scene: int = 0):
-    """Window-pruned CZI read: the subblock DIRECTORY (a few KB of
-    seek reads) turns selectors into the exact set of intersecting
-    subblocks — t/c/z prune whole blocks, the y/x window prunes mosaic
-    tiles by their stored extents; executors seek-read only surviving
-    blocks and a codegen filter trims the residual. Mosaic coordinates
-    come out GLOBAL (tile start + in-tile offset), so the window frame
-    composes directly with stitching semantics.
-
-    Selector forms match the other window readers: None, int, or
-    (start, stop)/slice half-open windows."""
-    from bioio_spark.formats.czi import read_czi_directory
-
-    path = os.path.abspath(path)
-    entries = [e for e in read_czi_directory(path)
-               if _start(e["dims"], "S") == scene]
-    if not entries:
-        raise IndexError(f"{path}: no subblocks for scene {scene}")
-    entries = [e for e in entries
-               if e["dims"]["Y"]["stored"] in
-               (0, e["dims"]["Y"]["size"]) and not e.get("pyramid")]
-    t_n = max(_start(e["dims"], "T") for e in entries) + 1
-    c_n = max(_start(e["dims"], "C") for e in entries) + 1
-    z_n = max(_start(e["dims"], "Z") for e in entries) + 1
-    y_min = min(_start(e["dims"], "Y") for e in entries)
-    x_min = min(_start(e["dims"], "X") for e in entries)
-    y_max = max(_start(e["dims"], "Y") + e["dims"]["Y"]["size"]
-                for e in entries) - y_min
-    x_max = max(_start(e["dims"], "X") + e["dims"]["X"]["size"]
-                for e in entries) - x_min
-    t0, t1 = norm_window(t, t_n)
-    c0, c1 = norm_window(c, c_n)
-    z0, z1 = norm_window(z, z_n)
-    y0, y1 = norm_window(y, y_max)
-    x0, x1 = norm_window(x, x_max)
-    plan = []
-    for e in entries:
-        d = e["dims"]
-        ty0 = _start(d, "Y") - y_min
-        tx0 = _start(d, "X") - x_min
-        h = d["Y"]["stored"] or d["Y"]["size"]
-        w = d["X"]["stored"] or d["X"]["size"]
-        if not (t0 <= _start(d, "T") < t1 and c0 <= _start(d, "C") < c1
-                and z0 <= _start(d, "Z") < z1
-                and ty0 < y1 and ty0 + h > y0
-                and tx0 < x1 and tx0 + w > x0):
-            continue
-        plan.append({"path": path, "t": _start(d, "T"),
-                     "c": _start(d, "C"), "z": _start(d, "Z"),
-                     "m": _start(d, "M") if "M" in d else -1,
-                     "file_position": e["file_position"],
-                     "pixel_type": e["pixel_type"],
-                     "compression": e["compression"],
-                     "y0": ty0, "x0": tx0, "h": h, "w": w})
-
-    schema = "m int, " + WINDOW_SCHEMA
-    if not plan:
-        return spark.createDataFrame([], schema)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                yield plane_frame(_gray_subblock(r), r.t, r.c, r.z,
-                                  y0=r.y0, x0=r.x0, m=r.m)
-
-    return trim(plan_pixels(spark, plan, batches, schema,
-                            nbytes=_subblock_bytes(plan)),
-                y=(y0, y1), x=(x0, x1))
-
-
-def read_czi_planes(spark: SparkSession, path: str,
-                    scene: int = 0) -> DataFrame:
-    """ZERO-SHUFFLE subblock -> planes-layout read (the CZI twin of
-    read_zarr_planes): one row per level-0 subblock carrying
-    (t, c, z, m, y0, x0, h, w) and the dense row-major ``values``
-    payload — no per-pixel row amplification, so decode throughput is
-    bounded by the codec, not by long-form materialization. Compose
-    with operators/planes.py (window slice, project, downsample) or
-    reduce payloads JVM-side with higher-order functions."""
-    from bioio_spark.formats.czi import read_czi_directory
-
-    path = os.path.abspath(path)
-    entries = [e for e in read_czi_directory(path)
-               if _start(e["dims"], "S") == scene]
-    entries = [e for e in entries
-               if e["dims"]["Y"]["stored"] in
-               (0, e["dims"]["Y"]["size"]) and not e.get("pyramid")]
-    if not entries:
-        raise IndexError(f"{path}: no level-0 subblocks for scene "
-                         f"{scene}")
-    y_min = min(_start(e["dims"], "Y") for e in entries)
-    x_min = min(_start(e["dims"], "X") for e in entries)
-    plan = []
-    for e in entries:
-        d = e["dims"]
-        plan.append({"path": path, "t": _start(d, "T"),
-                     "c": _start(d, "C"), "z": _start(d, "Z"),
-                     "m": _start(d, "M") if "M" in d else -1,
-                     "file_position": e["file_position"],
-                     "pixel_type": e["pixel_type"],
-                     "compression": e["compression"],
-                     "y0": _start(d, "Y") - y_min,
-                     "x0": _start(d, "X") - x_min,
-                     "h": d["Y"]["stored"] or d["Y"]["size"],
-                     "w": d["X"]["stored"] or d["X"]["size"]})
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                yield payload_frame(_gray_subblock(r), r.t, r.c, r.z,
-                                    y0=r.y0, x0=r.x0, m=r.m)
-
-    planes = plan_pixels(
-        spark, plan, batches,
-        "t int, c int, z int, m int, y0 int, x0 int, h int, w int, "
-        "values array<double>", nbytes=_subblock_bytes(plan))
-    return with_tile(planes, grid_tile(
-        (r["y0"], r["x0"], r["h"], r["w"]) for r in plan))
-
-
 class CziImageReader(PlannedReader):
     """BioImage reader over baseline (uncompressed) ZISRAW files."""
 
@@ -225,35 +67,26 @@ class CziImageReader(PlannedReader):
         except OSError:
             return False
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        # the window planner reads level-0 subblocks only, so a non-zero
-        # resolution level falls through to the Catalyst filter over
-        # standardized pixels (which honors the level) instead of
-        # silently returning full-res data
-        if os.path.isfile(self._path) and \
-                img.current_resolution_level == 0:
-            return read_czi_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x,
-                                   scene=img.current_scene_index)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Decode the subblock each row points at (file_position,
+        pixel_type, compression, stored h x w)."""
+        from bioio_spark.formats.czi import read_czi_subblock
 
-    def read_planes(self, spark, img):
-        if os.path.isfile(self._path) and \
-                img.current_resolution_level == 0 and \
-                "M" not in img.dims.order:
-            return read_czi_planes(spark, self._path,
-                                   scene=img.current_scene_index)
-        return None
+        for r in rows.itertuples(index=False):
+            yield r, read_czi_subblock(r.path, {
+                "file_position": int(r.file_position),
+                "pixel_type": int(r.pixel_type),
+                "compression": int(r.compression),
+                "dims": {"Y": {"stored": int(r.h), "size": int(r.h)},
+                         "X": {"stored": int(r.w), "size": int(r.w)}}})
 
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.formats.czi import (DTYPE_OF_PIXEL_TYPE,
                                              read_czi_directory,
                                              read_czi_metadata)
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
@@ -272,8 +105,6 @@ class CziImageReader(PlannedReader):
 
         # pyramid level from the stored/size ratio (PyramidType
         # subblocks store downsampled pixels over a full-res extent)
-        import math
-
         def _level(e) -> int:
             dy = e["dims"]["Y"]
             if not e.get("pyramid") and dy["stored"] in (0, dy["size"]):
@@ -324,9 +155,9 @@ class CziImageReader(PlannedReader):
             w = max(e["dims"]["X"]["stored"] or e["dims"]["X"]["size"]
                     for e in subs)
             m_n = None
+            y_min = min(_start(e["dims"], "Y") for e in subs)
+            x_min = min(_start(e["dims"], "X") for e in subs)
             if has_m:
-                y_min = min(_start(e["dims"], "Y") for e in subs)
-                x_min = min(_start(e["dims"], "X") for e in subs)
                 offs = {}
                 for e in subs:
                     m = _start(e["dims"], "M")
@@ -353,56 +184,22 @@ class CziImageReader(PlannedReader):
                 pps=pps, metadata=xml, res_levels=levels))
             for e in all_subs:
                 d = e["dims"]
+                # a mosaic tile's pixels are tile-local (the tiles table
+                # places it); other subblocks sit in the scene's frame
+                lv = 2 ** e["level"]
                 plan.append({
                     "path": path, "scene": scene,
                     "res_level": e["level"],
                     "t": _start(d, "T"), "c": _start(d, "C"),
                     "z": _start(d, "Z"),
                     "m": _start(d, "M") if "M" in d else -1,
+                    "y0": 0 if has_m else (_start(d, "Y") - y_min) // lv,
+                    "x0": 0 if has_m else (_start(d, "X") - x_min) // lv,
                     "file_position": e["file_position"],
                     "pixel_type": e["pixel_type"],
                     "compression": e["compression"],
                     "h": d["Y"]["stored"] or d["Y"]["size"],
                     "w": d["X"]["stored"] or d["X"]["size"],
                 })
-
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                for r in pdf.itertuples():
-                    plane = _subblock(r)
-                    y_n, x_n = plane.shape[0], plane.shape[1]
-                    s_n = plane.shape[2] if plane.ndim == 3 else 1
-                    s_col = (np.full(plane.size, -1, dtype=np.int32)
-                             if s_n == 1 else
-                             np.tile(np.arange(s_n, dtype=np.int32),
-                                     y_n * x_n))
-                    yield pd.DataFrame({
-                        "scene": r.scene,
-                        "res_level": np.full(plane.size, r.res_level,
-                                             np.int32),
-                        "t": np.full(plane.size, r.t, np.int32),
-                        "c": np.full(plane.size, r.c, np.int32),
-                        "z": np.full(plane.size, r.z, np.int32),
-                        "m": np.full(plane.size, r.m, np.int32),
-                        "y": np.repeat(np.arange(y_n, dtype=np.int32),
-                                       x_n * s_n),
-                        "x": np.tile(np.repeat(
-                            np.arange(x_n, dtype=np.int32), s_n), y_n),
-                        "s": s_col,
-                        "value": plane.ravel().astype(np.float64),
-                    })
-
-        px = (plan_pixels(
-                  spark, plan, batches,
-                  "scene string, res_level int, t int, c int, z int, "
-                  "m int, y int, x int, s int, value double",
-                  nbytes=_subblock_bytes(plan))
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  "res_level", "t", "c", "z", "y", "x",
-                  "m", "s", "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(
-            pixels=px, scenes=scenes, channels=channels,
-            tiles=pd.DataFrame(tile_rows) if tile_rows else None)
+        return Plan(plan, scenes, channels,
+                    tiles=pd.DataFrame(tile_rows) if tile_rows else None)

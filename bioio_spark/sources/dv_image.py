@@ -9,7 +9,7 @@ tier (ref README.md:60), over the in-repo pure-Python DV codec
   (a contiguous YX plane at a computable byte offset), distributes the
   plan as a DataFrame, and a `mapInPandas` seek-reads exactly its
   plane — per-plane parallelism without shipping whole files, the same
-  lever as TIFF strip planning (`read_tiff_window`). At object-store
+  lever as TIFF strip planning. At object-store
   scale each task is one ranged GET.
 
 DV waves map to the C axis with their wavelengths as channel names
@@ -20,20 +20,11 @@ A directory of .dv files reads as a multi-scene image in sorted order.
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
-from bioio_spark.fsio import read_range
-
-from pyspark.sql import SparkSession
-
-from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
-                                         PlannedReader, empty_window,
-                                         norm_window, payload_frame,
-                                         plan_pixels, plane_frame,
-                                         standardize, trim, with_tile)
+from bioio_spark.sources.planned import (Plan, PlannedReader, narrow_rows,
+                                         raw_tiles)
 
 
 def _read_header(path: str) -> dict:
@@ -43,121 +34,33 @@ def _read_header(path: str) -> dict:
         return parse_dv_header(f.read(HEADER_SIZE))
 
 
-def read_dv_window(spark: SparkSession, path: str,
-                   t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned DV read: selectors prune whole SECTIONS (t/c/z are
-    section coordinates) and the y window narrows each surviving
-    section's read to its contiguous row range (DV rows are contiguous
-    within a plane, so a y-window is a byte range — at object-store
-    scale, one ranged GET per section of exactly the needed rows).
-    The x trim is a residual codegen filter after decode.
-
-    Selector forms match read_tiff_window/read_zarr_window: None (all),
-    int (one index), (start, stop) / slice (half-open window)."""
-    from bioio_spark.formats.dv import iter_dv_sections
-
-    h = _read_header(path)
-    t0, t1 = norm_window(t, h["num_times"])
-    c0, c1 = norm_window(c, h["num_waves"])
-    z0, z1 = norm_window(z, h["num_z"])
-    y0, y1 = norm_window(y, h["ny"])
-    x0, x1 = norm_window(x, h["nx"])
-    row_bytes = h["nx"] * h["dtype"].itemsize
-    plan = [
-        {"path": os.path.abspath(path), "t": s["t"], "c": s["w"],
-         "z": s["z"],
-         "offset": s["offset"] + y0 * row_bytes,
-         "nbytes": (y1 - y0) * row_bytes,
-         "y0": y0, "ny": y1 - y0, "nx": h["nx"]}
-        for s in iter_dv_sections(h)
-        if t0 <= s["t"] < t1 and c0 <= s["w"] < c1 and z0 <= s["z"] < z1
-    ]
-    dtype_str = h["dtype"].str
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, r.nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(dtype_str)).reshape(r.ny, r.nx)
-                yield plane_frame(_real(plane), r.t, r.c, r.z, y0=r.y0)
-
-    if not plan:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
-                            nbytes=sum(r["nbytes"] for r in plan)),
-                x=(x0, x1))
-
-
-def read_dv_planes(spark: SparkSession, path: str):
-    """ZERO-SHUFFLE section -> planes-layout read: one payload row per
-    DV section (a contiguous YX plane), the DV member of the planes
-    family. Complex modes carry the real part, matching the long-form
-    reader."""
-    from bioio_spark.formats.dv import iter_dv_sections
-
-    path = os.path.abspath(path)
-    h = _read_header(path)
-    plan = [{"path": path, "t": s["t"], "c": s["w"], "z": s["z"],
-             "offset": s["offset"]} for s in iter_dv_sections(h)]
-    ny, nx = h["ny"], h["nx"]
-    dtype_str = h["dtype"].str
-    nbytes = ny * nx * h["dtype"].itemsize
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                buf = read_range(r.path, r.offset, nbytes)
-                plane = np.frombuffer(
-                    buf, dtype=np.dtype(dtype_str)).reshape(ny, nx)
-                yield payload_frame(_real(plane), r.t, r.c, r.z)
-
-    return with_tile(plan_pixels(spark, plan, batches, PLANES_SCHEMA,
-                                 nbytes=len(plan) * nbytes), (ny, nx))
-
-
-def _real(plane: np.ndarray) -> np.ndarray:
-    """Complex modes carry their real part."""
-    return (plane.real if np.issubdtype(plane.dtype, np.complexfloating)
-            else plane)
-
-
 class DvImageReader(PlannedReader):
     """BioImage reader over DeltaVision files (plugin tier)."""
 
     EXTENSIONS = (".dv", ".r3d")
     DIM_ORDER_ERROR = "DV dimension order comes from the header's ImgSequence"
+    narrow = staticmethod(narrow_rows)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if os.path.isfile(self._path) and len(img.scenes) == 1:
-            return read_dv_window(spark, self._path,
-                                  t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Raw sections; complex modes carry their real part."""
+        for r, plane in raw_tiles(rows):
+            yield r, (plane.real if np.iscomplexobj(plane) else plane)
 
-    def read_planes(self, spark, img):
-        if os.path.isfile(self._path) and len(img.scenes) == 1:
-            return read_dv_planes(spark, self._path)
-        return None
-
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.formats.dv import iter_dv_sections
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
         if not paths:
             raise FileNotFoundError(f"No DV files under {self._path}")
 
-        scenes, channels, plan_rows = [], [], []
-        dtypes: dict[str, str] = {}
+        scenes, channels, plan = [], [], []
         for si, p in enumerate(sorted(paths)):
             h = _read_header(p)
             scene = f"Image:{si}"
-            ap = os.path.abspath(p)
-            dtypes[ap] = h["dtype"].str
             names = self._channel_names or [
                 str(w) if w else None for w in h["waves"]]
             if all(n is None for n in names):
@@ -177,28 +80,10 @@ class DvImageReader(PlannedReader):
                 dict(T=h["num_times"], C=h["num_waves"], Z=h["num_z"],
                      Y=h["ny"], X=h["nx"]),
                 pps=pps))
-            for s in iter_dv_sections(h):
-                plan_rows.append({
-                    "path": ap, "scene": scene,
-                    "t": s["t"], "c": s["w"], "z": s["z"],
-                    "offset": s["offset"], "nbytes": s["nbytes"],
-                    "ny": h["ny"], "nx": h["nx"],
-                })
-
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                for r in pdf.itertuples():
-                    buf = read_range(r.path, r.offset, r.nbytes)
-                    plane = np.frombuffer(
-                        buf, dtype=np.dtype(dtypes[r.path])).reshape(
-                        r.ny, r.nx)
-                    yield plane_frame(_real(plane), r.t, r.c, r.z,
-                                      scene=r.scene)
-
-        px = standardize(
-            plan_pixels(spark, plan_rows, batches,
-                        "scene string, " + WINDOW_SCHEMA,
-                        nbytes=sum(r["nbytes"] for r in plan_rows)),
-            self._image_id)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+            ap = os.path.abspath(p)
+            plan += [{"path": ap, "scene": scene,
+                      "t": s["t"], "c": s["w"], "z": s["z"],
+                      "offset": s["offset"], "nbytes": s["nbytes"],
+                      "dtype": h["dtype"].str}
+                     for s in iter_dv_sections(h)]
+        return Plan(plan, scenes, channels)

@@ -18,135 +18,12 @@ from __future__ import annotations
 
 import os
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import SparkSession
 
 from bioio_spark.fsio import read_range
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels,
-                                         standardize, trim)
-
-
-def _plan_rows(path: str, cat: dict) -> list[dict]:
-    """One plan row per (level, t, c, z) plane (contiguous datasets)
-    or per chunk (chunked datasets)."""
-    ap = os.path.abspath(path)
-    plan = []
-    for (lv, t, c), di in cat["datasets"].items():
-        z_n, y_n, x_n = di["shape"]
-        isz = di["dtype"].itemsize
-        if di["kind"] == "contiguous":
-            base = di["extents"][0][0] if di["extents"] else None
-            plane = y_n * x_n * isz
-            for z in range(z_n):
-                plan.append({
-                    "path": ap, "kind": "plane", "res_level": lv,
-                    "t": t, "c": c, "z": z, "z0": z, "y0": 0, "x0": 0,
-                    "offset": base + z * plane, "nbytes": plane,
-                    "sh_z": 1, "sh_y": y_n, "sh_x": x_n,
-                    "full_z": z_n, "full_y": y_n, "full_x": x_n,
-                    "dtype": di["dtype"].str, "gzip": False,
-                })
-        elif di["kind"] == "chunked":
-            cz, cy, cx = di["chunk_shape"]
-            for ch in di["chunks"]:
-                z0, y0, x0 = ch["coords"]
-                plan.append({
-                    "path": ap, "kind": "chunk", "res_level": lv,
-                    "t": t, "c": c, "z": int(z0),
-                    "z0": int(z0), "y0": int(y0), "x0": int(x0),
-                    "offset": ch["offset"], "nbytes": ch["nbytes"],
-                    "sh_z": cz, "sh_y": cy, "sh_x": cx,
-                    "full_z": z_n, "full_y": y_n, "full_x": x_n,
-                    "dtype": di["dtype"].str,
-                    "gzip": bool(di.get("gzip")),
-                })
-        else:
-            raise ValueError(f"{path}: dataset layout {di['kind']} "
-                             f"not supported")
-    return plan
-
-
-def _decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            raw = read_range(r.path, r.offset, r.nbytes)
-            if r.gzip:
-                raw = zlib.decompress(raw)
-            block = np.frombuffer(
-                raw, dtype=np.dtype(r.dtype),
-                count=r.sh_z * r.sh_y * r.sh_x).reshape(
-                r.sh_z, r.sh_y, r.sh_x)
-            # chunked edge blocks overhang the logical extent
-            vz = min(r.sh_z, r.full_z - r.z0)
-            vy = min(r.sh_y, r.full_y - r.y0)
-            vx = min(r.sh_x, r.full_x - r.x0)
-            block = block[:vz, :vy, :vx]
-            zz, yy, xx = np.indices(block.shape)
-            yield pd.DataFrame({
-                "res_level": np.full(block.size, r.res_level, np.int32),
-                "t": np.full(block.size, r.t, np.int32),
-                "c": np.full(block.size, r.c, np.int32),
-                "z": (zz.ravel() + r.z0).astype(np.int32),
-                "y": (yy.ravel() + r.y0).astype(np.int32),
-                "x": (xx.ravel() + r.x0).astype(np.int32),
-                "value": block.ravel().astype(np.float64),
-            })
-
-
-def _decoded_bytes(plan) -> int:
-    """Decoded size of ``_plan_rows`` rows (``sh_z`` x ``sh_y`` x
-    ``sh_x`` blocks of ``dtype``)."""
-    return sum(r["sh_z"] * r["sh_y"] * r["sh_x"]
-               * np.dtype(r["dtype"]).itemsize for r in plan)
-
-
-def read_ims_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned IMS read (level 0): t/c prune whole DATASETS, z
-    prunes planes/chunks, and on contiguous datasets the y window
-    narrows each plane read to its contiguous row range. The x trim is
-    a residual codegen filter."""
-    cat = ImsImageReader.catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    c0, c1 = norm_window(c, cat["size_c"])
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    rows = []
-    for r in _plan_rows(path, cat):
-        if r["res_level"] != 0:
-            continue
-        if not (t0 <= r["t"] < t1 and c0 <= r["c"] < c1):
-            continue
-        if r["z0"] + r["sh_z"] <= z0 or r["z0"] >= z1:
-            continue
-        if r["y0"] + r["sh_y"] <= y0 or r["y0"] >= y1:
-            continue
-        if r["x0"] + r["sh_x"] <= x0 or r["x0"] >= x1:
-            continue
-        if r["kind"] == "plane":
-            ry0, ry1 = max(r["y0"], y0), min(r["y0"] + r["sh_y"], y1)
-            row_bytes = r["nbytes"] // r["sh_y"]
-            rows.append({**r,
-                         "offset": r["offset"] + (ry0 - r["y0"])
-                         * row_bytes,
-                         "nbytes": (ry1 - ry0) * row_bytes,
-                         "y0": ry0, "sh_y": ry1 - ry0,
-                         "full_y": ry1})
-        else:
-            rows.append(r)
-    if not rows:
-        return empty_window(spark)
-    px = plan_pixels(spark, rows, _decode_batches,
-                     "res_level int, " + WINDOW_SCHEMA,
-                     nbytes=_decoded_bytes(rows))
-    return trim(px, z=(z0, z1), y=(y0, y1), x=(x0, x1)).drop("res_level")
+from bioio_spark.sources.planned import (Plan, PlannedReader, narrow_rows,
+                                         raw_tile)
 
 
 class ImsImageReader(PlannedReader):
@@ -161,17 +38,33 @@ class ImsImageReader(PlannedReader):
 
         return read_ims_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_ims_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def narrow(rows, lo, hi):
+        """Contiguous planes narrow to the window's rows; chunks decode
+        whole."""
+        return narrow_rows(rows, lo, hi, rows["kind"] == "plane")
 
-    def to_dataset(self, spark: SparkSession):
+    @staticmethod
+    def decode_tiles(rows):
+        """A contiguous plane's rows, or one (gzip) chunk cut to the
+        dataset's extent (edge chunks overhang it)."""
+        for r in rows.itertuples(index=False):
+            raw = read_range(r.path, r.offset, r.nbytes)
+            if r.kind == "plane":
+                yield r, raw_tile(r, raw)
+                continue
+            block = np.frombuffer(
+                zlib.decompress(raw) if r.gzip else raw,
+                dtype=np.dtype(r.dtype),
+                count=r.sh_z * r.sh_y * r.sh_x).reshape(
+                r.sh_z, r.sh_y, r.sh_x)[:r.nz, :r.h, :r.w]
+            yield r, block if r.nz > 1 else block[0]
+
+    def plan(self) -> Plan:
+        """One row per (level, t, c, z) plane of a contiguous dataset,
+        or per chunk of a chunked one."""
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -191,11 +84,32 @@ class ImsImageReader(PlannedReader):
                  Y=cat["size_y"], X=cat["size_x"]),
             pps=pps, metadata="Imaris 5.5 (native HDF5 reader)",
             res_levels=list(range(cat["n_levels"])))]
-        plan = _plan_rows(self._path, cat)
-        px = standardize(
-            plan_pixels(spark, plan, _decode_batches,
-                        "res_level int, " + WINDOW_SCHEMA,
-                        nbytes=_decoded_bytes(plan)),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        ap = os.path.abspath(self._path)
+        plan = []
+        for (lv, t, c), di in cat["datasets"].items():
+            z_n, y_n, x_n = di["shape"]
+            base = {"path": ap, "scene": scene, "res_level": lv, "t": t,
+                    "c": c, "dtype": di["dtype"].str,
+                    "gzip": bool(di.get("gzip"))}
+            if di["kind"] == "contiguous":
+                start = di["extents"][0][0] if di["extents"] else None
+                nbytes = y_n * x_n * di["dtype"].itemsize
+                plan += [{**base, "kind": "plane", "z": z, "nz": 1,
+                          "y0": 0, "x0": 0, "h": y_n, "w": x_n,
+                          "offset": start + z * nbytes, "nbytes": nbytes,
+                          "sh_z": 1, "sh_y": y_n, "sh_x": x_n}
+                         for z in range(z_n)]
+            elif di["kind"] == "chunked":
+                cz, cy, cx = di["chunk_shape"]
+                for ch in di["chunks"]:
+                    z0, y0, x0 = (int(v) for v in ch["coords"])
+                    plan.append({
+                        **base, "kind": "chunk", "z": z0,
+                        "nz": min(cz, z_n - z0), "y0": y0, "x0": x0,
+                        "h": min(cy, y_n - y0), "w": min(cx, x_n - x0),
+                        "offset": ch["offset"], "nbytes": ch["nbytes"],
+                        "sh_z": cz, "sh_y": cy, "sh_x": cx})
+            else:
+                raise ValueError(f"{self._path}: dataset layout "
+                                 f"{di['kind']} not supported")
+        return Plan(plan, scenes, channels)

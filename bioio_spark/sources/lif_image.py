@@ -14,107 +14,10 @@ README.md:62), over the in-repo pure-Python Leica block+XML codec
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
-                                         PlannedReader, norm_window,
-                                         payload_frame, plan_pixels,
-                                         plane_frame, scene_bytes, with_tile)
-
-
-def _read_planes(it: Iterator[pd.DataFrame], y0: int = 0, y1=None):
-    """(plan row, YX plane) per plan row (path, scene_i, m, t, c, z;
-    m = -1 outside tile scans), rows y0:y1 only; one header parse per
-    file."""
-    from bioio_spark.formats.lif import parse_lif_header, read_lif_plane
-
-    hdr_cache: dict = {}
-    for pdf in it:
-        for r in pdf.itertuples():
-            if r.path not in hdr_cache:
-                hdr_cache[r.path] = parse_lif_header(r.path)
-            yield r, read_lif_plane(
-                r.path, hdr_cache[r.path], r.scene_i, r.t, r.c, r.z,
-                m=max(r.m, 0), y0=y0, y1=y1)
-
-
-def read_lif_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None,
-                    scene: int = 0):
-    """Window-pruned LIF read: t/c/z selectors prune whole PLANES via
-    the block walk + XML strides (driver-side, header-only IO), and the
-    y window becomes a row-range seek inside each surviving plane
-    (read_lif_plane y0/y1 — only the window's rows' bytes move); the x
-    window prunes in numpy after the stride gather. Tile-scan (M > 1)
-    scenes are not routed here — their global mosaic coordinates come
-    from the stitch operator, so BioImage.read_window falls back to the
-    standardized path for them."""
-    from bioio_spark.formats.lif import parse_lif_header
-
-    path = os.path.abspath(path)
-    header = parse_lif_header(path)
-    if not (0 <= scene < len(header["scenes"])):
-        raise IndexError(f"{path}: no scene {scene}")
-    sc = header["scenes"][scene]
-    if sc.get("m_n", 1) > 1:
-        raise ValueError(
-            "read_lif_window reads single-tile scenes; tile scans "
-            "route through BioImage/mosaic semantics")
-    t_n, c_n, z_n, y_n, x_n = sc["shape"]
-    t0, t1 = norm_window(t, t_n)
-    c0, c1 = norm_window(c, c_n)
-    z0, z1 = norm_window(z, z_n)
-    y0, y1 = norm_window(y, y_n)
-    x0, x1 = norm_window(x, x_n)
-    plan = [{"path": path, "scene_i": scene, "m": -1,
-             "t": ti, "c": ci, "z": zi}
-            for ti in range(t0, t1)
-            for ci in range(c0, c1)
-            for zi in range(z0, z1)]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for r, rows in _read_planes(it, y0=y0, y1=y1):
-            yield plane_frame(rows[:, x0:x1], r.t, r.c, r.z,  # numpy prune
-                              y0=y0, x0=x0)
-
-    return plan_pixels(spark, plan, batches, WINDOW_SCHEMA,
-                       nbytes=len(plan) * (y1 - y0) * x_n
-                       * np.dtype(sc["dtype"]).itemsize)
-
-
-def read_lif_planes(spark: SparkSession, path: str, scene: int = 0):
-    """ZERO-SHUFFLE plane -> planes-layout read (the LIF member of the
-    planes family): one payload row per (t, c, z) plane via the stride
-    arithmetic. Tile-scan scenes route through BioImage/mosaic."""
-    from bioio_spark.formats.lif import parse_lif_header
-
-    path = os.path.abspath(path)
-    header = parse_lif_header(path)
-    if not (0 <= scene < len(header["scenes"])):
-        raise IndexError(f"{path}: no scene {scene}")
-    sc = header["scenes"][scene]
-    if sc.get("m_n", 1) > 1:
-        raise ValueError(
-            "read_lif_planes reads single-tile scenes; tile scans "
-            "route through BioImage/mosaic semantics")
-    t_n, c_n, z_n, y_n, x_n = sc["shape"]
-    plan = [{"path": path, "scene_i": scene, "m": -1,
-             "t": t, "c": c, "z": z}
-            for t in range(t_n) for c in range(c_n)
-            for z in range(z_n)]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for r, plane in _read_planes(it):
-            yield payload_frame(plane, r.t, r.c, r.z)
-
-    nbytes = len(plan) * y_n * x_n * np.dtype(sc["dtype"]).itemsize
-    return with_tile(plan_pixels(spark, plan, batches, PLANES_SCHEMA,
-                                 nbytes=nbytes), (y_n, x_n))
+from bioio_spark.sources.planned import Plan, PlannedReader, narrow_rows
 
 
 class LifImageReader(PlannedReader):
@@ -122,6 +25,7 @@ class LifImageReader(PlannedReader):
 
     EXTENSIONS = (".lif",)
     DIM_ORDER_ERROR = "LIF dimensions come from the settings XML"
+    narrow = staticmethod(narrow_rows)
 
     @classmethod
     def is_supported_image(cls, image) -> bool:
@@ -138,28 +42,22 @@ class LifImageReader(PlannedReader):
         except OSError:
             return False
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        # tile-scan scenes (M > 1), stitched or not, need mosaic/global
-        # coordinates — those fall through to the standardized pixels
-        if os.path.isfile(self._path) and img.mosaic_tile_dims is None:
-            return read_lif_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x,
-                                   scene=img.current_scene_index)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Rows ``y0 .. y0 + h`` of each (scene_i, m, t, c, z) plane via
+        the stride arithmetic, one header parse per file and batch."""
+        from bioio_spark.formats.lif import parse_lif_header, read_lif_plane
 
-    def read_planes(self, spark, img):
-        if os.path.isfile(self._path) and img.mosaic_tile_dims is None:
-            return read_lif_planes(spark, self._path,
-                                   scene=img.current_scene_index)
-        return None
+        headers = {p: parse_lif_header(p) for p in rows["path"].unique()}
+        for r in rows.itertuples(index=False):
+            yield r, read_lif_plane(
+                r.path, headers[r.path], r.scene_i, r.t, r.c, r.z,
+                m=max(r.m, 0), y0=r.y0, y1=r.y0 + r.h)
 
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.formats.lif import parse_lif_header
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
@@ -200,30 +98,9 @@ class LifImageReader(PlannedReader):
                      M=m_n if m_n > 1 else None),
                 dim_order=("M" if m_n > 1 else "") + "TCZYX", pps=pps,
                 metadata=header["xml"]))
-            for m in range(m_n):
-                for t in range(t_n):
-                    for c in range(c_n):
-                        for z in range(z_n):
-                            plan.append({
-                                "path": path, "scene": scene,
-                                "scene_i": si,
-                                "m": m if m_n > 1 else -1,
-                                "t": t, "c": c, "z": z})
-
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for r, plane in _read_planes(it):
-                yield plane_frame(plane, r.t, r.c, r.z, scene=r.scene,
-                                  m=r.m)
-
-        px = (plan_pixels(spark, plan, batches,
-                          "scene string, m int, " + WINDOW_SCHEMA,
-                          nbytes=scene_bytes(scenes))
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  F.lit(0).alias("res_level"), "t", "c", "z", "y", "x",
-                  "m", F.lit(-1).alias("s"), "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(
-            pixels=px, scenes=scenes, channels=channels,
-            tiles=pd.DataFrame(tile_rows) if tile_rows else None)
+            plan += [{"path": path, "scene": scene, "scene_i": si,
+                      "m": m if m_n > 1 else -1, "t": t, "c": c, "z": z}
+                     for m in range(m_n) for t in range(t_n)
+                     for c in range(c_n) for z in range(z_n)]
+        return Plan(plan, scenes, channels,
+                    tiles=pd.DataFrame(tile_rows) if tile_rows else None)

@@ -3,8 +3,8 @@ LAS X export the reference routes to bioio-bioformats (ref
 README.md:74 routes .lof). The container shares LIF's block framing
 and XML vocabulary (bioio_spark.formats.lof), and parse_lif_header
 transparently delegates to the LOF parser — so this reader IS the LIF
-reader with LOF routing: same planned per-plane stride reads, same
-windowed path (read_lif_window works on .lof paths directly).
+reader with LOF routing: the same one plan of per-plane stride reads,
+and so the same window and planes reads.
 """
 
 from __future__ import annotations

@@ -20,127 +20,11 @@ the in-repo TIFF IFD walk + the public CZ_LSMINFO layout
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
 
 from bioio_spark.fsio import read_range
-from bioio_spark.sources.planned import (PLANES_SCHEMA, WINDOW_SCHEMA,
-                                         PlannedReader, empty_window,
-                                         grid_tile, norm_window, payload_frame,
-                                         plain_scene, plan_pixels, plane_bytes,
-                                         plane_frame, standardize, trim,
-                                         with_tile)
-
-
-def _plan_strips(path: str):
-    """(info, channel_names, plan rows): one row per (t, z, c) strip
-    byte range, from the catalog walk only."""
-    from bioio_spark.formats.lsm import read_lsm_catalog
-
-    cat = read_lsm_catalog(path)
-    info, pages = cat["info"], cat["pages"]
-    z_n = max(info["size_z"], 1)
-    ap = os.path.abspath(path)
-    plan = []
-    for p_idx, pg in enumerate(pages):
-        t, z = divmod(p_idx, z_n)
-        if pg["comp"] not in (1, 5):
-            raise ValueError(
-                f"{path}: LSM page compression {pg['comp']} not "
-                f"supported (LSM writes raw or LZW)")
-        for ch in pg["chunks"]:
-            plan.append({
-                "path": ap, "t": t, "z": z, "c": ch["s"],
-                "offset": ch["offset"], "nbytes": ch["nbytes"],
-                "y0": ch["y0"], "ny": ch["h"], "nx": pg["w"],
-                "dtype": pg["dtype"], "comp": pg["comp"],
-                "pred": pg["pred"],
-            })
-    return info, cat["channel_names"], plan
-
-
-def _strip(r) -> np.ndarray:
-    """Seek-read the channel-plane strip of one plan row (raw bytes, or
-    whole-strip LZW decode for wild compressed acquisitions — TIFF 6.0
-    §13, optionally with the horizontal predictor)."""
-    from bioio_spark.formats.tiff import (_undo_horizontal_predictor,
-                                          decompress_tiff_chunk)
-
-    buf = read_range(r.path, r.offset, r.nbytes)
-    if r.comp != 1:
-        buf = decompress_tiff_chunk(buf, r.comp)
-    plane = np.frombuffer(
-        buf, dtype=np.dtype(r.dtype),
-        count=r.ny * r.nx).reshape(r.ny, r.nx)
-    if r.pred == 2:
-        plane = _undo_horizontal_predictor(plane)
-    return plane
-
-
-def _strip_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            yield plane_frame(_strip(r), r.t, r.c, r.z, y0=r.y0)
-
-
-def read_lsm_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned LSM read: t/z selectors prune whole PAGES, c
-    prunes whole strips (one strip per channel plane), and the y window
-    narrows each surviving strip's read to its contiguous row range
-    (strip rows are contiguous, so a y-window is a byte range). The x
-    trim is a residual codegen filter. Selector forms match the other
-    window readers (None / int / (start, stop) / slice)."""
-    info, _names, plan = _plan_strips(path)
-    t0, t1 = norm_window(t, max(info["size_t"], 1))
-    c0, c1 = norm_window(c, max(info["size_c"], 1))
-    z0, z1 = norm_window(z, max(info["size_z"], 1))
-    y0, y1 = norm_window(y, info["size_y"])
-    x0, x1 = norm_window(x, info["size_x"])
-    pruned = []
-    for r in plan:
-        if not (t0 <= r["t"] < t1 and c0 <= r["c"] < c1
-                and z0 <= r["z"] < z1):
-            continue
-        ry0, ry1 = max(r["y0"], y0), min(r["y0"] + r["ny"], y1)
-        if ry0 >= ry1:
-            continue
-        if r["comp"] == 1:
-            # raw strips: the y window is a byte range
-            row_bytes = r["nbytes"] // r["ny"]
-            pruned.append({**r,
-                           "offset": r["offset"]
-                           + (ry0 - r["y0"]) * row_bytes,
-                           "nbytes": (ry1 - ry0) * row_bytes,
-                           "y0": ry0, "ny": ry1 - ry0})
-        else:
-            # LZW strips decode whole; y trims in the residual filter
-            pruned.append(r)
-    if not pruned:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, pruned, _strip_batches, WINDOW_SCHEMA,
-                            nbytes=plane_bytes(pruned)),
-                x=(x0, x1), y=(y0, y1))
-
-
-def read_lsm_planes(spark: SparkSession, path: str):
-    """ZERO-SHUFFLE strip -> planes-layout read: one payload row per
-    (t, z, c) channel-plane strip, the LSM member of the planes
-    family."""
-    _info, _names, plan = _plan_strips(path)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for r in pdf.itertuples():
-                yield payload_frame(_strip(r), r.t, r.c, r.z, y0=r.y0)
-
-    return with_tile(
-        plan_pixels(spark, plan, batches, PLANES_SCHEMA,
-                    nbytes=plane_bytes(plan)),
-        grid_tile((r["y0"], 0, r["ny"], r["nx"]) for r in plan))
+from bioio_spark.sources.planned import Plan, PlannedReader, narrow_rows
 
 
 class LsmImageReader(PlannedReader):
@@ -155,28 +39,56 @@ class LsmImageReader(PlannedReader):
 
         return read_lsm_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_lsm_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def narrow(rows, lo, hi):
+        """Raw strips narrow to the window's rows; LZW strips decode
+        whole."""
+        return narrow_rows(rows, lo, hi, rows["comp"] == 1)
 
-    def read_planes(self, spark, img):
-        if os.path.isfile(self._path):
-            return read_lsm_planes(spark, self._path)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Seek-read each channel-plane strip (raw bytes, or whole-strip
+        LZW decode for wild compressed acquisitions — TIFF 6.0 §13,
+        optionally with the horizontal predictor)."""
+        from bioio_spark.formats.tiff import (_undo_horizontal_predictor,
+                                              decompress_tiff_chunk)
 
-    def to_dataset(self, spark: SparkSession):
+        for r in rows.itertuples(index=False):
+            buf = read_range(r.path, r.offset, r.nbytes)
+            if r.comp != 1:
+                buf = decompress_tiff_chunk(buf, r.comp)
+            plane = np.frombuffer(buf, dtype=np.dtype(r.dtype),
+                                  count=r.h * r.w).reshape(r.h, r.w)
+            yield r, (_undo_horizontal_predictor(plane) if r.pred == 2
+                      else plane)
+
+    def plan(self) -> Plan:
+        """One row per (t, z, c) strip byte range, from the catalog walk
+        only."""
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
-        info, names, plan = _plan_strips(self._path)
+        cat = self.catalog(self._path)
+        info, pages = cat["info"], cat["pages"]
+        z_n = max(info["size_z"], 1)
+        ap = os.path.abspath(self._path)
         scene = "Image:0"
+        plan = []
+        for p_idx, pg in enumerate(pages):
+            t, z = divmod(p_idx, z_n)
+            if pg["comp"] not in (1, 5):
+                raise ValueError(
+                    f"{self._path}: LSM page compression {pg['comp']} "
+                    f"not supported (LSM writes raw or LZW)")
+            plan += [{"path": ap, "scene": scene, "t": t, "z": z,
+                      "c": ch["s"], "offset": ch["offset"],
+                      "nbytes": ch["nbytes"], "y0": ch["y0"],
+                      "h": ch["h"], "w": pg["w"], "dtype": pg["dtype"],
+                      "comp": pg["comp"], "pred": pg["pred"]}
+                     for ch in pg["chunks"]]
         c_n = max(info["size_c"], 1)
-        use_names = self._channel_names or (names or None)
+        use_names = self._channel_names or (cat["channel_names"] or None)
         channels = channel_rows(self._image_id, scene,
                                 resolve_channel_names(use_names, c_n, 0))
         pps = self._pps
@@ -189,16 +101,9 @@ class LsmImageReader(PlannedReader):
                 X=vx * 1e6 if vx else None)
         scenes = [scene_row(
             self._image_id, scene, 0, plan[0]["dtype"],
-            dict(T=max(info["size_t"], 1), C=c_n,
-                 Z=max(info["size_z"], 1), Y=info["size_y"],
-                 X=info["size_x"]),
+            dict(T=max(info["size_t"], 1), C=c_n, Z=z_n,
+                 Y=info["size_y"], X=info["size_x"]),
             pps=pps, time_interval=info["time_interval"] or None,
             metadata=(f"LSM ScanType={info['scan_type']} "
                       f"DataType={info['data_type']}"))]
-
-        px = standardize(
-            plan_pixels(spark, plan, _strip_batches, WINDOW_SCHEMA,
-                        nbytes=plane_bytes(plan)),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        return Plan(plan, scenes, channels)

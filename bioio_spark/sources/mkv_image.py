@@ -29,5 +29,3 @@ class MkvImageReader(VideoReader):
 
         return decode_mkv_frame(data, row.w, row.h)
 
-
-read_mkv_window = MkvImageReader.window

@@ -29,5 +29,3 @@ class Mp4ImageReader(VideoReader):
 
         return decode_mp4_frame(data, row.w, row.h)
 
-
-read_mp4_window = Mp4ImageReader.window

@@ -28,5 +28,3 @@ class MpegImageReader(VideoReader):
 
         return decode_mpeg1_frame(data, row.w, row.h)
 
-
-read_mpeg_window = MpegImageReader.window

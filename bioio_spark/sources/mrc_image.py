@@ -13,41 +13,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
-
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels, plane_bytes,
-                                         raw_plane_batches, standardize, trim)
-
-
-def read_mrc_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned MRC read: z prunes whole SECTIONS, the y window
-    narrows each section to its contiguous row byte range; x trims via
-    codegen filter."""
-    from bioio_spark.formats.mrc import read_mrc_header
-
-    h = read_mrc_header(path)
-    norm_window(t, 1)
-    norm_window(c, 1)
-    z0, z1 = norm_window(z, h["nz"])
-    y0, y1 = norm_window(y, h["ny"])
-    x0, x1 = norm_window(x, h["nx"])
-    row_bytes = h["nx"] * h["dtype"].itemsize
-    ap = os.path.abspath(path)
-    plan = [{"path": ap, "t": 0, "c": 0, "z": z_,
-             "offset": h["data_offset"] + z_ * h["section_bytes"]
-             + y0 * row_bytes,
-             "nbytes": (y1 - y0) * row_bytes,
-             "y0": y0, "ny": y1 - y0, "nx": h["nx"],
-             "dtype": h["dtype"].str}
-            for z_ in range(z0, z1)]
-    if not plan:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
-                            nbytes=plane_bytes(plan)),
-                x=(x0, x1))
+from bioio_spark.sources.planned import (Plan, PlannedReader, narrow_rows,
+                                         raw_tiles)
 
 
 class MrcImageReader(PlannedReader):
@@ -55,6 +22,8 @@ class MrcImageReader(PlannedReader):
 
     EXTENSIONS = (".mrc", ".st", ".map", ".rec")
     DIM_ORDER_ERROR = "MRC sections map to Z; dim_order is fixed"
+    decode_tiles = staticmethod(raw_tiles)
+    narrow = staticmethod(narrow_rows)
 
     @staticmethod
     def catalog(path: str) -> dict:
@@ -63,18 +32,10 @@ class MrcImageReader(PlannedReader):
 
         return read_mrc_header(MrcImageReader.paths(path)[0])
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_mrc_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
-
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.formats.mrc import read_mrc_header
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         paths = self.paths(self._path)
@@ -96,17 +57,8 @@ class MrcImageReader(PlannedReader):
                 dict(T=1, C=1, Z=h["nz"], Y=h["ny"], X=h["nx"]),
                 pps=pps, metadata="; ".join(h["labels"]) or None))
             ap = os.path.abspath(p)
-            for z in range(h["nz"]):
-                plan.append({
-                    "path": ap, "scene": scene, "t": 0, "c": 0, "z": z,
-                    "offset": h["data_offset"] + z * h["section_bytes"],
-                    "nbytes": h["section_bytes"],
-                    "y0": 0, "ny": h["ny"], "nx": h["nx"],
-                    "dtype": h["dtype"].str})
-        px = standardize(
-            plan_pixels(spark, plan, raw_plane_batches,
-                        "scene string, " + WINDOW_SCHEMA,
-                        nbytes=plane_bytes(plan)),
-            self._image_id)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+            plan += [{"path": ap, "scene": scene, "z": z,
+                      "offset": h["data_offset"] + z * h["section_bytes"],
+                      "nbytes": h["section_bytes"],
+                      "dtype": h["dtype"].str} for z in range(h["nz"])]
+        return Plan(plan, scenes, channels)

@@ -16,47 +16,8 @@ machinery plus the public SourceLens classification
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from bioio_spark.sources.planned import (PlannedReader, plan_pixels,
-                                         tile_bytes)
-from bioio_spark.sources.svs_image import _decode_batches
-
-
-def _chunk_plan(path: str):
-    from bioio_spark.formats.ndpi import read_ndpi_catalog
-
-    cat = read_ndpi_catalog(path)
-    ap = os.path.abspath(path)
-    plan = []
-
-    def add_page(pg, scene, level):
-        for ch in pg["chunks"]:
-            plan.append({
-                "path": ap, "scene": scene, "res_level": level,
-                "offset": ch["offset"], "nbytes": ch["nbytes"],
-                "y0": ch["y0"], "x0": ch["x0"],
-                "ch": ch["h"], "cw": ch["w"],
-                "page_h": pg["h"], "page_w": pg["w"],
-                "dtype": pg["dtype"], "comp": pg["comp"],
-                "spp": pg["spp"],
-                "jpeg_tables": pg.get("jpeg_tables"),
-            })
-
-    for lv, pg in enumerate(cat["levels"]):
-        add_page(pg, "Image:0", lv)
-    si = 1
-    extras = []
-    for kind in ("macro", "map"):
-        pg = cat[kind]
-        if pg is not None:
-            add_page(pg, f"Image:{si}", 0)
-            extras.append((kind, pg, f"Image:{si}"))
-            si += 1
-    return cat, extras, plan
+from bioio_spark.sources.planned import Plan, PlannedReader
+from bioio_spark.sources.svs_image import decode_chunks, page_rows
 
 
 class NdpiImageReader(PlannedReader):
@@ -65,6 +26,7 @@ class NdpiImageReader(PlannedReader):
     EXTENSIONS = (".ndpi",)
     DIM_ORDER_ERROR = ("NDPI is a 2D (optionally RGB) slide pyramid; "
                        "dim_order is fixed")
+    decode_tiles = staticmethod(decode_chunks)
 
     @staticmethod
     def catalog(path: str) -> dict:
@@ -72,27 +34,26 @@ class NdpiImageReader(PlannedReader):
 
         return read_ndpi_catalog(path)
 
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat, extras, plan = _chunk_plan(self._path)
+        cat = self.catalog(self._path)
         pps = self._pps
         if pps is None and cat["um_per_px"]:
             pps = PhysicalPixelSizes(Z=None, Y=cat["um_per_px"],
                                      X=cat["um_per_px"])
-
-        scenes, channels = [], []
-
-        def add_scene(si, pg, res_levels, kind):
-            scene = f"Image:{si}"
-            spp = pg["spp"]
-            channels.extend(channel_rows(
+        # Image:0 is the pyramid; the macro and map pages follow
+        pages = [("slide", cat["levels"])] + [
+            (kind, [cat[kind]]) for kind in ("macro", "map")
+            if cat[kind] is not None]
+        scenes, channels, plan = [], [], []
+        for si, (kind, levels) in enumerate(pages):
+            scene, pg, spp = f"Image:{si}", levels[0], levels[0]["spp"]
+            channels += channel_rows(
                 self._image_id, scene,
-                resolve_channel_names(self._channel_names, 1, si)))
+                resolve_channel_names(self._channel_names, 1, si))
             scenes.append(scene_row(
                 self._image_id, scene, si, pg["dtype"],
                 dict(T=1, C=1, Z=1, Y=pg["h"], X=pg["w"],
@@ -100,23 +61,8 @@ class NdpiImageReader(PlannedReader):
                 dim_order="TCZYXS" if spp > 1 else "TCZYX",
                 pps=pps if si == 0 else None,
                 metadata=f"NDPI {kind} SourceLens={cat['source_lens']}",
-                res_levels=res_levels))
-
-        add_scene(0, cat["levels"][0],
-                  list(range(len(cat["levels"]))), "slide")
-        for kind, pg, scene in extras:
-            add_scene(int(scene.split(":")[1]), pg, [0], kind)
-
-        px = (plan_pixels(
-                  spark, plan, _decode_batches, nbytes=tile_bytes(plan),
-                  schema="scene string, res_level int, y int, x int, "
-                         "s int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  "res_level",
-                  F.lit(0).alias("t"), F.lit(0).alias("c"),
-                  F.lit(0).alias("z"), "y", "x",
-                  F.lit(-1).alias("m"), "s", "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+                res_levels=list(range(len(levels)))))
+            for lv, pg in enumerate(levels):
+                plan += page_rows(self._path, pg, scene=scene,
+                                  res_level=lv)
+        return Plan(plan, scenes, channels)

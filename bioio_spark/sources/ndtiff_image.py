@@ -14,61 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
-
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plan_pixels, plane_bytes,
-                                         raw_plane_batches, standardize, trim)
-
-
-def _plan(path: str, cat: dict) -> list[dict]:
-    rows = []
-    for e in cat["entries"]:
-        a = e["axes"]
-        rows.append({
-            "path": os.path.join(os.path.abspath(path), e["filename"]),
-            "scene": f"Image:{a.get('position', 0)}",
-            "t": a.get("time", 0), "c": a.get("channel", 0),
-            "z": a.get("z", 0),
-            "offset": e["offset"],
-            "nbytes": e["w"] * e["h"] * e["dtype"].itemsize,
-            "y0": 0, "ny": e["h"], "nx": e["w"],
-            "dtype": e["dtype"].str,
-        })
-    return rows
-
-
-def read_ndtiff_window(spark: SparkSession, path: str,
-                       t=None, c=None, z=None, y=None, x=None,
-                       scene: int = 0):
-    """Window-pruned NDTiff read: t/c/z prune whole index entries, the
-    y window narrows each surviving plane to its contiguous row range
-    (index offsets address raw rows), x trims via codegen filter."""
-    cat = NdtiffImageReader.catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    c0, c1 = norm_window(c, cat["size_c"])
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    key = f"Image:{scene}"
-    rows = []
-    for r in _plan(path, cat):
-        if r.pop("scene") != key:
-            continue
-        if not (t0 <= r["t"] < t1 and c0 <= r["c"] < c1
-                and z0 <= r["z"] < z1):
-            continue
-        row_bytes = r["nbytes"] // r["ny"]
-        rows.append({**r,
-                     "offset": r["offset"] + y0 * row_bytes,
-                     "nbytes": (y1 - y0) * row_bytes,
-                     "y0": y0, "ny": y1 - y0})
-    if not rows:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, rows, raw_plane_batches, WINDOW_SCHEMA,
-                            nbytes=plane_bytes(rows)),
-                x=(x0, x1))
+from bioio_spark.sources.planned import (Plan, PlannedReader, narrow_rows,
+                                         raw_tiles)
 
 
 class NdtiffImageReader(PlannedReader):
@@ -78,6 +25,8 @@ class NdtiffImageReader(PlannedReader):
     # NDTiff.index (probe-based routing, like the reference's
     # dir-shaped plugins)
     DIM_ORDER_ERROR = "NDTiff axes come from the index entries"
+    decode_tiles = staticmethod(raw_tiles)
+    narrow = staticmethod(narrow_rows)
 
     @classmethod
     def routes(cls, image: str) -> bool:
@@ -91,13 +40,11 @@ class NdtiffImageReader(PlannedReader):
 
         return read_ndtiff_catalog(path)
 
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
 
         cat = self.catalog(self._path)
-        pps = self._pps
         scenes, channels = [], []
         for si in range(cat["n_positions"]):
             scene = f"Image:{si}"
@@ -109,12 +56,16 @@ class NdtiffImageReader(PlannedReader):
                 self._image_id, scene, si, cat["dtype"],
                 dict(T=cat["size_t"], C=cat["size_c"], Z=cat["size_z"],
                      Y=cat["size_y"], X=cat["size_x"]),
-                pps=pps, metadata="NDTiff (Micro-Manager NDTiffStorage)"))
-        plan = _plan(self._path, cat)
-        px = standardize(
-            plan_pixels(spark, plan, raw_plane_batches,
-                        "scene string, " + WINDOW_SCHEMA,
-                        nbytes=plane_bytes(plan)),
-            self._image_id)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+                pps=self._pps,
+                metadata="NDTiff (Micro-Manager NDTiffStorage)"))
+        root = os.path.abspath(self._path)
+        plan = [{"path": os.path.join(root, e["filename"]),
+                 "scene": f"Image:{e['axes'].get('position', 0)}",
+                 "t": e["axes"].get("time", 0),
+                 "c": e["axes"].get("channel", 0),
+                 "z": e["axes"].get("z", 0),
+                 "offset": e["offset"],
+                 "nbytes": e["w"] * e["h"] * e["dtype"].itemsize,
+                 "h": e["h"], "w": e["w"], "dtype": e["dtype"].str}
+                for e in cat["entries"]]
+        return Plan(plan, scenes, channels)

@@ -16,58 +16,14 @@ holding the OIF payload (bioio_spark.formats.{cfb,oib}).
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import SparkSession
-
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels, plane_frame,
-                                         scene_bytes, standardize, trim)
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
 def _read_extents(path: str, offsets, lengths) -> bytes:
     from bioio_spark.fsio import ranged_read
 
     return ranged_read(path, offsets, lengths)
-
-
-def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from bioio_spark.formats.tiff import decode_tiff
-
-    for pdf in it:
-        for r in pdf.itertuples():
-            planes, _desc = decode_tiff(
-                _read_extents(r.path, r.offsets, r.lengths))
-            yield plane_frame(planes[0], r.t, r.c, r.z)
-
-
-def read_oib_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned OIB read: t/c/z prune whole plane STREAMS
-    (driver-side grid arithmetic over the CFB catalog); the y/x trim
-    is a codegen filter after the per-plane decode (plane streams are
-    whole TIFFs, so the stream is the read granularity)."""
-    cat = OibImageReader.catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    c0, c1 = norm_window(c, cat["size_c"])
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    ap = os.path.abspath(path)
-    plan = [{"path": ap, "t": ti, "c": ci, "z": zi,
-             "offsets": [o for o, _ in ext],
-             "lengths": [n for _, n in ext]}
-            for (ti, ci, zi), ext in sorted(cat["planes"].items())
-            if t0 <= ti < t1 and c0 <= ci < c1 and z0 <= zi < z1]
-    if not plan:
-        return empty_window(spark)
-    # plane streams are uncompressed TIFFs: stored bytes ~ decoded
-    return trim(plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
-                            nbytes=sum(map(sum, (r["lengths"]
-                                                 for r in plan)))),
-                y=(y0, y1), x=(x0, x1))
 
 
 class OibImageReader(PlannedReader):
@@ -82,18 +38,21 @@ class OibImageReader(PlannedReader):
 
         return read_oib_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_oib_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Each plane stream (a whole TIFF) read from its sector
+        extents and decoded."""
+        from bioio_spark.formats.tiff import decode_tiff
 
-    def to_dataset(self, spark: SparkSession):
+        for r in rows.itertuples(index=False):
+            planes, _desc = decode_tiff(
+                _read_extents(r.path, r.offsets, r.lengths))
+            yield r, planes[0]
+
+    def plan(self) -> Plan:
         from bioio_spark.formats.tiff import decode_tiff
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -108,13 +67,15 @@ class OibImageReader(PlannedReader):
                 Z=cat["z_step_um"] or None,
                 Y=cat["um_per_px"] or None,
                 X=cat["um_per_px"] or None)
-        # dtype from one plane stream's first KB (IFD-only decode would
-        # need extents anyway; planes are small single-page TIFFs)
-        first = next(iter(sorted(cat["planes"].items())))[1]
-        head = _read_extents(os.path.abspath(self._path),
-                             [o for o, _ in first],
-                             [n for _, n in first])
-        pl0, _ = decode_tiff(head)
+        ap = os.path.abspath(self._path)
+        plan = [{"path": ap, "scene": scene, "t": t, "c": c, "z": z,
+                 "offsets": [o for o, _ in ext],
+                 "lengths": [n for _, n in ext]}
+                for (t, c, z), ext in sorted(cat["planes"].items())]
+        # dtype from the first plane stream (planes are small
+        # single-page TIFFs)
+        pl0, _ = decode_tiff(_read_extents(ap, plan[0]["offsets"],
+                                           plan[0]["lengths"]))
         if pl0[0].shape != (cat["size_y"], cat["size_x"]):
             raise ValueError(
                 f"{self._path}: plane streams are "
@@ -126,14 +87,4 @@ class OibImageReader(PlannedReader):
                  Y=cat["size_y"], X=cat["size_x"]),
             pps=pps, time_interval=cat["time_interval"],
             metadata="OIB FLUOVIEW (MS-CFB container)")]
-        ap = os.path.abspath(self._path)
-        plan = [{"path": ap, "t": t, "c": c, "z": z,
-                 "offsets": [o for o, _ in ext],
-                 "lengths": [n for _, n in ext]}
-                for (t, c, z), ext in sorted(cat["planes"].items())]
-        px = standardize(
-            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
-                        nbytes=scene_bytes(scenes)),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        return Plan(plan, scenes, channels)

@@ -7,82 +7,19 @@ directory layout (bioio_spark.formats.oif) and the in-repo TIFF codec.
   listing — axis sizes, dye-name channels, µm conversions, the time
   interval. No pixel IO (D8 contract).
 - **Pixels (executor-side)**: one plan row per plane TIFF; each task
-  decodes exactly its file (the TIFF-glob lever) — zero shuffle,
-  plane-count parallelism.
+  reads exactly its file (the TIFF-glob lever) — zero shuffle,
+  plane-count parallelism. A window narrows a row to its image rows,
+  and an uncompressed plane then reads only those rows' bytes.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
 
-from bioio_spark.fsio import read_bytes
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels, plane_bytes,
-                                         plane_frame, raw_plane_batches,
-                                         scene_bytes, standardize, trim)
-
-
-def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from bioio_spark.formats.tiff import decode_tiff
-
-    for pdf in it:
-        for r in pdf.itertuples():
-            planes, _desc = decode_tiff(read_bytes(r.path))
-            yield plane_frame(planes[0], r.t, r.c, r.z)
-
-
-def read_oif_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned OIF read: t/c/z selectors prune whole plane FILES
-    (driver-side grid arithmetic); within each surviving file the
-    (y, x) window prunes strips via the shared seek-based TIFF
-    planning (uncompressed single-strip planes read as one row-range
-    GET). Residual trim is a codegen filter."""
-    from bioio_spark.formats.oif import read_oif_catalog
-    from bioio_spark.formats.tiff import iter_tiff_chunks
-
-    cat = read_oif_catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    c0, c1 = norm_window(c, cat["size_c"])
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    plan = []
-    for (ti, ci, zi), p in cat["planes"].items():
-        if not (t0 <= ti < t1 and c0 <= ci < c1 and z0 <= zi < z1):
-            continue
-        pg = iter_tiff_chunks(p)[0]
-        row_bytes = pg["w"] * np.dtype(pg["dtype"]).itemsize
-        for ch in pg["chunks"]:
-            ry0 = max(ch["y0"], y0)
-            ry1 = min(ch["y0"] + ch["h"], y1)
-            if ry0 >= ry1:
-                continue
-            if pg["comp"] == 1:
-                plan.append({
-                    "path": os.path.abspath(p), "t": ti, "c": ci,
-                    "z": zi,
-                    "offset": ch["offset"]
-                    + (ry0 - ch["y0"]) * row_bytes,
-                    "nbytes": (ry1 - ry0) * row_bytes,
-                    "y0": ry0, "ny": ry1 - ry0, "nx": pg["w"],
-                    "dtype": pg["dtype"],
-                })
-            else:
-                raise ValueError(
-                    f"{p}: compressed OIF planes not supported on the "
-                    f"windowed path; use the full reader")
-    if not plan:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
-                            nbytes=plane_bytes(plan)),
-                x=(x0, x1))
+from bioio_spark.fsio import read_bytes, read_range
+from bioio_spark.sources.planned import Plan, PlannedReader, narrow_rows
 
 
 class OifImageReader(PlannedReader):
@@ -90,6 +27,7 @@ class OifImageReader(PlannedReader):
 
     EXTENSIONS = (".oif",)
     DIM_ORDER_ERROR = "OIF axis sizes come from the INI's Axis sections"
+    narrow = staticmethod(narrow_rows)
 
     @staticmethod
     def catalog(path: str) -> dict:
@@ -97,18 +35,35 @@ class OifImageReader(PlannedReader):
 
         return read_oif_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_oif_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Image rows ``y0 .. y0 + h`` of each plane TIFF: an
+        uncompressed plane seek-reads just those rows of its strips, a
+        compressed one decodes whole."""
+        from bioio_spark.formats.tiff import decode_tiff, iter_tiff_chunks
 
-    def to_dataset(self, spark: SparkSession):
+        for r in rows.itertuples(index=False):
+            pg = iter_tiff_chunks(r.path)[0]
+            y1 = r.y0 + r.h
+            if pg["comp"] != 1:
+                planes, _desc = decode_tiff(read_bytes(r.path))
+                yield r, planes[0][r.y0:y1]
+                continue
+            row_bytes = pg["w"] * np.dtype(pg["dtype"]).itemsize
+            parts = []
+            for ch in pg["chunks"]:
+                lo, hi = max(ch["y0"], r.y0), min(ch["y0"] + ch["h"], y1)
+                if lo < hi:
+                    parts.append(read_range(
+                        r.path, ch["offset"] + (lo - ch["y0"]) * row_bytes,
+                        (hi - lo) * row_bytes))
+            yield r, np.frombuffer(b"".join(parts), np.dtype(
+                pg["dtype"])).reshape(r.h, pg["w"])
+
+    def plan(self) -> Plan:
         from bioio_spark.formats.tiff import iter_tiff_chunks
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -136,11 +91,7 @@ class OifImageReader(PlannedReader):
                  Y=cat["size_y"], X=cat["size_x"]),
             pps=pps, time_interval=cat["time_interval"],
             metadata="OIF FLUOVIEW")]
-        plan = [{"path": os.path.abspath(p), "t": t, "c": c, "z": z}
+        plan = [{"path": os.path.abspath(p), "scene": scene,
+                 "t": t, "c": c, "z": z}
                 for (t, c, z), p in sorted(cat["planes"].items())]
-        px = standardize(
-            plan_pixels(spark, plan, _plane_batches, WINDOW_SCHEMA,
-                        nbytes=scene_bytes(scenes)),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        return Plan(plan, scenes, channels)

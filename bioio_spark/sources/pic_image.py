@@ -14,44 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
-
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels, plane_bytes,
-                                         raw_plane_batches, standardize, trim)
-
-
-def read_pic_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned PIC read: the plane axis (T or Z per AXIS_4)
-    prunes whole planes; the y window narrows each plane to its
-    contiguous row byte range; x trims via codegen filter."""
-    from bioio_spark.formats.pic import HEADER_SIZE
-
-    cat = PicImageReader.catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    norm_window(c, 1)
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    row_bytes = cat["nx"] * cat["dtype"].itemsize
-    t_axis = cat["size_t"] > 1
-    lo, hi = (t0, t1) if t_axis else (z0, z1)
-    ap = os.path.abspath(path)
-    plan = [{"path": ap,
-             "t": p if t_axis else 0, "c": 0, "z": 0 if t_axis else p,
-             "offset": HEADER_SIZE + p * cat["section_bytes"]
-             + y0 * row_bytes,
-             "nbytes": (y1 - y0) * row_bytes,
-             "y0": y0, "ny": y1 - y0, "nx": cat["nx"],
-             "dtype": cat["dtype"].str}
-            for p in range(lo, hi)]
-    if not plan:
-        return empty_window(spark)
-    return trim(plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
-                            nbytes=plane_bytes(plan)),
-                x=(x0, x1))
+from bioio_spark.sources.planned import (Plan, PlannedReader, narrow_rows,
+                                         raw_tiles)
 
 
 class PicImageReader(PlannedReader):
@@ -59,6 +23,8 @@ class PicImageReader(PlannedReader):
 
     EXTENSIONS = (".pic",)
     DIM_ORDER_ERROR = "PIC plane axis comes from the AXIS_4 note"
+    decode_tiles = staticmethod(raw_tiles)
+    narrow = staticmethod(narrow_rows)
 
     @staticmethod
     def catalog(path: str) -> dict:
@@ -66,18 +32,10 @@ class PicImageReader(PlannedReader):
 
         return read_pic_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_pic_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
-
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.formats.pic import HEADER_SIZE
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -98,18 +56,11 @@ class PicImageReader(PlannedReader):
             pps=pps, time_interval=cat["time_interval"],
             metadata=f"Bio-Rad PIC: {cat['name']}" if cat["name"]
             else "Bio-Rad PIC")]
-        t_axis = cat["size_t"] > 1
+        axis = "t" if cat["size_t"] > 1 else "z"
         ap = os.path.abspath(self._path)
-        plan = [{"path": ap,
-                 "t": p if t_axis else 0, "c": 0, "z": 0 if t_axis else p,
+        plan = [{"path": ap, "scene": scene, axis: p,
                  "offset": HEADER_SIZE + p * cat["section_bytes"],
                  "nbytes": cat["section_bytes"],
-                 "y0": 0, "ny": cat["ny"], "nx": cat["nx"],
                  "dtype": cat["dtype"].str}
                 for p in range(cat["npic"])]
-        px = standardize(
-            plan_pixels(spark, plan, raw_plane_batches, WINDOW_SCHEMA,
-                        nbytes=plane_bytes(plan)),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        return Plan(plan, scenes, channels)

@@ -1,40 +1,48 @@
 """The plane-planned reader core: what every seek-reading format module
 shares, kept in one place so each ``*_image.py`` holds only its catalog,
-its per-chunk decode and its metadata (the reference's split between
+its plan, its decode and its metadata (the reference's split between
 ``BioImage`` routing and a plugin's ``_read_delayed``, ref
 array_like_reader.py:442-448).
 
-A planned reader builds a small driver-side plan — one row per plane,
-strip, chunk or frame, from a metadata-only catalog walk — distributes
-it as a DataFrame, and decodes each row's byte range inside
-``mapInPandas``. The helpers here are the pieces of that pattern:
+A planned reader gives one ``plan()``: a ``Plan`` whose rows are the
+file's planes, strips, chunks or frames, each carrying its extent
+``(scene, res_level, t, c, z, y0, h, x0, w)`` — an interleaved frame's
+row carries the channel range ``c .. c + nc``, a z-chunk's row the
+planes ``z .. z + nz``, a mosaic tile's row its tile ``m`` — beside the
+catalogs the same metadata walk produced. It also gives one
+``decode_tiles`` batch function, plan rows -> ``(row, tile)`` pairs of
+native-dtype arrays: ``(h, w)``, ``(h, w, k)`` with ``k`` the row's
+``nc`` channels or the scene's S samples, and a leading ``nz`` axis on a
+z-chunk. A reader that can narrow one row's read to a row window sets
+the optional ``narrow`` hook (``narrow_rows`` for the raw-plane family).
+``PlannedReader`` derives every view from that one plan, each a
+``LocalTableScan`` of plan rows decoded by ``mapInPandas`` with no
+exchange:
 
-- ``norm_window``: a selector to half-open ``[start, stop)`` bounds;
-- ``plane_frame`` / ``payload_frame``: one decoded YX(S) / YX plane
-  as long-form pixel rows / as one planes-layout payload row;
-- ``raw_plane_batches``: the decode loop of plans of uncompressed
-  planes;
-- ``plan_pixels``: plan rows -> an Arrow-built ``LocalTableScan``
-  decoded by ``mapInPandas``, with no exchange, in as many tasks as
-  Spark's file-split rule gives for the plan's decoded bytes (which
-  ``plane_bytes`` / ``tile_bytes`` / ``scene_bytes`` count);
-- ``grid_tile`` / ``with_tile`` / ``tile_of``: the regular YX tile
-  grid a planes-layout read declares on its ``values`` column;
-- ``standardize``: a decoded frame -> the ``PIXEL_COLUMNS`` layout;
-- ``trim``: the residual codegen filter on window bounds;
-- ``PlannedReader``: the shared reader surface. A reader that can push
-  a window or a planes read down to its source overrides
-  ``read_window`` / ``read_planes``; ``None`` means "not for this
-  image", and ``BioImage`` falls back to the standardized pixel frame.
+- ``to_dataset``: the pixels are the decoded tiles exploded to
+  ``PIXEL_COLUMNS`` rows in the task that decoded them;
+- ``read_window``: plan rows of the current scene and level pruned by
+  overlap with the selectors, narrowed through the hook, decoded, and
+  sliced to the window in numpy before the explode;
+- ``read_planes``: the decoded tiles as ``PLANES_SCHEMA`` payload rows,
+  with the plan's grid declared through ``with_tile``.
+
+The other helpers here serve the TIFF, Zarr and raster readers too:
+``norm_window`` (a selector to ``[start, stop)``), ``plane_frame`` (one
+plane as long-form rows), ``plan_pixels`` (plan rows -> decoded frame,
+in as many tasks as Spark's file-split rule gives for the decoded
+bytes), ``grid_tile`` / ``with_tile`` / ``tile_of`` (the tile grid a
+planes read declares), ``standardize`` and ``trim``.
 """
 
 from __future__ import annotations
 
 import functools
 import glob
-import math
 import operator
 import os
+from dataclasses import dataclass
+from typing import Optional
 
 import numpy as np
 import pandas as pd
@@ -47,6 +55,13 @@ from bioio_spark.sources.array_like import PIXEL_COLUMNS
 WINDOW_SCHEMA = "t int, c int, z int, y int, x int, value double"
 PLANES_SCHEMA = ("t int, c int, z int, y0 int, x0 int, h int, w int, "
                  "values array<double>")
+# decoded tiles exploded to pixels; si indexes the plan's scenes
+TILE_SCHEMA = ("si int, res_level int, t int, c int, z int, y int, "
+               "x int, m int, s int, value double")
+# extent columns a plan row may leave out, with their defaults (h and
+# w default to the scene's size); oy/ox place a mosaic tile's window
+EXTENT = {"res_level": 0, "t": 0, "c": 0, "nc": 1, "z": 0, "nz": 1,
+          "y0": 0, "x0": 0, "m": -1, "oy": 0, "ox": 0}
 
 
 def norm_window(sel, size: int) -> tuple[int, int]:
@@ -95,36 +110,6 @@ def plane_frame(plane: np.ndarray, t, c, z, y0: int = 0, x0: int = 0,
     return pd.DataFrame(cols)
 
 
-def raw_plane_batches(it):
-    """``mapInPandas`` body for plans of uncompressed planes (rows: path,
-    offset, nbytes, dtype, t, c, z, y0, ny, nx): seek-read each row's
-    byte range as one ``plane_frame``, carrying the row's ``scene`` when
-    the plan has that column."""
-    for pdf in it:
-        scene = "scene" in pdf.columns
-        for r in pdf.itertuples():
-            plane = np.frombuffer(
-                read_range(r.path, r.offset, r.nbytes),
-                dtype=np.dtype(r.dtype), count=r.ny * r.nx)
-            yield plane_frame(plane.reshape(r.ny, r.nx), r.t, r.c, r.z,
-                              y0=r.y0,
-                              **({"scene": r.scene} if scene else {}))
-
-
-def payload_frame(plane: np.ndarray, t, c, z, y0: int = 0,
-                  x0: int = 0, **const) -> pd.DataFrame:
-    """One planes-layout row (``PLANES_SCHEMA``) carrying a YX plane or
-    tile as a dense row-major ``values`` array; ``const`` adds int
-    columns (e.g. ``m=``)."""
-    h, w = plane.shape
-    return pd.DataFrame({
-        "t": [int(t)], "c": [int(c)], "z": [int(z)],
-        **{k: [int(v)] for k, v in const.items()},
-        "y0": [int(y0)], "x0": [int(x0)], "h": [int(h)], "w": [int(w)],
-        "values": [plane.ravel().astype(np.float64)],
-    })
-
-
 def plan_width(spark: SparkSession, n: int) -> int:
     """Partitions for an n-row plan: one row per task up to the
     session's default parallelism."""
@@ -143,10 +128,10 @@ def split_tasks(spark: SparkSession, nbytes: int) -> int:
     return max(1, -(-int(nbytes) // max(1, int(per_task))))
 
 
-def plan_pixels(spark: SparkSession, rows: list, batches, schema: str, *,
+def plan_pixels(spark: SparkSession, rows, batches, schema: str, *,
                 nbytes: int, row_schema=None) -> DataFrame:
-    """Decode the plan ``rows`` (dicts, or tuples named by ``row_schema``)
-    with ``mapInPandas(batches, schema)``.
+    """Decode the plan ``rows`` (a pandas frame, dicts, or tuples named
+    by ``row_schema``) with ``mapInPandas(batches, schema)``.
 
     The plan goes through pandas and Arrow, so it is a ``LocalTableScan``
     with no exchange and no Python-RDD scan. ``nbytes``, the plan's
@@ -162,27 +147,6 @@ def plan_pixels(spark: SparkSession, rows: list, batches, schema: str, *,
                                  row_schema)
     return plan.coalesce(split_tasks(spark, nbytes)).mapInPandas(
         batches, schema=schema)
-
-
-def plane_bytes(plan) -> int:
-    """Decoded size of a plan whose rows carry ``ny`` x ``nx`` planes or
-    strips of ``dtype``."""
-    return sum(int(r["ny"]) * int(r["nx"]) * np.dtype(r["dtype"]).itemsize
-               for r in plan)
-
-
-def tile_bytes(plan) -> int:
-    """Decoded size of a plan whose rows carry ``ch`` x ``cw`` chunks of
-    ``spp`` samples of ``dtype``."""
-    return sum(int(r["ch"]) * int(r["cw"]) * int(r["spp"])
-               * np.dtype(r["dtype"]).itemsize for r in plan)
-
-
-def scene_bytes(scenes) -> int:
-    """Decoded size of a full read of the ``scene_row`` catalogs
-    ``scenes``."""
-    return sum(math.prod(s[f"size_{d}"] or 1 for d in "tczyxms")
-               * np.dtype(s["dtype"]).itemsize for s in scenes)
 
 
 def grid_tile(boxes) -> tuple[int, int] | None:
@@ -244,15 +208,133 @@ def trim(px: DataFrame, **bounds) -> DataFrame:
         for name, (lo, hi) in bounds.items())))
 
 
-def plain_scene(img) -> bool:
-    """True when ``img`` (a BioImage) reads its only scene at level 0 —
-    the case every single-resolution window planner handles."""
-    return len(img.scenes) == 1 and img.current_resolution_level == 0
-
-
 def empty_window(spark: SparkSession) -> DataFrame:
     """The window frame of a plan with no rows."""
     return spark.createDataFrame([], WINDOW_SCHEMA)
+
+
+# -- the raw-plane family: rows of contiguous YX(C) rows at a byte offset
+
+
+def narrow_rows(rows: pd.DataFrame, lo, hi, where=True) -> pd.DataFrame:
+    """The ``narrow`` hook of the raw-plane family: each row (where
+    ``where`` holds) shrinks to image rows ``[lo, hi)`` of its extent.
+    A row with a byte range (``offset``, ``nbytes`` of ``h`` contiguous
+    image rows) narrows it to those rows' bytes; a row without one keeps
+    ``y0``/``h`` for its decode to seek by."""
+    y0 = np.where(where, np.maximum(rows["y0"], lo), rows["y0"])
+    y1 = np.where(where, np.minimum(rows["y0"] + rows["h"], hi),
+                  rows["y0"] + rows["h"])
+    out = rows.assign(y0=y0, h=y1 - y0)
+    if "offset" in rows:
+        step = rows["nbytes"] // rows["h"]
+        out = out.assign(offset=rows["offset"] + (y0 - rows["y0"]) * step,
+                         nbytes=np.where(where, (y1 - y0) * step,
+                                         rows["nbytes"]))
+    return out
+
+
+def raw_tile(r, data: bytes) -> np.ndarray:
+    """``h`` rows of ``w`` (x ``nc`` interleaved channels) ``dtype``
+    samples from a plan row's bytes."""
+    a = np.frombuffer(data, dtype=np.dtype(r.dtype),
+                      count=r.h * r.w * r.nc)
+    return a.reshape(r.h, r.w, r.nc) if r.nc > 1 else a.reshape(r.h, r.w)
+
+
+def raw_tiles(rows: pd.DataFrame):
+    """``decode_tiles`` of the raw-plane family: seek-read each row's
+    ``offset``/``nbytes`` range."""
+    for r in rows.itertuples(index=False):
+        yield r, raw_tile(r, read_range(r.path, r.offset, r.nbytes))
+
+
+# -- the one plan and the views derived from it
+
+
+@dataclass
+class Plan:
+    """A planned reader's rows and the catalogs of the same metadata
+    walk: ``scene_row`` / ``channel_rows`` dicts and the mosaic tiles
+    table (``scene, m, y_off, x_off``) or None."""
+
+    rows: list
+    scenes: list
+    channels: list
+    tiles: Optional[pd.DataFrame] = None
+
+
+def _blocks(r, tile) -> np.ndarray:
+    """A decoded tile as ``(nz, h, w, k)``."""
+    a = np.asarray(tile)
+    if r.nz == 1:
+        a = a[None]
+    return a[..., None] if a.ndim == 3 else a
+
+
+def _tile_frame(r, a, z0, c0, y0, x0) -> pd.DataFrame:
+    """``TILE_SCHEMA`` rows of an ``(nz, h, w, k)`` block whose first
+    plane, channel, row and column sit at ``(z0, c0, y0, x0)``; ``k`` is
+    channels on a row with ``nc > 1``, else samples (S)."""
+    nz, h, w, k = a.shape
+    n = a.size
+    kk = np.tile(np.arange(k, dtype=np.int32), nz * h * w)
+    chan = r.nc > 1
+    return pd.DataFrame({
+        "si": np.full(n, r.si, np.int32),
+        "res_level": np.full(n, r.res_level, np.int32),
+        "t": np.full(n, r.t, np.int32),
+        "c": kk + np.int32(c0) if chan else np.full(n, c0, np.int32),
+        "z": np.repeat(np.arange(z0, z0 + nz, dtype=np.int32), h * w * k),
+        "y": np.tile(np.repeat(np.arange(y0, y0 + h, dtype=np.int32),
+                               w * k), nz),
+        "x": np.tile(np.repeat(np.arange(x0, x0 + w, dtype=np.int32), k),
+                     nz * h),
+        "m": np.full(n, r.m, np.int32),
+        "s": kk if k > 1 and not chan else np.full(n, -1, np.int32),
+        "value": a.ravel().astype(np.float64),
+    })
+
+
+def _payload_frame(r, a, z0, c0, y0, x0) -> pd.DataFrame:
+    """``PLANES_SCHEMA`` rows, one per plane and channel of a block."""
+    nz, h, w, k = a.shape
+    idx = [(z, ch) for z in range(nz) for ch in range(k)]
+    return pd.DataFrame({
+        "t": [int(r.t)] * len(idx),
+        "c": [int(c0) + ch for _z, ch in idx],
+        "z": [int(z0) + z for z, _ch in idx],
+        "y0": [int(y0)] * len(idx), "x0": [int(x0)] * len(idx),
+        "h": [h] * len(idx), "w": [w] * len(idx),
+        "values": [a[z, :, :, ch].ravel().astype(np.float64)
+                   for z, ch in idx],
+    })
+
+
+def _tile_batches(decode, frame, window=None):
+    """``mapInPandas`` body: decode each batch of plan rows and emit each
+    tile through ``frame``, first sliced to ``window`` (``{dim: (lo,
+    hi)}`` in scene coordinates) when one is given."""
+    def batches(it):
+        for pdf in it:
+            for r, tile in decode(pdf):
+                a = _blocks(r, tile)
+                z0, c0 = r.z, r.c
+                y0, x0 = r.y0 + r.oy, r.x0 + r.ox
+                if window is not None:
+                    (zl, zh), (yl, yh), (xl, xh) = (
+                        window["z"], window["y"], window["x"])
+                    a = a[max(zl - z0, 0):max(zh - z0, 0),
+                          max(yl - y0, 0):max(yh - y0, 0),
+                          max(xl - x0, 0):max(xh - x0, 0)]
+                    if r.nc > 1:
+                        cl, ch = window["c"]
+                        a = a[..., max(cl - c0, 0):max(ch - c0, 0)]
+                        c0 = max(c0, cl)
+                    z0, y0, x0 = max(z0, zl), max(y0, yl), max(x0, xl)
+                if a.size:
+                    yield frame(r, a, z0, c0, y0, x0)
+    return batches
 
 
 class PlannedReader:
@@ -260,13 +342,17 @@ class PlannedReader:
 
     A subclass sets ``EXTENSIONS`` (the suffixes it registers and
     routes on), ``DIM_ORDER_ERROR`` (why ``dim_order`` is not accepted)
-    and ``catalog`` (its metadata-only probe), and implements
-    ``to_dataset``. ``is_supported_image`` is ``routes`` (the suffix
-    check) and then a successful ``catalog``. Readers that can prune at
-    the source override ``read_window`` / ``read_planes``."""
+    and ``catalog`` (its metadata-only probe). A planned reader gives
+    ``plan`` and ``decode_tiles`` (and ``narrow`` where it can narrow a
+    row's read), and ``to_dataset``, ``read_window`` and
+    ``read_planes`` follow from them; a reader whose full read is a
+    file scan, not a plan, overrides those instead.
+    ``is_supported_image`` is ``routes`` (the suffix check) and then a
+    successful ``catalog``."""
 
     EXTENSIONS: tuple[str, ...] = ()
     DIM_ORDER_ERROR = "dim_order is fixed by the file format"
+    narrow = None
 
     def __init__(self, image: str, dim_order=None, channel_names=None,
                  physical_pixel_sizes=None, image_id: str = "img",
@@ -277,6 +363,7 @@ class PlannedReader:
         self._image_id = image_id
         self._channel_names = channel_names
         self._pps = physical_pixel_sizes
+        self._plan: Optional[Plan] = None
 
     @classmethod
     def paths(cls, image: str) -> list[str]:
@@ -312,14 +399,113 @@ class PlannedReader:
             # catalog walk fails means "not this reader", never an error
             return False
 
+    def plan(self) -> Plan:
+        """The image's one plan, from a metadata-only walk."""
+        raise NotImplementedError
+
+    @staticmethod
+    def decode_tiles(rows: pd.DataFrame):
+        """A batch of plan rows -> ``(row, tile)`` pairs."""
+        raise NotImplementedError
+
+    def _decoded(self, spark, rows: pd.DataFrame, frame, schema,
+                 window=None) -> DataFrame:
+        """``rows`` decoded through ``frame`` in ``split_tasks`` tasks
+        for their decoded bytes."""
+        nbytes = (rows["h"] * rows["w"] * rows["nc"] * rows["nz"]
+                  * rows["scene"].map(self._sample_bytes)).sum()
+        return plan_pixels(spark, rows, _tile_batches(
+            self.decode_tiles, frame, window), schema, nbytes=int(nbytes))
+
+    def to_dataset(self, spark: SparkSession):
+        from bioio_spark.sources.array_like import ImageDataset
+
+        plan = self._plan = self.plan()
+        cat = {s["scene"]: s for s in plan.scenes}
+        rows = pd.DataFrame(plan.rows)
+        for col, default in EXTENT.items():
+            if col not in rows:
+                rows[col] = default
+        for col, size in (("h", "size_y"), ("w", "size_x")):
+            if col not in rows:
+                rows[col] = [cat[s][size] for s in rows["scene"]]
+        rows["si"] = rows["scene"].map({s: i for i, s in enumerate(cat)})
+        self._rows = rows
+        self._sample_bytes = {
+            s: np.dtype(r["dtype"]).itemsize * (r["size_s"] or 1)
+            for s, r in cat.items()}
+        names = list(cat)
+        scene = (F.lit(names[0]) if len(names) == 1 else F.element_at(
+            F.array(*map(F.lit, names)), F.col("si") + 1))
+        px = self._decoded(spark, rows, _tile_frame, TILE_SCHEMA).select(
+            F.lit(self._image_id).alias("image_id"),
+            scene.alias("scene"), *PIXEL_COLUMNS[2:])
+        return ImageDataset(px, plan.scenes, plan.channels,
+                            tiles=plan.tiles)
+
+    def _scene_rows(self, img) -> Optional[pd.DataFrame]:
+        """The plan rows of ``img``'s current scene and level, placed in
+        its standardized frame — or None where they can't be: a mosaic
+        left unstitched, at a level > 0, or with overlapping tiles
+        (the stitch picks one pixel there, the plan holds both)."""
+        if self._plan is None:
+            return None
+        rows = self._rows[
+            (self._rows["scene"] == img.current_scene)
+            & (self._rows["res_level"] == img.current_resolution_level)]
+        if not (rows["m"] >= 0).any():
+            return rows
+        tiles = self._plan.tiles
+        if ("M" in img.dims.order or img.current_resolution_level
+                or tiles is None):
+            return None
+        tiles = tiles[tiles["scene"] == img.current_scene]
+        cat = next(s for s in self._plan.scenes
+                   if s["scene"] == img.current_scene)
+        y, x = tiles["y_off"].to_numpy(), tiles["x_off"].to_numpy()
+        if ((abs(y[:, None] - y) < cat["size_y"])
+                & (abs(x[:, None] - x) < cat["size_x"])).sum() > len(y):
+            return None
+        off = tiles.set_index("m")
+        return rows.assign(oy=rows["m"].map(off["y_off"]).astype(int),
+                           ox=rows["m"].map(off["x_off"]).astype(int))
+
     def read_window(self, spark: SparkSession, img, t=None, c=None,
                     z=None, y=None, x=None) -> DataFrame | None:
-        """The ``(t, c, z, y, x, value)`` rows of a window of ``img``'s
-        current scene and level, read from the source — or None when
-        this reader can't prune this image at the source."""
-        return None
+        """The ``(t, c, z, y, x, m, s, value)`` rows of a window of
+        ``img``'s current scene and level, decoding only the plan rows
+        it overlaps — or None when the plan can't address it."""
+        rows = self._scene_rows(img)
+        if rows is None:
+            return None
+        dims = img.dims
+        window = {d: norm_window(sel, dims[d.upper()][0])
+                  for d, sel in zip("tczyx", (t, c, z, y, x))}
+        start = {"t": (rows["t"], 1), "c": (rows["c"], rows["nc"]),
+                 "z": (rows["z"], rows["nz"]),
+                 "y": (rows["y0"] + rows["oy"], rows["h"]),
+                 "x": (rows["x0"] + rows["ox"], rows["w"])}
+        keep = functools.reduce(operator.and_, (
+            (start[d][0] < hi) & (start[d][0] + start[d][1] > lo)
+            for d, (lo, hi) in window.items()))
+        rows = rows[keep]
+        if rows.empty:
+            return spark.createDataFrame([], TILE_SCHEMA).drop(
+                "si", "res_level")
+        if self.narrow is not None:
+            lo, hi = window["y"]
+            rows = self.narrow(rows, lo - rows["oy"], hi - rows["oy"])
+        return self._decoded(spark, rows, _tile_frame, TILE_SCHEMA,
+                             window).drop("si", "res_level")
 
     def read_planes(self, spark: SparkSession, img) -> DataFrame | None:
-        """``img``'s current scene in the planes layout
-        (``PLANES_SCHEMA``) straight from the source — or None."""
-        return None
+        """``img``'s current scene and level in the planes layout
+        (``PLANES_SCHEMA``), one row per decoded plane or tile — or None
+        for a scene the layout can't carry (S or M) or no plan."""
+        rows = self._scene_rows(img)
+        if rows is None or (rows["m"] >= 0).any() or \
+                "S" in img.dims.order:
+            return None
+        planes = self._decoded(spark, rows, _payload_frame, PLANES_SCHEMA)
+        return with_tile(planes, grid_tile(
+            zip(rows["y0"], rows["x0"], rows["h"], rows["w"])))

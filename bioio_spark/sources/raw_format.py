@@ -204,11 +204,13 @@ def register_raw_source(spark) -> None:
     edits don't propagate — on a real cluster this is exactly how a custom
     Python source is deployed.
     """
+    from pyspark.errors import AnalysisException
+
     spark.dataSource.register(BioioRawDataSource)
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
-        pass  # non-runtime-settable in some deployments; reads still work
+    except AnalysisException:
+        pass  # not modifiable in some deployments; reads still work
     sc = spark.sparkContext
     if not getattr(sc, "_bioio_pyfiles_shipped", False):
         import shutil

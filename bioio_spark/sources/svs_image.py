@@ -21,119 +21,52 @@ the reference can only reach through the bioio-bioformats Java bridge
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from bioio_spark.fsio import read_range
-from bioio_spark.sources.planned import (PlannedReader, norm_window,
-                                         plan_pixels, tile_bytes, trim)
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
-def _chunk_plan(path: str):
-    """(catalog, plan rows): one row per (scene, res_level, chunk)."""
-    from bioio_spark.formats.svs import read_svs_catalog
-
-    cat = read_svs_catalog(path)
+def page_rows(path: str, pg: dict, **extent) -> list[dict]:
+    """Plan rows of one TIFF page's tiles or strips (the slide readers'
+    shared chunk plan): ``extent`` places the page (scene, res_level, c
+    or z); ``h``/``w`` clip a chunk's stored ``ch`` x ``cw`` at the
+    page's edge."""
     ap = os.path.abspath(path)
-    plan = []
-
-    def add_page(pg, scene, level):
-        for ch in pg["chunks"]:
-            plan.append({
-                "path": ap, "scene": scene, "res_level": level,
-                "offset": ch["offset"], "nbytes": ch["nbytes"],
-                "y0": ch["y0"], "x0": ch["x0"],
-                "ch": ch["h"], "cw": ch["w"],
-                "page_h": pg["h"], "page_w": pg["w"],
-                "dtype": pg["dtype"], "comp": pg["comp"],
-                "spp": pg["spp"],
-                "jpeg_tables": pg.get("jpeg_tables"),
-            })
-
-    for lv, pg in enumerate(cat["levels"]):
-        add_page(pg, "Image:0", lv)
-    si = 1
-    extras = []
-    for kind in ("thumbnail", "label", "macro"):
-        pg = cat[kind]
-        if pg is not None:
-            add_page(pg, f"Image:{si}", 0)
-            extras.append((kind, pg, f"Image:{si}"))
-            si += 1
-    return cat, extras, plan
+    return [{"path": ap, **extent, "offset": ch["offset"],
+             "nbytes": ch["nbytes"], "y0": ch["y0"], "x0": ch["x0"],
+             "h": min(ch["h"], pg["h"] - ch["y0"]),
+             "w": min(ch["w"], pg["w"] - ch["x0"]),
+             "ch": ch["h"], "cw": ch["w"], "dtype": pg["dtype"],
+             "comp": pg["comp"], "spp": pg["spp"],
+             "jpeg_tables": pg.get("jpeg_tables")}
+            for ch in pg["chunks"]]
 
 
-def _decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Seek-read + decode one tile/strip per plan row; RGB samples land
-    in the s column (the imageio-tier convention)."""
+def decode_chunks(rows):
+    """``decode_tiles`` of the slide readers: seek-read and decode one
+    tile or strip per row (raw, TIFF-compressed or JPEG), gray or RGB
+    samples, cut to its extent."""
     from bioio_spark.formats.tiff import (_decode_jpeg_chunk,
                                           decompress_tiff_chunk)
 
-    for pdf in it:
-        for r in pdf.itertuples():
-            payload = read_range(r.path, r.offset, r.nbytes)
-            dt = np.dtype(r.dtype)
-            if r.comp == 7:
-                tables = (bytes(r.jpeg_tables)
-                          if r.jpeg_tables is not None else None)
-                block = _decode_jpeg_chunk(payload, tables)
-                if block.ndim == 2 and r.spp == 3:
-                    raise ValueError("RGB page decoded as gray")
-            else:
-                raw = decompress_tiff_chunk(payload, r.comp)
-                shape = (r.ch, r.cw, r.spp) if r.spp > 1 else \
-                    (r.ch, r.cw)
-                block = np.frombuffer(
-                    raw, dtype=dt,
-                    count=r.ch * r.cw * r.spp).reshape(shape)
-            # tiles are stored full-size; trim edge overhang
-            vh = min(r.ch, r.page_h - r.y0)
-            vw = min(r.cw, r.page_w - r.x0)
-            block = block[:vh, :vw]
-            y_n, x_n = block.shape[:2]
-            s_n = block.shape[2] if block.ndim == 3 else 1
-            s_col = (np.full(block.size, -1, np.int32) if s_n == 1 else
-                     np.tile(np.arange(s_n, dtype=np.int32), y_n * x_n))
-            yield pd.DataFrame({
-                "scene": r.scene,
-                "res_level": np.full(block.size, r.res_level, np.int32),
-                "y": np.repeat(np.arange(
-                    r.y0, r.y0 + y_n, dtype=np.int32), x_n * s_n),
-                "x": np.tile(np.repeat(np.arange(
-                    r.x0, r.x0 + x_n, dtype=np.int32), s_n), y_n),
-                "s": s_col,
-                "value": block.ravel().astype(np.float64),
-            })
-
-
-def read_svs_window(spark: SparkSession, path: str,
-                    y=None, x=None, level: int = 0):
-    """Tile-pruned windowed read of the pyramid scene: the (y, x)
-    window selects only intersecting tiles of the requested level —
-    reading a 10k x 10k region of a multi-GB slide touches
-    O(window/tile) bytes. Residual trim is a codegen filter."""
-    cat, _extras, plan = _chunk_plan(path)
-    if not (0 <= level < len(cat["levels"])):
-        raise IndexError(f"{path}: no pyramid level {level}")
-    pg = cat["levels"][level]
-    y0, y1 = norm_window(y, pg["h"])
-    x0, x1 = norm_window(x, pg["w"])
-    pruned = [r for r in plan
-              if r["scene"] == "Image:0" and r["res_level"] == level
-              and r["y0"] < y1 and r["y0"] + r["ch"] > y0
-              and r["x0"] < x1 and r["x0"] + r["cw"] > x0]
-    schema = ("scene string, res_level int, y int, x int, s int, "
-              "value double")
-    if not pruned:
-        return spark.createDataFrame([], schema)
-    px = plan_pixels(spark, pruned, _decode_batches, schema=schema,
-                     nbytes=tile_bytes(pruned))
-    return trim(px, y=(y0, y1), x=(x0, x1)).drop("scene", "res_level")
+    for r in rows.itertuples(index=False):
+        payload = read_range(r.path, r.offset, r.nbytes)
+        if r.comp == 7:
+            tables = (bytes(r.jpeg_tables)
+                      if r.jpeg_tables is not None else None)
+            block = _decode_jpeg_chunk(payload, tables)
+            if block.ndim == 2 and r.spp == 3:
+                raise ValueError("RGB page decoded as gray")
+        else:
+            raw = decompress_tiff_chunk(payload, r.comp)
+            shape = (r.ch, r.cw, r.spp) if r.spp > 1 else (r.ch, r.cw)
+            block = np.frombuffer(
+                raw, dtype=np.dtype(r.dtype),
+                count=r.ch * r.cw * r.spp).reshape(shape)
+        # tiles are stored full-size; trim edge overhang
+        yield r, block[:r.h, :r.w]
 
 
 class SvsImageReader(PlannedReader):
@@ -142,6 +75,7 @@ class SvsImageReader(PlannedReader):
     EXTENSIONS = (".svs",)
     DIM_ORDER_ERROR = ("SVS is a 2D (optionally RGB) slide pyramid; "
                        "dim_order is fixed")
+    decode_tiles = staticmethod(decode_chunks)
 
     @staticmethod
     def catalog(path: str) -> dict:
@@ -149,28 +83,27 @@ class SvsImageReader(PlannedReader):
 
         return read_svs_catalog(path)
 
-    def to_dataset(self, spark: SparkSession):
+    def plan(self) -> Plan:
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (PIXEL_COLUMNS,
-                                                    ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
-        cat, extras, plan = _chunk_plan(self._path)
+        cat = self.catalog(self._path)
         meta = cat["meta"]
         pps = self._pps
         mpp = meta.get("MPP")
         if pps is None and mpp:
             pps = PhysicalPixelSizes(Z=None, Y=float(mpp), X=float(mpp))
-
-        scenes, channels = [], []
-
-        def add_scene(si, pg, res_levels, kind):
-            scene = f"Image:{si}"
-            spp = pg["spp"]
-            channels.extend(channel_rows(
+        # Image:0 is the pyramid; the associated images follow
+        pages = [("slide", cat["levels"])] + [
+            (kind, [cat[kind]]) for kind in ("thumbnail", "label", "macro")
+            if cat[kind] is not None]
+        scenes, channels, plan = [], [], []
+        for si, (kind, levels) in enumerate(pages):
+            scene, pg, spp = f"Image:{si}", levels[0], levels[0]["spp"]
+            channels += channel_rows(
                 self._image_id, scene,
-                resolve_channel_names(self._channel_names, 1, si)))
+                resolve_channel_names(self._channel_names, 1, si))
             scenes.append(scene_row(
                 self._image_id, scene, si, pg["dtype"],
                 dict(T=1, C=1, Z=1, Y=pg["h"], X=pg["w"],
@@ -179,23 +112,8 @@ class SvsImageReader(PlannedReader):
                 pps=pps if si == 0 else None,
                 metadata=f"SVS {kind} AppMag={meta.get('AppMag')} "
                          f"MPP={mpp}",
-                res_levels=res_levels))
-
-        add_scene(0, cat["levels"][0],
-                  list(range(len(cat["levels"]))), "slide")
-        for kind, pg, scene in extras:
-            add_scene(int(scene.split(":")[1]), pg, [0], kind)
-
-        px = (plan_pixels(
-                  spark, plan, _decode_batches, nbytes=tile_bytes(plan),
-                  schema="scene string, res_level int, y int, x int, "
-                         "s int, value double")
-              .select(
-                  F.lit(self._image_id).alias("image_id"), "scene",
-                  "res_level",
-                  F.lit(0).alias("t"), F.lit(0).alias("c"),
-                  F.lit(0).alias("z"), "y", "x",
-                  F.lit(-1).alias("m"), "s", "value")
-              .select(*PIXEL_COLUMNS))
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+                res_levels=list(range(len(levels)))))
+            for lv, pg in enumerate(levels):
+                plan += page_rows(self._path, pg, scene=scene,
+                                  res_level=lv)
+        return Plan(plan, scenes, channels)

@@ -18,80 +18,10 @@ README.md:74 routes .zvi). A ZVI is an MS-CFB compound document whose
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
 
-from bioio_spark.sources.planned import (WINDOW_SCHEMA, PlannedReader,
-                                         empty_window, norm_window,
-                                         plain_scene, plan_pixels, plane_frame,
-                                         scene_bytes, standardize, trim)
-
-
-def _read_extents(path: str, offsets, lengths) -> bytes:
-    from bioio_spark.fsio import ranged_read
-
-    return ranged_read(path, offsets, lengths)
-
-
-def _plane_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for r in pdf.itertuples():
-            raw = _read_extents(r.path, r.offsets, r.lengths)
-            plane = np.frombuffer(raw, dtype=np.dtype(r.dtype))
-            h, w, samples = int(r.h), int(r.w), int(r.samples)
-            if samples > 1:
-                block = plane.reshape(h, w, samples)
-                for s in range(samples):
-                    # BGR(A) -> RGB(A), offset into the item's OWN
-                    # channel block (multi-channel BGR grids: item c
-                    # owns channels c*samples .. c*samples+samples-1)
-                    c = int(r.c) * samples + ((2 - s) if s < 3 else s)
-                    yield plane_frame(block[..., s], r.t, c, r.z)
-            else:
-                yield plane_frame(plane.reshape(h, w), r.t, r.c, r.z)
-
-
-def _plan_rows(path: str, cat: dict) -> list:
-    ap = os.path.abspath(path)
-    return [{"path": ap, "t": t, "c": c, "z": z,
-             "h": cat["size_y"], "w": cat["size_x"],
-             "samples": cat["samples"], "dtype": cat["dtype"],
-             "offsets": [o for o, _ in ext],
-             "lengths": [n for _, n in ext]}
-            for (t, c, z), ext in sorted(cat["planes"].items())]
-
-
-_PLAN_SCHEMA = ("path string, t int, c int, z int, h int, w int, "
-                "samples int, dtype string, offsets array<long>, "
-                "lengths array<long>")
-
-
-def read_zvi_window(spark: SparkSession, path: str,
-                    t=None, c=None, z=None, y=None, x=None):
-    """Window-pruned ZVI read: t/z (and c for gray items) prune whole
-    item payloads driver-side over the catalog grid; interleaved BGR
-    items are the read granularity for any requested channel, with the
-    c/y/x trim a codegen filter after the de-interleave."""
-    cat = ZviImageReader.catalog(path)
-    t0, t1 = norm_window(t, cat["size_t"])
-    c0, c1 = norm_window(c, cat["size_c"])
-    z0, z1 = norm_window(z, cat["size_z"])
-    y0, y1 = norm_window(y, cat["size_y"])
-    x0, x1 = norm_window(x, cat["size_x"])
-    rows = [r for r in _plan_rows(path, cat)
-            if t0 <= r["t"] < t1 and z0 <= r["z"] < z1
-            and (cat["bgr"] or c0 <= r["c"] < c1)]
-    if not rows:
-        return empty_window(spark)
-    px = plan_pixels(spark, rows, _plane_batches, WINDOW_SCHEMA,
-                     nbytes=sum(r["h"] * r["w"] * r["samples"]
-                                * np.dtype(r["dtype"]).itemsize
-                                for r in rows),
-                     row_schema=_PLAN_SCHEMA)
-    return trim(px, c=(c0, c1), y=(y0, y1), x=(x0, x1))
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
 class ZviImageReader(PlannedReader):
@@ -106,17 +36,24 @@ class ZviImageReader(PlannedReader):
 
         return read_zvi_catalog(path)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if plain_scene(img):
-            return read_zvi_window(spark, self._path,
-                                   t=t, c=c, z=z, y=y, x=x)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """Each item's raw payload from its sector extents; interleaved
+        BGR(A) items come out as their channels in R, G, B(, A) order."""
+        from bioio_spark.fsio import ranged_read
 
-    def to_dataset(self, spark: SparkSession):
+        for r in rows.itertuples(index=False):
+            plane = np.frombuffer(ranged_read(r.path, r.offsets, r.lengths),
+                                  dtype=np.dtype(r.dtype))
+            if r.nc == 1:
+                yield r, plane.reshape(r.h, r.w)
+                continue
+            rgb = [2, 1, 0, *range(3, r.nc)]
+            yield r, plane.reshape(r.h, r.w, r.nc)[..., rgb]
+
+    def plan(self) -> Plan:
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         cat = self.catalog(self._path)
@@ -136,11 +73,12 @@ class ZviImageReader(PlannedReader):
                  Y=cat["size_y"], X=cat["size_x"]),
             pps=pps,
             metadata=cat["description"] or "Zeiss ZVI (MS-CFB)")]
-        px = standardize(
-            plan_pixels(spark, _plan_rows(self._path, cat),
-                        _plane_batches, WINDOW_SCHEMA,
-                        nbytes=scene_bytes(scenes),
-                        row_schema=_PLAN_SCHEMA),
-            self._image_id, scene)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        # item c of a BGR grid owns channels c*samples .. +samples-1
+        ns = cat["samples"]
+        ap = os.path.abspath(self._path)
+        plan = [{"path": ap, "scene": scene, "t": t, "c": c * ns,
+                 "nc": ns, "z": z, "dtype": cat["dtype"],
+                 "offsets": [o for o, _ in ext],
+                 "lengths": [n for _, n in ext]}
+                for (t, c, z), ext in sorted(cat["planes"].items())]
+        return Plan(plan, scenes, channels)

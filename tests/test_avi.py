@@ -10,7 +10,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.avi import (decode_avi, decode_avi_frame,
                                      encode_avi, read_avi_catalog)
-from bioio_spark.sources.avi_image import AviImageReader, read_avi_window
+from bioio_spark.sources.avi_image import AviImageReader
 
 
 def _frames(t_n=4, h=6, w=8):
@@ -120,8 +120,8 @@ def test_avi_bioimage_roundtrip(spark, tmp_path):
 def test_avi_window_prunes_frames(spark, tmp_path):
     fr = _frames()
     p = _write(tmp_path, fr)
-    w = read_avi_window(spark, p, t=slice(1, 3), c=0,
-                        y=slice(2, 5), x=slice(3, 7)).toPandas()
+    w = BioImage(p, spark=spark).read_window(
+        t=slice(1, 3), c=0, y=slice(2, 5), x=slice(3, 7)).toPandas()
     exp = fr[1:3, 2:5, 3:7, 0]
     assert len(w) == exp.size
     got = np.zeros_like(exp, dtype=float)

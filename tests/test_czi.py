@@ -179,13 +179,12 @@ def test_bioimage_czi_pyramid_levels(spark, tmp_path):
 def test_read_czi_window_prunes_subblocks(spark, tmp_path):
     """t/c/z prune whole subblocks; mosaic tiles prune by extent; the
     residual trims to exact bounds with GLOBAL mosaic coordinates."""
-    from bioio_spark.sources.czi_image import read_czi_window
 
     block = _block()
     p = tmp_path / "win.czi"
     p.write_bytes(encode_czi(_grid_subblocks(block)))
-    w = read_czi_window(spark, str(p), t=1, c=(0, 2), z=0,
-                        y=(1, 3), x=(2, 5)).toPandas()
+    w = BioImage(str(p), spark=spark).read_window(
+        t=1, c=(0, 2), z=0, y=(1, 3), x=(2, 5)).toPandas()
     exp = block[1, 0:2, 0, 1:3, 2:5]
     assert len(w) == exp.size
     got = np.zeros_like(exp)
@@ -194,8 +193,6 @@ def test_read_czi_window_prunes_subblocks(spark, tmp_path):
 
 
 def test_read_czi_window_mosaic_tiles(spark, tmp_path):
-    from bioio_spark.sources.czi_image import read_czi_window
-
     rng = np.random.default_rng(41)
     tiles = [rng.integers(0, 65535, (4, 5)).astype(np.uint16)
              for _ in range(3)]
@@ -205,8 +202,10 @@ def test_read_czi_window_mosaic_tiles(spark, tmp_path):
     p = tmp_path / "mwin.czi"
     p.write_bytes(encode_czi(subs))
     # the window covers only tiles 1 and 2
-    w = read_czi_window(spark, str(p), x=(6, 12)).toPandas()
-    assert set(w["m"]) == {1, 2}
+    img = BioImage(str(p), spark=spark)
+    pushed = img._reader.read_window(spark, img, x=(6, 12)).toPandas()
+    assert set(pushed["m"]) == {1, 2}
+    w = img.read_window(x=(6, 12)).toPandas()
     canvas = np.concatenate(tiles, axis=1)
     got = np.zeros((4, 6), np.uint16)
     got[w["y"], w["x"] - 6] = w["value"].astype(np.uint16)
@@ -326,7 +325,6 @@ def test_bioimage_mosaic_stitch_zstd(spark, tmp_path):
 
 def test_read_czi_window_zstd(spark, tmp_path):
     """Window-pruned reads decode compressed subblocks executor-side."""
-    from bioio_spark.sources.czi_image import read_czi_window
 
     rng = np.random.default_rng(31)
     planes = rng.integers(0, 65535, (4, 6, 8)).astype(np.uint16)
@@ -334,8 +332,8 @@ def test_read_czi_window_zstd(spark, tmp_path):
     p.write_bytes(encode_czi(
         [{"data": planes[z], "dims": {"Z": z}} for z in range(4)],
         compression=6))
-    w = read_czi_window(spark, str(p), z=(1, 3), y=(2, 5),
-                        x=(3, 7)).toPandas()
+    w = BioImage(str(p), spark=spark).read_window(
+        z=(1, 3), y=(2, 5), x=(3, 7)).toPandas()
     exp = planes[1:3, 2:5, 3:7]
     assert len(w) == exp.size
     got = np.zeros_like(exp)

@@ -10,8 +10,7 @@ import pytest
 
 from bioio_spark import BioImage
 from bioio_spark.formats.dicom import encode_dicom, parse_dicom
-from bioio_spark.sources.dicom_image import (DicomImageReader,
-                                             read_dicom_window)
+from bioio_spark.sources.dicom_image import DicomImageReader
 
 
 def _vol(dtype="uint16"):
@@ -98,8 +97,8 @@ def test_window_read(spark, tmp_path):
     vol = _vol()
     p = tmp_path / "v.dcm"
     p.write_bytes(encode_dicom(vol))
-    got = read_dicom_window(spark, str(p), z=(1, 3), y=(1, 4),
-                            x=(2, 5)).toPandas()
+    got = BioImage(str(p), spark=spark).read_window(
+        z=(1, 3), y=(1, 4), x=(2, 5)).toPandas()
     sub = vol[1:3, 1:4, 2:5]
     got = got.sort_values(["z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

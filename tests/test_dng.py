@@ -9,7 +9,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.dng import build_dng, read_dng_catalog
 from bioio_spark.formats.ljpeg import decode_ljpeg, encode_ljpeg
-from bioio_spark.sources.dng_image import DngImageReader, read_dng_window
+from bioio_spark.sources.dng_image import DngImageReader
 
 
 def _mosaic():
@@ -85,20 +85,18 @@ def test_dng_window_prunes_strips(spark, tmp_path):
     a = _mosaic()
     p = tmp_path / "raw.dng"
     p.write_bytes(build_dng(a, compression=1, rows_per_strip=4))
-    df = read_dng_window(spark, str(p), y=(5, 9), x=(2, 10))
+    df = BioImage(str(p), spark=spark).read_window(y=(5, 9), x=(2, 10))
     rows = df.collect()
     got = np.zeros((4, 8))
     for r in rows:
         got[r["y"] - 5, r["x"] - 2] = r["value"]
     np.testing.assert_array_equal(got, a[5:9, 2:10].astype(float))
     # uncompressed strips narrow to the touched row byte ranges
-    _, plan = __import__(
-        "bioio_spark.sources.dng_image",
-        fromlist=["_plan_strips"])._plan_strips(str(p))
+    plan = DngImageReader(str(p)).plan().rows
     row_bytes = 16 * 2
     pruned_rows = sum(
         r["nbytes"] // row_bytes for r in plan
-        if not (r["y0"] + r["ny"] <= 5 or r["y0"] >= 9))
+        if not (r["y0"] + r["h"] <= 5 or r["y0"] >= 9))
     assert pruned_rows <= 8    # two strips touched, 4 rows each
 
 

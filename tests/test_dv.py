@@ -124,13 +124,12 @@ def test_dv_directory_multiscene(spark, tmp_path):
 def test_read_dv_window_prunes_sections_and_rows(spark, tmp_path):
     """t/c/z prune whole sections; y narrows the per-section byte
     range; x trims residually."""
-    from bioio_spark.sources.dv_image import read_dv_window
 
     block = _block()
     p = tmp_path / "win.dv"
     p.write_bytes(encode_dv(block, img_sequence=2))
-    w = read_dv_window(spark, str(p), t=1, c=(1, 3), z=2,
-                       y=(1, 4), x=(2, 5)).toPandas()
+    w = BioImage(str(p), spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 4), x=(2, 5)).toPandas()
     exp = block[1, 1:3, 2, 1:4, 2:5]
     assert len(w) == exp.size
     got = np.zeros_like(exp)
@@ -139,12 +138,10 @@ def test_read_dv_window_prunes_sections_and_rows(spark, tmp_path):
 
 
 def test_read_dv_window_empty_selection(spark, tmp_path):
-    from bioio_spark.sources.dv_image import read_dv_window
-
     p = tmp_path / "e.dv"
     p.write_bytes(encode_dv(_block()[:1, :1]))
     with pytest.raises(IndexError):
-        read_dv_window(spark, str(p), t=5)
+        BioImage(str(p), spark=spark).read_window(t=5)
 
 
 def test_bioimage_read_window_dispatches_to_dv(spark, tmp_path):

@@ -11,7 +11,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.hdf5 import H5Node, H5Reader, build_hdf5
 from bioio_spark.formats.ims import encode_ims, read_ims_catalog
-from bioio_spark.sources.ims_image import ImsImageReader, read_ims_window
+from bioio_spark.sources.ims_image import ImsImageReader
 
 
 def _block():
@@ -142,10 +142,24 @@ def test_ims_window_read(spark, tmp_path):
     block = _block()
     p = tmp_path / "c.ims"
     p.write_bytes(encode_ims(block))
-    got = read_ims_window(spark, str(p), t=1, c=(1, 3), z=2,
-                          y=(1, 4), x=(2, 5)).toPandas()
+    got = BioImage(str(p), spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 4), x=(2, 5)).toPandas()
     sub = block[1, 1:3, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
+    np.testing.assert_allclose(got.reshape(sub.shape), sub)
+
+
+def test_ims_window_read_chunked_gzip(spark, tmp_path):
+    """Gzip chunks are not narrowed to the window's rows: each keeps its
+    whole compressed byte range, and the task slices the decoded
+    chunk."""
+    block = _block()
+    p = tmp_path / "g.ims"
+    p.write_bytes(encode_ims(block, chunks=(2, 3, 4), gzip=True))
+    got = BioImage(str(p), spark=spark).read_window(
+        t=1, c=(1, 3), z=(1, 3), y=(1, 4), x=(2, 5)).toPandas()
+    sub = block[1, 1:3, 1:3, 1:4, 2:5]
+    got = got.sort_values(["c", "z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)
 
 

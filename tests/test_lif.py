@@ -188,15 +188,14 @@ def test_lif_tile_scan_mosaic_stitches(spark, tmp_path):
 def test_read_lif_window_prunes(spark, tmp_path):
     """t/c/z windows prune whole planes; the y window is a row-range
     seek; x prunes in numpy after the stride gather."""
-    from bioio_spark.sources.lif_image import read_lif_window
 
     idx = np.indices((2, 3, 4, 5, 6))    # t c z y x
     vol = (idx[0] * 10000 + idx[1] * 1000 + idx[2] * 100
            + idx[3] * 10 + idx[4]).astype(np.uint16)
     p = tmp_path / "win.lif"
     p.write_bytes(encode_lif([{"name": "S", "data": vol}]))
-    w = read_lif_window(spark, str(p), t=1, c=(1, 3), z=2,
-                        y=(1, 3), x=(2, 5)).toPandas()
+    w = BioImage(str(p), spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 3), x=(2, 5)).toPandas()
     exp = vol[1, 1:3, 2, 1:3, 2:5]
     assert len(w) == exp.size
     got = np.zeros_like(exp)
@@ -206,14 +205,14 @@ def test_read_lif_window_prunes(spark, tmp_path):
 
 
 def test_read_lif_window_second_scene(spark, tmp_path):
-    from bioio_spark.sources.lif_image import read_lif_window
-
     a = np.arange(2 * 3 * 4, dtype=np.uint16).reshape(1, 1, 2, 3, 4)
     b = (a * 3).astype(np.uint16)
     p = tmp_path / "two.lif"
     p.write_bytes(encode_lif([{"name": "A", "data": a},
                               {"name": "B", "data": b}]))
-    w = read_lif_window(spark, str(p), scene=1, z=1).toPandas()
+    img = BioImage(str(p), spark=spark)
+    img.set_scene(1)
+    w = img.read_window(z=1).toPandas()
     exp = b[0, 0, 1]
     got = np.zeros_like(exp)
     got[w["y"], w["x"]] = w["value"].astype(np.uint16)

@@ -8,7 +8,6 @@ import pytest
 
 from bioio_spark import BioImage
 from bioio_spark.formats.lof import encode_lof, parse_lof_header
-from bioio_spark.sources.lif_image import read_lif_window
 from bioio_spark.sources.lof_image import LofImageReader
 
 
@@ -66,8 +65,8 @@ def test_bio_image_roundtrip(spark, tmp_path):
 def test_window_read_via_lif_path(spark, tmp_path):
     block = _block()
     p = _write(tmp_path)
-    got = read_lif_window(spark, p, t=1, c=(1, 3), z=2,
-                          y=(1, 4), x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 4), x=(2, 5)).toPandas()
     sub = block[1, 1:3, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

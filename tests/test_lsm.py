@@ -10,9 +10,7 @@ from bioio_spark import BioImage
 from bioio_spark.formats.lsm import (build_channel_colors, build_lsm_info,
                                      encode_lsm, parse_channel_colors,
                                      parse_lsm_info, read_lsm_catalog)
-from bioio_spark.sources.lsm_image import (LsmImageReader,
-                                           read_lsm_planes,
-                                           read_lsm_window)
+from bioio_spark.sources.lsm_image import LsmImageReader
 
 
 def _block(dtype="uint16"):
@@ -127,8 +125,8 @@ def test_routing_by_extension(spark, tmp_path):
 def test_window_read_matches_numpy(spark, tmp_path):
     block = _block()
     p = _write(tmp_path, thumbnails=False)
-    got = read_lsm_window(spark, p, t=1, c=(1, 3), z=2,
-                          y=(1, 4), x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 4), x=(2, 5)).toPandas()
     sub = block[1, 1:3, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)
@@ -139,13 +137,13 @@ def test_window_read_empty_raises(spark, tmp_path):
     (norm_window contract)."""
     p = _write(tmp_path)
     with pytest.raises(ValueError, match="empty window"):
-        read_lsm_window(spark, p, y=(3, 3))
+        BioImage(p, spark=spark).read_window(y=(3, 3))
 
 
 def test_planes_read_layout(spark, tmp_path):
     block = _block()
     p = _write(tmp_path, thumbnails=False)
-    pdf = read_lsm_planes(spark, p).toPandas()
+    pdf = BioImage(p, spark=spark).get_planes_dataframe().toPandas()
     assert len(pdf) == 2 * 3 * 4
     row = pdf[(pdf.t == 1) & (pdf.c == 2) & (pdf.z == 3)].iloc[0]
     np.testing.assert_allclose(
@@ -155,8 +153,6 @@ def test_planes_read_layout(spark, tmp_path):
 def test_unsupported_compression_rejected(tmp_path):
     """The planner refuses compression outside the LSM vocabulary
     (raw / LZW) — honest failure instead of wrong pixels."""
-    from bioio_spark.sources.lsm_image import _plan_strips
-
     p = _write(tmp_path)
     # corrupt page 0's compression tag value: find COMPRESSION entry
     data = bytearray((tmp_path / "fix.lsm").read_bytes())
@@ -167,7 +163,7 @@ def test_unsupported_compression_rejected(tmp_path):
     data[pos + 8:pos + 10] = _s.pack("<H", 8)   # Deflate: not LSM's
     (tmp_path / "defl.lsm").write_bytes(bytes(data))
     with pytest.raises(ValueError, match="compression"):
-        _plan_strips(str(tmp_path / "defl.lsm"))
+        LsmImageReader(str(tmp_path / "defl.lsm")).plan()
 
 
 def test_lzw_compressed_roundtrip(spark, tmp_path):
@@ -178,12 +174,12 @@ def test_lzw_compressed_roundtrip(spark, tmp_path):
     p = _write(tmp_path, name="lzw.lsm", lzw=True, thumbnails=False)
     img = BioImage(p, spark=spark)
     np.testing.assert_array_equal(img.data, block)
-    got = read_lsm_window(spark, p, t=1, c=(1, 3), z=2,
-                          y=(1, 4), x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        t=1, c=(1, 3), z=2, y=(1, 4), x=(2, 5)).toPandas()
     sub = block[1, 1:3, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)
-    pdf = read_lsm_planes(spark, p).toPandas()
+    pdf = BioImage(p, spark=spark).get_planes_dataframe().toPandas()
     row = pdf[(pdf.t == 1) & (pdf.c == 2) & (pdf.z == 3)].iloc[0]
     np.testing.assert_allclose(
         np.asarray(row["values"]).reshape(5, 6), block[1, 2, 3])

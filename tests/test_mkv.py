@@ -9,7 +9,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.mkv import (decode_mkv, encode_mkv,
                                      read_mkv_catalog)
-from bioio_spark.sources.mkv_image import MkvImageReader, read_mkv_window
+from bioio_spark.sources.mkv_image import MkvImageReader
 
 
 def _frames(t_n=4, h=16, w=24):
@@ -84,8 +84,8 @@ def test_mkv_bioimage_roundtrip(spark, tmp_path):
 def test_mkv_window_prunes_frames(spark, tmp_path):
     fr = _frames()
     p = _write(tmp_path, fr)
-    w = read_mkv_window(spark, p, t=(2, 4), y=(8, 16),
-                        x=(0, 8)).toPandas()
+    w = BioImage(p, spark=spark).read_window(
+        t=(2, 4), y=(8, 16), x=(0, 8)).toPandas()
     assert set(w["t"]) == {2, 3}
     got = np.zeros((2, 3, 8, 8), np.uint8)
     got[w["t"] - 2, w["c"], w["y"] - 8, w["x"]] = w["value"]

@@ -11,7 +11,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.mp4 import (decode_mp4, decode_mp4_frame,
                                      encode_mp4, read_mp4_catalog)
-from bioio_spark.sources.mp4_image import Mp4ImageReader, read_mp4_window
+from bioio_spark.sources.mp4_image import Mp4ImageReader
 
 
 def _frames(t_n=4, h=16, w=24):
@@ -102,8 +102,8 @@ def test_mp4_bioimage_roundtrip(spark, tmp_path):
 def test_mp4_window_prunes_frames(spark, tmp_path):
     fr = _frames()
     p = _write(tmp_path, fr)
-    w = read_mp4_window(spark, p, t=(1, 3), y=(0, 8),
-                        x=(8, 16)).toPandas()
+    w = BioImage(p, spark=spark).read_window(
+        t=(1, 3), y=(0, 8), x=(8, 16)).toPandas()
     assert set(w["t"]) == {1, 2}
     got = np.zeros((2, 3, 8, 8), np.uint8)
     got[w["t"] - 1, w["c"], w["y"], w["x"] - 8] = w["value"]

@@ -10,7 +10,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.mrc import (encode_mrc, parse_mrc_header,
                                      read_mrc_header)
-from bioio_spark.sources.mrc_image import MrcImageReader, read_mrc_window
+from bioio_spark.sources.mrc_image import MrcImageReader
 
 
 def _vol(dtype="float32"):
@@ -84,8 +84,8 @@ def test_window_read(spark, tmp_path):
     vol = _vol()
     p = tmp_path / "v.mrc"
     p.write_bytes(encode_mrc(vol))
-    got = read_mrc_window(spark, str(p), z=(1, 3), y=(1, 4),
-                          x=(2, 5)).toPandas()
+    got = BioImage(str(p), spark=spark).read_window(
+        z=(1, 3), y=(1, 4), x=(2, 5)).toPandas()
     sub = vol[1:3, 1:4, 2:5]
     got = got.sort_values(["z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

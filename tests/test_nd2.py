@@ -230,7 +230,6 @@ def test_read_nd2_window_prunes(spark, tmp_path):
     """t/z windows prune whole frame chunks; the y window becomes a
     byte range inside each chunk; c/x prune on the de-interleave."""
     from bioio_spark.formats.nd2 import encode_nd2
-    from bioio_spark.sources.nd2_image import read_nd2_window
 
     idx = np.indices((3, 4, 5, 6, 2))    # t z y x c (interleaved)
     vol = (idx[0] * 10000 + idx[1] * 1000 + idx[4] * 500
@@ -239,8 +238,8 @@ def test_read_nd2_window_prunes(spark, tmp_path):
     p = tmp_path / "win.nd2"
     p.write_bytes(encode_nd2(
         frames, loops=[("TimeLoop", 3), ("ZStackLoop", 4)]))
-    w = read_nd2_window(spark, str(p), t=1, z=(1, 3), c=1,
-                        y=(2, 4), x=(3, 6)).toPandas()
+    w = BioImage(str(p), spark=spark).read_window(
+        t=1, z=(1, 3), c=1, y=(2, 4), x=(3, 6)).toPandas()
     exp = vol[1, 1:3, 2:4, 3:6, 1]
     assert len(w) == exp.size
     got = np.zeros_like(exp)
@@ -251,7 +250,6 @@ def test_read_nd2_window_prunes(spark, tmp_path):
 
 def test_read_nd2_window_position_scene(spark, tmp_path):
     from bioio_spark.formats.nd2 import encode_nd2
-    from bioio_spark.sources.nd2_image import read_nd2_window
 
     idx = np.indices((2, 3, 2, 2))       # p t y x
     vol = (idx[0] * 1000 + idx[1] * 100 + idx[2] * 10
@@ -260,13 +258,15 @@ def test_read_nd2_window_position_scene(spark, tmp_path):
     p.write_bytes(encode_nd2(
         vol.reshape(6, 2, 2),
         loops=[("XYPosLoop", 2), ("TimeLoop", 3)]))
-    w = read_nd2_window(spark, str(p), t=(1, 3)).toPandas()
+    img = BioImage(str(p), spark=spark)
+    w = img.read_window(t=(1, 3)).toPandas()
     assert sorted(w["t"].unique()) == [1, 2]
     assert w["value"].min() >= 100 and w["value"].max() < 1000
-    w1 = read_nd2_window(spark, str(p), scene=1, t=0).toPandas()
+    img.set_scene(1)
+    w1 = img.read_window(t=0).toPandas()
     assert (w1["value"].astype(int) // 1000 == 1).all()
-    with pytest.raises(IndexError, match="position"):
-        read_nd2_window(spark, str(p), scene=2)
+    with pytest.raises(IndexError, match="out of range"):
+        img.set_scene(2)
 
 
 def test_bioimage_read_window_routes_nd2(spark, tmp_path):

@@ -12,8 +12,7 @@ from bioio_spark.formats.qptiff import (build_qpi_xml, encode_qptiff,
                                         parse_qpi_xml,
                                         read_qptiff_catalog)
 from bioio_spark.sources.ndpi_image import NdpiImageReader
-from bioio_spark.sources.qptiff_image import (QptiffImageReader,
-                                              read_qptiff_window)
+from bioio_spark.sources.qptiff_image import QptiffImageReader
 
 
 def _slide(h=80, w=112):
@@ -121,8 +120,10 @@ def test_qptiff_window_prunes_channels(spark, tmp_path):
     p = tmp_path / "m.qptiff"
     p.write_bytes(encode_qptiff(stack, n_levels=1, tile=(32, 32),
                                 thumbnail=False))
-    got = read_qptiff_window(spark, str(p), c=1, y=(5, 30),
-                             x=(40, 90)).toPandas()
+    b = BioImage(str(p), spark=spark)
+    win = dict(c=1, y=(5, 30), x=(40, 90))
+    assert b._reader.read_window(spark, b, **win) is not None
+    got = b.read_window(**win).toPandas()
     sub = stack[1, 5:30, 40:90]
     arr = np.zeros_like(sub)
     arr[got["y"] - 5, got["x"] - 40] = got["value"].astype(np.uint16)

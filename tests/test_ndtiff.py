@@ -13,8 +13,7 @@ from bioio_spark import BioImage
 from bioio_spark.formats.ndtiff import (INDEX_NAME, encode_ndtiff,
                                         read_index, read_ndtiff_catalog,
                                         write_index_entry)
-from bioio_spark.sources.ndtiff_image import (NdtiffImageReader,
-                                              read_ndtiff_window)
+from bioio_spark.sources.ndtiff_image import NdtiffImageReader
 
 
 def _block():
@@ -82,8 +81,10 @@ def test_window_read(spark, tmp_path):
     block = _block()
     d = str(tmp_path / "acq")
     encode_ndtiff(block, d)
-    got = read_ndtiff_window(spark, d, t=1, c=(0, 2), z=2,
-                             y=(1, 4), x=(2, 5)).toPandas()
+    img = BioImage(d, spark=spark, reader=NdtiffImageReader)
+    win = dict(t=1, c=(0, 2), z=2, y=(1, 4), x=(2, 5))
+    assert img._reader.read_window(spark, img, **win) is not None
+    got = img.read_window(**win).toPandas()
     sub = block[1, 0:2, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

@@ -10,7 +10,7 @@ from bioio_spark import BioImage
 from bioio_spark.formats.cfb import CfbFile, build_cfb
 from bioio_spark.formats.oib import (encode_oib, parse_oib_info,
                                      read_oib_catalog)
-from bioio_spark.sources.oib_image import OibImageReader, read_oib_window
+from bioio_spark.sources.oib_image import OibImageReader
 
 
 def _block():
@@ -101,8 +101,8 @@ def test_bio_image_roundtrip(spark, tmp_path):
 def test_window_read_matches_numpy(spark, tmp_path):
     block = _block()
     p = _write(tmp_path)
-    got = read_oib_window(spark, p, t=0, c=1, z=(0, 2), y=(1, 4),
-                          x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        t=0, c=1, z=(0, 2), y=(1, 4), x=(2, 5)).toPandas()
     sub = block[0, 1, 0:2, 1:4, 2:5]
     got = got.sort_values(["z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

@@ -11,7 +11,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.oif import (build_oif, encode_oif, parse_oif,
                                      read_oif_catalog)
-from bioio_spark.sources.oif_image import OifImageReader, read_oif_window
+from bioio_spark.sources.oif_image import OifImageReader
 
 
 def _block(dtype="uint16"):
@@ -86,8 +86,8 @@ def test_plane_size_vs_ini_mismatch_raises(spark, tmp_path):
 def test_window_read_matches_numpy(spark, tmp_path):
     block = _block()
     p = _write(tmp_path)
-    got = read_oif_window(spark, p, t=1, c=0, z=(1, 3), y=(1, 4),
-                          x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        t=1, c=0, z=(1, 3), y=(1, 4), x=(2, 5)).toPandas()
     sub = block[1, 0, 1:3, 1:4, 2:5]
     got = got.sort_values(["z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

@@ -365,19 +365,19 @@ def test_planned_read_sources_no_shuffle(spark, tmp_path, planned_read):
 
 
 def test_czi_planes_read_no_shuffle(spark, tmp_path, planned_read):
-    """read_czi_planes (subblock -> payload rows) must plan with no
+    """A CZI planes read (subblock -> payload rows) must plan with no
     exchange — decode parallelism comes from the plan rows' own
     partitions, the payload never shuffles."""
     import numpy as np
 
+    from bioio_spark import BioImage
     from bioio_spark.formats.czi import encode_czi
-    from bioio_spark.sources.czi_image import read_czi_planes
 
     p = tmp_path / "pl.czi"
     p.write_bytes(encode_czi(
         [{"data": np.zeros((4, 5), np.uint16), "dims": {"Z": z}}
          for z in range(4)], compression=6))
-    df = read_czi_planes(spark, str(p))
+    df = BioImage(str(p), spark=spark).get_planes_dataframe()
     plan = physical_plan(df)
     assert planned_read(plan), plan
     pdf = df.toPandas()
@@ -389,23 +389,22 @@ def test_nd2_lif_window_reads_no_shuffle(spark, tmp_path, planned_read):
     shuffle-free, like every other planned-read source."""
     import numpy as np
 
+    from bioio_spark import BioImage
     from bioio_spark.formats.lif import encode_lif
     from bioio_spark.formats.nd2 import encode_nd2
-    from bioio_spark.sources.lif_image import read_lif_window
-    from bioio_spark.sources.nd2_image import read_nd2_window
 
     pn = tmp_path / "w.nd2"
     pn.write_bytes(encode_nd2(
         np.zeros((6, 4, 5), np.uint16),
         loops=[("TimeLoop", 3), ("ZStackLoop", 2)]))
-    dfn = read_nd2_window(spark, str(pn), t=(0, 2), y=(1, 3))
+    dfn = BioImage(str(pn), spark=spark).read_window(t=(0, 2), y=(1, 3))
     assert planned_read(physical_plan(dfn))
 
     pl = tmp_path / "w.lif"
     pl.write_bytes(encode_lif(
         [{"name": "S",
           "data": np.zeros((2, 2, 2, 4, 5), np.uint16)}]))
-    dfl = read_lif_window(spark, str(pl), c=1, y=(1, 3))
+    dfl = BioImage(str(pl), spark=spark).read_window(c=1, y=(1, 3))
     assert planned_read(physical_plan(dfl))
 
 

@@ -6,11 +6,16 @@ defaultParallelism))`` plan idiom instead of calling ``plan_pixels`` /
 ``plan_width``, if anything reaches into the Zarr module for the
 window normalizer that ``planned.norm_window`` now owns, if a source
 module hand-writes a scene- or channel-catalog row instead of calling
-``array_like.scene_row`` / ``channel_rows``, or if a single-raster
+``array_like.scene_row`` / ``channel_rows``, if a single-raster
 format module re-inlines the scan and decode loop that
-``sources/raster.py`` owns."""
+``sources/raster.py`` owns, or if a planned reader's module grows a
+module-level ``def read_…_window(`` / ``def read_…_planes(`` again —
+a planned reader builds one plan and ``PlannedReader`` derives its
+window and planes reads from it; only the TIFF and Zarr modules, whose
+full reads are file scans rather than plans, keep their own."""
 
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "bioio_spark")
@@ -42,7 +47,15 @@ RULES = [
        and os.path.basename(rel) in RASTER_MODULES, pat,
        "single-raster readers scan and decode through sources/raster.py")
       for pat in ("binaryFile", "mapInPandas")),
+    (lambda rel: _source_module(rel, allow=("planned.py", "tiff_image.py",
+                                            "zarr_image.py")),
+     re.compile(r"^def read_\w+_(window|planes)\("),
+     "window and planes reads derive from the reader's one plan"),
 ]
+
+
+def _hit(pat, line):
+    return pat.search(line) if isinstance(pat, re.Pattern) else pat in line
 
 
 def _sources():
@@ -60,9 +73,10 @@ def _violations(paths, root=ROOT):
         rel = os.path.relpath(path, root)
         with open(path, encoding="utf-8") as fh:
             for n, line in enumerate(fh, 1):
-                hits += [f"{rel}:{n}: {pat} ({why})"
+                hits += [f"{rel}:{n}: {getattr(pat, 'pattern', pat)} "
+                         f"({why})"
                          for applies, pat, why in RULES
-                         if applies(rel) and pat in line]
+                         if applies(rel) and _hit(pat, line)]
     return hits
 
 
@@ -84,7 +98,11 @@ def test_scan_catches_planted_violations(tmp_path):
     (src / "fake_image.py").write_text(
         "plan.repartition(\n"
         "    min(len(rows), spark.sparkContext.defaultParallelism))\n"
-        "from bioio_spark.sources.zarr_image import _norm_window\n")
+        "from bioio_spark.sources.zarr_image import _norm_window\n"
+        "def read_fake_window(spark, path, t=None):\n"
+        "    def read_fake_planes(spark, path):\n")
+    (src / "tiff_image.py").write_text(
+        "def read_tiff_window(spark, path, t=None):\n")
     (src / "planned.py").write_text(
         "n = min(n, spark.sparkContext.defaultParallelism))\n")
     catalog = ('row = {"ome_pixel_type": "uint8"}\n'
@@ -99,9 +117,16 @@ def test_scan_catches_planted_violations(tmp_path):
     paths = [str(tmp_path / "bioio_spark" / "bio_image.py"),
              str(src / "fake_image.py"), str(src / "planned.py"),
              str(src / "array_like.py"), str(src / "gif_image.py"),
-             str(src / "raster.py")]
+             str(src / "raster.py"), str(src / "tiff_image.py")]
     hits = _violations(paths, root=str(tmp_path))
-    assert len(hits) == 7, hits
+    assert len(hits) == 8, hits
     files = [os.path.basename(h.split(":")[0]) for h in hits]
-    assert not {"planned.py", "array_like.py", "raster.py"} & set(files)
+    assert not {"planned.py", "array_like.py", "raster.py",
+                "tiff_image.py"} & set(files)
+    # the module-level read_fake_window, not the nested read_fake_planes
+    assert files.count("fake_image.py") == 5
+    assert [h for h in hits if "one plan" in h] == [
+        "bioio_spark/sources/fake_image.py:4: "
+        "^def read_\\w+_(window|planes)\\( "
+        "(window and planes reads derive from the reader's one plan)"]
     assert files.count("gif_image.py") == 2

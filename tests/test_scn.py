@@ -9,7 +9,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.scn import (build_scn_xml, encode_scn,
                                      parse_scn_xml, read_scn_catalog)
-from bioio_spark.sources.scn_image import ScnImageReader, read_scn_window
+from bioio_spark.sources.scn_image import ScnImageReader
 
 
 def _rgb(h=40, w=56):
@@ -104,8 +104,10 @@ def test_window_read_z_and_tiles(spark, tmp_path):
     region = _zstack()
     p = _write(tmp_path, images=[
         {"name": "r", "array": region, "n_levels": 1}], tile=(32, 32))
-    got = read_scn_window(spark, p, scene=0, z=(1, 3), y=(10, 40),
-                          x=(40, 90)).toPandas()
+    b = BioImage(p, spark=spark)
+    win = dict(z=(1, 3), y=(10, 40), x=(40, 90))
+    assert b._reader.read_window(spark, b, **win) is not None
+    got = b.read_window(**win).toPandas()
     sub = region[1:3, 10:40, 40:90]
     arr = np.zeros_like(sub)
     arr[got["z"] - 1, got["y"] - 10, got["x"] - 40] = \

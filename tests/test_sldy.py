@@ -134,12 +134,11 @@ def test_get_planes_dataframe_sldy_fast_path(spark, tmp_path):
 def test_read_sldy_window_prunes(spark, tmp_path):
     """t/c prune whole npy files; (z, y) windows become contiguous
     byte-range seeks inside each C-order stack; x prunes in numpy."""
-    from bioio_spark.sources.sldy_image import read_sldy_window
 
     block = _block()                    # (2, 2, 3, 4, 5) TCZYX
     d = _export(tmp_path, block)
-    w = read_sldy_window(spark, d, t=1, c=(0, 2), z=(1, 3),
-                         y=(1, 3), x=(2, 5)).toPandas()
+    w = BioImage(d, spark=spark).read_window(
+        t=1, c=(0, 2), z=(1, 3), y=(1, 3), x=(2, 5)).toPandas()
     exp = block[1, 0:2, 1:3, 1:3, 2:5]
     assert len(w) == exp.size
     got = np.zeros_like(exp)

@@ -11,7 +11,7 @@ import pytest
 from bioio_spark import BioImage
 from bioio_spark.formats.stk import (UIC2_TAG, encode_stk,
                                      read_stk_catalog)
-from bioio_spark.sources.stk_image import StkImageReader, read_stk_window
+from bioio_spark.sources.stk_image import StkImageReader
 
 
 def _stack(dtype="uint16"):
@@ -114,8 +114,8 @@ def test_bio_image_t_series(spark, tmp_path):
 def test_window_read_matches_numpy(spark, tmp_path):
     stack = _stack()
     p = _write(tmp_path, z_distance=0.5)
-    got = read_stk_window(spark, p, z=(1, 3), y=(1, 4),
-                          x=(2, 5)).toPandas()
+    got = BioImage(p, spark=spark).read_window(
+        z=(1, 3), y=(1, 4), x=(2, 5)).toPandas()
     sub = stack[1:3, 1:4, 2:5]
     got = got.sort_values(["z", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)

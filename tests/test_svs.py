@@ -10,7 +10,7 @@ from bioio_spark import BioImage
 from bioio_spark.formats.svs import (_halve, classify_svs_pages,
                                      encode_svs, parse_svs_description,
                                      read_svs_catalog)
-from bioio_spark.sources.svs_image import SvsImageReader, read_svs_window
+from bioio_spark.sources.svs_image import SvsImageReader
 
 
 def _slide(h=100, w=120):
@@ -104,16 +104,17 @@ def test_window_read_prunes_tiles(spark, tmp_path):
     img = _slide(140, 200)
     p = _write(tmp_path, image=img, n_levels=1, tile=(64, 64),
                thumbnail=False)
-    got = read_svs_window(spark, p, y=(70, 130), x=(130, 190)).toPandas()
+    b = BioImage(p, spark=spark)
+    win = dict(y=(70, 130), x=(130, 190))
+    assert b._reader.read_window(spark, b, **win) is not None
+    got = b.read_window(**win).toPandas()
     sub = img[70:130, 130:190]
     arr = np.zeros_like(sub)
     arr[got["y"] - 70, got["x"] - 130, got["s"]] = \
         got["value"].astype(np.uint8)
     np.testing.assert_array_equal(arr, sub)
     # pruning: only the 4 intersecting tiles of the 4x3 grid decode
-    from bioio_spark.sources.svs_image import _chunk_plan
-    _cat, _ex, plan = _chunk_plan(p)
-    assert len(plan) == 12
+    assert len(b._reader.plan().rows) == 12
 
 
 def test_jpeg_slide_decodes_close(spark, tmp_path):

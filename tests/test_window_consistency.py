@@ -178,7 +178,8 @@ WINDOW_FORMATS = ["tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
                   "lsm", "oif", "oib", "ims", "stk", "dicom", "mrc", "zvi",
                   "dng", "pic", *VIDEO, "sldy"]
 PLANES_FORMATS = {"tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
-                  "lsm", "sldy"}
+                  "lsm", "oif", "oib", "ims", "stk", "dicom", "mrc", "zvi",
+                  "dng", "pic", *VIDEO, "sldy"}
 
 
 def _fit(win, sizes):

@@ -12,7 +12,7 @@ from bioio_spark.formats.cfb import CfbFile, build_cfb
 from bioio_spark.formats.zvi import (PIXEL_FORMATS, decode_zvi,
                                      encode_zvi, read_zvi_catalog,
                                      slice_extents)
-from bioio_spark.sources.zvi_image import ZviImageReader, read_zvi_window
+from bioio_spark.sources.zvi_image import ZviImageReader
 
 
 def _block(dtype=np.uint16):
@@ -146,8 +146,8 @@ def test_zvi_bioimage_roundtrip(spark, tmp_path):
 def test_zvi_window_prunes_items(spark, tmp_path):
     block = _block()
     p = _write(tmp_path, block)
-    w = read_zvi_window(spark, p, t=1, c=0, z=slice(1, 3),
-                        y=slice(1, 3), x=slice(2, 5)).toPandas()
+    w = BioImage(p, spark=spark).read_window(
+        t=1, c=0, z=slice(1, 3), y=slice(1, 3), x=slice(2, 5)).toPandas()
     exp = block[1, 0, 1:3, 1:3, 2:5]
     assert len(w) == exp.size
     got = np.zeros_like(exp, dtype=float)
@@ -160,7 +160,7 @@ def test_zvi_window_empty_rejected(spark, tmp_path):
     """Empty windows raise (the engine-wide norm_window contract)."""
     p = _write(tmp_path)
     with pytest.raises(ValueError, match="empty window"):
-        read_zvi_window(spark, p, y=slice(4, 4))
+        BioImage(p, spark=spark).read_window(y=slice(4, 4))
 
 
 def test_zvi_bgr_bioimage_channels(spark, tmp_path):
