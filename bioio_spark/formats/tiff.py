@@ -245,8 +245,8 @@ def encode_tiff(planes: Sequence[np.ndarray],
     `sub_levels[i]` attaches PYRAMID levels to main page i as SubIFD
     (tag 330) children — one standalone IFD per level, offsets in the
     parent's SubIFDs entry, the layout tifffile/QuPath-tier pyramidal
-    OME-TIFFs use (and iter_tiff_chunks / read_tiff_window(level=)
-    already consume)."""
+    OME-TIFFs use (and iter_tiff_chunks / the TIFF reader's
+    resolution levels already consume)."""
     import zlib
 
     if not planes:

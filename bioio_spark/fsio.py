@@ -25,6 +25,20 @@ import re
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
+def local_path(path: str) -> str:
+    """Hadoop-FS URI -> local filesystem path. binaryFile reports paths as
+    `file:/abs/path` (sometimes `file:///abs/path`); strip the scheme,
+    percent-decode (Hadoop URI-encodes spaces etc.), and collapse leading
+    slashes so dict lookups keyed by os.path.abspath match."""
+    from urllib.parse import unquote
+
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+    elif "://" in path:
+        path = path.split("://", 1)[-1]
+    return re.sub(r"^/+", "/", unquote(path))
+
+
 def _is_remote(path: str) -> bool:
     m = _SCHEME_RE.match(path)
     return bool(m) and not path.startswith("file://")

@@ -1390,7 +1390,8 @@ def img_ome_zarr_roundtrip_v3(spark, sf_dir):
 )
 def img_ome_tiff_pyramid(spark, sf_dir):
     """save_ome_tiff(n_levels=2, tile=) writes SubIFD pyramid children;
-    read_tiff_window(level=1) reads them back through the pruned path.
+    BioImage.read_window at resolution level 1 reads them back through
+    the reader's chunk plan.
     The linear fixture makes every 2x2 mean exact, so round() matches
     numpy rint bit-for-bit."""
     import os
@@ -1399,7 +1400,6 @@ def img_ome_tiff_pyramid(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.bio_image import BioImage
-    from bioio_spark.sources.tiff_image import read_tiff_window
     from bioio_spark.writers import save_ome_tiff
 
     idx = np.indices((1, 1, 2, 16, 24))
@@ -1411,8 +1411,9 @@ def img_ome_tiff_pyramid(spark, sf_dir):
     shutil.rmtree(out, ignore_errors=True)
     save_ome_tiff(BioImage(block, spark=spark), out,
                   compression=8, tile=(16, 16), n_levels=2)
-    f = os.path.join(out, "scene_0.ome.tiff")
-    return (read_tiff_window(spark, f, level=1)
+    img = BioImage(os.path.join(out, "scene_0.ome.tiff"), spark=spark)
+    img.set_resolution_level(1)
+    return (img.read_window()
             .groupBy("z", "y")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"),
@@ -2007,7 +2008,6 @@ def img_tiff_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.bio_image import BioImage
-    from bioio_spark.sources.tiff_image import read_tiff_window
     from bioio_spark.writers import save_ome_tiff
 
     idx = np.indices(_RTZ_SHAPE)
@@ -2019,7 +2019,7 @@ def img_tiff_window_read(spark, sf_dir):
     if not os.path.exists(path):
         shutil.rmtree(out, ignore_errors=True)
         save_ome_tiff(BioImage(block, spark=spark), out, compression=5)
-    px = read_tiff_window(spark, path, t=1, z=(1, 3), y=(2, 5))
+    px = BioImage(path, spark=spark).read_window(t=1, z=(1, 3), y=(2, 5))
     return (px.groupBy("z", "y")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))
@@ -2775,17 +2775,16 @@ def img_dv_window_read(spark, sf_dir):
         "strip, reduced JVM-side (the planes-family TIFF member)",
 )
 def img_tiff_planes_read(spark, sf_dir):
-    """read_tiff_planes emits strip/tile payload rows straight off the
-    IFD plan (no per-pixel amplification, no exchange — pinned in
-    tests); per-page reduction via higher-order functions, hash-equal
-    to the long-form oracle."""
+    """get_planes_dataframe emits strip/tile payload rows straight off
+    the reader's chunk plan (no per-pixel amplification, no exchange —
+    pinned in tests); per-page reduction via higher-order functions,
+    hash-equal to the long-form oracle."""
     import os
     import shutil
 
     import numpy as np
 
     from bioio_spark.bio_image import BioImage
-    from bioio_spark.sources.tiff_image import read_tiff_planes
     from bioio_spark.writers import save_ome_tiff
 
     idx = np.indices(_RTZ_SHAPE)
@@ -2797,7 +2796,7 @@ def img_tiff_planes_read(spark, sf_dir):
     if not os.path.exists(path):
         shutil.rmtree(out, ignore_errors=True)
         save_ome_tiff(BioImage(block, spark=spark), out, compression=8)
-    planes = read_tiff_planes(spark, path)
+    planes = BioImage(path, spark=spark).get_planes_dataframe()
     per_row = planes.select(
         "t", "c", "z",
         F.size("values").alias("n"),

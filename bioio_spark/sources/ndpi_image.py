@@ -2,8 +2,8 @@
 format the reference can only reach through the bioio-bioformats Java
 bridge (ref README.md:74 routes .ndpi). Built on the in-repo TIFF
 machinery plus the public SourceLens classification
-(bioio_spark.formats.ndpi); decode path shared with the SVS reader
-(striped/tiled chunk seek-reads, gray or RGB).
+(bioio_spark.formats.ndpi); chunk plan and decode shared with the TIFF
+reader (striped/tiled chunk seek-reads, gray or RGB).
 
 - **Scenes**: Image:0 is the pyramid (SourceLens>0 pages as
   res_levels); the SourceLens=-1 macro and -2 map pages follow as
@@ -17,7 +17,7 @@ machinery plus the public SourceLens classification
 from __future__ import annotations
 
 from bioio_spark.sources.planned import Plan, PlannedReader
-from bioio_spark.sources.svs_image import decode_chunks, page_rows
+from bioio_spark.sources.tiff_image import decode_chunks, page_rows
 
 
 class NdpiImageReader(PlannedReader):

@@ -27,7 +27,9 @@ exchange:
 - ``read_planes``: the decoded tiles as ``PLANES_SCHEMA`` payload rows,
   with the plan's grid declared through ``with_tile``.
 
-The other helpers here serve the TIFF, Zarr and raster readers too:
+Every planned reader, TIFF included, takes this shape; Zarr, whose full
+read is a chunk-file scan, keeps its own window and planes reads. The
+other helpers here serve the Zarr, raster and TIFF-series readers too:
 ``norm_window`` (a selector to ``[start, stop)``), ``plane_frame`` (one
 plane as long-form rows), ``plan_pixels`` (plan rows -> decoded frame,
 in as many tasks as Spark's file-split rule gives for the decoded
@@ -208,11 +210,6 @@ def trim(px: DataFrame, **bounds) -> DataFrame:
         for name, (lo, hi) in bounds.items())))
 
 
-def empty_window(spark: SparkSession) -> DataFrame:
-    """The window frame of a plan with no rows."""
-    return spark.createDataFrame([], WINDOW_SCHEMA)
-
-
 # -- the raw-plane family: rows of contiguous YX(C) rows at a byte offset
 
 
@@ -345,8 +342,8 @@ class PlannedReader:
     and ``catalog`` (its metadata-only probe). A planned reader gives
     ``plan`` and ``decode_tiles`` (and ``narrow`` where it can narrow a
     row's read), and ``to_dataset``, ``read_window`` and
-    ``read_planes`` follow from them; a reader whose full read is a
-    file scan, not a plan, overrides those instead.
+    ``read_planes`` follow from them; Zarr, whose full read is a
+    chunk-file scan, not a plan, overrides those instead.
     ``is_supported_image`` is ``routes`` (the suffix check) and then a
     successful ``catalog``."""
 

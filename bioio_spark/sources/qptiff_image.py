@@ -16,7 +16,7 @@ machinery plus the public QPI-XML page classification
 from __future__ import annotations
 
 from bioio_spark.sources.planned import Plan, PlannedReader
-from bioio_spark.sources.svs_image import decode_chunks, page_rows
+from bioio_spark.sources.tiff_image import decode_chunks, page_rows
 
 
 class QptiffImageReader(PlannedReader):

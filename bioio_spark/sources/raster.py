@@ -74,7 +74,7 @@ class RasterReader(PlannedReader):
         reader, decode = type(self).__name__, self.decode
 
         def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from bioio_spark.sources.tiff_image import local_path
+            from bioio_spark.fsio import local_path
 
             for pdf in it:
                 for path, content in zip(pdf["path"], pdf["content"]):

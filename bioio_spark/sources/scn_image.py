@@ -15,7 +15,7 @@ the public SCN XML catalog (bioio_spark.formats.scn).
 from __future__ import annotations
 
 from bioio_spark.sources.planned import Plan, PlannedReader
-from bioio_spark.sources.svs_image import decode_chunks, page_rows
+from bioio_spark.sources.tiff_image import decode_chunks, page_rows
 
 
 class ScnImageReader(PlannedReader):

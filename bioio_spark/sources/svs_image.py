@@ -20,53 +20,8 @@ the reference can only reach through the bioio-bioformats Java bridge
 
 from __future__ import annotations
 
-import os
-
-import numpy as np
-
-from bioio_spark.fsio import read_range
 from bioio_spark.sources.planned import Plan, PlannedReader
-
-
-def page_rows(path: str, pg: dict, **extent) -> list[dict]:
-    """Plan rows of one TIFF page's tiles or strips (the slide readers'
-    shared chunk plan): ``extent`` places the page (scene, res_level, c
-    or z); ``h``/``w`` clip a chunk's stored ``ch`` x ``cw`` at the
-    page's edge."""
-    ap = os.path.abspath(path)
-    return [{"path": ap, **extent, "offset": ch["offset"],
-             "nbytes": ch["nbytes"], "y0": ch["y0"], "x0": ch["x0"],
-             "h": min(ch["h"], pg["h"] - ch["y0"]),
-             "w": min(ch["w"], pg["w"] - ch["x0"]),
-             "ch": ch["h"], "cw": ch["w"], "dtype": pg["dtype"],
-             "comp": pg["comp"], "spp": pg["spp"],
-             "jpeg_tables": pg.get("jpeg_tables")}
-            for ch in pg["chunks"]]
-
-
-def decode_chunks(rows):
-    """``decode_tiles`` of the slide readers: seek-read and decode one
-    tile or strip per row (raw, TIFF-compressed or JPEG), gray or RGB
-    samples, cut to its extent."""
-    from bioio_spark.formats.tiff import (_decode_jpeg_chunk,
-                                          decompress_tiff_chunk)
-
-    for r in rows.itertuples(index=False):
-        payload = read_range(r.path, r.offset, r.nbytes)
-        if r.comp == 7:
-            tables = (bytes(r.jpeg_tables)
-                      if r.jpeg_tables is not None else None)
-            block = _decode_jpeg_chunk(payload, tables)
-            if block.ndim == 2 and r.spp == 3:
-                raise ValueError("RGB page decoded as gray")
-        else:
-            raw = decompress_tiff_chunk(payload, r.comp)
-            shape = (r.ch, r.cw, r.spp) if r.spp > 1 else (r.ch, r.cw)
-            block = np.frombuffer(
-                raw, dtype=np.dtype(r.dtype),
-                count=r.ch * r.cw * r.spp).reshape(shape)
-        # tiles are stored full-size; trim edge overhang
-        yield r, block[:r.h, :r.w]
+from bioio_spark.sources.tiff_image import decode_chunks, page_rows
 
 
 class SvsImageReader(PlannedReader):

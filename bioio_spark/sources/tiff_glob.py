@@ -137,7 +137,7 @@ class TiffGlobReader:
 
         def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from bioio_spark.formats.tiff import decode_tiff
-            from bioio_spark.sources.tiff_image import local_path
+            from bioio_spark.fsio import local_path
 
             for pdf in it:
                 for path, content in zip(pdf["path"], pdf["content"]):

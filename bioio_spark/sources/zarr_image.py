@@ -222,7 +222,7 @@ def decode_zarr_chunks(spark: SparkSession,
     full-shape, fill-padded). `files` restricts the scan to an explicit
     chunk-file list (the read_zarr_window pruning path); default is every
     chunk under every array root."""
-    from bioio_spark.sources.tiff_image import local_path
+    from bioio_spark.fsio import local_path
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from bioio_spark.formats.zarr import iter_decoded_blocks
@@ -338,7 +338,7 @@ def read_zarr_planes(spark: SparkSession, store: str,
     """
     import numpy as np
 
-    from bioio_spark.sources.tiff_image import local_path as local_path_of
+    from bioio_spark.fsio import local_path as local_path_of
 
     arr_dir, za, axes = _array_of(store, level)
     info = {

@@ -108,7 +108,7 @@ def streaming_decode_pixels(stream: DataFrame) -> DataFrame:
         import os
 
         from bioio_spark.formats.tiff import decode_tiff
-        from bioio_spark.sources.tiff_image import local_path
+        from bioio_spark.fsio import local_path
 
         for pdf in it:
             for path, content in zip(pdf["path"], pdf["content"]):

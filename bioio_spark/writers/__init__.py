@@ -612,10 +612,10 @@ def save_ome_tiff(img, uri: str, select_scenes=None,
     differencing before LZW/Deflate/PackBits (integer pixels only);
     `tile=(th, tw)` writes the tiled page layout (multiples of 16 — the
     wild pyramidal / .tiles.ome.tif convention, and what makes
-    read_tiff_window prune at tile granularity on the way back in);
+    BioImage.read_window prune at tile granularity on the way back in);
     `n_levels` > 1 adds SubIFD pyramid children per page (2x2 block-mean
     levels, the same convention as the Zarr sink's multiscales), read
-    back via read_tiff_window(level=) / BioImage resolution levels.
+    back as BioImage resolution levels.
     Scenes with an S dim (TCZYXS standard order) encode as interleaved
     multi-sample pages.
     """

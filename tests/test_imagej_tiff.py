@@ -10,8 +10,6 @@ from bioio_spark import BioImage
 from bioio_spark.formats.tiff import (encode_tiff,
                                       parse_imagej_description)
 from bioio_spark.formats.tiff_pages import PageSpec, compose_tiff
-from bioio_spark.sources.tiff_image import (read_tiff_planes,
-                                            read_tiff_window)
 
 
 def _block(T=2, C=3, Z=4, dtype="uint16"):
@@ -69,8 +67,9 @@ def test_hyperstack_contiguous_single_ifd(spark, tmp_path):
     img = BioImage(str(p), spark=spark)
     assert img.dims.shape == (2, 2, 3, 4, 5)
     np.testing.assert_array_equal(img.data, block)
-    # the page planner can't window this layout; the public API falls
-    # back to the Catalyst filter with identical rows
+    # each appended frame is a plan row of its own, so the reader
+    # windows this layout itself
+    assert img._reader.read_window(spark, img, t=1, c=0) is not None
     got = (img.read_window(t=1, c=0, z=(1, 3), y=(1, 3))
            .orderBy("z", "y", "x").toPandas())
     sub = block[1, 0, 1:3, 1:3]
@@ -105,8 +104,10 @@ def test_window_read_imagej_order(spark, tmp_path):
     p = tmp_path / "h.tif"
     p.write_bytes(encode_tiff(_hyper_pages(block),
                               description=_ij_desc(2, 3, 4)))
-    got = read_tiff_window(spark, str(p), t=1, c=(1, 3), z=2,
-                           y=(1, 4), x=(2, 5)).toPandas()
+    img = BioImage(str(p), spark=spark)
+    assert img._reader.read_window(spark, img, t=1) is not None
+    got = img.read_window(t=1, c=(1, 3), z=2, y=(1, 4),
+                          x=(2, 5)).toPandas()
     sub = block[1, 1:3, 2, 1:4, 2:5]
     got = got.sort_values(["c", "y", "x"])["value"].to_numpy()
     np.testing.assert_allclose(got.reshape(sub.shape), sub)
@@ -117,7 +118,9 @@ def test_planes_read_imagej_order(spark, tmp_path):
     p = tmp_path / "h.tif"
     p.write_bytes(encode_tiff(_hyper_pages(block),
                               description=_ij_desc(2, 3, 4)))
-    pdf = read_tiff_planes(spark, str(p)).toPandas()
+    img = BioImage(str(p), spark=spark)
+    assert img._reader.read_planes(spark, img) is not None
+    pdf = img.get_planes_dataframe().toPandas()
     assert len(pdf) == 2 * 3 * 4
     row = pdf[(pdf.t == 1) & (pdf.c == 2) & (pdf.z == 3)].iloc[0]
     np.testing.assert_allclose(

@@ -98,14 +98,25 @@ def test_pic_window_prunes_planes_and_rows(spark, tmp_path):
     np.testing.assert_array_equal(got, exp.astype(float))
 
 
-def test_pic_window_y_is_byte_ranged(tmp_path, spark):
+def test_pic_window_y_is_byte_ranged(tmp_path, spark, monkeypatch):
     """The y window must shrink the planned read itself, not just
-    filter rows after a full-plane read."""
+    filter rows after a full-plane read: the reader's ``narrow`` hook,
+    which runs on the driver, turns the z=0 plane's row into the bytes
+    of image rows 2 and 3 only."""
     p = _write(tmp_path)
-    from bioio_spark.formats.pic import read_pic_catalog
     cat = read_pic_catalog(p)
     row_bytes = cat["nx"] * cat["dtype"].itemsize
+    narrow, seen = PicImageReader.narrow, []
+
+    def spy(rows, lo, hi):
+        out = narrow(rows, lo, hi)
+        seen.append((rows, out))
+        return out
+
+    monkeypatch.setattr(PicImageReader, "narrow", staticmethod(spy))
     df = BioImage(p, spark=spark).read_window(z=0, y=slice(2, 4))
-    # plan rows are internal; assert via the public result + arithmetic
     assert df.count() == 2 * cat["nx"]
-    assert row_bytes == 12
+    (planned, narrowed), = seen
+    assert list(narrowed["nbytes"]) == [2 * row_bytes]
+    assert list(narrowed["offset"]) == [
+        planned["offset"].iloc[0] + 2 * row_bytes]

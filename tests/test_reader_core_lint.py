@@ -10,9 +10,9 @@ module hand-writes a scene- or channel-catalog row instead of calling
 format module re-inlines the scan and decode loop that
 ``sources/raster.py`` owns, or if a planned reader's module grows a
 module-level ``def read_…_window(`` / ``def read_…_planes(`` again —
-a planned reader builds one plan and ``PlannedReader`` derives its
-window and planes reads from it; only the TIFF and Zarr modules, whose
-full reads are file scans rather than plans, keep their own."""
+a planned reader, TIFF included, builds one plan and ``PlannedReader``
+derives its window and planes reads from it; only the Zarr module, whose
+full read is a chunk-file scan rather than a plan, keeps its own."""
 
 import os
 import re
@@ -47,7 +47,7 @@ RULES = [
        and os.path.basename(rel) in RASTER_MODULES, pat,
        "single-raster readers scan and decode through sources/raster.py")
       for pat in ("binaryFile", "mapInPandas")),
-    (lambda rel: _source_module(rel, allow=("planned.py", "tiff_image.py",
+    (lambda rel: _source_module(rel, allow=("planned.py",
                                             "zarr_image.py")),
      re.compile(r"^def read_\w+_(window|planes)\("),
      "window and planes reads derive from the reader's one plan"),
@@ -103,6 +103,8 @@ def test_scan_catches_planted_violations(tmp_path):
         "    def read_fake_planes(spark, path):\n")
     (src / "tiff_image.py").write_text(
         "def read_tiff_window(spark, path, t=None):\n")
+    (src / "zarr_image.py").write_text(
+        "def read_zarr_window(spark, path, t=None):\n")
     (src / "planned.py").write_text(
         "n = min(n, spark.sparkContext.defaultParallelism))\n")
     catalog = ('row = {"ome_pixel_type": "uint8"}\n'
@@ -117,16 +119,18 @@ def test_scan_catches_planted_violations(tmp_path):
     paths = [str(tmp_path / "bioio_spark" / "bio_image.py"),
              str(src / "fake_image.py"), str(src / "planned.py"),
              str(src / "array_like.py"), str(src / "gif_image.py"),
-             str(src / "raster.py"), str(src / "tiff_image.py")]
+             str(src / "raster.py"), str(src / "tiff_image.py"),
+             str(src / "zarr_image.py")]
     hits = _violations(paths, root=str(tmp_path))
-    assert len(hits) == 8, hits
+    assert len(hits) == 9, hits
     files = [os.path.basename(h.split(":")[0]) for h in hits]
     assert not {"planned.py", "array_like.py", "raster.py",
-                "tiff_image.py"} & set(files)
+                "zarr_image.py"} & set(files)
     # the module-level read_fake_window, not the nested read_fake_planes
     assert files.count("fake_image.py") == 5
     assert [h for h in hits if "one plan" in h] == [
-        "bioio_spark/sources/fake_image.py:4: "
+        f"bioio_spark/sources/{f} "
         "^def read_\\w+_(window|planes)\\( "
-        "(window and planes reads derive from the reader's one plan)"]
+        "(window and planes reads derive from the reader's one plan)"
+        for f in ("fake_image.py:4:", "tiff_image.py:1:")]
     assert files.count("gif_image.py") == 2

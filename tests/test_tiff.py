@@ -648,14 +648,25 @@ def test_distributed_save_bigtiff(spark, tmp_path):
     np.testing.assert_array_equal(back.get_image_data(), a)
 
 
-# -- window-pruned reads (read_tiff_window) --------------------------------
+# -- window-pruned reads (BioImage.read_window over the chunk plan) --------
+
+def _window(spark, path, level=0, **win):
+    """``path``'s window at resolution ``level`` through
+    ``BioImage.read_window``, which the reader's own chunk-plan read
+    must answer (no fallback to the filtered frame)."""
+    from bioio_spark import BioImage
+
+    img = BioImage(str(path), spark=spark)
+    img.set_resolution_level(level)
+    assert img._reader.read_window(spark, img, **win) is not None
+    return img.read_window(**win)
+
 
 def test_read_tiff_window_page_pruning(spark, tmp_path):
     """Selectors prune to the exact page set via the seek-based IFD walk;
     values and coordinates match the source block."""
     from bioio_spark import BioImage
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import read_tiff_window
     from bioio_spark.writers import save_ome_tiff
 
     idx = np.indices((2, 2, 3, 6, 8))
@@ -670,8 +681,8 @@ def test_read_tiff_window_page_pruning(spark, tmp_path):
     assert len(layout) == 2 * 2 * 3          # one page per (t, c, z)
     assert all(len(pg["chunks"]) == 1 for pg in layout)
 
-    pdf = read_tiff_window(spark, path, t=1, z=(1, 3), y=range(2, 5),
-                           x=3).toPandas()
+    pdf = _window(spark, path, t=1, z=(1, 3), y=range(2, 5),
+                  x=3).toPandas()
     want = block[1, :, 1:3, 2:5, 3]
     assert len(pdf) == want.size
     got = np.zeros_like(want)
@@ -679,7 +690,7 @@ def test_read_tiff_window_page_pruning(spark, tmp_path):
         pdf["value"].astype(np.uint32)
     np.testing.assert_array_equal(got, want)
 
-    full = read_tiff_window(spark, path)
+    full = _window(spark, path)
     assert full.count() == block.size
 
 
@@ -690,7 +701,6 @@ def test_read_tiff_window_tile_pruning(spark, tmp_path):
     import struct
 
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     rng = np.random.default_rng(47)
     img = rng.integers(0, 255, (10, 7), dtype=np.uint8)
@@ -732,7 +742,7 @@ def test_read_tiff_window_tile_pruning(spark, tmp_path):
     assert layout[0]["tiled"] and len(layout[0]["chunks"]) == 6
 
     # window (y in [5,9), x in [5,7)) intersects tiles (1,1) and (2,1)
-    pdf = (read_tiff_window(spark, str(p), y=(5, 9), x=(5, 7))
+    pdf = (_window(spark, str(p), y=(5, 9), x=(5, 7))
            .toPandas().sort_values(["y", "x"]))
     want = img[5:9, 5:7]
     assert len(pdf) == want.size
@@ -741,7 +751,7 @@ def test_read_tiff_window_tile_pruning(spark, tmp_path):
     np.testing.assert_array_equal(got, want)
 
     # no-OME file: pages read as (1, 1, n_pages); whole read matches
-    full = read_tiff_window(spark, str(p)).toPandas()
+    full = _window(spark, str(p)).toPandas()
     assert len(full) == img.size
 
 
@@ -752,7 +762,6 @@ def test_read_tiff_window_big_endian_multistrip(spark, tmp_path):
     import struct
 
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     img = (np.arange(18).reshape(6, 3) * 1000).astype(">u2")
     strips = [img[0:2].tobytes(), img[2:4].tobytes(), img[4:6].tobytes()]
@@ -786,7 +795,7 @@ def test_read_tiff_window_big_endian_multistrip(spark, tmp_path):
         "y0": 2, "x0": 0, "h": 2, "w": 3, "s": 0}
 
     # y in [3,5) intersects strips 1 and 2 only
-    pdf = read_tiff_window(spark, str(p), y=(3, 5)).toPandas()
+    pdf = _window(spark, str(p), y=(3, 5)).toPandas()
     want = img.astype("=u2")[3:5]
     assert len(pdf) == want.size
     got = np.zeros_like(want)
@@ -824,10 +833,19 @@ def test_multiscene_single_file(spark, tmp_path):
     # scene stack across the in-file scenes
     assert img.get_stack_dataframe().count() == a.size + b.size
 
-    # window read refuses multi-scene files with a pointer to BioImage
-    from bioio_spark.sources.tiff_image import read_tiff_window
-    with pytest.raises(ValueError, match="multi-scene"):
-        read_tiff_window(spark, str(p), t=0)
+    # scene Image:1's window reads through the plan and equals its
+    # filtered frame
+    assert img._reader.read_window(spark, img, c=1, y=(1, 3)) is not None
+    got = (img.read_window(c=1, y=(1, 3)).orderBy("t", "c", "z", "y", "x")
+           .toPandas())
+    want = (img.get_image_dataframe()
+            .filter("c = 1 AND y >= 1 AND y < 3")
+            .select("t", "c", "z", "y", "x", "value")
+            .orderBy("t", "c", "z", "y", "x").toPandas())
+    assert len(got) == len(want) == 2 * 4
+    for col in ("t", "c", "z", "y", "x", "value"):
+        np.testing.assert_array_equal(got[col].to_numpy(),
+                                      want[col].to_numpy())
 
     xml = read_ome_header(str(p))
     assert len(parse_ome_xml_scenes(xml)) == 2
@@ -837,11 +855,11 @@ def test_multiscene_single_file(spark, tmp_path):
 def test_subifd_pyramid_levels(spark, tmp_path):
     """SubIFD (tag 330) pyramid levels — the wild pyramidal-OME-TIFF
     layout: iter_tiff_chunks exposes each page's children and
-    read_tiff_window(level=k) reads only that level's chunks."""
+    a window read at resolution level k reads only that level's
+    chunks."""
     import struct
 
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     lvl0 = np.arange(24, dtype=np.uint8).reshape(6, 4)
     lvl1 = (np.arange(6, dtype=np.uint8) * 10 + 3).reshape(3, 2)
@@ -877,20 +895,20 @@ def test_subifd_pyramid_levels(spark, tmp_path):
     assert (layout[0]["subifds"][0]["h"],
             layout[0]["subifds"][0]["w"]) == (3, 2)
 
-    full = read_tiff_window(spark, str(p)).toPandas()
+    full = _window(spark, str(p)).toPandas()
     assert len(full) == 24
 
-    l1 = read_tiff_window(spark, str(p), level=1).toPandas()
+    l1 = _window(spark, str(p), level=1).toPandas()
     got = np.zeros_like(lvl1)
     got[l1["y"], l1["x"]] = l1["value"].astype(np.uint8)
     np.testing.assert_array_equal(got, lvl1)
 
     # window pruning applies to the level's own grid
-    win = read_tiff_window(spark, str(p), level=1, y=(1, 3)).toPandas()
+    win = _window(spark, str(p), level=1, y=(1, 3)).toPandas()
     assert len(win) == 4
 
-    with pytest.raises(IndexError, match="pyramid"):
-        read_tiff_window(spark, str(p), level=2)
+    with pytest.raises(IndexError, match="Resolution level 2"):
+        _window(spark, str(p), level=2)
 
 
 # -- PackBits (Compression=32773) ------------------------------------------
@@ -979,12 +997,11 @@ def test_codec_packbits_shrinks_low_entropy():
 def test_packbits_window_read(spark, tmp_path):
     """decompress_tiff_chunk handles PackBits in the pruned-read path."""
     from bioio_spark.formats.tiff import encode_tiff
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     plane = np.arange(20 * 12, dtype=np.uint8).reshape(20, 12) % 5
     p = tmp_path / "pb.tif"
     p.write_bytes(encode_tiff([plane], compression=32773))
-    got = read_tiff_window(spark, str(p), y=(4, 9), x=(2, 6)).toPandas()
+    got = _window(spark, str(p), y=(4, 9), x=(2, 6)).toPandas()
     win = np.zeros((20, 12), dtype=np.uint8)
     win[got["y"], got["x"]] = got["value"].astype(np.uint8)
     np.testing.assert_array_equal(win[4:9, 2:6], plane[4:9, 2:6])
@@ -1039,10 +1056,9 @@ def test_encode_tiled_guards():
 
 
 def test_tiled_write_window_read_prunes(spark, tmp_path):
-    """Our own tiled output feeds read_tiff_window's tile pruning: a
+    """Our own tiled output feeds the window read's tile pruning: a
     window touching one tile plans exactly one chunk."""
     from bioio_spark.formats.tiff import encode_tiff, iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     rng = np.random.default_rng(23)
     plane = rng.integers(0, 9999, (48, 64)).astype(np.uint16)
@@ -1050,7 +1066,7 @@ def test_tiled_write_window_read_prunes(spark, tmp_path):
     p.write_bytes(encode_tiff([plane], compression=8, tile=(16, 16)))
     lay = iter_tiff_chunks(str(p))
     assert lay[0]["tiled"] and len(lay[0]["chunks"]) == 3 * 4
-    w = read_tiff_window(spark, str(p), y=(17, 30), x=(18, 30)).toPandas()
+    w = _window(spark, str(p), y=(17, 30), x=(18, 30)).toPandas()
     got = np.zeros((13, 12), dtype=np.uint16)
     got[w["y"] - 17, w["x"] - 18] = w["value"].astype(np.uint16)
     np.testing.assert_array_equal(got, plane[17:30, 18:30])
@@ -1084,7 +1100,6 @@ def test_encode_pyramidal_subifds(spark, tmp_path):
     level selector with tile pruning intact."""
     from bioio_spark.formats.tiff import (decode_tiff, encode_tiff,
                                           iter_tiff_chunks)
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     rng = np.random.default_rng(31)
     mains = [rng.integers(0, 999, (64, 80)).astype(np.uint16)
@@ -1104,15 +1119,15 @@ def test_encode_pyramidal_subifds(spark, tmp_path):
     np.testing.assert_array_equal(back[1], mains[1])
     # level-1 read through the pruned window path (no OME description:
     # pages map to z)
-    l1 = read_tiff_window(spark, str(p), level=1).toPandas()
+    l1 = _window(spark, str(p), level=1).toPandas()
     for z in sorted(l1["z"].unique()):
         sub = l1[l1["z"] == z]
         got = np.zeros((32, 40), np.uint16)
         got[sub["y"], sub["x"]] = sub["value"].astype(np.uint16)
         np.testing.assert_array_equal(got, levels[z][0])
     # windowed level-2 read trims to the window
-    win = read_tiff_window(spark, str(p), level=2, z=0, y=(0, 8),
-                           x=(4, 12)).toPandas()
+    win = _window(spark, str(p), level=2, z=0, y=(0, 8),
+                  x=(4, 12)).toPandas()
     got = np.zeros((8, 8), np.uint16)
     got[win["y"], win["x"] - 4] = win["value"].astype(np.uint16)
     np.testing.assert_array_equal(got, levels[0][1][0:8, 4:12])
@@ -1136,8 +1151,7 @@ def test_save_ome_tiff_pyramidal(spark, tmp_path):
 
     from bioio_spark import BioImage
     from bioio_spark.formats.tiff import iter_tiff_chunks
-    from bioio_spark.sources.tiff_image import (TiffImageReader,
-                                                read_tiff_window)
+    from bioio_spark.sources.tiff_image import TiffImageReader
     from bioio_spark.writers import save_ome_tiff
 
     rng = np.random.default_rng(33)
@@ -1152,7 +1166,7 @@ def test_save_ome_tiff_pyramidal(spark, tmp_path):
     np.testing.assert_array_equal(
         back.get_image_data("TCZYX").astype(np.uint16), block)
     # level 1 = rint of the 2x2 block mean
-    l1 = read_tiff_window(spark, f, level=1, z=0).toPandas()
+    l1 = _window(spark, f, level=1, z=0).toPandas()
     got = np.zeros((16, 20), np.uint16)
     got[l1["y"], l1["x"]] = l1["value"].astype(np.uint16)
     exp = np.rint((block[0, 0, 0, 0::2, 0::2].astype(np.float64)
@@ -1240,8 +1254,6 @@ def test_read_tiff_window_padded_final_strip(spark, tmp_path):
     import struct
     import zlib
 
-    from bioio_spark.sources.tiff_image import read_tiff_window
-
     a = np.arange(20, dtype=np.uint8).reshape(5, 4)
     strip0 = zlib.compress(a[0:3].tobytes())
     # final strip covers 2 rows but is PADDED to 3 before compression
@@ -1269,11 +1281,27 @@ def test_read_tiff_window_padded_final_strip(spark, tmp_path):
     p = tmp_path / "padded.tif"
     p.write_bytes(data)
 
-    pdf = read_tiff_window(spark, str(p)).toPandas()
+    pdf = _window(spark, str(p)).toPandas()
     assert len(pdf) == 20
     got = np.zeros_like(a)
     got[pdf["y"], pdf["x"]] = pdf["value"].astype(np.uint8)
     np.testing.assert_array_equal(got, a)
+
+
+def test_ome_plane_count_must_match_pages(spark, tmp_path):
+    """An OME-XML that declares fewer planes than the file has pages is
+    rejected at open, naming both counts, instead of each view reading
+    its own subset of the pages."""
+    from bioio_spark.bio_image import BioImage
+    from bioio_spark.formats.tiff import encode_ome_tiff
+
+    block = np.arange(6 * 16 * 8, dtype=np.uint16).reshape(1, 1, 6, 16, 8)
+    data = encode_ome_tiff(block)
+    assert data.count(b'SizeZ="6"') == 1
+    p = tmp_path / "short.ome.tiff"
+    p.write_bytes(data.replace(b'SizeZ="6"', b'SizeZ="5"'))
+    with pytest.raises(ValueError, match="declares 5 planes.*6 pages"):
+        BioImage(str(p), spark=spark)
 
 
 def test_uneven_subifd_depth_rejected(spark, tmp_path):
@@ -1400,9 +1428,8 @@ def test_jpeg_tiff_abbreviated_tables_stream():
 def test_jpeg_tiff_window_and_planes_paths(spark, tmp_path):
     """The pruned window read and the planes read decode gray JPEG
     tiles (tables merged executor-side)."""
+    from bioio_spark import BioImage
     from bioio_spark.formats.tiff import decode_tiff, encode_tiff
-    from bioio_spark.sources.tiff_image import (read_tiff_planes,
-                                                read_tiff_window)
 
     yy, xx = np.mgrid[0:32, 0:32]
     a = ((yy * 2 + xx) % 250).astype(np.uint8)
@@ -1410,12 +1437,14 @@ def test_jpeg_tiff_window_and_planes_paths(spark, tmp_path):
     p.write_bytes(encode_tiff([a], compression=7, tile=(16, 16)))
     want, _ = decode_tiff(p.read_bytes())     # codec ground truth
 
-    w = read_tiff_window(spark, str(p), y=(4, 12), x=(20, 30)).toPandas()
+    w = _window(spark, str(p), y=(4, 12), x=(20, 30)).toPandas()
     got = np.zeros((8, 10), np.uint8)
     got[w["y"] - 4, w["x"] - 20] = w["value"].astype(np.uint8)
     np.testing.assert_array_equal(got, want[0][4:12, 20:30])
 
-    pl = read_tiff_planes(spark, str(p)).toPandas()
+    img = BioImage(str(p), spark=spark)
+    assert img._reader.read_planes(spark, img) is not None
+    pl = img.get_planes_dataframe().toPandas()
     assert len(pl) == 4
     row = pl[(pl.y0 == 16) & (pl.x0 == 0)].iloc[0]
     np.testing.assert_array_equal(
@@ -1441,9 +1470,8 @@ def test_bioimage_jpeg_tiff_end_to_end(spark, tmp_path):
 
 def test_jpeg_tiff_pyramid_levels(spark, tmp_path):
     """JPEG compression composes with SubIFD pyramids: level-1 JPEG
-    tiles decode through read_tiff_window(level=1)."""
+    tiles decode through a window read at resolution level 1."""
     from bioio_spark.formats.tiff import decode_tiff_levels, encode_tiff
-    from bioio_spark.sources.tiff_image import read_tiff_window
 
     yy, xx = np.mgrid[0:64, 0:64]
     a = ((yy * 2 + xx) % 240).astype(np.uint8)
@@ -1453,8 +1481,8 @@ def test_jpeg_tiff_pyramid_levels(spark, tmp_path):
                               sub_levels=[[lvl1]]))
     planes, _, subs = decode_tiff_levels(p.read_bytes())
     assert subs[0][0].shape == (32, 32)
-    w = read_tiff_window(spark, str(p), level=1, y=(0, 8),
-                         x=(8, 16)).toPandas()
+    w = _window(spark, str(p), level=1, y=(0, 8),
+                x=(8, 16)).toPandas()
     got = np.zeros((8, 8), np.uint8)
     got[w["y"], w["x"] - 8] = w["value"].astype(np.uint8)
     np.testing.assert_array_equal(got, subs[0][0][0:8, 8:16])

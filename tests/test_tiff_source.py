@@ -76,16 +76,17 @@ def test_strip_pruning_on_multistrip_page(tmp_path):
 
 
 def test_end_to_end_filter_equals_window(spark, tiff_file):
-    """The DataSource scan under a filter equals read_tiff_window on the
-    same selectors, value for value."""
-    from bioio_spark.sources.tiff_image import read_tiff_window
+    """The DataSource scan under a filter equals BioImage.read_window on
+    the same selectors, value for value."""
+    from bioio_spark import BioImage
 
     path, a = tiff_file
     register_tiff_source(spark)
     df = (spark.read.format("bioio_tiff").option("path", path).load()
           .filter("t = 0 AND z >= 1 AND y < 4")
           .select("t", "c", "z", "y", "x", "value"))
-    want = read_tiff_window(spark, path, t=0, z=(1, 3), y=(0, 4))
+    want = BioImage(path, spark=spark).read_window(t=0, z=(1, 3),
+                                                   y=(0, 4))
     got = sorted(map(tuple, df.collect()))
     exp = sorted(map(tuple, want.collect()))
     assert got == exp and len(got) > 0
@@ -123,3 +124,18 @@ def test_multiscene_file_scene_pruning(spark, tmp_path):
           .filter(F.col("scene") == "Image:1"))
     assert df.count() == b.size
     assert df.agg(F.sum("value")).collect()[0][0] == float(b.sum())
+
+
+def test_scene_names_match_bioimage(spark, tmp_path):
+    """The scan names a scene as BioImage does: by its OME image id."""
+    from bioio_spark import BioImage
+    from bioio_spark.formats.tiff import encode_ome_tiff
+
+    a = np.arange(2 * 3 * 4, dtype=np.uint16).reshape(1, 1, 2, 3, 4)
+    p = str(tmp_path / "cells.ome.tiff")
+    with open(p, "wb") as f:
+        f.write(encode_ome_tiff(a, image_id="Cells"))
+    register_tiff_source(spark)
+    df = spark.read.format("bioio_tiff").option("path", p).load()
+    scenes = tuple(r.scene for r in df.select("scene").distinct().collect())
+    assert scenes == BioImage(p, spark=spark).scenes == ("Cells",)

@@ -44,6 +44,32 @@ def _write_fixture(fmt, vol, tmp_path, spark):
         save_ome_tiff(BioImage(vol, spark=spark), str(out),
                       compression=8)
         return str(out / "scene_0.ome.tiff")
+    if fmt == "tiff_dir":
+        # a multi-file save_ome_tiff directory: one file per scene, the
+        # window reads scene 0
+        from bioio_spark.writers import save_ome_tiff
+
+        out = tmp_path / "w_tiff_dir"
+        save_ome_tiff(BioImage([vol, vol[:1] + 1], spark=spark), str(out),
+                      compression=5)
+        return str(out)
+    if fmt == "tiff_imagej_contiguous":
+        # ImageJ's one-IFD contiguous stack: raw frames, channel-fastest,
+        # appended after the first page's strip
+        from bioio_spark.formats.tiff_pages import PageSpec, compose_tiff
+
+        frames = [vol[t, c, z] for t in range(vol.shape[0])
+                  for z in range(vol.shape[2]) for c in range(vol.shape[1])]
+        desc = (f"ImageJ=1.53t\nimages={len(frames)}\n"
+                f"channels={vol.shape[1]}\nslices={vol.shape[2]}\n"
+                f"frames={vol.shape[0]}\n")
+        data, _ = compose_tiff([PageSpec(
+            frames[0], description=desc,
+            extra_data=b"".join(f.astype("<u2").tobytes()
+                                for f in frames[1:]))])
+        p = tmp_path / "w_ij.tif"
+        p.write_bytes(data)
+        return str(p)
     if fmt == "zarr":
         from bioio_spark.writers import save_ome_zarr
 
@@ -174,12 +200,23 @@ WINDOWS = [
     dict(t=0, c=0, z=0, y=2, x=(3, 7)),
 ]
 
-WINDOW_FORMATS = ["tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
-                  "lsm", "oif", "oib", "ims", "stk", "dicom", "mrc", "zvi",
-                  "dng", "pic", *VIDEO, "sldy"]
-PLANES_FORMATS = {"tiff", "zarr", "zarr_sharded", "dv", "czi", "nd2", "lif",
-                  "lsm", "oif", "oib", "ims", "stk", "dicom", "mrc", "zvi",
-                  "dng", "pic", *VIDEO, "sldy"}
+WINDOW_FORMATS = ["tiff", "tiff_dir", "tiff_imagej_contiguous", "zarr",
+                  "zarr_sharded", "dv", "czi", "nd2", "lif", "lsm", "oif",
+                  "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
+                  *VIDEO, "sldy"]
+PLANES_FORMATS = {"tiff", "tiff_dir", "tiff_imagej_contiguous", "zarr",
+                  "zarr_sharded", "dv", "czi", "nd2", "lif", "lsm", "oif",
+                  "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
+                  *VIDEO, "sldy"}
+
+
+def _open(fmt, path, spark):
+    """A fixture as a BioImage. Suffix routing does not reach a
+    directory of TIFFs, so that case names its reader."""
+    from bioio_spark.sources.tiff_image import TiffImageReader
+
+    return BioImage(path, spark=spark, reader=(
+        TiffImageReader if fmt == "tiff_dir" else None))
 
 
 def _fit(win, sizes):
@@ -196,7 +233,7 @@ def test_reader_owns_window_pushdown(spark, tmp_path, fmt):
     read_window itself for every window shape, and read_planes exactly
     where the format plans its own chunks."""
     vol = _fixture_vol(fmt)
-    img = BioImage(_write_fixture(fmt, vol, tmp_path, spark), spark=spark)
+    img = _open(fmt, _write_fixture(fmt, vol, tmp_path, spark), spark)
     sizes = dict(zip("tczyx", vol.shape))
     for win in (_fit(w, sizes) for w in WINDOWS):
         px = img._reader.read_window(spark, img, **win)
@@ -210,7 +247,7 @@ def test_reader_owns_window_pushdown(spark, tmp_path, fmt):
 def test_read_window_matches_filtered_frame(spark, tmp_path, fmt):
     vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
-    img = BioImage(path, spark=spark)
+    img = _open(fmt, path, spark)
     assert (img.dims.T, img.dims.C, img.dims.Z,
             img.dims.Y, img.dims.X) == vol.shape
     from pyspark.sql import functions as F
@@ -248,7 +285,7 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
 
     vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
-    img = BioImage(path, spark=spark)
+    img = _open(fmt, path, spark)
     pushed = img._reader.read_planes(spark, img)
     assert (pushed is not None) == (fmt in PLANES_FORMATS), fmt
     got = (planes_to_pixels(img.get_planes_dataframe())
@@ -329,8 +366,7 @@ def test_scene_catalog_contract(spark, tmp_path, case):
     from bioio_spark.sources.array_like import SCENE_COLUMNS
     from bioio_spark.types import dtype_to_ome_type
 
-    img = BioImage(_write_catalog_fixture(case, tmp_path, spark),
-                   spark=spark)
+    img = _open(case, _write_catalog_fixture(case, tmp_path, spark), spark)
     assert list(img._dataset.scenes.columns) == SCENE_COLUMNS
     if case.endswith("float32"):
         assert img.dtype == np.float32
