@@ -868,7 +868,7 @@ def _undo_horizontal_predictor(plane: np.ndarray) -> np.ndarray:
     return np.cumsum(plane, axis=1, dtype=plane.dtype)
 
 
-def decode_tiff(data: bytes, include_levels: bool = False):
+def decode_tiff(data: bytes):
     """Decode a TIFF -> (planes, description).
 
     planes: list of numpy arrays, one per IFD/page — 2D (YX) for grayscale
@@ -877,9 +877,7 @@ def decode_tiff(data: bytes, include_levels: bool = False):
     8 / 32946; strip AND tile layouts; II and MM byte orders; classic
     (version 42) and BigTIFF (version 43: 64-bit offsets/counts, 20-byte
     IFD entries — how wild >4 GB microscopy files ship);
-    description: IFD0's ImageDescription string or None. With
-    `include_levels` a third element carries each page's decoded SubIFD
-    pyramid planes (see decode_tiff_levels)."""
+    description: IFD0's ImageDescription string or None."""
     if data[:2] == b"II":
         bo = "<"
     elif data[:2] == b"MM":
@@ -1028,32 +1026,16 @@ def decode_tiff(data: bytes, include_levels: bool = False):
         return plane, tags, next_off
 
     planes, description = [], None
-    sub_planes: list[list[np.ndarray]] = []
     first = True
     while ifd_off:
         plane, tags, next_off = _decode_ifd_at(ifd_off)
         planes.append(plane)
-        if include_levels:
-            subs = []
-            for so in tags.get(_SUB_IFDS, []):
-                sp, _stags, _ = _decode_ifd_at(int(so))
-                subs.append(sp)
-            sub_planes.append(subs)
         if first:
             desc = tags.get(_IMAGE_DESCRIPTION)
             description = desc[0] if desc else None
             first = False
         ifd_off = next_off
-    if include_levels:
-        return planes, description, sub_planes
     return planes, description
-
-
-def decode_tiff_levels(data: bytes):
-    """decode_tiff plus each page's SubIFD pyramid planes ->
-    (planes, description, sub_planes) with sub_planes[i] the decoded
-    level-1..L planes of page i (empty list when the page has none)."""
-    return decode_tiff(data, include_levels=True)
 
 
 def _read_tag_values_fh(f, typ: int, count: int, raw: bytes, bo: str,
@@ -1244,57 +1226,6 @@ def decompress_tiff_chunk(data: bytes, comp: int) -> bytes:
     if comp == _COMPRESSION_NONE:
         return data
     raise ValueError(f"unsupported TIFF compression {comp}")
-
-
-def read_ome_header(path: str) -> Optional[str]:
-    """Read ONLY IFD0's ImageDescription (the OME-XML) from a TIFF file.
-
-    Seek-based: header (8 bytes) + IFD0 entry table + the description
-    bytes — no pixel data touches the driver, so cataloging a multi-GB
-    file costs a few KB of reads."""
-    with open(path, "rb") as f:
-        head = f.read(16)
-        if head[:2] == b"II":
-            bo = "<"
-        elif head[:2] == b"MM":
-            bo = ">"
-        else:
-            raise ValueError(f"{path}: not a TIFF")
-        version = struct.unpack(f"{bo}H", head[2:4])[0]
-        if version == 42:
-            big = False
-            (ifd_off,) = struct.unpack(f"{bo}I", head[4:8])
-        elif version == 43:
-            big = True
-            (ifd_off,) = struct.unpack(f"{bo}Q", head[8:16])
-        else:
-            raise ValueError(f"{path}: not a TIFF (bad magic {version})")
-        ent_sz = 20 if big else 12
-        f.seek(ifd_off)
-        if big:
-            (n_entries,) = struct.unpack(f"{bo}Q", f.read(8))
-        else:
-            (n_entries,) = struct.unpack(f"{bo}H", f.read(2))
-        table = f.read(ent_sz * n_entries)
-        for i in range(n_entries):
-            ent = table[ent_sz * i: ent_sz * (i + 1)]
-            tag, typ = struct.unpack(f"{bo}HH", ent[:4])
-            if tag != _IMAGE_DESCRIPTION:
-                continue
-            if big:
-                (count,) = struct.unpack(f"{bo}Q", ent[4:12])
-                raw, inline = ent[12:20], 8
-            else:
-                (count,) = struct.unpack(f"{bo}I", ent[4:8])
-                raw, inline = ent[8:12], 4
-            if count > inline:
-                (off,) = struct.unpack(f"{bo}{'Q' if big else 'I'}", raw)
-                f.seek(off)
-                buf = f.read(count)
-            else:
-                buf = raw[:count]
-            return buf.rstrip(b"\x00").decode("utf-8", errors="replace")
-    return None
 
 
 def parse_ome_xml(ome_xml: str) -> dict:

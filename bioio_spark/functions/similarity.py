@@ -25,6 +25,17 @@ def _to_double(col):
     return F.transform(col, lambda x: x.cast("double"))
 
 
+def _emb(embeddings: DataFrame, *cols: str) -> DataFrame:
+    """`embeddings` projected to (*cols, e array<double>), remembering
+    the caller's frame: the memos key on ITS input (_ivf_memo), so
+    callers that project one input differently (with or without label)
+    share one training."""
+    emb = embeddings.select(*cols,
+                            _to_double(F.col("embedding")).alias("e"))
+    emb._memo_source = embeddings
+    return emb
+
+
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
@@ -38,8 +49,7 @@ def _norm(a):
 
 def cosine_topk(embeddings: DataFrame, query_vec_id: int = 0,
                 k: int = 10) -> DataFrame:
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     q = (emb.filter(F.col("vec_id") == query_vec_id)
          .select(F.col("e").alias("q")))
     sim = _dot(F.col("e"), F.col("q")) / (_norm(F.col("e"))
@@ -125,117 +135,119 @@ def _lit_double_array(vals) -> "F.Column":
     return F.expr(f"array({body})")
 
 
-def _pair_sims_arrow(pairs: "DataFrame") -> "DataFrame":
-    """(vec_id, sim) per joined pair, scored in one Arrow batch pass.
-
-    Bit-exact twin of the HOF scoring `_dot(ea, eb) / (na * nb)` (r14,
-    guide §4.2: hand whole batches to vectorized native code). The
-    oracle pins a strict left-fold dot — ((0.0 + p1) + p2) + ... — so
-    plain numpy `dot`/`sum` (pairwise summation) would reorder floats;
-    instead the fold runs ACROSS PAIRS: `acc = acc + (a[:, j] * b[:, j])`
-    steps j = 0..dim-1, each one IEEE-754 double multiply + add per
-    pair in exactly the HOF's association order, vectorized over the
-    ~250k-pair batch axis where order does not matter. The denominator
-    multiplies before dividing, as the column expression does.
-
-    Input columns (select exactly these before calling — mapInArrow is
-    opaque to column pruning): vec_id long, ea/eb array<double> of one
-    common fixed dim, na/nb double. Output: vec_id long, sim double.
-
-    Why Arrow at all: the interpreted `aggregate(zip_with(...))` fold
-    was l12's warm floor (~5 s over 250k pairs x 64 dims) and the
-    unrolled-expression replacement measured 2x WORSE (r13); numpy does
-    the same 16M flops in milliseconds, and only (vec_id, sim) rides
-    back across the boundary.
-
-    Degenerate inputs mirror the DUCKDB ORACLE (pinned by
-    tests/test_embedding_dedup.py::
-    test_pair_sims_arrow_degenerates_match_oracle): a ZERO denominator
-    yields NULL — DuckDB double division by zero is NULL; raw IEEE NaN
-    would pass Spark's NaN-is-largest `sim >= t` filter and wrongly
-    drop zero-norm vectors, and the in-stage JVM division this
-    replaced would RAISE DIVIDE_BY_ZERO under ANSI Spark 4 — and any
-    null/ragged embedding pair yields NULL (zip_with null-pads,
-    nulling the fold). Batches with nulls or ragged lists take a
-    per-row fallback; the fixture-shaped fast path is pure vector
-    code."""
+def _dense(col, dim: int):
+    """An Arrow list<double> column as an (n, dim) float64 matrix, plus
+    the (n,) mask of its CLEAN rows: non-null, exactly `dim` elements,
+    none of them null. A cell with no value (a null row or element, or
+    past a short row's end) holds 0.0. A batch of clean rows is one
+    reshape; any other batch is filled row by row."""
     import numpy as np
     import pyarrow as pa
 
-    def _fallback(rows_a, rows_b, na_l, nb_l):
-        sims = []
-        for va_, vb_, na_, nb_ in zip(rows_a, rows_b, na_l, nb_l):
-            if va_ is None or vb_ is None or na_ is None \
-                    or nb_ is None or len(va_) != len(vb_) \
-                    or any(x is None for x in va_) \
-                    or any(y is None for y in vb_):
-                sims.append(None)
-                continue
-            acc = 0.0
-            for x, y in zip(va_, vb_):
-                acc = acc + (x * y)
-            den = na_ * nb_
-            sims.append(None if den == 0.0 else acc / den)
-        return sims
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    flat = col.flatten()
+    if (col.null_count == 0 and flat.null_count == 0
+            and len(flat) == n * dim
+            and (np.diff(col.offsets.to_numpy()) == dim).all()):
+        return (flat.to_numpy(zero_copy_only=False).reshape(n, dim),
+                np.ones(n, dtype=bool))
+    v = np.zeros((n, dim))
+    ok = np.zeros(n, dtype=bool)
+    for i, row in enumerate(col.to_pylist()):
+        if row is None:
+            continue
+        ok[i] = len(row) == dim and None not in row
+        for j, x in enumerate(row[:dim]):
+            if x is not None:
+                v[i, j] = x
+    return v, ok
 
-    def score(batches):
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            ea, eb = rb.column("ea"), rb.column("eb")
-            fa = ea.combine_chunks() if hasattr(ea, "combine_chunks") \
-                else ea
-            fb = eb.combine_chunks() if hasattr(eb, "combine_chunks") \
-                else eb
-            na_col, nb_col = rb.column("na"), rb.column("nb")
-            lens_a = np.diff(fa.offsets.to_numpy())
-            lens_b = np.diff(fb.offsets.to_numpy())
-            clean = (fa.null_count == 0 and fb.null_count == 0
-                     and na_col.null_count == 0
-                     and nb_col.null_count == 0
-                     and fa.flatten().null_count == 0
-                     and fb.flatten().null_count == 0
-                     and lens_a.size and lens_a.min() == lens_a.max()
-                     and np.array_equal(lens_a, lens_b))
-            if clean:
-                va = fa.flatten().to_numpy(zero_copy_only=False)
-                vb = fb.flatten().to_numpy(zero_copy_only=False)
-                dim = va.shape[0] // n
-                a2 = va.reshape(n, dim)
-                b2 = vb.reshape(n, dim)
-                acc = np.zeros(n, dtype=np.float64)
-                for j in range(dim):
-                    acc = acc + (a2[:, j] * b2[:, j])
-                na = na_col.to_numpy(zero_copy_only=False)
-                nb = nb_col.to_numpy(zero_copy_only=False)
-                den = na * nb
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sim = acc / den
-                out = pa.array(sim, pa.float64(), mask=(den == 0.0))
-            else:
-                out = pa.array(
-                    _fallback(fa.to_pylist(), fb.to_pylist(),
-                              na_col.to_pylist(), nb_col.to_pylist()),
-                    pa.float64())
-            yield pa.RecordBatch.from_arrays(
-                [rb.column("vec_id"), out], ["vec_id", "sim"])
 
-    return pairs.mapInArrow(score, "vec_id long, sim double")
+def _fold_dot(x, y):
+    """Dot products over the last axis of broadcastable arrays, as the
+    oracle and the JVM `aggregate(zip_with(...))` fold spell them: the
+    strict left fold ((0.0 + x0*y0) + x1*y1) + ..., one IEEE-754
+    multiply and add per step, vectorized over the leading axes where
+    order does not matter (numpy's dot/sum would sum pairwise and move
+    the last bits)."""
+    acc = 0.0
+    for j in range(x.shape[-1]):
+        acc = acc + x[..., j] * y[..., j]
+    return acc
+
+
+def _cosines(x, y, nx, ny):
+    """Cosines of rows x (n, dim) against rows y (m, dim), given their
+    norms, as an (n, m) matrix and its NULL mask. The denominator
+    multiplies before dividing, as the column expression does; a zero
+    denominator is NULL, as in the DuckDB oracle (double division by
+    zero is NULL there) and Spark's try_divide."""
+    import numpy as np
+
+    den = nx[:, None] * ny[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _fold_dot(x[:, None, :], y[None, :, :]) / den, den == 0.0
+
+
+def _pair_cosines(col):
+    """Cosines between every two rows of an Arrow list<double> column,
+    as an (n, n) matrix and its NULL mask. NULL also where a row is
+    null or holds a null element, and between rows of different
+    lengths — zip_with null-pads the shorter one, nulling the fold."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+    n = len(col)
+    sim, null = np.zeros((n, n)), np.ones((n, n), dtype=bool)
+    for dim in np.unique(lens[lens > 0]).astype(int):
+        v, ok = _dense(col, dim)
+        norms = np.sqrt(_fold_dot(v, v))
+        s, zero = _cosines(v, v, norms, norms)
+        both = ok[:, None] & ok[None, :]
+        sim = np.where(both, s, sim)
+        null &= ~both | zero
+    return sim, null
+
+
+def _cluster_kept(threshold: float):
+    """Grouped-map body of semantic_dedup: one cluster's capped rows
+    (cid, vec_id, e, n_vecs) in, one (cid, n_vecs, n_kept) row out. A
+    row is a duplicate when a lower vec_id of the cluster has cosine
+    >= threshold; a NULL cosine never is one."""
+    import pyarrow as pa
+
+    def kept(tbl):
+        ids = tbl.column("vec_id").to_numpy()
+        sim, null = _pair_cosines(tbl.column("e").combine_chunks())
+        dup = (ids[None, :] < ids[:, None]) & ~null & (sim >= threshold)
+        n_vecs = tbl.column("n_vecs")[0].as_py()
+        return pa.table({
+            "cid": pa.array([tbl.column("cid")[0].as_py()], pa.int32()),
+            "n_vecs": pa.array([n_vecs], pa.int64()),
+            "n_kept": pa.array([n_vecs - int(dup.any(axis=1).sum())],
+                               pa.int64())})
+
+    return kept
 
 
 # literal-side norms are constants: computed driver-side (identical
 # fold order => identical bits) so the per-row expression carries one
 # dot product per centroid, not a dot + two norm folds — roughly
-# halves the codegen'd expression tree
+# halves the codegen'd expression tree. A zero denominator is NULL, as
+# in the oracle (plain `/` raises DIVIDE_BY_ZERO under ANSI).
 def _cos_lit(vec):
     lit = _lit_double_array(vec)
-    return _dot(F.col("e"), lit) / (F.col("ne") * F.lit(_norm_py(vec)))
+    return F.try_divide(_dot(F.col("e"), lit),
+                        F.col("ne") * F.lit(_norm_py(vec)))
 
 
 # per-row argmax over centroids: greatest() on (cos, -cid) structs —
-# lexicographic struct compare gives max-cos, ties to smallest cid;
-# the row's own norm is hoisted into a column computed once
+# lexicographic struct compare gives max-cos, ties to smallest cid, and
+# a NULL cos ranks below every other; the row's own norm is hoisted
+# into a column computed once
 def _assigned(cents):
     return F.greatest(*[
         F.struct(_cos_lit(vec).alias("s"), F.lit(-cid).alias("n"))
@@ -294,18 +306,25 @@ def _hof_assigned(n_cent: int):
     scored = F.transform(
         F.sequence(F.lit(0), F.lit(n_cent - 1)),
         lambda i: F.struct(
-            (_dot(F.col("e"), F.element_at(F.col("_ix_cents"), i + 1))
-             / (F.col("ne")
-                * F.element_at(F.col("_ix_cnorms"), i + 1))).alias("s"),
+            F.try_divide(
+                _dot(F.col("e"), F.element_at(F.col("_ix_cents"), i + 1)),
+                F.col("ne")
+                * F.element_at(F.col("_ix_cnorms"), i + 1)).alias("s"),
             (-i).alias("n")))
     return F.array_max(scored)["n"] * -1
 
 
 def _ivf_memo(emb: DataFrame, cache_key, key: tuple, build):
     """session.memo in namespace "ivf" — the trained indexes, codebooks
-    and persisted index frames; cache_key=None builds without storing."""
+    and persisted index frames — keyed by the input: session.input_key
+    of the frame `emb` was projected from (see _emb; else of `emb`),
+    then `key`, the parameters with cache_key as a label. cache_key=None
+    builds without storing; session.release(spark, "ivf") drops them."""
+    if cache_key is None:
+        return build()
+    src = getattr(emb, "_memo_source", emb)
     return session.memo(emb.sparkSession, "ivf",
-                        None if cache_key is None else key, build)
+                        (session.input_key(src), *key), build)
 
 
 def _train_ivf(emb: DataFrame, n_centroids: int, sample_mod: int,
@@ -323,52 +342,68 @@ def _train_ivf(emb: DataFrame, n_centroids: int, sample_mod: int,
     that lets an iterative float algorithm stay hash-checkable. Empty
     clusters keep their seed.
 
-    The trained index is memoized per (cache_key, n_centroids, sample_mod)
-    on the session (`_ivf_memo`), so l3c/l3d (and any repeat search) reuse
-    one build instead of re-training per query — at 100 TB the index is
-    built once and persisted, never rebuilt inside a search.
+    The trained index is memoized on the session per input
+    (session.input_key), n_centroids and sample_mod, with cache_key as a
+    label (`_ivf_memo`), so l3c/l3d/l12/l12b (and any repeat search) over
+    one corpus reuse one build instead of re-training per query, and
+    another corpus trains its own. session.release(spark, "ivf") frees
+    it; cache_key=None trains afresh.
     """
     return _ivf_memo(emb, cache_key, (cache_key, n_centroids, sample_mod),
                      lambda: _fit_ivf(emb, n_centroids, sample_mod))
 
 
 def _fit_ivf(emb: DataFrame, n_centroids: int, sample_mod: int) -> dict:
-    spark = emb.sparkSession
+    """The Lloyd step as ONE Arrow pass over the sample: each batch
+    scores its rows against the seeds (_cosines, with the seeds' norms
+    folded driver-side by _norm_py as _cos_lit bakes them; NULL ranks
+    below every score, ties go to the smallest cid) and emits (cid,
+    cnt, int64 sums of floor(x * 2^20)) per cluster it saw; the driver
+    merges them as Python ints. No JVM expression grows with
+    n_centroids x dim, and no shuffle runs."""
+    import numpy as np
+    import pyarrow as pa
+
     seeds = {
         int(r["vec_id"]): list(r["e"])
         for r in emb.filter(F.col("vec_id") < n_centroids)
         .select("vec_id", "e").collect()}
-    dim = len(next(iter(seeds.values())))
+    cids = np.array(sorted(seeds))
+    dim = len(seeds[cids[0]])
+    cents = np.array([seeds[c] for c in cids], dtype=np.float64)
+    cnorms = np.array([_norm_py(seeds[c]) for c in cids])
 
-    # -- one Lloyd iteration over the hash-sample (index build job #2) ----
-    # r13: assignment via the literal-free broadcast-index device
-    # (rpq_encode's HOF twin of _assigned — same dot fold, same
-    # driver-computed norms, same lexicographic struct argmax, so the
-    # trained centroids are bit-identical to the literal path the
-    # oracle spells out) — Catalyst analysis/codegen cost no longer
-    # grows with n_centroids x dim, which at scaled index parameters
-    # (l3n: nlist 16+) dominated the training wall.
-    quant_sums = [
-        F.sum(F.floor(F.element_at("e", j + 1) * F.lit(_KMEANS_SCALE)))
-        .alias(f"p{j}")
-        for j in range(dim)
-    ]
-    cluster_rows = (
-        emb.filter(F.col("vec_id") % sample_mod == 0)
-        .crossJoin(F.broadcast(_cents_frame(spark, seeds)))
-        .withColumn("ne", _norm(F.col("e")))
-        .withColumn("cid", _hof_assigned(len(seeds)).cast("int"))
-        .groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("cnt"), *quant_sums)
-        .collect())
+    def partial_sums(batches):
+        for rb in (b for b in batches if b.num_rows):
+            v, ok = _dense(rb.column("e"), dim)
+            sim, null = _cosines(v, cents, np.sqrt(_fold_dot(v, v)),
+                                 cnorms)
+            sim[null | ~ok[:, None]] = -np.inf
+            won = np.argmax(sim, axis=1)
+            # int64 must hold a batch's sums, as Spark's ANSI long sum
+            # must hold a cluster's: raise where numpy would wrap
+            if (np.abs(v).sum(axis=0) * _KMEANS_SCALE >= 2.0 ** 63).any():
+                raise OverflowError("fixed-point centroid sums overflow int64")
+            q = np.floor(v * _KMEANS_SCALE).astype(np.int64)
+            hit = np.unique(won)
+            yield pa.RecordBatch.from_pydict({
+                "cid": cids[hit],
+                "cnt": [int((won == i).sum()) for i in hit],
+                "sums": [q[won == i].sum(axis=0) for i in hit]})
+
+    totals = {}
+    sample = emb.filter(F.col("vec_id") % sample_mod == 0).select("e")
+    for r in sample.mapInArrow(
+            partial_sums, "cid long, cnt long, sums array<long>").collect():
+        cnt, sums = totals.get(r["cid"], (0, [0] * dim))
+        totals[r["cid"]] = (cnt + r["cnt"],
+                            [a + b for a, b in zip(sums, r["sums"])])
     trained = dict(seeds)   # empty clusters keep their seed
-    for r in cluster_rows:
-        cnt = float(r["cnt"])
+    for cid, (cnt, sums) in totals.items():
         # float(s)/float(cnt) mirrors the oracle's CAST(s AS DOUBLE)/cnt
         # bit-for-bit (Python int/int true division would round the exact
         # rational instead once sums exceed 2^53)
-        trained[int(r["cid"])] = [
-            float(r[f"p{j}"]) / cnt / _KMEANS_SCALE for j in range(dim)]
+        trained[cid] = [float(x) / float(cnt) / _KMEANS_SCALE for x in sums]
     return trained
 
 
@@ -395,8 +430,7 @@ def ivf_topk(embeddings: DataFrame, query_vec_id: int = 1, k: int = 10,
     per-partition heaps). Tie-break: equal cosine -> smallest centroid id
     (matches oracle's ORDER BY cos DESC, cid ASC).
     """
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     trained = _train_ivf(emb, n_centroids, sample_mod, cache_key=cache_key)
     q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
               .select("e").collect())
@@ -506,8 +540,7 @@ IVF_TOPK_ORACLE = _ivf_oracle()
 def lsh_near_duplicates(embeddings: DataFrame,
                         threshold: float = 0.3) -> DataFrame:
     """Sign-bucket LSH: pairs within a bucket with cosine >= threshold."""
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id")
     bucket = None
     for b in range(N_SIGN_BITS):
         bit = F.when(F.element_at(F.col("e"), b + 1) >= 0,
@@ -558,10 +591,12 @@ def _assigned_frame(emb: DataFrame, n_centroids: int, sample_mod: int,
                     cache_key=None) -> DataFrame:
     """Memoized, persisted (vec_id, cid, e, ne) cluster assignment —
     the SemDeDup pipeline's materialization point. One persisted frame
-    per (cache_key, n_centroids, sample_mod) per session (session.memo,
-    via _ivf_memo), so l12 and l12b share a single cached assignment
-    instead of stacking a new one per call; MEMORY_AND_DISK keeps the
-    blocks evictable under storage pressure."""
+    per input, n_centroids and sample_mod per session (session.memo via
+    _ivf_memo, keyed like _train_ivf), so l12 and l12b share a single
+    cached assignment per corpus instead of stacking a new one per
+    call, and a second corpus gets its own; MEMORY_AND_DISK keeps the
+    blocks evictable under storage pressure, and
+    session.release(spark, "ivf") unpersists them."""
     from pyspark import StorageLevel
 
     trained = _train_ivf(emb, n_centroids, sample_mod,
@@ -589,80 +624,55 @@ def semantic_dedup(embeddings: DataFrame, threshold: float = 0.3,
        bit-stable across engines).
     2. Assign: per-row max-cosine centroid against broadcast literal
        centroids — a narrow projection, no shuffle.
-    3. Pair WITHIN clusters only: self-join keyed on cid (never
-       all-pairs); a vector is a semantic duplicate if some
-       lower-vec_id vector in its cluster has cosine >= threshold
-       (the deterministic keep-lowest-id variant of the paper's
-       per-cluster dedup — no RNG, stable under task retries).
-    4. Survivors: left-anti join against the duplicate set.
+    3. Pair WITHIN clusters only: one window over cid numbers each
+       cluster's rows and counts them, and one grouped Arrow pass per
+       cluster folds its pair-cosine matrix; a vector is a semantic
+       duplicate if some lower-vec_id vector in its cluster has cosine
+       >= threshold (the deterministic keep-lowest-id variant of the
+       paper's per-cluster dedup — no RNG, stable under task retries).
 
     Returns the per-cluster summary (cid, n_vecs, n_kept) — pins both
     the assignment and the dedup decision.
 
     At 100 TB: pairing cost is sum over clusters of |cluster|^2, the
     paper's design point — n_centroids grows with the corpus so
-    clusters stay bounded (they use 11k clusters for LAION-440M); the
-    cid-keyed shuffle is AQE-skew-splittable, and a hard per-cluster
-    pairing cap (max_width — the l2d MAX_BUCKET_WIDTH pattern,
-    oracle-mirrored) bounds the worst task to O(max_width^2) pairs
-    even when a degenerate embedding (all-zeros) floods one cluster:
-    only each cluster's max_width lowest vec_ids enter the pair join
-    (row_number per cid, a bounded-per-key window), so rows beyond the
-    cap are kept verbatim and never pair.
+    clusters stay bounded (they use 11k clusters for LAION-440M); one
+    cid-keyed shuffle feeds both the window and the grouped pass (the
+    other is the final ordering of one row per cluster), and a hard
+    per-cluster pairing cap (max_width — the l2d MAX_BUCKET_WIDTH
+    pattern, oracle-mirrored) bounds the worst task to O(max_width^2)
+    pairs even when a degenerate embedding floods one cluster: only each
+    cluster's max_width lowest vec_ids pair (row_number per cid), so
+    rows beyond the cap are kept verbatim and never pair. An all-zeros
+    embedding has a NULL cosine to everything, as in the oracle: it
+    joins the smallest cid and is never a duplicate.
 
     The trained index and the persisted assignment are memoized per
-    (cache_key, n_centroids, sample_mod), NOT per input frame. The
-    default cache_key="semdedup" is a fixed name: a session that dedups
-    more than one corpus must pass a per-corpus cache_key, or every
-    corpus after the first is deduped against the first one's memoized
-    assignment. cache_key=None trains afresh on every call."""
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
-    # materialize the assignment once — the paper's own pipeline shape
-    # (write the cluster assignment, then dedup per cluster); without
-    # this the argmax-over-centroids projection re-evaluates on every
-    # consumer (both self-join sides, the anti-join, both summaries).
-    # Memoized per (cache_key, params): repeated l12/l12b calls share
-    # ONE persisted frame instead of leaking a new one per call.
-    assigned = _assigned_frame(emb, n_centroids, sample_mod,
-                               cache_key=cache_key)
+    input (session.input_key of `embeddings`), n_centroids and
+    sample_mod, with cache_key as a label: a session that dedups
+    several corpora trains once per corpus, and a repeat call on one
+    corpus reuses its assignment. session.release(spark, "ivf") frees
+    them; cache_key=None trains afresh on every call and stores
+    nothing."""
     from pyspark.sql import Window
-    capped = (assigned.withColumn(
-        "rn", F.row_number().over(
-            Window.partitionBy("cid").orderBy("vec_id")))
-        .filter(F.col("rn") <= max_width)
-        .drop("rn"))
-    a, b = capped.alias("a"), capped.alias("b")
-    # pair scoring via the Arrow batch scorer (r14): the within-cluster
-    # join stays JVM-side; only the 5 needed columns cross the boundary
-    # and only (vec_id, sim) comes back — bit-exact fold, see
-    # _pair_sims_arrow.
-    pair_cols = (a.join(b, (F.col("a.cid") == F.col("b.cid"))
-                        & (F.col("a.vec_id") > F.col("b.vec_id")))
-                 .select(F.col("a.vec_id").alias("vec_id"),
-                         F.col("a.e").alias("ea"),
-                         F.col("b.e").alias("eb"),
-                         F.col("a.ne").alias("na"),
-                         F.col("b.ne").alias("nb")))
-    dups = (_pair_sims_arrow(pair_cols)
-            .filter(F.col("sim") >= threshold)
-            .select("vec_id")
-            .distinct())
-    kept = assigned.join(dups, "vec_id", "left_anti")
-    return (assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
-            .join(kept.groupBy("cid")
-                  .agg(F.count(F.lit(1)).cast("bigint")
-                       .alias("n_kept")), "cid", "left")
-            .select("cid", "n_vecs",
-                    F.coalesce("n_kept", F.lit(0)).cast("bigint")
-                    .alias("n_kept"))
+
+    # materialize the assignment once — the paper's own pipeline shape
+    # (write the cluster assignment, then dedup per cluster)
+    assigned = _assigned_frame(_emb(embeddings, "vec_id"), n_centroids,
+                               sample_mod, cache_key=cache_key)
+    by_id = Window.partitionBy("cid").orderBy("vec_id")
+    return (assigned
+            .select("cid", "vec_id", "e",
+                    F.row_number().over(by_id).alias("rn"),
+                    F.count(F.lit(1)).over(by_id.rowsBetween(
+                        Window.unboundedPreceding,
+                        Window.unboundedFollowing)).alias("n_vecs"))
+            .filter(F.col("rn") <= max_width)
+            .drop("rn")
+            .groupBy("cid")
+            .applyInArrow(_cluster_kept(threshold),
+                          "cid int, n_vecs long, n_kept long")
             .orderBy("cid"))
-
-
-_COS_SQL = ("list_dot_product({a}, {b}) / "
-            "(sqrt(list_dot_product({a}, {a}))"
-            " * sqrt(list_dot_product({b}, {b})))")
 
 
 def _semdedup_assign_sql(n_centroids: int, sample_mod: int,
@@ -767,32 +777,38 @@ def semdedup_sweep(embeddings: DataFrame,
     every threshold (conditional sums over broadcastable single-row
     aggregates — the sweep adds no per-threshold scan).
 
+    The assignment is semantic_dedup's memo (_assigned_frame): keyed
+    by the input (session.input_key of `embeddings`) and the training
+    parameters, with cache_key as a label, so a sweep after l12 on one
+    corpus trains and assigns nothing. session.release(spark, "ivf")
+    frees it; cache_key=None builds afresh and stores nothing.
+
     Returns (threshold, n_vecs, n_kept_capped, n_kept_uncapped)
     ordered by threshold."""
     from pyspark.sql import Window
 
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
     # the memoized persisted assignment (shared with semantic_dedup):
     # ~5 consumers below would otherwise each re-evaluate the argmax
-    assigned = _assigned_frame(emb, n_centroids, sample_mod,
-                               cache_key=cache_key)
+    assigned = _assigned_frame(_emb(embeddings, "vec_id"), n_centroids,
+                               sample_mod, cache_key=cache_key)
     capped = (assigned.withColumn(
         "rn", F.row_number().over(
             Window.partitionBy("cid").orderBy("vec_id")))
         .filter(F.col("rn") <= max_width)
         .drop("rn"))
 
-    # NOTE(r14): the Arrow pair scorer (used by semantic_dedup) was
-    # measured here too and LOST (interleaved A/B 2.70 vs 2.54 s): the
+    # NOTE(r14): an Arrow pair scorer between the join and the max()
+    # was measured here and LOST (interleaved A/B 2.70 vs 2.54 s): the
     # max() aggregation runs map-side in the same stage as the join
     # when the sim is a JVM expression, but an Arrow boundary between
     # join and agg ships every pair's arrays to Python twice (capped +
-    # uncapped) before any reduction. Kept on the HOF fold.
+    # uncapped) before any reduction. Kept on the HOF fold; a zero
+    # denominator is NULL (try_divide), which max() skips, as the
+    # oracle's does.
     def max_sim_to_lower(src, out):
         a, b = src.alias("a"), src.alias("b")
-        sim = _dot(F.col("a.e"), F.col("b.e")) / (
-            F.col("a.ne") * F.col("b.ne"))
+        sim = F.try_divide(_dot(F.col("a.e"), F.col("b.e")),
+                           F.col("a.ne") * F.col("b.ne"))
         return (a.join(b, (F.col("a.cid") == F.col("b.cid"))
                        & (F.col("a.vec_id") > F.col("b.vec_id")))
                 .groupBy(F.col("a.vec_id").alias("vec_id"))
@@ -1013,8 +1029,7 @@ def pq_topk(embeddings: DataFrame, query_vec_id: int = 2, k: int = 10,
     ordered by adc_q ASC, vec_id ASC, k rows."""
     import math
 
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     trained = _train_pq(emb, m_sub, ks, sample_mod,
                         cache_key=cache_key)
     dim = len(trained[(0, 0)]) * m_sub
@@ -1152,8 +1167,7 @@ def pq_recall(embeddings: DataFrame, query_vec_id: int = 2,
     index ships at scale; re-ranking an ADC shortlist is the standard
     fix and is measured alongside. Returns one row
     (k, n_common_adc, n_common_rerank)."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     trained = _train_pq(emb, m_sub, ks, sample_mod,
                         cache_key=cache_key)
     dim = len(trained[(0, 0)]) * m_sub
@@ -1279,8 +1293,7 @@ def ivf_adc_topk(embeddings: DataFrame, query_vec_id: int = 2,
     ordered adc_q ASC, vec_id ASC, k rows."""
     import math
 
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     cents = _train_ivf(emb, n_centroids, sample_mod,
                        cache_key=cache_key)
     books = _train_pq(emb, m_sub, ks, sample_mod, cache_key=cache_key)
@@ -1384,8 +1397,7 @@ def ivf_adc_recall(embeddings: DataFrame, query_vec_id: int = 2,
     charges the composition for BOTH quantization loss (l3f's subject)
     and probe-pruning loss (what IVF adds). One row
     (k, n_common_adc, n_common_rerank)."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     books = _train_pq(emb, m_sub, ks, sample_mod, cache_key=cache_key)
     subdim = len(books[(0, 0)])
     q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
@@ -1548,8 +1560,7 @@ def adc_rerank_planted(embeddings: DataFrame, query_vec_id: int = 2,
     (k, n_true_adc, n_decoy_adc, n_true_rerank). See the block comment
     above for the designed semantics (true plants sub-resolution close,
     decoys 16x farther but code-identical)."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     aug = _two_tier_planted(emb, query_vec_id, k)
     q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
               .select("e").collect())
@@ -1870,19 +1881,11 @@ def rpq_encode(emb: DataFrame, cents: dict, books: dict,
     n_cent = len(cents)
     idx = _index_frame(emb.sparkSession, cents, books, m_sub, ks)
 
-    # coarse argmax: per-centroid struct(cos, -cid), array_max — the
-    # HOF twin of _assigned() (max cos, ties to smallest cid)
-    scored = F.transform(
-        F.sequence(F.lit(0), F.lit(n_cent - 1)),
-        lambda i: F.struct(
-            (_dot(F.col("e"), F.element_at(F.col("_ix_cents"), i + 1))
-             / (F.col("ne")
-                * F.element_at(F.col("_ix_cnorms"), i + 1))).alias("s"),
-            (-i).alias("n")))
+    # coarse argmax: _hof_assigned, the HOF twin of _assigned() (max
+    # cos, ties to smallest cid)
     assigned = (emb.crossJoin(F.broadcast(idx))
                 .withColumn("ne", _norm(F.col("e")))
-                .withColumn("cid",
-                            (F.array_max(scored)["n"] * -1).cast("int")))
+                .withColumn("cid", _hof_assigned(n_cent).cast("int")))
 
     # per-subspace code: residual slice r = e[m] - cent[cid][m] fused
     # into the (r - book)^2 fold — same element values and fold order
@@ -1945,8 +1948,7 @@ def ivf_rpq_topk(embeddings: DataFrame, query_vec_id: int = 2,
     """Residual IVF-ADC top-k: probe-pruned lists ranked by the integer
     ADC of residual codes against PER-LIST query-residual LUTs. Returns
     (vec_id, label, adc_q) ordered adc_q ASC, vec_id ASC, k rows."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     cents = _train_ivf(emb, n_centroids, sample_mod,
                        cache_key=cache_key)
     books = _train_rpq(emb, cents, m_sub, ks, sample_mod,
@@ -2147,8 +2149,7 @@ def rpq_vs_raw_recall(embeddings: DataFrame, query_vec_id: int = 2,
     corpus: one row (k, n_common_raw, n_common_res). The residual >=
     raw inequality is pinned by test; if a fixture ever contradicts
     the theory, the honest number goes to SCALING.md instead."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
               .select("e").collect())
     if not q_rows:
@@ -2300,8 +2301,7 @@ def sq8_topk(embeddings: DataFrame, query_vec_id: int = 2,
     the integer-floored sum of per-dimension squared errors against
     the raw query. One narrow literal-free projection over the
     broadcast range frame; TakeOrderedAndProject top-k."""
-    emb = embeddings.select(
-        "vec_id", "label", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id", "label")
     mins, maxs = _train_sq(emb, sample_mod, cache_key=cache_key)
     spark = emb.sparkSession
     q_rows = (emb.filter(F.col("vec_id") == query_vec_id)
@@ -2400,8 +2400,7 @@ def knn_join(embeddings: DataFrame, query_vec_ids=KNN_QUERY_IDS,
     (query_id, rank)."""
     from pyspark.sql import Window
 
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id")
     ids = [int(i) for i in query_vec_ids]
     q = (emb.filter(F.col("vec_id").isin(ids))
          .select(F.col("vec_id").alias("query_id"),
@@ -2516,8 +2515,7 @@ def kmeans_clusters(embeddings: DataFrame,
     (cid, n_vecs, centroid_checksum) where centroid_checksum is the
     integer sum of floor(ce[j] * 2^20) — a bit-exact fingerprint of
     the iterated float centroid."""
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id")
     trained = _train_kmeans(emb, n_centroids, sample_mod, n_iters,
                             cache_key=cache_key)
     import math
@@ -2649,8 +2647,7 @@ def proto_prune(embeddings: DataFrame,
     within the cluster by cosine DESC, ties to smallest vec_id."""
     from pyspark.sql import Window
 
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id")
     trained = _train_kmeans(emb, n_centroids, sample_mod, n_iters,
                             cache_key=cache_key)
     best = F.greatest(*[
@@ -2894,8 +2891,7 @@ def planted_retrieval_metrics(embeddings: DataFrame,
     ndcg_milli) against the planted-neighbor relevance rule. All
     metrics integer-exact (the l26 contract); a correct kNN scores
     1000/1000/1000 per query, pinned by test as the metric floor."""
-    emb = embeddings.select(
-        "vec_id", _to_double(F.col("embedding")).alias("e"))
+    emb = _emb(embeddings, "vec_id")
     ids = [int(i) for i in query_vec_ids]
     aug = _planted_corpus(emb, ids, k)
     res = knn_join(aug.select("vec_id", F.col("e").alias("embedding")),

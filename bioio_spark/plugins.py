@@ -11,7 +11,8 @@ Re-implements the reference's plugin-dispatch semantics
   plugin lists by (family_count desc, raw extension count desc, name asc)
   (ref plugins.py:299-320)
 - S4/S5 routing: path -> candidate plugins by case-insensitive suffix match
-  (query strings stripped, ref bio_image.py:284-304); first plugin whose
+  (query strings stripped, ref bio_image.py:284-304), then for a directory
+  the plugins whose reader ``routes`` it; first plugin whose
   `is_supported_image` probe passes wins; probe errors logged and skipped
   (ref bio_image.py:246-262); arrays route to ArrayLikeReader
 - S6 explicit reader try-order with failure aggregation
@@ -25,6 +26,7 @@ semantics and ordering are identical.
 from __future__ import annotations
 
 import logging
+import os
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
@@ -177,6 +179,42 @@ def _probe(entry: PluginEntry, image, fs_kwargs: Optional[dict]) -> bool:
     return bool(entry.is_supported_image(image))
 
 
+def _candidates(image: str, use_cache: bool = True):
+    """The plugins that may read path `image`, in routing order: those
+    advertising one of its suffixes (registry priority), then, for a
+    directory, those whose reader's ``routes`` accepts it — readers
+    routing on a marker file (no extensions: NDTiff, CellVoyager)
+    before readers routing on their files' suffixes, since a marker is
+    the more specific claim."""
+    tried = []
+    for ext, entries in get_plugins(use_cache=use_cache).items():
+        if path_has_extension(image, ext):
+            tried += entries
+            yield from entries
+    if os.path.isdir(image):
+        for entry in sorted(_REGISTRY, key=lambda e: bool(e.extensions)):
+            routes = getattr(entry.reader, "routes", None)
+            if (routes is not None and not any(e is entry for e in tried)
+                    and routes(image)):
+                yield entry
+
+
+def _first_supported(image: str, fs_kwargs: Optional[dict],
+                     use_cache: bool = True) -> Optional[PluginEntry]:
+    """The first candidate whose probe accepts `image` (S4/S5): probe
+    errors are logged and skipped, a missing file propagates."""
+    for entry in _candidates(image, use_cache):
+        try:
+            if _probe(entry, image, fs_kwargs):
+                return entry
+        except FileNotFoundError:
+            raise
+        except Exception as exc:
+            log.warning("Plugin %s probe failed on %s: %s",
+                        entry.name, image, exc)
+    return None
+
+
 def _determine_reader_once(image, readers: Optional[list] = None,
                            fs_kwargs: Optional[dict] = None):
     from bioio_spark.bio_image import UnsupportedFileFormatError
@@ -196,18 +234,9 @@ def _determine_reader_once(image, readers: Optional[list] = None,
         return ArrayLikeReader
 
     if isinstance(image, str):
-        for ext, entries in get_plugins().items():
-            if not path_has_extension(image, ext):
-                continue
-            for entry in entries:
-                try:
-                    if _probe(entry, image, fs_kwargs):
-                        return entry.reader
-                except FileNotFoundError:
-                    raise
-                except Exception as exc:
-                    log.warning("Plugin %s probe failed on %s: %s",
-                                entry.name, image, exc)
+        entry = _first_supported(image, fs_kwargs)
+        if entry is not None:
+            return entry.reader
         raise UnsupportedFileFormatError(
             f"No reader supports image: {image!r}")
 
@@ -238,18 +267,9 @@ def determine_plugin(image, fs_kwargs: Optional[dict] = None,
     if isinstance(image, (np.ndarray, list, tuple)):
         return get_array_like_plugin()
     if isinstance(image, str):
-        for ext, entries in get_plugins(use_cache=use_plugin_cache).items():
-            if not path_has_extension(image, ext):
-                continue
-            for entry in entries:
-                try:
-                    if _probe(entry, image, fs_kwargs):
-                        return entry
-                except FileNotFoundError:
-                    raise
-                except Exception as exc:
-                    log.warning("Plugin %s probe failed on %s: %s",
-                                entry.name, image, exc)
+        entry = _first_supported(image, fs_kwargs, use_plugin_cache)
+        if entry is not None:
+            return entry
         raise UnsupportedFileFormatError(
             f"No plugin supports image: {image!r}")
     raise UnsupportedFileFormatError(

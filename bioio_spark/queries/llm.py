@@ -1115,10 +1115,11 @@ def l11_curriculum_sample(spark, sf_dir):
               "near-dup removal over the cached IVF assignment, "
               "pairing capped at MAX_CLUSTER_WIDTH lowest ids")
 def l12_semantic_dedup(spark, sf_dir):
-    # cache_key must be sf-scoped (a fixed key would hand a warm
-    # session sf0.001 centroids for an sf0.1 run) and is shared with
-    # l3c/l3h: identical (n_centroids, sample_mod) deterministic
-    # training means ONE index serves the whole IVF family
+    # the memo is keyed by the loaded input (session.input_key), so
+    # each sf trains its own index; cache_key=sf_dir is the label l3c
+    # and l12b pass too: identical (n_centroids, sample_mod)
+    # deterministic training means ONE index per corpus serves the
+    # whole IVF family
     return semantic_dedup(load(spark, sf_dir, "embeddings"),
                           threshold=0.3, cache_key=sf_dir)
 

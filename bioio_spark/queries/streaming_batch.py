@@ -1248,18 +1248,15 @@ def s15_stream_ann_codes(spark, sf_dir):
     import shutil
 
     from bioio_spark.functions.similarity import (IVF_SAMPLE_MOD,
-                                                  N_CENTROIDS,
-                                                  _to_double,
+                                                  N_CENTROIDS, _emb,
                                                   _train_ivf,
                                                   _train_rpq,
                                                   rpq_query_luts,
                                                   rpq_search)
 
-    emb = (load(spark, sf_dir, "embeddings")
-           .select("vec_id", "label",
-                   _to_double(F.col("embedding")).alias("e")))
-    # the frozen index (trained once, session-cached — shared with l3k,
-    # same constants so the l3k oracle stays the streaming pin)
+    emb = _emb(load(spark, sf_dir, "embeddings"), "vec_id", "label")
+    # the frozen index (trained once, session-cached per input — shared
+    # with l3k, same constants so the l3k oracle stays the streaming pin)
     cents = _train_ivf(emb, N_CENTROIDS, IVF_SAMPLE_MOD,
                        cache_key=sf_dir)
     books = _train_rpq(emb, cents, cache_key=sf_dir)

@@ -9,6 +9,7 @@ ndarray materialization path.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -100,6 +101,26 @@ def _frames(value) -> list:
     if isinstance(value, (tuple, list)):
         return [df for v in value for df in _frames(v)]
     return []
+
+
+def input_key(df: DataFrame) -> tuple:
+    """A hashable identity of the data `df` reads: its plan's semantic
+    hash, plus (path, size, mtime) of each local input file, so an
+    equivalent plan over the same files gives the same key and a file
+    rewritten in place gives another. A non-local file (s3a://, hdfs://)
+    contributes its name only."""
+    files = []
+    for path in sorted(df.inputFiles()):
+        uri = urlparse(path)
+        stat = None
+        if uri.scheme in ("", "file"):
+            try:
+                st = os.stat(unquote(uri.path))
+                stat = (st.st_size, st.st_mtime_ns)
+            except FileNotFoundError:
+                pass  # deleted since planning: the read will say so
+        files.append((path, stat))
+    return (df.semanticHash(), tuple(files))
 
 
 def memo(spark: SparkSession, ns: str, key, build):

@@ -156,3 +156,36 @@ def test_cache_key_none_stores_nothing(spark):
     _train_sq(emb, sample_mod=1, cache_key="t")
     assert stats(spark)["ivf"]["entries"] == 1
     release(spark, "ivf")
+
+
+def test_input_key_tracks_plan_and_files(spark, tmp_path):
+    """The same parquet loaded twice gives one key; another shard gives
+    another; a file rewritten in place with other bytes gives another."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bioio_spark.session import input_key
+
+    def write(name, n):
+        path = str(tmp_path / name)
+        pq.write_table(pa.table({"id": list(range(n))}), path)
+        return path
+
+    a, b = write("a.parquet", 5), write("b.parquet", 5)
+    key = input_key(spark.read.parquet(a))
+    assert input_key(spark.read.parquet(a)) == key
+    assert input_key(spark.read.parquet(b)) != key
+    write("a.parquet", 50)
+    rewritten = input_key(spark.read.parquet(a))
+    assert rewritten[0] == key[0]   # one plan hash: the file stat moved
+    assert rewritten != key
+
+
+def test_input_key_of_local_rows(spark):
+    """Frames built from different driver-side rows get different keys."""
+    from bioio_spark.session import input_key
+
+    schema = "vec_id long, embedding array<double>"
+    one = spark.createDataFrame([(0, [1.0, 0.0])], schema)
+    two = spark.createDataFrame([(0, [0.0, 1.0])], schema)
+    assert input_key(one) != input_key(two)

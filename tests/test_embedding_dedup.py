@@ -2,6 +2,8 @@
 buckets (the SemDeDup-style decision layer; pairs machinery shared with
 l3b lsh_near_duplicates)."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -333,10 +335,9 @@ def test_l3o_rerank_recall_is_shortlist_bounded(spark, sf_dir):
     from bioio_spark.functions.similarity import adc_rerank_planted
     from bioio_spark.queries.base import load
 
-    # cache_key distinct from the registry's: trainings cache per
-    # (cache_key, params) with no corpus identity, and this test runs
-    # on the FULL corpus while the registry query runs the 1/8
-    # remapped sub-corpus
+    # this test runs on the FULL corpus while the registry query runs
+    # the 1/8 remapped sub-corpus; the memo keys on the input, and the
+    # distinct cache_key labels the entry
     [row] = adc_rerank_planted(
         load(spark, sf_dir, "embeddings"), query_vec_id=2,
         shortlist=10, cache_key=sf_dir + ":l3o-sl10").collect()
@@ -553,41 +554,35 @@ def test_literal_free_training_matches_literal_path_exactly(spark):
             for i in range(subdim)]
     assert _train_pq(emb, m_sub, ks, mod, cache_key=None) == lit_pq
 
-def test_pair_sims_arrow_degenerates_match_oracle(spark):
-    """r14: the Arrow pair scorer's degenerate-input semantics mirror
-    the DuckDB oracle, which l12's dedup decision is graded against:
-    a zero denominator yields NULL (DuckDB double division by zero is
-    NULL; NaN would pass Spark's NaN-is-largest `sim >= t` filter and
-    wrongly drop zero-norm vectors — and the old in-stage HOF division
-    would RAISE under ANSI Spark 4), and null/ragged embedding pairs
-    yield NULL (zip_with null-pads, nulling the fold). Normal rows are
-    bit-identical to the strict left-fold dot over IEEE doubles."""
+def test_cluster_kernel_degenerates_match_oracle(spark):
+    """The per-cluster pairing kernel's degenerate-input semantics mirror
+    the DuckDB oracle, which l12's dedup decision is graded against: a
+    zero denominator yields NULL (DuckDB double division by zero is
+    NULL; NaN would pass a NaN-is-largest `sim >= t` test and wrongly
+    drop zero-norm vectors), and a null embedding or a pair of ragged
+    rows yields NULL (zip_with null-pads, nulling the fold), while two
+    rows of one other length still pair. Normal pairs are bit-identical
+    to the strict left-fold dot over IEEE doubles."""
     import struct
 
-    from pyspark.sql import functions as F
+    import duckdb
+    import pyarrow as pa
 
-    from bioio_spark.functions.similarity import (_dot,
-                                                  _pair_sims_arrow)
+    from bioio_spark.functions.similarity import (_cluster_kept,
+                                                  _pair_cosines)
 
     rows = [
-        (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),        # normal
-        (2, [0.25, -0.5, 0.125], [1.0, 3.0, -2.0]),   # normal
-        (3, [0.0, 0.0, 0.0], [1.0, 2.0, 3.0]),        # zero norm a
-        (4, [1.0, 2.0, 3.0], [0.0, 0.0, 0.0]),        # zero norm b
-        (5, None, [1.0, 2.0, 3.0]),                   # null embedding
-        (6, [1.0, 2.0], [1.0, 2.0, 3.0]),             # ragged pair
+        (1, [1.0, 2.0, 3.0]),
+        (2, [4.0, 5.0, 6.0]),           # cos 0.97 to vec 1: a duplicate
+        (3, [0.25, -0.5, 0.125]),
+        (4, [1.0, 3.0, -2.0]),
+        (5, [0.0, 0.0, 0.0]),           # zero norm
+        (6, None),                      # null embedding
+        (7, [1.0, 2.0]),                # ragged against the 3-dim rows
+        (8, [2.0, 4.0]),                # parallel to vec 7: a duplicate
     ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, ea array<double>, eb array<double>")
-
-    def norm(c):
-        return F.sqrt(_dot(F.col(c), F.col(c)))
-
-    pairs = df.select("vec_id", "ea", "eb",
-                      norm("ea").alias("na"), norm("eb").alias("nb"))
-    got = {r["vec_id"]: r["sim"]
-           for r in _pair_sims_arrow(pairs).collect()}
-    assert set(got) == {1, 2, 3, 4, 5, 6}
+    col = pa.array([e for _, e in rows], pa.list_(pa.float64()))
+    sim, null = _pair_cosines(col)
 
     def fold_sim(a, b):
         acc = 0.0
@@ -597,11 +592,185 @@ def test_pair_sims_arrow_degenerates_match_oracle(spark):
         nb = sum(v * v for v in b) ** 0.5
         return acc / (na * nb)
 
-    for k, a, b in [(1, rows[0][1], rows[0][2]),
-                    (2, rows[1][1], rows[1][2])]:
-        assert struct.pack("<d", got[k]) == \
-            struct.pack("<d", fold_sim(a, b)), k
-    # degenerate rows: NULL, like the oracle — a `sim >= threshold`
-    # dedup filter drops the pair and the vectors stay
-    for k in (3, 4, 5, 6):
-        assert got[k] is None, (k, got[k])
+    for group in ((0, 1, 2, 3), (6, 7)):
+        for i in group:
+            for j in group:
+                assert not null[i, j], (i, j)
+                assert struct.pack("<d", sim[i, j]) == struct.pack(
+                    "<d", fold_sim(rows[i][1], rows[j][1])), (i, j)
+    # degenerate pairs: NULL, like the oracle — a `sim >= threshold`
+    # dedup test drops the pair and the vectors stay
+    for i in range(8):
+        for j in (4, 5):
+            assert null[i, j] and null[j, i], (i, j)
+        for j in (6, 7):
+            if i < 4:
+                assert null[i, j] and null[j, i], (i, j)
+    [[zero_cos]] = duckdb.sql(
+        "SELECT list_dot_product(a, b) / (sqrt(list_dot_product(a, a))"
+        " * sqrt(list_dot_product(b, b))) FROM (SELECT"
+        " [0.0, 0.0, 0.0]::DOUBLE[] AS a, [1.0, 2.0, 3.0]::DOUBLE[] AS b)"
+    ).fetchall()
+    assert zero_cos is None
+
+    cluster = spark.createDataFrame(
+        [(0, vid, e, 9) for vid, e in rows],
+        "cid int, vec_id long, e array<double>, n_vecs long")
+    [out] = (cluster.groupBy("cid")
+             .applyInArrow(_cluster_kept(0.9),
+                           "cid int, n_vecs long, n_kept long")
+             .collect())
+    # vecs 2 and 8 are duplicates; the ninth vector sat beyond the cap
+    assert (out["cid"], out["n_vecs"], out["n_kept"]) == (0, 9, 7)
+
+
+def _write_embeddings(path, vecs) -> str:
+    """An sf-shaped directory holding embeddings.parquet (the fixture
+    schema: vec_id long, embedding list<float>, label int)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array([[float(x) for x in v] for v in vecs],
+                              pa.list_(pa.float32())),
+        "label": pa.array([i % 3 for i in range(len(vecs))], pa.int32()),
+    }), os.path.join(path, "embeddings.parquet"))
+    return path
+
+
+def _oracle_rows(sf_dir, sql):
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW embeddings AS SELECT * FROM read_parquet("
+                    f"'{sf_dir}/embeddings.parquet')")
+        return sorted(con.execute(sql).fetchall())
+    finally:
+        con.close()
+
+
+def test_semantic_dedup_keys_its_memo_by_input(spark, tmp_path):
+    """Two corpora in one session with default arguments: each result
+    equals its own l12 oracle rows. A memo keyed by a constant name
+    handed the second corpus the first one's clusters."""
+    from bioio_spark.functions.similarity import (SEMANTIC_DEDUP_ORACLE,
+                                                  semantic_dedup)
+    from bioio_spark.queries.base import load
+    from bioio_spark.session import release
+
+    dirs = [_write_embeddings(str(tmp_path / f"c{k}"),
+                              np.random.default_rng(40 + k)
+                              .normal(size=(64, 16)))
+            for k in range(2)]
+    want = [_oracle_rows(d, SEMANTIC_DEDUP_ORACLE) for d in dirs]
+    assert want[0] != want[1]
+    release(spark, "ivf")
+    try:
+        for d, rows in zip(dirs, want):
+            got = sorted(tuple(r) for r in
+                         semantic_dedup(load(spark, d, "embeddings"))
+                         .collect())
+            assert got == rows, d
+    finally:
+        release(spark, "ivf")
+
+
+def test_zero_embeddings_match_oracle(spark, tmp_path, sf_dir):
+    """All-zero embeddings (vec 3 a training seed, 12 in the training
+    sample, 9 neither) must not raise DIVIDE_BY_ZERO: l12 and l12b equal
+    their oracle rows, where a zero vector's cosine to anything is NULL,
+    ranks below every other and never makes a duplicate."""
+    import pyarrow.parquet as pq
+
+    from bioio_spark.queries import REGISTRY
+
+    vecs = [list(v) for v in pq.read_table(
+        os.path.join(sf_dir, "embeddings.parquet"))
+        .sort_by("vec_id").column("embedding").to_pylist()]
+    for i in (3, 9, 12):
+        vecs[i] = [0.0] * len(vecs[i])
+    d = _write_embeddings(str(tmp_path / "zeros"), vecs)
+    for name in ("l12_semantic_dedup", "l12b_semdedup_sweep"):
+        spec = REGISTRY[name]
+        got = sorted(tuple(r) for r in spec.fn(spark, d).collect())
+        assert got == _oracle_rows(d, spec.oracle), name
+
+
+def _literal_ivf(emb, n_cent, mod):
+    """The frozen literal Lloyd pass of
+    test_literal_free_training_matches_literal_path_exactly, verbatim,
+    as a function."""
+    from pyspark.sql import functions as F
+
+    from bioio_spark.functions.similarity import (_KMEANS_SCALE,
+                                                  _assigned, _norm)
+
+    seeds = {int(r["vec_id"]): list(r["e"]) for r in
+             emb.filter(F.col("vec_id") < n_cent)
+             .select("vec_id", "e").collect()}
+    dim = len(next(iter(seeds.values())))
+    sums = [F.sum(F.floor(F.element_at("e", j + 1)
+                          * F.lit(_KMEANS_SCALE))).alias(f"p{j}")
+            for j in range(dim)]
+    rows = (emb.filter(F.col("vec_id") % mod == 0)
+            .withColumn("ne", _norm(F.col("e")))
+            .withColumn("cid", _assigned(seeds).cast("int"))
+            .groupBy("cid")
+            .agg(F.count(F.lit(1)).alias("cnt"), *sums).collect())
+    lit_ivf = dict(seeds)
+    for r in rows:
+        lit_ivf[int(r["cid"])] = [
+            float(r[f"p{j}"]) / float(r["cnt"]) / _KMEANS_SCALE
+            for j in range(dim)]
+    return lit_ivf
+
+
+def test_partial_sum_training_matches_literal_reference(spark):
+    """Hypothesis sweep: the one-pass partial-sum _fit_ivf equals the
+    literal Lloyd pass bit for bit on random small corpora — gaussian
+    rows, and small-integer rows full of exact cosine ties and zero
+    vectors (ties go to the smallest cid; NULL ranks last)."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from bioio_spark.functions.similarity import _fit_ivf
+
+    @settings(max_examples=8, deadline=None,
+              suppress_health_check=[HealthCheck.function_scoped_fixture])
+    @given(n=st.integers(4, 40), dim=st.integers(1, 8),
+           n_cent=st.integers(2, 4), mod=st.integers(1, 3),
+           ints=st.booleans(), seed=st.integers(0, 2 ** 31 - 1))
+    def check(n, dim, n_cent, mod, ints, seed):
+        rng = np.random.default_rng(seed)
+        vecs = (rng.integers(-1, 2, size=(n, dim)) if ints
+                else rng.normal(size=(n, dim)))
+        emb = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, e array<double>")
+        assert _fit_ivf(emb, n_cent, mod) == _literal_ivf(emb, n_cent, mod)
+
+    check()
+
+
+def test_semantic_dedup_job_counts(spark, count_jobs, sf_dir):
+    """A new input trains, assigns and pairs in at most 10 Spark jobs;
+    a memo hit (the same corpus again) pairs in at most 4."""
+    from bioio_spark.functions.similarity import semantic_dedup
+    from bioio_spark.queries.base import load
+    from bioio_spark.session import release
+
+    emb = load(spark, sf_dir, "embeddings")
+
+    def run():
+        semantic_dedup(emb).write.format("noop").mode("overwrite").save()
+
+    release(spark, "ivf")
+    try:
+        _, new, _ = count_jobs(run)
+        _, hit, _ = count_jobs(run)
+    finally:
+        release(spark, "ivf")
+    assert new <= 10 and hit <= 4, (new, hit)

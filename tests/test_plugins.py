@@ -426,3 +426,31 @@ def test_builtin_registry_pinned(clean_registry):
     assert P.dump_plugins().split("\n") == BUILTIN_DUMP
     assert list(P.get_plugins(use_cache=False)) == BUILTIN_KEYS
     assert all(len(v) == 1 for v in P.get_plugins().values())
+
+
+def test_directory_routes_to_readers_that_accept_it(tmp_path):
+    """A directory carries no suffix: it reaches the readers whose
+    ``routes`` accept it — a directory of OME-TIFFs (what save_ome_tiff
+    writes) opens as TIFF, and an NDTiff dataset, which holds TIFFs
+    too, goes to the reader of its index file first."""
+    import bioio_spark
+    from bioio_spark.formats.ndtiff import encode_ndtiff
+    from bioio_spark.formats.tiff import encode_ome_tiff
+    from bioio_spark.sources.ndtiff_image import NdtiffImageReader
+    from bioio_spark.sources.tiff_image import TiffImageReader
+
+    bioio_spark._register_builtin_plugins()
+    block = np.arange(2 * 3 * 4, dtype=np.uint16).reshape(1, 1, 2, 3, 4)
+    tiffs = tmp_path / "tiffs"
+    tiffs.mkdir()
+    for k in range(2):
+        (tiffs / f"scene_{k}.ome.tiff").write_bytes(encode_ome_tiff(block))
+    assert P.determine_reader(str(tiffs)) is TiffImageReader
+    assert P.determine_plugin(str(tiffs)).reader is TiffImageReader
+
+    nd = encode_ndtiff(block, str(tmp_path / "acq"))
+    assert P.determine_reader(nd) is NdtiffImageReader
+
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(UnsupportedFileFormatError):
+        P.determine_reader(str(tmp_path / "empty"))

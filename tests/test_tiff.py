@@ -11,8 +11,8 @@ import pytest
 
 from bioio_spark.formats.tiff import (build_ome_xml, decode_ome_tiff,
                                       decode_tiff, encode_ome_tiff,
-                                      encode_tiff, parse_ome_xml,
-                                      read_ome_header)
+                                      encode_tiff, iter_tiff_chunks,
+                                      parse_ome_xml)
 from bioio_spark.types import PhysicalPixelSizes
 
 
@@ -167,7 +167,7 @@ def test_writer_save_ndarray_guessed_order(tmp_path):
     block, xml = decode_ome_tiff(open(path, "rb").read())
     assert block.shape == (1, 1, 2, 4, 6)
     np.testing.assert_array_equal(block[0, 0], a)
-    assert read_ome_header(path) == xml
+    assert iter_tiff_chunks(path)[0]["description"] == xml
 
 
 def test_writer_save_nonstandard_dims_coerced(tmp_path):
@@ -543,9 +543,9 @@ def test_decode_tiled_lzw_predictor():
     np.testing.assert_array_equal(planes[0], img)
 
 
-def test_read_ome_header_big_endian(tmp_path):
-    """The catalog-side header reader honors MM byte order like the
-    full decoder."""
+def test_ifd_walk_reads_big_endian_description(tmp_path):
+    """The catalog-side IFD walk honors MM byte order like the full
+    decoder: IFD0's description and its page geometry."""
     import struct
 
     desc = b"<OME><Image ID=\"Image:9\"/></OME>\x00"
@@ -568,15 +568,16 @@ def test_read_ome_header_big_endian(tmp_path):
     data = _build_tiff(">", entries, body)
     p = tmp_path / "be.tiff"
     p.write_bytes(data)
-    xml = read_ome_header(str(p))
-    assert xml == '<OME><Image ID="Image:9"/></OME>'
+    [page] = iter_tiff_chunks(str(p))
+    assert page["description"] == '<OME><Image ID="Image:9"/></OME>'
+    assert (page["w"], page["h"]) == (4, 2)
 
 
 def test_decode_bigtiff(tmp_path):
     """BigTIFF (version 43): 64-bit offsets, 8-byte counts, 20-byte IFD
     entries, LONG8 strip offsets — how wild >4 GB files ship. Hand-built
-    single-page fixture; both the full decoder and the catalog header
-    reader must handle it."""
+    single-page fixture; both the full decoder and the catalog IFD walk
+    must handle it."""
     import struct
 
     img = (np.arange(12, dtype=np.uint16) * 99).astype("<u2").reshape(3, 4)
@@ -611,7 +612,8 @@ def test_decode_bigtiff(tmp_path):
 
     p = tmp_path / "big.tiff"
     p.write_bytes(data)
-    assert read_ome_header(str(p)) == '<OME><Image ID="Image:7"/></OME>'
+    assert iter_tiff_chunks(str(p))[0]["description"] == \
+        '<OME><Image ID="Image:7"/></OME>'
 
 
 def test_encode_bigtiff_roundtrip():
@@ -847,7 +849,7 @@ def test_multiscene_single_file(spark, tmp_path):
         np.testing.assert_array_equal(got[col].to_numpy(),
                                       want[col].to_numpy())
 
-    xml = read_ome_header(str(p))
+    xml = iter_tiff_chunks(str(p))[0]["description"]
     assert len(parse_ome_xml_scenes(xml)) == 2
     assert 'IFD="4"' in xml and 'IFD="5"' in xml
 
@@ -1469,9 +1471,12 @@ def test_bioimage_jpeg_tiff_end_to_end(spark, tmp_path):
 
 
 def test_jpeg_tiff_pyramid_levels(spark, tmp_path):
-    """JPEG compression composes with SubIFD pyramids: level-1 JPEG
-    tiles decode through a window read at resolution level 1."""
-    from bioio_spark.formats.tiff import decode_tiff_levels, encode_tiff
+    """JPEG compression composes with SubIFD pyramids: the IFD walk
+    finds the 32x32 level-1 child of 16x16 JPEG tiles, and a window read
+    at resolution level 1 equals that level's full read, which is the
+    level's pixels up to JPEG loss."""
+    from bioio_spark import BioImage
+    from bioio_spark.formats.tiff import encode_tiff
 
     yy, xx = np.mgrid[0:64, 0:64]
     a = ((yy * 2 + xx) % 240).astype(np.uint8)
@@ -1479,10 +1484,15 @@ def test_jpeg_tiff_pyramid_levels(spark, tmp_path):
     p = tmp_path / "jp.tif"
     p.write_bytes(encode_tiff([a], compression=7, tile=(16, 16),
                               sub_levels=[[lvl1]]))
-    planes, _, subs = decode_tiff_levels(p.read_bytes())
-    assert subs[0][0].shape == (32, 32)
+    [sub] = iter_tiff_chunks(str(p))[0]["subifds"]
+    assert (sub["h"], sub["w"], sub["comp"]) == (32, 32, 7)
+    img = BioImage(str(p), spark=spark)
+    img.set_resolution_level(1)
+    level = img.get_image_data("YX").astype(np.int16)
+    assert level.shape == (32, 32)
+    assert np.abs(level - lvl1).max() <= 8
     w = _window(spark, str(p), level=1, y=(0, 8),
                 x=(8, 16)).toPandas()
-    got = np.zeros((8, 8), np.uint8)
-    got[w["y"], w["x"] - 8] = w["value"].astype(np.uint8)
-    np.testing.assert_array_equal(got, subs[0][0][0:8, 8:16])
+    got = np.zeros((8, 8), np.int16)
+    got[w["y"], w["x"] - 8] = w["value"]
+    np.testing.assert_array_equal(got, level[0:8, 8:16])

@@ -210,15 +210,6 @@ PLANES_FORMATS = {"tiff", "tiff_dir", "tiff_imagej_contiguous", "zarr",
                   *VIDEO, "sldy"}
 
 
-def _open(fmt, path, spark):
-    """A fixture as a BioImage. Suffix routing does not reach a
-    directory of TIFFs, so that case names its reader."""
-    from bioio_spark.sources.tiff_image import TiffImageReader
-
-    return BioImage(path, spark=spark, reader=(
-        TiffImageReader if fmt == "tiff_dir" else None))
-
-
 def _fit(win, sizes):
     """The window with each selector moved inside a dim of ``sizes``
     (a size-1 axis can only be read at index 0)."""
@@ -233,7 +224,7 @@ def test_reader_owns_window_pushdown(spark, tmp_path, fmt):
     read_window itself for every window shape, and read_planes exactly
     where the format plans its own chunks."""
     vol = _fixture_vol(fmt)
-    img = _open(fmt, _write_fixture(fmt, vol, tmp_path, spark), spark)
+    img = BioImage(_write_fixture(fmt, vol, tmp_path, spark), spark=spark)
     sizes = dict(zip("tczyx", vol.shape))
     for win in (_fit(w, sizes) for w in WINDOWS):
         px = img._reader.read_window(spark, img, **win)
@@ -247,7 +238,7 @@ def test_reader_owns_window_pushdown(spark, tmp_path, fmt):
 def test_read_window_matches_filtered_frame(spark, tmp_path, fmt):
     vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
-    img = _open(fmt, path, spark)
+    img = BioImage(path, spark=spark)
     assert (img.dims.T, img.dims.C, img.dims.Z,
             img.dims.Y, img.dims.X) == vol.shape
     from pyspark.sql import functions as F
@@ -285,7 +276,7 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
 
     vol = _fixture_vol(fmt)
     path = _write_fixture(fmt, vol, tmp_path, spark)
-    img = _open(fmt, path, spark)
+    img = BioImage(path, spark=spark)
     pushed = img._reader.read_planes(spark, img)
     assert (pushed is not None) == (fmt in PLANES_FORMATS), fmt
     got = (planes_to_pixels(img.get_planes_dataframe())
@@ -366,7 +357,8 @@ def test_scene_catalog_contract(spark, tmp_path, case):
     from bioio_spark.sources.array_like import SCENE_COLUMNS
     from bioio_spark.types import dtype_to_ome_type
 
-    img = _open(case, _write_catalog_fixture(case, tmp_path, spark), spark)
+    img = BioImage(_write_catalog_fixture(case, tmp_path, spark),
+                   spark=spark)
     assert list(img._dataset.scenes.columns) == SCENE_COLUMNS
     if case.endswith("float32"):
         assert img.dtype == np.float32
