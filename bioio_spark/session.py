@@ -4,6 +4,15 @@ All defaults target correctness-at-scale: UTC session time (parity with the
 DuckDB oracle on naive parquet timestamps), AQE on (runtime coalesce, skew-join
 splitting, broadcast demotion), and Arrow for the pandas bridge used by the
 ndarray materialization path.
+
+Python workers fork from ``bioio_spark.pydaemon`` (``spark.python.daemon.
+module``). pyspark calls ``importlib.invalidate_caches()`` at the start of
+every task, and before CPython 3.13 that re-parses the whole directory of
+pyspark.zip, the py4j zip and the spark-core jar each time (0.1-0.6 s per
+task); the daemon re-reads an archive only when its size or mtime changed.
+Workers must import bioio_spark (start the driver in the repository root,
+put the root on PYTHONPATH, or install the distribution), as the library's
+own Python UDFs already must.
 """
 
 from __future__ import annotations
@@ -11,6 +20,7 @@ from __future__ import annotations
 import os
 from urllib.parse import unquote, urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 # Defaults chosen for the local[N] harness; on a real cluster, shuffle
@@ -38,6 +48,7 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    "spark.python.daemon.module": "bioio_spark.pydaemon",
 }
 
 
@@ -73,11 +84,11 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
               "spark.sql.legacy.parquet.nanosAsLong"):
         try:
             spark.conf.set(k, _DEFAULTS[k])
-        except Exception:
-            pass  # conf may be non-runtime-settable in some deployments
+        except AnalysisException:
+            pass  # CANNOT_MODIFY_(STATIC_)CONFIG: the deployment fixes it
     try:
         spark._bioio_conf_applied = True
-    except Exception:
+    except AttributeError:
         pass  # exotic session proxies may reject attributes; just re-apply
     return spark
 
