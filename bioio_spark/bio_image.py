@@ -580,32 +580,33 @@ class BioImage:
     def data(self) -> np.ndarray:
         """Standardized eager array of the current scene and level,
         memoized (ref bio_image.py:700-727). It is read in one job: from
-        the reader's ``read_planes`` and assembled in the native dtype,
-        or, for readers without one, from the standardized pixel
-        frame."""
+        the reader's ``read_tiles``, each tile shipped as native-dtype
+        bytes and placed with ``np.frombuffer``, or, for a scene no tile
+        read carries, from the standardized pixel frame."""
         from bioio_spark.operators.planes import assemble_ndarray
+        from bioio_spark.sources.planned import NATIVE_SCHEMA, native_tiles
 
         if self._cached_array is not None:
             return self._cached_array
-        planes = self._scene_planes()
-        if planes is not None:
+        tiles = self._tile_read(native_tiles(self.dtype), NATIVE_SCHEMA)
+        if tiles is not None:
             self._cached_array = assemble_ndarray(
-                planes, "TCZ", self.dims.shape, dtype=self.dtype)
+                tiles, "TCZ", self.dims.shape, dtype=self.dtype)
         else:
             px, dims = self._standard_pixels()
             plan, out_dims = apply_selectors(px, dims, dims.order, {})
             self._cached_array = to_ndarray(plan, out_dims, dtype=self.dtype)
         return self._cached_array
 
-    def _scene_planes(self) -> Optional[DataFrame]:
-        """The reader's planes read of the current scene and level, or
-        None where the planes layout can't carry the standardized scene
-        (S or M dims, a stitched mosaic, complex pixels) or the reader
-        has none."""
+    def _tile_read(self, body, schema: str) -> Optional[DataFrame]:
+        """The reader's ``read_tiles`` of the current scene and level
+        through ``body``, or None where a tile read can't carry the
+        standardized scene (S or M dims, a stitched mosaic, complex
+        pixels) or the reader has none."""
         if (self.dims.order != "TCZYX" or self.dtype.kind not in "biuf"
                 or self._stitched_yx_size() is not None):
             return None
-        return self._pushdown("read_planes")
+        return self._pushdown("read_tiles", body=body, schema=schema)
 
     @property
     def dataframe(self) -> DataFrame:

@@ -94,17 +94,23 @@ def assemble_ndarray(planes: DataFrame, dims_order: str,
     """Materialize a plane frame into a dense ``dtype`` ndarray,
     scattering whole tiles (one vectorized numpy copy per tile row, not
     per pixel). One Spark job: the tiles come back in a single Arrow
-    collect. Cells no tile covers stay 0.
+    collect. Cells no tile covers stay 0. A frame with a ``data``
+    column (``planned.NATIVE_SCHEMA``) carries each tile as native
+    ``dtype`` bytes, read with ``np.frombuffer``; otherwise its
+    ``values`` arrays are cast to ``dtype``.
 
     dims_order are the leading dims before Y/X, e.g. "TCZ" for a TCZYX
     output of the given shape.
     """
     lead = [d.lower() for d in dims_order]
     arr = np.zeros(shape, dtype=dtype)
-    pdf = planes.select(*lead, "y0", "x0", "h", "w", "values").toPandas()
+    native = "data" in planes.columns
+    pdf = planes.select(*lead, "y0", "x0", "h", "w",
+                        "data" if native else "values").toPandas()
     for row in pdf.itertuples(index=False):
         idx = tuple(getattr(row, d) for d in lead)
-        tile = np.asarray(row.values).reshape(row.h, row.w)
+        tile = (np.frombuffer(row.data, dtype=arr.dtype) if native
+                else np.asarray(row.values)).reshape(row.h, row.w)
         arr[idx + (slice(row.y0, row.y0 + row.h),
                    slice(row.x0, row.x0 + row.w))] = tile
     return arr

@@ -10,9 +10,14 @@ module``). pyspark calls ``importlib.invalidate_caches()`` at the start of
 every task, and before CPython 3.13 that re-parses the whole directory of
 pyspark.zip, the py4j zip and the spark-core jar each time (0.1-0.6 s per
 task); the daemon re-reads an archive only when its size or mtime changed.
-Workers must import bioio_spark (start the driver in the repository root,
-put the root on PYTHONPATH, or install the distribution), as the library's
-own Python UDFs already must.
+So every Python worker must import bioio_spark, as the library's own
+Python UDFs already must. ``get_session`` sees to it wherever the driver
+runs: a local session's workers get the package's parent directory on
+their PYTHONPATH (``spark.executorEnv.PYTHONPATH``, after any value the
+caller set); any other session gets the package shipped once with
+``addPyFile`` (``ship_package``). A cluster's workers start the daemon
+before any shipped file arrives, so there the distribution must be
+installed on them.
 """
 
 from __future__ import annotations
@@ -52,19 +57,50 @@ _DEFAULTS = {
 }
 
 
+def _package_parent() -> str:
+    """The directory the running bioio_spark package is imported from."""
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_session(app_name: str = "bioio_spark", master: str | None = None,
                 extra_conf: dict | None = None) -> SparkSession:
-    """Create (or get) a SparkSession with engine defaults applied."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
+    """Create (or get) a SparkSession with engine defaults applied, whose
+    Python workers import bioio_spark (see the module docstring)."""
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    if master.startswith("local"):
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(
+            p for p in (conf.get(key), _package_parent()) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    ship_package(spark)
+    return spark
+
+
+def ship_package(spark: SparkSession) -> None:
+    """Make bioio_spark importable by the session's Python workers: a
+    session whose workers already have the package's parent on their
+    PYTHONPATH needs nothing; any other (a cluster master, or a session
+    built elsewhere, whose executor env can't change once it runs) gets
+    the package as an ``addPyFile`` zip, once per SparkContext."""
+    sc = spark.sparkContext
+    paths = sc.getConf().get("spark.executorEnv.PYTHONPATH", "") or ""
+    if _package_parent() in paths.split(os.pathsep) or getattr(
+            sc, "_bioio_pyfiles_shipped", False):
+        return
+    import shutil
+    import tempfile
+
+    archive = shutil.make_archive(
+        os.path.join(tempfile.gettempdir(), "bioio_spark_pkg"), "zip",
+        root_dir=_package_parent(), base_dir="bioio_spark")
+    sc.addPyFile(archive)
+    sc._bioio_pyfiles_shipped = True
 
 
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:

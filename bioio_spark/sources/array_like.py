@@ -88,17 +88,30 @@ def _frame(rows, columns: list[str]) -> pd.DataFrame:
 class ImageDataset:
     """Bundle of lazy DataFrames backing one image: pixels + catalogs.
     ``scenes`` / ``channels`` are catalog frames or lists of
-    ``scene_row`` / ``channel_rows`` dicts."""
+    ``scene_row`` / ``channel_rows`` dicts. ``pixels`` is the pixel
+    frame, or a no-argument function that builds it: a reader whose
+    eager and tile reads never need the frame then builds no plan at
+    open, and the frame is built once, on first use."""
 
-    def __init__(self, pixels: DataFrame, scenes, channels,
+    def __init__(self, pixels, scenes, channels,
                  tiles: Optional[pd.DataFrame] = None,
                  coords: Optional[pd.DataFrame] = None):
-        self.pixels = pixels
+        self._pixels = pixels
         # small catalogs: kept driver-side (pandas)
         self.scenes = _frame(scenes, SCENE_COLUMNS)
         self.channels = _frame(channels, CHANNEL_COLUMNS)
         self.tiles = tiles
         self.coords = coords
+
+    @property
+    def pixels(self) -> DataFrame:
+        if not isinstance(self._pixels, DataFrame):
+            self._pixels = self._pixels()
+        return self._pixels
+
+    @pixels.setter
+    def pixels(self, frame: DataFrame) -> None:
+        self._pixels = frame
 
     def scene_ids(self) -> list[str]:
         return list(self.scenes.sort_values("scene_idx")["scene"])

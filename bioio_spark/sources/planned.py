@@ -19,22 +19,29 @@ the optional ``narrow`` hook (``narrow_rows`` for the raw-plane family).
 ``LocalTableScan`` of plan rows decoded by ``mapInPandas`` with no
 exchange:
 
-- ``to_dataset``: the pixels are the decoded tiles exploded to
+- ``to_dataset``: the catalogs at open, and the pixel frame as a thunk
+  ``ImageDataset`` builds on first use — the decoded tiles exploded to
   ``PIXEL_COLUMNS`` rows in the task that decoded them;
 - ``read_window``: plan rows of the current scene and level pruned by
   overlap with the selectors, narrowed through the hook, decoded, and
   sliced to the window in numpy before the explode;
-- ``read_planes``: the decoded tiles as ``PLANES_SCHEMA`` payload rows,
-  with the plan's grid declared through ``with_tile``.
+- ``read_tiles``: the plan rows of the current scene and level decoded
+  and handed, one native-dtype YX tile at a time, to a caller's
+  ``mapInPandas``-style body in the task that decoded them, with the
+  plan's tile grid declared through ``with_tile``. ``BioImage.data``
+  collects native bytes through it (``native_tiles``), the Zarr writer
+  encodes chunks in it, and ``read_planes`` is it with the
+  ``PLANES_SCHEMA`` payload body (``payload_tiles``).
 
 Every planned reader, TIFF included, takes this shape; Zarr, whose full
-read is a chunk-file scan, keeps its own window and planes reads. The
-other helpers here serve the Zarr, raster and TIFF-series readers too:
-``norm_window`` (a selector to ``[start, stop)``), ``plane_frame`` (one
-plane as long-form rows), ``plan_pixels`` (plan rows -> decoded frame,
-in as many tasks as Spark's file-split rule gives for the decoded
-bytes), ``grid_tile`` / ``with_tile`` / ``tile_of`` (the tile grid a
-planes read declares), ``standardize`` and ``trim``.
+read is a chunk-file scan, gives the same ``read_tiles`` over that scan
+and keeps its own window read. The other helpers here serve the Zarr,
+raster and TIFF-series readers too: ``norm_window`` (a selector to
+``[start, stop)``), ``plane_frame`` (one plane as long-form rows),
+``plan_scan`` (plan rows as a scan, in as many tasks as Spark's
+file-split rule gives for the decoded bytes), ``grid_tile`` /
+``with_tile`` / ``tile_of`` (the tile grid a tile read declares),
+``standardize`` and ``trim``.
 """
 
 from __future__ import annotations
@@ -57,6 +64,9 @@ from bioio_spark.sources.array_like import PIXEL_COLUMNS
 WINDOW_SCHEMA = "t int, c int, z int, y int, x int, value double"
 PLANES_SCHEMA = ("t int, c int, z int, y0 int, x0 int, h int, w int, "
                  "values array<double>")
+# one YX tile per row, its native-dtype samples as row-major bytes
+NATIVE_SCHEMA = ("t int, c int, z int, y0 int, x0 int, h int, w int, "
+                 "data binary")
 # decoded tiles exploded to pixels; si indexes the plan's scenes
 TILE_SCHEMA = ("si int, res_level int, t int, c int, z int, y int, "
                "x int, m int, s int, value double")
@@ -130,25 +140,16 @@ def split_tasks(spark: SparkSession, nbytes: int) -> int:
     return max(1, -(-int(nbytes) // max(1, int(per_task))))
 
 
-def plan_pixels(spark: SparkSession, rows, batches, schema: str, *,
-                nbytes: int, row_schema=None) -> DataFrame:
-    """Decode the plan ``rows`` (a pandas frame, dicts, or tuples named
-    by ``row_schema``) with ``mapInPandas(batches, schema)``.
+def plan_scan(spark: SparkSession, rows: pd.DataFrame, *,
+              nbytes: int) -> DataFrame:
+    """The plan ``rows`` as a scan for ``mapInPandas`` to decode.
 
     The plan goes through pandas and Arrow, so it is a ``LocalTableScan``
     with no exchange and no Python-RDD scan. ``nbytes``, the plan's
     decoded size, sets its task count to ``split_tasks``: each Python
     task has a fixed cost, so a small image reads in one task and a
-    large one over every core. ``row_schema`` types the plan's columns
-    where inference can't (tuples, arrays)."""
-    tuples = row_schema is not None and not (
-        rows and isinstance(rows[0], dict))
-    names = spark.createDataFrame([], row_schema).columns if tuples \
-        else None
-    plan = spark.createDataFrame(pd.DataFrame(rows, columns=names),
-                                 row_schema)
-    return plan.coalesce(split_tasks(spark, nbytes)).mapInPandas(
-        batches, schema=schema)
+    large one over every core."""
+    return spark.createDataFrame(rows).coalesce(split_tasks(spark, nbytes))
 
 
 def grid_tile(boxes) -> tuple[int, int] | None:
@@ -166,22 +167,25 @@ def grid_tile(boxes) -> tuple[int, int] | None:
     return None
 
 
-def with_tile(planes: DataFrame, tile: tuple[int, int] | None
+def with_tile(frame: DataFrame, tile: tuple[int, int] | None
               ) -> DataFrame:
-    """Declare that every row of a planes-layout frame is one cell of a
-    regular ``tile = (tile_h, tile_w)`` grid anchored at (0, 0), clipped
-    to the image. The declaration rides on the ``values`` column's
-    metadata, so it is read driver-side with no job and survives
-    ``select``. ``tile=None`` declares nothing."""
+    """Declare that every row of a tile-read frame came from one cell of
+    a regular ``tile = (tile_h, tile_w)`` grid anchored at (0, 0),
+    clipped to the image. The declaration rides on the metadata of the
+    frame's first column, so it is read driver-side with no job and
+    survives any ``select`` that keeps that column. ``tile=None``
+    declares nothing."""
     if tile is None:
-        return planes
-    return planes.withColumn("values", F.col("values").alias(
-        "values", metadata={"tile": [int(tile[0]), int(tile[1])]}))
+        return frame
+    col = frame.columns[0]
+    return frame.withColumn(col, F.col(col).alias(
+        col, metadata={"tile": [int(tile[0]), int(tile[1])]}))
 
 
-def tile_of(planes: DataFrame) -> tuple[int, int] | None:
-    """The (tile_h, tile_w) grid a planes frame declares, or None."""
-    tile = planes.schema["values"].metadata.get("tile")
+def tile_of(frame: DataFrame) -> tuple[int, int] | None:
+    """The (tile_h, tile_w) grid a tile-read frame declares, or None."""
+    tile = next((f.metadata["tile"] for f in frame.schema
+                 if "tile" in f.metadata), None)
     return (int(tile[0]), int(tile[1])) if tile else None
 
 
@@ -293,19 +297,42 @@ def _tile_frame(r, a, z0, c0, y0, x0) -> pd.DataFrame:
     })
 
 
-def _payload_frame(r, a, z0, c0, y0, x0) -> pd.DataFrame:
-    """``PLANES_SCHEMA`` rows, one per plane and channel of a block."""
-    nz, h, w, k = a.shape
-    idx = [(z, ch) for z in range(nz) for ch in range(k)]
-    return pd.DataFrame({
-        "t": [int(r.t)] * len(idx),
-        "c": [int(c0) + ch for _z, ch in idx],
-        "z": [int(z0) + z for z, _ch in idx],
-        "y0": [int(y0)] * len(idx), "x0": [int(x0)] * len(idx),
-        "h": [h] * len(idx), "w": [w] * len(idx),
-        "values": [a[z, :, :, ch].ravel().astype(np.float64)
-                   for z, ch in idx],
-    })
+def _yx_tiles(decode, batches):
+    """Batches of plan rows, decoded, as ``(t, c, z, y0, x0, tile)`` YX
+    tiles in their native dtype: a z-chunk gives one per plane, a
+    channel-interleaved row one per channel."""
+    for pdf in batches:
+        for r, tile in decode(pdf):
+            a = _blocks(r, tile)
+            y0, x0 = r.y0 + r.oy, r.x0 + r.ox
+            for z in range(a.shape[0]):
+                for ch in range(a.shape[3]):
+                    yield r.t, r.c + ch, r.z + z, y0, x0, a[z, :, :, ch]
+
+
+def _tile_rows(tiles, name: str, payload):
+    """One frame per ``(t, c, z, y0, x0, tile)``: the tile's extent and
+    ``payload(tile)`` in column ``name``."""
+    for t, c, z, y0, x0, tile in tiles:
+        yield pd.DataFrame({
+            "t": [t], "c": [c], "z": [z], "y0": [y0], "x0": [x0],
+            "h": [tile.shape[0]], "w": [tile.shape[1]],
+            name: [payload(tile)]})
+
+
+def payload_tiles(tiles):
+    """``read_tiles`` body of the planes layout: one ``PLANES_SCHEMA``
+    row per tile, its values widened to float64."""
+    return _tile_rows(tiles, "values",
+                      lambda a: a.ravel().astype(np.float64))
+
+
+def native_tiles(dtype):
+    """``read_tiles`` body of ``NATIVE_SCHEMA``: one row per tile, its
+    samples as native-order ``dtype`` bytes, for ``np.frombuffer``."""
+    dtype = np.dtype(dtype)
+    return lambda tiles: _tile_rows(
+        tiles, "data", lambda a: np.ascontiguousarray(a, dtype).tobytes())
 
 
 def _tile_batches(decode, frame, window=None):
@@ -341,9 +368,10 @@ class PlannedReader:
     routes on), ``DIM_ORDER_ERROR`` (why ``dim_order`` is not accepted)
     and ``catalog`` (its metadata-only probe). A planned reader gives
     ``plan`` and ``decode_tiles`` (and ``narrow`` where it can narrow a
-    row's read), and ``to_dataset``, ``read_window`` and
-    ``read_planes`` follow from them; Zarr, whose full read is a
-    chunk-file scan, not a plan, overrides those instead.
+    row's read), and ``to_dataset``, ``read_window`` and ``read_tiles``
+    follow from them; Zarr, whose full read is a chunk-file scan, not a
+    plan, overrides those instead. ``read_planes`` is ``read_tiles``
+    with the payload body for every reader.
     ``is_supported_image`` is ``routes`` (the suffix check) and then a
     successful ``catalog``."""
 
@@ -361,6 +389,7 @@ class PlannedReader:
         self._channel_names = channel_names
         self._pps = physical_pixel_sizes
         self._plan: Optional[Plan] = None
+        self._scans: dict = {}
 
     @classmethod
     def paths(cls, image: str) -> list[str]:
@@ -405,14 +434,11 @@ class PlannedReader:
         """A batch of plan rows -> ``(row, tile)`` pairs."""
         raise NotImplementedError
 
-    def _decoded(self, spark, rows: pd.DataFrame, frame, schema,
-                 window=None) -> DataFrame:
-        """``rows`` decoded through ``frame`` in ``split_tasks`` tasks
-        for their decoded bytes."""
+    def _scan(self, spark, rows: pd.DataFrame) -> DataFrame:
+        """``rows`` as a ``plan_scan`` for their decoded bytes."""
         nbytes = (rows["h"] * rows["w"] * rows["nc"] * rows["nz"]
                   * rows["scene"].map(self._sample_bytes)).sum()
-        return plan_pixels(spark, rows, _tile_batches(
-            self.decode_tiles, frame, window), schema, nbytes=int(nbytes))
+        return plan_scan(spark, rows, nbytes=int(nbytes))
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.sources.array_like import ImageDataset
@@ -432,12 +458,16 @@ class PlannedReader:
             s: np.dtype(r["dtype"]).itemsize * (r["size_s"] or 1)
             for s, r in cat.items()}
         names = list(cat)
-        scene = (F.lit(names[0]) if len(names) == 1 else F.element_at(
-            F.array(*map(F.lit, names)), F.col("si") + 1))
-        px = self._decoded(spark, rows, _tile_frame, TILE_SCHEMA).select(
-            F.lit(self._image_id).alias("image_id"),
-            scene.alias("scene"), *PIXEL_COLUMNS[2:])
-        return ImageDataset(px, plan.scenes, plan.channels,
+
+        def pixels():
+            scene = (F.lit(names[0]) if len(names) == 1 else F.element_at(
+                F.array(*map(F.lit, names)), F.col("si") + 1))
+            return self._scan(spark, rows).mapInPandas(
+                _tile_batches(self.decode_tiles, _tile_frame),
+                TILE_SCHEMA).select(
+                    F.lit(self._image_id).alias("image_id"),
+                    scene.alias("scene"), *PIXEL_COLUMNS[2:])
+        return ImageDataset(pixels, plan.scenes, plan.channels,
                             tiles=plan.tiles)
 
     def _scene_rows(self, img) -> Optional[pd.DataFrame]:
@@ -492,17 +522,35 @@ class PlannedReader:
         if self.narrow is not None:
             lo, hi = window["y"]
             rows = self.narrow(rows, lo - rows["oy"], hi - rows["oy"])
-        return self._decoded(spark, rows, _tile_frame, TILE_SCHEMA,
-                             window).drop("si", "res_level")
+        return self._scan(spark, rows).mapInPandas(_tile_batches(
+            self.decode_tiles, _tile_frame, window), TILE_SCHEMA).drop(
+                "si", "res_level")
 
-    def read_planes(self, spark: SparkSession, img) -> DataFrame | None:
-        """``img``'s current scene and level in the planes layout
-        (``PLANES_SCHEMA``), one row per decoded plane or tile — or None
-        for a scene the layout can't carry (S or M) or no plan."""
+    def read_tiles(self, spark: SparkSession, img, body, schema: str
+                   ) -> DataFrame | None:
+        """``img``'s current scene and level as YX tiles: ``body``, a
+        ``mapInPandas``-style function, gets an iterator of ``(t, c, z,
+        y0, x0, tile)`` with ``tile`` an ``(h, w)`` array in its native
+        dtype, runs in the task that decoded the tile, and yields
+        ``schema`` frames. The frame declares the plan's tile grid
+        (``with_tile``) where it has one. None for a scene the read
+        can't carry (S or M) or no plan."""
         rows = self._scene_rows(img)
         if rows is None or (rows["m"] >= 0).any() or \
                 "S" in img.dims.order:
             return None
-        planes = self._decoded(spark, rows, _payload_frame, PLANES_SCHEMA)
-        return with_tile(planes, grid_tile(
+        # one scan per scene and level, whatever the body
+        key = (img.current_scene, img.current_resolution_level)
+        if key not in self._scans:
+            self._scans[key] = self._scan(spark, rows)
+        decode = self.decode_tiles
+        tiles = self._scans[key].mapInPandas(
+            lambda it: body(_yx_tiles(decode, it)), schema)
+        return with_tile(tiles, grid_tile(
             zip(rows["y0"], rows["x0"], rows["h"], rows["w"])))
+
+    def read_planes(self, spark: SparkSession, img) -> DataFrame | None:
+        """``img``'s current scene and level in the planes layout
+        (``PLANES_SCHEMA``), one row per decoded tile — ``read_tiles``
+        with the float64 payload body."""
+        return self.read_tiles(spark, img, payload_tiles, PLANES_SCHEMA)

@@ -199,32 +199,21 @@ class BioioRawDataSource(DataSource):
 def register_raw_source(spark) -> None:
     """Idempotently register the bioio_raw format on a session.
 
-    Also ships the bioio_spark package to Python workers (addPyFile): the
-    DataSource instance is unpickled executor-side, and driver sys.path
-    edits don't propagate — on a real cluster this is exactly how a custom
-    Python source is deployed.
+    The DataSource instance is unpickled in a Python worker, and driver
+    ``sys.path`` edits don't propagate, so the session's workers must
+    import bioio_spark: ``session.ship_package`` sees to it — on a real
+    cluster this is how a custom Python source is deployed.
     """
     from pyspark.errors import AnalysisException
+
+    from bioio_spark.session import ship_package
 
     spark.dataSource.register(BioioRawDataSource)
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except AnalysisException:
         pass  # not modifiable in some deployments; reads still work
-    sc = spark.sparkContext
-    if not getattr(sc, "_bioio_pyfiles_shipped", False):
-        import shutil
-        import tempfile
-
-        import bioio_spark
-
-        pkg_root = os.path.dirname(os.path.dirname(
-            os.path.abspath(bioio_spark.__file__)))
-        zip_base = os.path.join(tempfile.gettempdir(), "bioio_spark_pkg")
-        archive = shutil.make_archive(zip_base, "zip", root_dir=pkg_root,
-                                      base_dir="bioio_spark")
-        sc.addPyFile(archive)
-        sc._bioio_pyfiles_shipped = True
+    ship_package(spark)
 
 
 # -------------------------------------------------------------------------

@@ -12,7 +12,12 @@ codec (bioio_spark.formats.zarr):
   and an Arrow-batched `mapInPandas` decodes each chunk to long-form pixel
   rows. Decode parallelism is the CHUNK COUNT — for a 100 TB store that is
   tens of millions of independent tasks, the property that makes Zarr the
-  scale-native format of the reference's plugin pair.
+  scale-native format of the reference's plugin pair. The pixel frame is
+  a thunk, built on first use.
+- **Tiles**: `read_tiles`, the planned readers' contract, over the same
+  scan of one level's chunk files: each decoded chunk's native-dtype
+  YX slabs go to the caller's body in the task that decoded them, and
+  the chunk (or a shard's inner-chunk) grid is the declared tile grid.
 
 Supports Zarr v2 stores with C order, zlib/zstd or no compressor, "." or "/"
 dimension separators, any subset of the tczyx NGFF axes (absent axes read
@@ -83,12 +88,58 @@ class ZarrImageReader(PlannedReader):
                 level=img.current_resolution_level)
         return None
 
-    def read_planes(self, spark, img):
+    def read_tiles(self, spark, img, body, schema):
+        """``PlannedReader.read_tiles`` over the current scene's level
+        array: a ``binaryFile`` scan of its chunk files, each decoded
+        chunk (or inner chunk of a shard) handed to ``body`` as its YX
+        slabs. None for a scene the store doesn't hold or an array
+        without y and x axes."""
+        from bioio_spark.fsio import local_path
+
         roots = _scene_roots(self._path)
-        if 0 <= img.current_scene_index < len(roots):
-            return read_zarr_planes(spark, roots[img.current_scene_index],
-                                    level=img.current_resolution_level)
-        return None
+        if not 0 <= img.current_scene_index < len(roots):
+            return None
+        arr_dir, za, axes = _array_of(roots[img.current_scene_index],
+                                      img.current_resolution_level)
+        if "y" not in axes or "x" not in axes:
+            return None
+        info = _decode_info(za, axes)
+        arr_abs = os.path.abspath(arr_dir)
+
+        def yx_tiles(batches):
+            from bioio_spark.formats.zarr import iter_decoded_blocks
+
+            lead = [d for d in axes if d not in "yx"]
+            yx = [axes.index("y"), axes.index("x")]
+            for pdf in batches:
+                for path, content in zip(pdf["path"], pdf["content"]):
+                    local = local_path(path)
+                    if os.path.basename(local) == "zarr.json":
+                        continue
+                    parts = os.path.relpath(local, arr_abs).replace(
+                        os.sep, ".").split(".")
+                    if info["key_prefix"] and parts[0] == info["key_prefix"]:
+                        parts = parts[1:]
+                    for origin, block in iter_decoded_blocks(
+                            bytes(content), info, [int(p) for p in parts]):
+                        slabs = np.moveaxis(block, yx, [-2, -1])
+                        for idx in np.ndindex(*slabs.shape[:-2]):
+                            at = {d: origin[axes.index(d)] + i
+                                  for d, i in zip(lead, idx)}
+                            yield (at.get("t", 0), at.get("c", 0),
+                                   at.get("z", 0), origin[yx[0]],
+                                   origin[yx[1]], slabs[idx])
+
+        binary = (spark.read.format("binaryFile")
+                  .option("recursiveFileLookup", "true")
+                  .load([f"file://{arr_abs}"]))
+        tiles = binary.select("path", "content").mapInPandas(
+            lambda it: body(yx_tiles(it)), schema=schema)
+        # rows are decoded chunks: a shard's inner chunks when sharded
+        grid = za["shard"]["inner_chunks"] if za.get("shard") \
+            else za["chunks"]
+        return with_tile(tiles, (grid[axes.index("y")],
+                                 grid[axes.index("x")]))
 
     def to_dataset(self, spark: SparkSession):
         from bioio_spark.formats.zarr import parse_ngff_attrs, parse_zarray
@@ -186,30 +237,16 @@ class ZarrImageReader(PlannedReader):
                 {d.upper(): size[d] for d in "tczyx"}, pps=pps,
                 metadata=attrs_doc,
                 res_levels=[0] + [lv for lv, _, _ in extra_levels]))
-            arrays[os.path.abspath(arr_dir)] = {
-                "scene": scene, "axes": axes, "res_level": 0,
-                "shape": za["shape"], "chunks": za["chunks"],
-                "dtype": np.dtype(za["dtype"]).str,
-                "compressor": za["compressor"],
-                "key_prefix": za.get("key_prefix"),
-                "gzip_member": za.get("gzip_member", False),
-                "shard": za.get("shard"),
-            }
+            arrays[os.path.abspath(arr_dir)] = _decode_info(
+                za, axes, scene=scene, res_level=0)
             for lv, ld, lza in extra_levels:
-                arrays[os.path.abspath(ld)] = {
-                    "scene": scene, "axes": axes, "res_level": lv,
-                    "shape": lza["shape"], "chunks": lza["chunks"],
-                    "dtype": np.dtype(lza["dtype"]).str,
-                    "compressor": lza["compressor"],
-                    "key_prefix": lza.get("key_prefix"),
-                    "gzip_member": lza.get("gzip_member", False),
-                    "shard": lza.get("shard"),
-                }
+                arrays[os.path.abspath(ld)] = _decode_info(
+                    lza, axes, scene=scene, res_level=lv)
 
-        px = standardize(decode_zarr_chunks(spark, arrays),
-                         self._image_id)
-
-        return ImageDataset(pixels=px, scenes=scenes, channels=channels)
+        return ImageDataset(
+            pixels=lambda: standardize(decode_zarr_chunks(spark, arrays),
+                                       self._image_id),
+            scenes=scenes, channels=channels)
 
 
 def decode_zarr_chunks(spark: SparkSession,
@@ -324,112 +361,15 @@ def _array_of(root: str, level: str | int = 0) -> tuple[str, dict, str]:
     return arr_dir, za, axes
 
 
-def read_zarr_planes(spark: SparkSession, store: str,
-                     level: str | int = 0,
-                     image_id: str = "img") -> DataFrame:
-    """ZERO-SHUFFLE chunk -> planes-layout read: each Zarr chunk decodes
-    DIRECTLY to tile rows (one row per (t,c,z) slab: y0/x0/h/w + dense
-    row-major `values` payload) — the scale path for big images. The
-    long-form reader emits one row per PIXEL (8x+ amplification before
-    any pruning); converting long-form to planes costs a full groupBy
-    shuffle (pixels_to_planes). This path gets the chunked layout straight
-    off the binaryFile scan: tile pruning, payload-sliced windows, and
-    vectorized assembly (operators/planes.py) with no exchange at all.
-    """
-    import numpy as np
-
-    from bioio_spark.fsio import local_path as local_path_of
-
-    arr_dir, za, axes = _array_of(store, level)
-    info = {
-        "axes": axes, "shape": za["shape"], "chunks": za["chunks"],
-        "dtype": np.dtype(za["dtype"]).str,
-        "compressor": za["compressor"],
-        "key_prefix": za.get("key_prefix"),
-        "gzip_member": za.get("gzip_member", False),
-        "shard": za.get("shard"),
-    }
-    arr_abs = os.path.abspath(arr_dir)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.zarr import iter_decoded_blocks
-
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                local = local_path_of(path)
-                if os.path.basename(local) == "zarr.json":
-                    continue
-                rel = os.path.relpath(local, arr_abs)
-                parts = rel.replace(os.sep, ".").split(".")
-                if info["key_prefix"] and parts[0] == info["key_prefix"]:
-                    parts = parts[1:]
-                grid = [int(p) for p in parts]
-                # axes -> tczyx positions; leading dims iterate, trailing
-                # (y, x) become the tile payload
-                pos = {d: i for i, d in enumerate(info["axes"])}
-                if "y" not in pos or "x" not in pos:
-                    raise ValueError("planes read needs y and x axes")
-                lead_axes = [d for d in info["axes"] if d not in "yx"]
-                rows: dict = {k: [] for k in
-                              ("t", "c", "z", "y0", "x0", "h", "w",
-                               "values")}
-                for origin, block in iter_decoded_blocks(
-                        bytes(content), info, grid):
-                    off = {d: origin[pos[d]] for d in info["axes"]}
-                    h, w = (block.shape[pos["y"]], block.shape[pos["x"]])
-                    lead_shape = tuple(block.shape[pos[d]]
-                                       for d in lead_axes)
-                    for lead in np.ndindex(*lead_shape) if lead_shape \
-                            else [()]:
-                        idx = [0] * len(info["axes"])
-                        for d, v in zip(lead_axes, lead):
-                            idx[pos[d]] = v
-                        sl = tuple(
-                            slice(None) if d in "yx" else idx[pos[d]]
-                            for d in info["axes"])
-                        coords = {d: off.get(d, 0) for d in "tcz"}
-                        for d, v in zip(lead_axes, lead):
-                            coords[d] = off[d] + v
-                        rows["t"].append(coords.get("t", 0))
-                        rows["c"].append(coords.get("c", 0))
-                        rows["z"].append(coords.get("z", 0))
-                        rows["y0"].append(off["y"])
-                        rows["x0"].append(off["x"])
-                        rows["h"].append(h)
-                        rows["w"].append(w)
-                        rows["values"].append(
-                            block[sl].astype(np.float64).ravel())
-                n = len(rows["t"])
-                yield pd.DataFrame({
-                    "image_id": [image_id] * n,
-                    "scene": ["Image:0"] * n,
-                    "res_level": np.full(n, int(level) if str(level)
-                                         .isdigit() else 0, np.int32),
-                    "t": np.asarray(rows["t"], np.int32),
-                    "c": np.asarray(rows["c"], np.int32),
-                    "z": np.asarray(rows["z"], np.int32),
-                    "m": np.full(n, -1, np.int32),
-                    "s": np.full(n, -1, np.int32),
-                    "y0": np.asarray(rows["y0"], np.int32),
-                    "x0": np.asarray(rows["x0"], np.int32),
-                    "h": np.asarray(rows["h"], np.int32),
-                    "w": np.asarray(rows["w"], np.int32),
-                    "values": rows["values"],
-                })
-
-    binary = (spark.read.format("binaryFile")
-              .option("recursiveFileLookup", "true")
-              .load([f"file://{arr_abs}"]))
-    planes = binary.select("path", "content").mapInPandas(
-        batches,
-        schema="image_id string, scene string, res_level int, t int, "
-               "c int, z int, m int, s int, y0 int, x0 int, h int, "
-               "w int, values array<double>")
-    if "y" not in axes or "x" not in axes:
-        return planes
-    # rows are decoded chunks: a shard's inner chunks when sharded
-    grid = za["shard"]["inner_chunks"] if za.get("shard") else za["chunks"]
-    return with_tile(planes, (grid[axes.index("y")], grid[axes.index("x")]))
+def _decode_info(za: dict, axes: str, **extra) -> dict:
+    """The decode-info dict ``iter_decoded_blocks`` reads, for one
+    parsed array document."""
+    return {"axes": axes, "shape": za["shape"], "chunks": za["chunks"],
+            "dtype": np.dtype(za["dtype"]).str,
+            "compressor": za["compressor"],
+            "key_prefix": za.get("key_prefix"),
+            "gzip_member": za.get("gzip_member", False),
+            "shard": za.get("shard"), **extra}
 
 
 def read_zarr_window(spark: SparkSession, store: str,
@@ -446,8 +386,6 @@ def read_zarr_window(spark: SparkSession, store: str,
     (ref bio_image.py:764-839 lazy selection); Spark-side it is listing-
     level pruning, the same lever as parquet partition pruning.
     """
-    import numpy as _np
-
     arr_dir, za, axes = _array_of(store, level)
     sel_of = {"t": t, "c": c, "z": z, "y": y, "x": x}
     window = [norm_window(sel_of.get(d), s)
@@ -462,18 +400,11 @@ def read_zarr_window(spark: SparkSession, store: str,
              else os.path.join(arr_dir, sep.join(comps)))
         if os.path.exists(p):       # absent chunk = all fill_value
             files.append(p)
-    arrays = {os.path.abspath(arr_dir): {
-        "scene": "Image:0", "axes": axes, "res_level": 0,
-        "shape": za["shape"], "chunks": za["chunks"],
-        "dtype": _np.dtype(za["dtype"]).str,
-        "compressor": za["compressor"],
-        "key_prefix": prefix,
-        "gzip_member": za.get("gzip_member", False),
-        "shard": za.get("shard"),
-        # inner-chunk pruning inside shards: decode only inner chunks
-        # intersecting the window (the local analog of ranged GETs)
-        "window": [tuple(w) for w in window],
-    }}
+    # inner-chunk pruning inside shards: decode only inner chunks
+    # intersecting the window (the local analog of ranged GETs)
+    arrays = {os.path.abspath(arr_dir): _decode_info(
+        za, axes, scene="Image:0", res_level=0,
+        window=[tuple(w) for w in window])}
     schema = ("scene string, res_level int, t int, c int, z int, y int, "
               "x int, value double")
     if not files:   # whole window lives in absent (all-fill) chunks

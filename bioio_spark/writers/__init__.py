@@ -791,11 +791,12 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
     write parallelism is the total chunk count across scenes. At 100 TB
     this is the sink that saturates a 1000-executor cluster; edge chunks
     are padded to full chunk shape with fill_value per the Zarr v2 spec.
-    When every scene has a planes read (``read_planes``) whose declared
-    tile grid holds whole chunks, the chunks are instead encoded in
-    ``mapInPandas`` straight over the plane tiles: one job, no exchange.
-    Multiscale pyramids, shards and chunks that span tiles take the
-    grouped path; both write through one chunk encoder.
+    When every scene has a tile read (the reader's ``read_tiles``) whose
+    declared tile grid holds whole chunks, each chunk is instead encoded
+    in the task that decoded its tile, from the tile's native-dtype
+    samples: one job and one Python pass, and the payload never enters
+    the JVM. Multiscale pyramids, shards and chunks that span tiles take
+    the grouped path; both write through one chunk encoder.
 
     Layout: `{uri}/scene_{i}.zarr/` group per scene — `.zgroup`, `.zattrs`
     (NGFF multiscales + omero channel labels), and one array dir per
@@ -931,45 +932,44 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
             f.write(payload)
         return len(payload)
 
-    tiles = None if n_levels > 1 or shards is not None \
-        else _scene_tiles(img, meta)
-    if tiles is not None:
-        def encode_tiles(batches):
-            # each plane tile holds whole chunks: encode them in place,
-            # with no exchange, and count chunks and bytes per batch
-            for pdf in batches:
-                counts: dict = {}
-                for r in pdf.itertuples(index=False):
-                    m = meta[r.scene_idx]
-                    cy, cx = m["chunks"][3:]
-                    size_y, size_x = m["shape"][3:]
-                    tile = np.asarray(r.values).reshape(r.h, r.w)
-                    y1 = min(r.y0 + r.h, size_y)
-                    x1 = min(r.x0 + r.w, size_x)
-                    for gy in range(r.y0 // cy, -(-y1 // cy)):
-                        for gx in range(r.x0 // cx, -(-x1 // cx)):
-                            ys, ye = gy * cy, min(gy * cy + cy, size_y)
-                            xs, xe = gx * cx, min(gx * cx + cx, size_x)
-                            if ys < r.y0 or ye > y1 or xs < r.x0 \
-                                    or xe > x1:
-                                raise ValueError(
-                                    f"chunk ({gy}, {gx}) of scene "
-                                    f"{r.scene_idx} spans plane tiles: "
-                                    f"the read's declared tile grid is "
-                                    f"wrong")
-                            block = np.zeros(m["chunks"], m["dtype"])
-                            block[0, 0, 0, :ye - ys, :xe - xs] = tile[
-                                ys - r.y0:ye - r.y0, xs - r.x0:xe - r.x0]
-                            n = write_chunk(r.scene_idx, 0,
-                                            (r.t, r.c, r.z, gy, gx), block)
-                            k, b = counts.get(r.scene_idx, (0, 0))
-                            counts[r.scene_idx] = (k + 1, b + n)
-                yield pd.DataFrame(
-                    [(i, k, b) for i, (k, b) in counts.items()],
-                    columns=["scene_idx", "n_chunks", "n_bytes"])
+    def encode_tiles(idx: int):
+        """``read_tiles`` body for scene ``idx``: encode the stored
+        chunks inside each native-dtype tile in place, in the task that
+        decoded it, and count chunks and bytes."""
+        m = meta[idx]
+        cy, cx = m["chunks"][3:]
+        size_y, size_x = m["shape"][3:]
 
-        rows = tiles.mapInPandas(encode_tiles, _REPORT_SCHEMA).collect()
-        return _zarr_report(uri, meta, rows)
+        def body(tiles):
+            n_chunks = n_bytes = 0
+            for t, c, z, y0, x0, tile in tiles:
+                y1 = min(y0 + tile.shape[0], size_y)
+                x1 = min(x0 + tile.shape[1], size_x)
+                for gy in range(y0 // cy, -(-y1 // cy)):
+                    for gx in range(x0 // cx, -(-x1 // cx)):
+                        ys, ye = gy * cy, min(gy * cy + cy, size_y)
+                        xs, xe = gx * cx, min(gx * cx + cx, size_x)
+                        if ys < y0 or ye > y1 or xs < x0 or xe > x1:
+                            raise ValueError(
+                                f"chunk ({gy}, {gx}) of scene {idx} spans "
+                                f"tiles: the read's declared tile grid "
+                                f"is wrong")
+                        block = np.zeros(m["chunks"], m["dtype"])
+                        block[0, 0, 0, :ye - ys, :xe - xs] = tile[
+                            ys - y0:ye - y0, xs - x0:xe - x0]
+                        n_bytes += write_chunk(idx, 0, (t, c, z, gy, gx),
+                                               block)
+                        n_chunks += 1
+            if n_chunks:
+                yield pd.DataFrame({"scene_idx": [idx],
+                                    "n_chunks": [n_chunks],
+                                    "n_bytes": [n_bytes]})
+        return body
+
+    tiles = None if n_levels > 1 or shards is not None \
+        else _tile_writes(img, meta, encode_tiles)
+    if tiles is not None:
+        return _zarr_report(uri, meta, tiles.collect())
 
     # chunk-grid bucketing: per-scene chunk sizes via a literal map (a few
     # scenes; stays a codegen projection, no extra shuffle beyond the
@@ -1028,16 +1028,16 @@ def save_ome_zarr(img, uri: str, select_scenes=None, chunks=None,
 _REPORT_SCHEMA = "scene_idx int, n_chunks long, n_bytes long"
 
 
-def _scene_tiles(img, meta: dict):
-    """The planes reads of ``meta``'s scenes, tagged with ``scene_idx`` —
-    or None unless every scene has a planes read that declares a tile
-    grid (``planned.with_tile``) and each of its stored chunks lies
-    inside one tile: chunks one plane deep, whose Y/X sizes divide the
-    tile's (or the tile spans the whole axis)."""
+def _tile_writes(img, meta: dict, encode):
+    """The tile reads of ``meta``'s scenes, each through its body
+    ``encode(scene_idx)`` — or None unless every scene has a tile read
+    (``read_tiles``) that declares a tile grid (``planned.with_tile``)
+    and each of its stored chunks lies inside one tile: chunks one plane
+    deep, whose Y/X sizes divide the tile's (or the tile spans the whole
+    axis)."""
     import functools
 
     from pyspark.sql import DataFrame
-    from pyspark.sql import functions as F
 
     from bioio_spark.sources.planned import tile_of
 
@@ -1045,18 +1045,18 @@ def _scene_tiles(img, meta: dict):
     current = img.current_scene_index
     try:
         for idx, m in meta.items():
+            if tuple(m["chunks"][:3]) != (1, 1, 1):
+                return None
             img.set_scene(idx)
-            planes = img._scene_planes()
-            tile = None if planes is None else tile_of(planes)
-            if tile is None or tuple(m["chunks"][:3]) != (1, 1, 1):
+            tiles = img._tile_read(encode(idx), _REPORT_SCHEMA)
+            tile = None if tiles is None else tile_of(tiles)
+            if tile is None:
                 return None
             for size, chunk, cell in zip(m["shape"][3:], m["chunks"][3:],
                                          tile):
                 if cell < size and cell % chunk:
                     return None
-            frames.append(planes.select(
-                F.lit(idx).alias("scene_idx"), "t", "c", "z", "y0", "x0",
-                "h", "w", "values"))
+            frames.append(tiles)
     finally:
         img.set_scene(current)
     return functools.reduce(DataFrame.unionByName, frames)
@@ -1093,6 +1093,7 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
     """
     import json
 
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     from bioio_spark.ome_utils import (generate_ome_image_id,
@@ -1104,12 +1105,14 @@ def read_parquet_image(spark, uri: str, image_id: str = "img"):
     dim_cols = [c for c in ("t", "c", "z", "y", "x", "m", "s")
                 if c in df.columns]
 
-    sidecar = None
     try:
         lines = spark.read.text(uri + "/_catalog").collect()
-        sidecar = json.loads("".join(r["value"] for r in lines))
-    except Exception:
-        sidecar = None
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        lines = None    # a pre-sidecar sink
+    sidecar = None if lines is None else json.loads(
+        "".join(r["value"] for r in lines))
 
     if sidecar is not None and sidecar.get("scenes"):
         scenes, channels = sidecar["scenes"], sidecar["channels"]

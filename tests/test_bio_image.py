@@ -425,3 +425,32 @@ def test_planes_tier_follows_levels_and_derived_pyramids(spark, tmp_path):
     assert flat.data.shape == (1, 1, 1, 16, 24)
     np.testing.assert_array_equal(
         flat.data, to_ndarray(plan, out_dims, dtype=flat.dtype))
+
+
+def test_open_builds_no_pixel_plan(spark, tmp_path, count_jobs,
+                                   monkeypatch):
+    """Opening a file walks its catalog only: 0 jobs and no DataFrame, for
+    a planned reader (TIFF) and for Zarr. The pixel frame is built on
+    first use, once; a file that can't be read still fails at open."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from bioio_spark.writers import save_ome_tiff, save_ome_zarr
+
+    a = np.arange(2 * 3 * 8 * 10, dtype=np.uint16).reshape(1, 2, 3, 8, 10)
+    save_ome_tiff(BioImage(a, spark=spark), str(tmp_path / "t"))
+    save_ome_zarr(BioImage(a, spark=spark), str(tmp_path / "z"))
+    built, init = [], DataFrame.__init__
+    monkeypatch.setattr(DataFrame, "__init__", lambda self, *args: (
+        built.append(1), init(self, *args))[1])
+    for src in ("t/scene_0.ome.tiff", "z/scene_0.zarr"):
+        built.clear()
+        img, jobs, _ = count_jobs(
+            lambda: BioImage(str(tmp_path / src), spark=spark))
+        assert (jobs, built) == (0, []), src
+        px = img._dataset.pixels
+        assert built and img._dataset.pixels is px, src
+        assert px.count() == a.size, src
+    bad = tmp_path / "bad.ome.tiff"
+    bad.write_bytes(b"II*\x00 not a tiff")
+    with pytest.raises(Exception):
+        BioImage(str(bad), spark=spark)

@@ -2,7 +2,7 @@
 in bioio_spark/sources/planned.py. This stdlib-only scan fails if
 BioImage grows a type switch over readers again, if a source module
 re-inlines the ``createDataFrame(...).repartition(min(len(rows),
-defaultParallelism))`` plan idiom instead of calling ``plan_pixels`` /
+defaultParallelism))`` plan idiom instead of calling ``plan_scan`` /
 ``plan_width``, if anything reaches into the Zarr module for the
 window normalizer that ``planned.norm_window`` now owns, if a source
 module hand-writes a scene- or channel-catalog row instead of calling
@@ -36,7 +36,7 @@ RULES = [
      "BioImage dispatches through reader.read_window/read_planes"),
     (lambda rel: _source_module(rel, allow=("planned.py",)),
      "defaultParallelism))",
-     "plan rows go through planned.plan_pixels / plan_width"),
+     "plan rows go through planned.plan_scan / plan_width"),
     (lambda rel: True,
      "zarr_image import _norm_window",
      "the window normalizer is planned.norm_window"),

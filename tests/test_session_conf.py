@@ -80,3 +80,46 @@ def test_ensure_engine_conf_tolerates_fixed_conf_only(spark):
 
     with pytest.raises(RuntimeError):
         ensure_engine_conf(_Session(RuntimeError("gateway down")))
+
+
+def test_workers_import_the_package_from_any_directory(tmp_path):
+    """A driver started outside the repository that reaches bioio_spark
+    only through ``sys.path.insert`` runs Python tasks: get_session puts
+    the package's parent on its local workers' PYTHONPATH, after the
+    caller's own value. A plain ``mapInPandas`` needs it (every worker
+    forks from ``bioio_spark.pydaemon``), and so does a bioio_raw read,
+    whose DataSource is unpickled in a worker."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {root!r})
+        import numpy as np
+        from bioio_spark import BioImage
+        from bioio_spark.session import get_session
+        from bioio_spark.sources.raw_format import write_raw
+        spark = get_session(extra_conf={{
+            "spark.executorEnv.PYTHONPATH": "/nonexistent"}})
+        print(spark.sparkContext.getConf().get(
+            "spark.executorEnv.PYTHONPATH"))
+        df = spark.range(3).mapInPandas(lambda it: it, "id long")
+        print(sorted(r.id for r in df.collect()))
+        a = np.arange(2 * 3 * 4, dtype=np.float64).reshape(1, 1, 2, 3, 4)
+        write_raw(a, "img.braw")
+        img = BioImage("img.braw", spark=spark)
+        print(bool((img.get_image_dataframe().toPandas()["value"]
+                    .sort_values().to_numpy() == a.ravel()).all()))
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split("\n")[:3] == [
+        os.pathsep.join(["/nonexistent", root]), "[0, 1, 2]", "True"], \
+        out.stdout

@@ -304,6 +304,87 @@ def test_planes_fast_path_matches_pixels(spark, tmp_path, fmt):
             assert r.h <= th and r.w <= tw, (fmt, tile, r)
 
 
+def _mm_tiff(plane):
+    """A one-page big-endian (MM) uint16 TIFF, two rows per strip."""
+    import struct
+
+    h, w = plane.shape
+    body = plane.astype(">u2").tobytes()
+    step = 2 * w * 2
+    n = -(-h // 2)
+    at = 8 + len(body)          # the strip offset and count arrays
+    blob = (struct.pack(f">{n}I", *(8 + i * step for i in range(n)))
+            + struct.pack(f">{n}I", *(min(step, len(body) - i * step)
+                                      for i in range(n))))
+    tags = [(256, 4, 1, struct.pack(">I", w)),
+            (257, 4, 1, struct.pack(">I", h)),
+            (258, 3, 1, struct.pack(">HH", 16, 0)),
+            (259, 3, 1, struct.pack(">HH", 1, 0)),
+            (262, 3, 1, struct.pack(">HH", 1, 0)),
+            (273, 4, n, struct.pack(">I", at)),
+            (277, 3, 1, struct.pack(">HH", 1, 0)),
+            (278, 4, 1, struct.pack(">I", 2)),
+            (279, 4, n, struct.pack(">I", at + 4 * n))]
+    ifd = (struct.pack(">H", len(tags))
+           + b"".join(struct.pack(">HHI", t, typ, cnt) + val
+                      for t, typ, cnt, val in tags)
+           + struct.pack(">I", 0))
+    return (struct.pack(">2sHI", b"MM", 42, at + len(blob)) + body + blob
+            + ifd)
+
+
+def _write_data_fixture(case, tmp_path, spark):
+    """(the TCZYX volume of each scene, path) for an eager-read case: a
+    window-consistency format, an OME-TIFF of another dtype, a
+    two-scene OME-TIFF or a big-endian TIFF."""
+    from bioio_spark.writers import save_ome_tiff, save_ome_tiff_single_file
+
+    vol = _vol()
+    dtypes = {"tiff_uint8": vol % 256, "tiff_int16": vol.astype(np.int16)
+              - 6000, "tiff_float32": vol.astype(np.float32) / 7}
+    if case in dtypes:
+        out = tmp_path / case
+        save_ome_tiff(BioImage(dtypes[case], spark=spark), str(out))
+        return [dtypes[case]], str(out / "scene_0.ome.tiff")
+    if case == "tiff_multiscene":
+        vols = [vol, (vol[:1, :, 1:] + 7).astype(np.uint16)]
+        p = tmp_path / "two.ome.tiff"
+        save_ome_tiff_single_file(BioImage(vols, spark=spark), str(p))
+        return vols, str(p)
+    if case == "tiff_mm":
+        p = tmp_path / "mm.tif"
+        p.write_bytes(_mm_tiff(vol[1, 1, 2]))
+        return [vol[1:2, 1:2, 2:3]], str(p)
+    return [_fixture_vol(case)], _write_fixture(
+        case, _fixture_vol(case), tmp_path, spark)
+
+
+@pytest.mark.parametrize("case", ["tiff", "zarr", "zarr_sharded", "czi",
+                                  "tiff_uint8", "tiff_int16",
+                                  "tiff_float32", "tiff_multiscene",
+                                  "tiff_mm"])
+def test_native_data_matches_pixel_frame(spark, tmp_path, case):
+    """``img.data`` reads each tile as native-dtype bytes through the
+    reader's ``read_tiles``; on every scene it equals ``to_ndarray`` over
+    the standardized pixel frame, in dtype and in values."""
+    from bioio_spark.operators.selectors import apply_selectors, to_ndarray
+    from bioio_spark.sources.planned import NATIVE_SCHEMA, native_tiles
+
+    vols, path = _write_data_fixture(case, tmp_path, spark)
+    img = BioImage(path, spark=spark)
+    assert len(img.scenes) == len(vols)
+    for i, vol in enumerate(vols):
+        img.set_scene(i)
+        assert img._tile_read(native_tiles(img.dtype),
+                              NATIVE_SCHEMA) is not None, case
+        px, dims = img._standard_pixels()
+        plan, out = apply_selectors(px, dims, dims.order, {})
+        want = to_ndarray(plan, out, dtype=img.dtype)
+        assert img.data.dtype == want.dtype == vol.dtype, case
+        np.testing.assert_array_equal(img.data, want, err_msg=case)
+        np.testing.assert_array_equal(img.data, vol, err_msg=case)
+
+
 def _write_catalog_fixture(case, tmp_path, spark):
     """A fixture for ``case``: a window-consistency format, a single-raster
     file, a float32 MRC or plain TIFF, or (``ndarray``) the volume

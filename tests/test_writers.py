@@ -190,8 +190,8 @@ def test_bioimage_save_tiff_writes_one_file(spark, tmp_path):
 def test_save_ome_zarr_tile_path_and_grouped_path_agree(spark, tmp_path,
                                                         count_jobs,
                                                         monkeypatch):
-    """Chunks that fit the source's plane tiles encode straight over the
-    tiles (one job, no shuffle); chunks that span tiles, shards and
+    """Chunks that fit the source's tiles encode in the task that decoded
+    each tile (one job, no shuffle); chunks that span tiles, shards and
     pyramids take the grouped path. Both write the same store. The
     grouped path's exchange is no longer a sign of it: this image's
     plan reads in one task, already grouped."""
@@ -213,10 +213,10 @@ def test_save_ome_zarr_tile_path_and_grouped_path_agree(spark, tmp_path,
     assert all(r.y0 % 16 == 0 and r.x0 % 16 == 0
                for r in planes.select("y0", "x0").collect())
 
-    # the tile path runs exactly where _scene_tiles finds tiles
-    scene_tiles, found = writers._scene_tiles, []
-    monkeypatch.setattr(writers, "_scene_tiles", lambda img, meta: (
-        found.append(scene_tiles(img, meta)) or found[-1]))
+    # the tile path runs exactly where _tile_writes finds tile reads
+    tile_writes, found = writers._tile_writes, []
+    monkeypatch.setattr(writers, "_tile_writes", lambda img, meta, enc: (
+        found.append(tile_writes(img, meta, enc)) or found[-1]))
     img = BioImage(path, spark=spark)
     cases = {"fits": dict(chunks=(1, 1, 1, 16, 8)),
              "fits_v3": dict(chunks=(1, 1, 1, 8, 16), ngff_version="0.5"),
@@ -237,6 +237,58 @@ def test_save_ome_zarr_tile_path_and_grouped_path_agree(spark, tmp_path,
         np.testing.assert_array_equal(back.data, a, err_msg=name)
 
 
+def test_save_ome_zarr_decodes_and_encodes_in_one_pass(
+        spark, tmp_path, count_jobs, monkeypatch):
+    """From a TIFF source and from a Zarr source, the tile path runs one
+    job whose executed plan holds exactly one Python map node: each tile
+    is decoded and its chunks encoded in the same Python pass, so the
+    payload never enters the JVM."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from bioio_spark.writers import save_ome_tiff, save_ome_zarr
+
+    a = np.random.default_rng(11).integers(
+        0, 60000, (1, 2, 3, 24, 20)).astype(np.uint16)
+    save_ome_tiff(BioImage(a, spark=spark), str(tmp_path / "t"))
+    save_ome_zarr(BioImage(a, spark=spark), str(tmp_path / "z"))
+    plans, collect = [], DataFrame.collect
+    monkeypatch.setattr(DataFrame, "collect", lambda self: (plans.append(
+        self._jdf.queryExecution().executedPlan().toString()),
+        collect(self))[1])
+    for src in ("t/scene_0.ome.tiff", "z/scene_0.zarr"):
+        img = BioImage(str(tmp_path / src), spark=spark)
+        out = str(tmp_path / f"{src[0]}_out")
+        plans.clear()
+        report, jobs, shuffle = count_jobs(lambda: save_ome_zarr(img, out))
+        assert (jobs, shuffle, len(plans)) == (1, 0, 1), src
+        assert plans[0].count("MapInPandas") == 1, plans[0]
+        assert report[0]["n_chunks"] == 2 * 3, src
+        np.testing.assert_array_equal(BioImage(out, spark=spark).data, a)
+
+
+def test_read_parquet_image_sidecar_missing_or_malformed(spark, tmp_path):
+    """A sink without its ``_catalog`` sidecar rebuilds the catalog
+    relationally; a sidecar that is there but malformed raises."""
+    import json
+    import shutil
+
+    from bioio_spark.writers import read_parquet_image
+
+    a = np.arange(2 * 3 * 4, dtype=np.uint16).reshape(2, 3, 4)
+    out = str(tmp_path / "sink")
+    save_parquet(BioImage(a, dim_order="ZYX", spark=spark), out)
+    shutil.rmtree(tmp_path / "sink" / "_catalog")
+    ds = read_parquet_image(spark, out)
+    assert ds.scenes["dtype"].tolist() == ["float64"]
+    save_parquet(BioImage(a, dim_order="ZYX", spark=spark), out)
+    for crc in (tmp_path / "sink" / "_catalog").glob(".*.crc"):
+        crc.unlink()
+    part = next((tmp_path / "sink" / "_catalog").glob("part-*"))
+    part.write_text('{"scenes": [')
+    with pytest.raises(json.JSONDecodeError):
+        read_parquet_image(spark, out)
+
+
 def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
     """A sharded Zarr source's planes read declares its inner-chunk grid,
     not its shard shape: a re-save takes the tile path only for chunks
@@ -255,7 +307,7 @@ def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
                   ngff_version="0.5")
     img = BioImage(str(src / "scene_0.zarr"), reader=ZarrImageReader,
                    spark=spark)
-    assert tile_of(img._scene_planes()) == (4, 4)
+    assert tile_of(img.get_planes_dataframe()) == (4, 4)
     # default chunks are the whole 8x8 plane: larger than an inner chunk
     cases = {"default": {}, "wider": dict(chunks=(1, 1, 1, 4, 8)),
              "fits": dict(chunks=(1, 1, 1, 2, 4))}

@@ -391,7 +391,6 @@ def test_read_zarr_planes_zero_shuffle_equivalence(spark, tmp_path):
     from bioio_spark import BioImage
     from bioio_spark.operators.planes import planes_to_pixels
     from bioio_spark.plans import physical_plan, shuffle_count
-    from bioio_spark.sources.zarr_image import read_zarr_planes
     from bioio_spark.writers import save_ome_zarr
 
     rng = np.random.default_rng(61)
@@ -401,7 +400,7 @@ def test_read_zarr_planes_zero_shuffle_equivalence(spark, tmp_path):
     save_ome_zarr(img, out, chunks=(1, 2, 2, 3, 4))
     store = os.path.join(out, "scene_0.zarr")
 
-    planes = read_zarr_planes(spark, store)
+    planes = BioImage(store, spark=spark).get_planes_dataframe()
     assert shuffle_count(planes) == 0
     # chunk (1,2,2,...) -> each chunk carries up to 1*2*2 = 4 tile rows
     n_tiles = planes.count()
@@ -417,14 +416,15 @@ def test_read_zarr_planes_zero_shuffle_equivalence(spark, tmp_path):
 
 
 def test_read_zarr_planes_v3(spark, tmp_path):
+    from bioio_spark import BioImage
     from bioio_spark.operators.planes import planes_to_pixels
-    from bioio_spark.sources.zarr_image import read_zarr_planes
 
     rng = np.random.default_rng(67)
     full = rng.integers(0, 255, (4, 6, 8), dtype=np.uint8)  # zyx
     root = tmp_path / "v3p.zarr"
     _write_v3_store(root, full, (2, 3, 4))
-    px = planes_to_pixels(read_zarr_planes(spark, str(root))).toPandas()
+    planes = BioImage(str(root), spark=spark).get_planes_dataframe()
+    px = planes_to_pixels(planes).toPandas()
     got = np.zeros_like(full)
     got[px["z"], px["y"], px["x"]] = px["value"]
     np.testing.assert_array_equal(got, full)
