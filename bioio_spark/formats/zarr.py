@@ -337,63 +337,61 @@ def encode_shard(block: np.ndarray, inner: Sequence[int],
     return raw + body if index_location == "start" else body + raw
 
 
-def iter_decoded_blocks(content: bytes, info: dict,
-                        grid: Sequence[int]):
+def iter_decoded_blocks(content, info: dict, grid: Sequence[int],
+                        inner: Optional[Sequence[int]] = None):
     """Decode ONE stored object -> (origin, block) pairs.
 
-    `info` is the decode-info dict of the owning array (shape, chunks,
-    dtype, compressor, gzip_member, optional `shard`, optional `window`);
-    `grid` the object's chunk-grid indices. Plain arrays yield a single
-    pair; sharded arrays yield one per present inner chunk, skipping
-    inner chunks outside `window` (axes-ordered [start, stop) bounds)
-    without decompressing them — the in-process analog of the ranged
-    GETs a windowed object-store read issues. Blocks are trimmed to the
-    array bounds (edge chunks are stored full-shape, fill-padded)."""
+    `content` is the object's bytes, or a ``read(offset, nbytes)``
+    function over them with ``fsio.read_range``'s meaning (a negative
+    offset counts from the end, ``nbytes=None`` reads to the end), so a
+    shard costs one ranged read for its index and one per wanted inner
+    chunk — the ranged GETs of an object-store read. `info` is the
+    decode-info dict of the owning array (shape, chunks, dtype,
+    compressor, gzip_member, optional fill_value and `shard`); `grid` the
+    object's chunk-grid indices. Plain arrays yield a single pair;
+    sharded arrays yield one per inner chunk of `inner` (C-order indices
+    into the shard's inner grid; default every inner chunk inside the
+    array), in that order, a missing one filled with the array's
+    fill_value. Blocks are trimmed to the array bounds (edge chunks are
+    stored full-shape, fill-padded)."""
+    read = content if callable(content) else (
+        lambda offset, nbytes: content[offset:][:nbytes])
     shape, chunks = info["shape"], info["chunks"]
-    window = info.get("window")
 
     def trim(origin, block):
         valid = tuple(min(c, s - o)
                       for o, s, c in zip(origin, shape, block.shape))
         return block[tuple(slice(0, v) for v in valid)]
 
-    def in_window(origin, bshape):
-        if window is None:
-            return True
-        return all(o < stop and o + c > start
-                   for o, c, (start, stop) in zip(origin, bshape, window))
-
     shard = info.get("shard")
     if not shard:
         dec = decode_chunk_v3 if info.get("gzip_member") else decode_chunk
         origin = tuple(g * c for g, c in zip(grid, chunks))
-        block = dec(content, info["dtype"], chunks, info["compressor"])
-        if in_window(origin, chunks):
-            yield origin, trim(origin, block)
+        block = dec(read(0, None), info["dtype"], chunks,
+                    info["compressor"])
+        yield origin, trim(origin, block)
         return
 
-    inner = tuple(shard["inner_chunks"])
-    igrid = _inner_grid_shape(chunks, inner)
+    inner_shape = tuple(shard["inner_chunks"])
+    igrid = _inner_grid_shape(chunks, inner_shape)
     n = int(np.prod(igrid))
-    index = parse_shard_index(content, n,
-                              crc=shard.get("crc", True),
-                              index_location=shard.get("index_location",
-                                                       "end"))
+    crc = shard.get("crc", True)
+    at_end = shard.get("index_location", "end") == "end"
+    isize = 16 * n + (4 if crc else 0)
+    index = parse_shard_index(read(-isize if at_end else 0, isize), n,
+                              crc=crc)
     shard_origin = tuple(g * c for g, c in zip(grid, chunks))
-    for li, gi in enumerate(np.ndindex(*igrid)):
-        off, nbytes = int(index[li, 0]), int(index[li, 1])
-        origin = tuple(so + g * c
-                       for so, g, c in zip(shard_origin, gi, inner))
-        if any(o >= s for o, s in zip(origin, shape)):
+    fill = np.full(inner_shape, info.get("fill_value") or 0,
+                   dtype=np.dtype(info["dtype"]))
+    for li in range(n) if inner is None else inner:
+        origin = tuple(so + g * c for so, g, c in zip(
+            shard_origin, np.unravel_index(li, igrid), inner_shape))
+        if inner is None and any(o >= s for o, s in zip(origin, shape)):
             continue            # inner chunk wholly past the array edge
-        if not in_window(origin, inner):
-            continue            # pruned: its bytes are never inflated
-        if off == _MISSING:
-            block = np.zeros(inner, dtype=np.dtype(info["dtype"]))
-        else:
-            block = decode_chunk_v3(content[off:off + nbytes],
-                                    info["dtype"], inner,
-                                    info["compressor"])
+        off, nbytes = int(index[li, 0]), int(index[li, 1])
+        block = fill if off == _MISSING else decode_chunk_v3(
+            read(off, nbytes), info["dtype"], inner_shape,
+            info["compressor"])
         yield origin, trim(origin, block)
 
 

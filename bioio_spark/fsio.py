@@ -20,7 +20,9 @@ task boundaries (serialization-safe by construction).
 
 from __future__ import annotations
 
+import os
 import re
+from typing import Optional
 
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
@@ -60,12 +62,16 @@ def open_binary(path: str):
     return fsspec.open(path, "rb").open()
 
 
-def read_range(path: str, offset: int, nbytes: int) -> bytes:
+def read_range(path: str, offset: int, nbytes: Optional[int]) -> bytes:
     """One ranged read — the planned-source executor primitive (a
-    single ranged GET on object stores)."""
+    single ranged GET on object stores). A negative ``offset`` counts
+    from the end of the object, and from its start when the object is
+    shorter (an HTTP suffix range); ``nbytes=None`` reads to the end."""
     with open_binary(path) as f:
+        if offset < 0:
+            offset = max(0, f.seek(0, os.SEEK_END) + offset)
         f.seek(offset)
-        return f.read(nbytes)
+        return f.read(-1 if nbytes is None else nbytes)
 
 
 def read_bytes(path: str) -> bytes:

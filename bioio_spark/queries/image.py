@@ -518,8 +518,8 @@ def img_jpeg_roundtrip(spark, sf_dir):
 
 # --------------------------------------------------------------------------
 # bioio_zarr DataSource twin of the raw-source scan: the same window
-# predicates arrive via Catalyst pushFilters and prune CHUNK files at
-# planning time (listing-level pushdown decided by the optimizer). Uses
+# predicates arrive via Catalyst pushFilters and prune the Zarr plan's
+# CHUNK rows at planning time (pushdown decided by the optimizer). Uses
 # the roundtrip ramp store; grouped per (z, y) so chunk-offset bugs move
 # values between groups.
 # --------------------------------------------------------------------------
@@ -1828,8 +1828,9 @@ def img_ome_zarr_roundtrip_sharded(spark, sf_dir):
     """Sharded NGFF 0.5 roundtrip: shards (1,2,3,5,6) over inner chunks
     (1,1,1,5,3) — 2 t-shards per scene, each packing 2*3*2 = 12 inner
     chunks behind one bytes+crc32c byte-range index. The read side
-    (decode_zarr_chunks -> iter_decoded_blocks) decodes per inner chunk,
-    so a hash match pins the whole index/offset/crc chain."""
+    (the Zarr plan's inner-chunk rows -> iter_decoded_blocks) decodes
+    per inner chunk, so a hash match pins the whole index/offset/crc
+    chain."""
     import os
     import shutil
 
@@ -2027,11 +2028,12 @@ def img_tiff_window_read(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Chunk-pruned windowed Zarr read: the scan lists ONLY the chunk files the
-# window intersects (driver-side catalog arithmetic — the zarr analog of
-# parquet partition pruning), then a codegen row filter trims to exact
-# bounds. Window (t=1, z in [1,3), y in [2,5), x full) over the roundtrip
-# ramp; per-(z,y) aggregation so offset bugs move values between groups.
+# Chunk-pruned windowed Zarr read: BioImage.read_window decodes ONLY the
+# plan rows (chunks) the window intersects (driver-side arithmetic over
+# the array document — the zarr analog of parquet partition pruning) and
+# slices each decoded chunk to the window in numpy. Window (t=1, z in
+# [1,3), y in [2,5), x full) over the roundtrip ramp; per-(z,y)
+# aggregation so offset bugs move values between groups.
 # --------------------------------------------------------------------------
 @register(
     "img_zarr_window_read",
@@ -2052,7 +2054,7 @@ def img_tiff_window_read(spark, sf_dir):
     WHERE t = 1 AND z >= 1 AND z < 3 AND y >= 2 AND y < 5
     GROUP BY z, y ORDER BY z, y
     """,
-    doc="Chunk-pruned windowed Zarr read (listing-level pushdown)",
+    doc="Chunk-pruned windowed Zarr read (plan-row pushdown)",
 )
 def img_zarr_window_read(spark, sf_dir):
     import os
@@ -2061,7 +2063,6 @@ def img_zarr_window_read(spark, sf_dir):
     import numpy as np
 
     from bioio_spark.bio_image import BioImage
-    from bioio_spark.sources.zarr_image import read_zarr_window
     from bioio_spark.writers import save_ome_zarr
 
     idx = np.indices(_RTZ_SHAPE)
@@ -2072,8 +2073,8 @@ def img_zarr_window_read(spark, sf_dir):
         os.path.abspath(__file__)))), ".scratch", "zarr_window")
     shutil.rmtree(out, ignore_errors=True)
     save_ome_zarr(img, out, chunks=(1, 1, 2, 3, 4))
-    px = read_zarr_window(spark, os.path.join(out, "scene_0.zarr"),
-                          t=1, z=(1, 3), y=(2, 5))
+    px = BioImage(os.path.join(out, "scene_0.zarr"),
+                  spark=spark).read_window(t=1, z=(1, 3), y=(2, 5))
     return (px.groupBy("z", "y")
             .agg(F.count(F.lit(1)).alias("n_px"),
                  F.sum("value").alias("sum_val"))

@@ -136,9 +136,10 @@ def _catalog_zarr(path: str) -> dict:
     # "file size" is the sum of its objects)
     import math
 
-    from bioio_spark.sources.zarr_image import _array_of
+    from bioio_spark.sources.zarr_image import store_levels
 
-    _arr_dir, za, _axes = _array_of(path, 0)
+    _attrs, _doc, _axes, levels = store_levels(path)
+    za = levels[0][2]
     shape, chunks = za["shape"], za["chunks"]
     n_pages = 1
     for s in shape[:-2]:

@@ -8,13 +8,15 @@ A planned reader gives one ``plan()``: a ``Plan`` whose rows are the
 file's planes, strips, chunks or frames, each carrying its extent
 ``(scene, res_level, t, c, z, y0, h, x0, w)`` — an interleaved frame's
 row carries the channel range ``c .. c + nc``, a z-chunk's row the
-planes ``z .. z + nz``, a mosaic tile's row its tile ``m`` — beside the
+planes ``z .. z + nz``, a t-deep chunk's row the timepoints
+``t .. t + nt``, a mosaic tile's row its tile ``m`` — beside the
 catalogs the same metadata walk produced. It also gives one
 ``decode_tiles`` batch function, plan rows -> ``(row, tile)`` pairs of
 native-dtype arrays: ``(h, w)``, ``(h, w, k)`` with ``k`` the row's
 ``nc`` channels or the scene's S samples, and a leading ``nz`` axis on a
-z-chunk. A reader that can narrow one row's read to a row window sets
-the optional ``narrow`` hook (``narrow_rows`` for the raw-plane family).
+z-chunk; a t-deep row yields one pair per timepoint, its ``t`` set. A
+reader that can narrow one row's read to a row window sets the optional
+``narrow`` hook (``narrow_rows`` for the raw-plane family).
 ``PlannedReader`` derives every view from that one plan, each a
 ``LocalTableScan`` of plan rows decoded by ``mapInPandas`` with no
 exchange:
@@ -33,15 +35,15 @@ exchange:
   encodes chunks in it, and ``read_planes`` is it with the
   ``PLANES_SCHEMA`` payload body (``payload_tiles``).
 
-Every planned reader, TIFF included, takes this shape; Zarr, whose full
-read is a chunk-file scan, gives the same ``read_tiles`` over that scan
-and keeps its own window read. The other helpers here serve the Zarr,
+Every file reader with a plan, TIFF and Zarr included, takes this
+shape, and the ``bioio_tiff`` / ``bioio_zarr`` DataSources prune the
+same rows (``extent_rows``, ``spans``). The other helpers here serve the
 raster and TIFF-series readers too: ``norm_window`` (a selector to
 ``[start, stop)``), ``plane_frame`` (one plane as long-form rows),
 ``plan_scan`` (plan rows as a scan, in as many tasks as Spark's
 file-split rule gives for the decoded bytes), ``grid_tile`` /
-``with_tile`` / ``tile_of`` (the tile grid a tile read declares),
-``standardize`` and ``trim``.
+``with_tile`` / ``tile_of`` (the tile grid a tile read declares) and
+``standardize``.
 """
 
 from __future__ import annotations
@@ -72,8 +74,8 @@ TILE_SCHEMA = ("si int, res_level int, t int, c int, z int, y int, "
                "x int, m int, s int, value double")
 # extent columns a plan row may leave out, with their defaults (h and
 # w default to the scene's size); oy/ox place a mosaic tile's window
-EXTENT = {"res_level": 0, "t": 0, "c": 0, "nc": 1, "z": 0, "nz": 1,
-          "y0": 0, "x0": 0, "m": -1, "oy": 0, "ox": 0}
+EXTENT = {"res_level": 0, "t": 0, "nt": 1, "c": 0, "nc": 1, "z": 0,
+          "nz": 1, "y0": 0, "x0": 0, "m": -1, "oy": 0, "ox": 0}
 
 
 def norm_window(sel, size: int) -> tuple[int, int]:
@@ -206,14 +208,6 @@ def standardize(px: DataFrame, image_id: str,
     ).select(*PIXEL_COLUMNS)
 
 
-def trim(px: DataFrame, **bounds) -> DataFrame:
-    """Residual codegen filter: keep rows with ``lo <= col < hi`` for each
-    ``col=(lo, hi)`` bound, in the order given."""
-    return px.filter(functools.reduce(operator.and_, (
-        (F.col(name) >= lo) & (F.col(name) < hi)
-        for name, (lo, hi) in bounds.items())))
-
-
 # -- the raw-plane family: rows of contiguous YX(C) rows at a byte offset
 
 
@@ -263,6 +257,32 @@ class Plan:
     scenes: list
     channels: list
     tiles: Optional[pd.DataFrame] = None
+
+
+def extent_rows(plan: Plan) -> pd.DataFrame:
+    """The plan's rows as a frame carrying every ``EXTENT`` column (``h``
+    and ``w`` default to the scene's size) and ``si``, the index of the
+    row's scene in the plan."""
+    cat = {s["scene"]: s for s in plan.scenes}
+    rows = pd.DataFrame(plan.rows)
+    for col, default in EXTENT.items():
+        if col not in rows:
+            rows[col] = default
+    for col, size in (("h", "size_y"), ("w", "size_x")):
+        if col not in rows:
+            rows[col] = [cat[s][size] for s in rows["scene"]]
+    rows["si"] = rows["scene"].map({s: i for i, s in enumerate(cat)})
+    return rows
+
+
+def spans(rows: pd.DataFrame) -> dict:
+    """Each row's half-open extent per dim, ``{dim: (start, stop)}``, in
+    the scene's coordinates (a placed mosaic tile's offset included)."""
+    y0, x0 = rows["y0"] + rows["oy"], rows["x0"] + rows["ox"]
+    return {"t": (rows["t"], rows["t"] + rows["nt"]),
+            "c": (rows["c"], rows["c"] + rows["nc"]),
+            "z": (rows["z"], rows["z"] + rows["nz"]),
+            "y": (y0, y0 + rows["h"]), "x": (x0, x0 + rows["w"])}
 
 
 def _blocks(r, tile) -> np.ndarray:
@@ -342,6 +362,9 @@ def _tile_batches(decode, frame, window=None):
     def batches(it):
         for pdf in it:
             for r, tile in decode(pdf):
+                if window is not None and not (
+                        window["t"][0] <= r.t < window["t"][1]):
+                    continue
                 a = _blocks(r, tile)
                 z0, c0 = r.z, r.c
                 y0, x0 = r.y0 + r.oy, r.x0 + r.ox
@@ -369,9 +392,8 @@ class PlannedReader:
     and ``catalog`` (its metadata-only probe). A planned reader gives
     ``plan`` and ``decode_tiles`` (and ``narrow`` where it can narrow a
     row's read), and ``to_dataset``, ``read_window`` and ``read_tiles``
-    follow from them; Zarr, whose full read is a chunk-file scan, not a
-    plan, overrides those instead. ``read_planes`` is ``read_tiles``
-    with the payload body for every reader.
+    follow from them. ``read_planes`` is ``read_tiles`` with the payload
+    body for every reader.
     ``is_supported_image`` is ``routes`` (the suffix check) and then a
     successful ``catalog``."""
 
@@ -437,7 +459,8 @@ class PlannedReader:
     def _scan(self, spark, rows: pd.DataFrame) -> DataFrame:
         """``rows`` as a ``plan_scan`` for their decoded bytes."""
         nbytes = (rows["h"] * rows["w"] * rows["nc"] * rows["nz"]
-                  * rows["scene"].map(self._sample_bytes)).sum()
+                  * rows["nt"] * rows["scene"].map(self._sample_bytes)
+                  ).sum()
         return plan_scan(spark, rows, nbytes=int(nbytes))
 
     def to_dataset(self, spark: SparkSession):
@@ -445,15 +468,7 @@ class PlannedReader:
 
         plan = self._plan = self.plan()
         cat = {s["scene"]: s for s in plan.scenes}
-        rows = pd.DataFrame(plan.rows)
-        for col, default in EXTENT.items():
-            if col not in rows:
-                rows[col] = default
-        for col, size in (("h", "size_y"), ("w", "size_x")):
-            if col not in rows:
-                rows[col] = [cat[s][size] for s in rows["scene"]]
-        rows["si"] = rows["scene"].map({s: i for i, s in enumerate(cat)})
-        self._rows = rows
+        rows = self._rows = extent_rows(plan)
         self._sample_bytes = {
             s: np.dtype(r["dtype"]).itemsize * (r["size_s"] or 1)
             for s, r in cat.items()}
@@ -497,25 +512,31 @@ class PlannedReader:
         return rows.assign(oy=rows["m"].map(off["y_off"]).astype(int),
                            ox=rows["m"].map(off["x_off"]).astype(int))
 
-    def read_window(self, spark: SparkSession, img, t=None, c=None,
-                    z=None, y=None, x=None) -> DataFrame | None:
-        """The ``(t, c, z, y, x, m, s, value)`` rows of a window of
-        ``img``'s current scene and level, decoding only the plan rows
-        it overlaps — or None when the plan can't address it."""
+    def window_rows(self, img, t=None, c=None, z=None, y=None, x=None):
+        """``(rows, window)``: the plan rows of ``img``'s current scene
+        and level that overlap the window, and the window as ``{dim:
+        (lo, hi)}`` — or None when the plan can't address the scene."""
         rows = self._scene_rows(img)
         if rows is None:
             return None
         dims = img.dims
         window = {d: norm_window(sel, dims[d.upper()][0])
                   for d, sel in zip("tczyx", (t, c, z, y, x))}
-        start = {"t": (rows["t"], 1), "c": (rows["c"], rows["nc"]),
-                 "z": (rows["z"], rows["nz"]),
-                 "y": (rows["y0"] + rows["oy"], rows["h"]),
-                 "x": (rows["x0"] + rows["ox"], rows["w"])}
+        span = spans(rows)
         keep = functools.reduce(operator.and_, (
-            (start[d][0] < hi) & (start[d][0] + start[d][1] > lo)
+            (span[d][0] < hi) & (span[d][1] > lo)
             for d, (lo, hi) in window.items()))
-        rows = rows[keep]
+        return rows[keep], window
+
+    def read_window(self, spark: SparkSession, img, t=None, c=None,
+                    z=None, y=None, x=None) -> DataFrame | None:
+        """The ``(t, c, z, y, x, m, s, value)`` rows of a window of
+        ``img``'s current scene and level, decoding only the plan rows
+        it overlaps — or None when the plan can't address it."""
+        found = self.window_rows(img, t=t, c=c, z=z, y=y, x=x)
+        if found is None:
+            return None
+        rows, window = found
         if rows.empty:
             return spark.createDataFrame([], TILE_SCHEMA).drop(
                 "si", "res_level")

@@ -1,42 +1,45 @@
 """OME-Zarr reader (third real-format plugin; S4 routing tier).
 
 The reference's bioio-ome-zarr plugin reads `.zarr` stores (ref
-README.md:66); this is its Spark-native analog over the in-repo Zarr v2
-codec (bioio_spark.formats.zarr):
+README.md:66); this is its Spark-native analog over the in-repo Zarr
+codec (bioio_spark.formats.zarr), and a planned reader like every other:
 
-- **Catalog (driver-side)**: only the `.zattrs` / `.zarray` JSON documents
-  are read per scene — shape/dtype/chunking/channel labels/physical sizes
-  without touching chunk data (the D8 metadata-only contract).
-- **Pixels (executor-side)**: `binaryFile` scans the CHUNK FILES (Hadoop's
-  hidden-file filter skips the dot-prefixed metadata documents for free)
-  and an Arrow-batched `mapInPandas` decodes each chunk to long-form pixel
-  rows. Decode parallelism is the CHUNK COUNT — for a 100 TB store that is
-  tens of millions of independent tasks, the property that makes Zarr the
-  scale-native format of the reference's plugin pair. The pixel frame is
-  a thunk, built on first use.
-- **Tiles**: `read_tiles`, the planned readers' contract, over the same
-  scan of one level's chunk files: each decoded chunk's native-dtype
-  YX slabs go to the caller's body in the task that decoded them, and
-  the chunk (or a shard's inner-chunk) grid is the declared tile grid.
+- **Plan (driver-side)**: one walk of each store's metadata documents
+  (``.zattrs`` / ``.zarray`` for v2, ``zarr.json`` for v3, group or bare
+  array) at every resolution level — shape, dtype, chunking, channel
+  labels and physical sizes without touching chunk data (the D8
+  metadata-only contract). A chunk's key follows from the array's shape
+  and chunks, so the plan lists no directory and stats no chunk file: it
+  holds one row per chunk key, or per inner chunk of a shard, with its
+  extent trimmed to the array bounds. A chunk deeper than one plane
+  carries ``nt``/``nc``/``nz`` planes.
+- **Decode (executor-side)**: ``decode_tiles`` reads each row's object
+  through ``fsio.read_range`` — a shard's index, then the inner chunk's
+  byte range — and decodes it with ``iter_decoded_blocks``, one
+  native-dtype tile per t. An absent chunk file stores no values and
+  yields no tile; a missing inner chunk of a shard decodes as the
+  array's fill_value.
 
-Supports Zarr v2 stores with C order, zlib/zstd or no compressor, "." or "/"
-dimension separators, any subset of the tczyx NGFF axes (absent axes read
-as size-1), and trims edge-chunk fill padding to the array bounds.
+``PlannedReader`` derives the full read, ``read_window`` and
+``read_tiles`` from that plan. Supports Zarr v2 and v3 stores with C
+order, zlib/zstd/blosc or no compressor, "." or "/" dimension
+separators, v3 ``sharding_indexed``, and any subset of the tczyx NGFF
+axes (absent axes read as size-1); a directory of ``scene_*.zarr``
+groups (the save_ome_zarr layout) is a multi-scene image.
 """
 
 from __future__ import annotations
 
+import functools
 import glob as _glob
+import json
 import os
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
-
-from bioio_spark.sources.planned import (PlannedReader, norm_window,
-                                         standardize, trim, with_tile)
+from bioio_spark.fsio import read_range
+from bioio_spark.sources.planned import Plan, PlannedReader
 
 
 def _scene_roots(image: str) -> list[str]:
@@ -59,8 +62,96 @@ def _read_doc(root: str, name: str) -> Optional[str]:
         return f.read()
 
 
+def store_levels(root: str) -> tuple[dict, Optional[str], str, list]:
+    """The one metadata walk of a store: ``(attrs, attrs_doc, axes,
+    levels)`` — its NGFF attributes, the document they came from, its
+    axes, and ``(res_level, array_dir, parsed array doc)`` for each
+    level whose array document exists. Handles v2 and v3 groups and
+    bare v2 and v3 arrays."""
+    from bioio_spark.formats.zarr import (parse_ngff_attrs,
+                                          parse_zarr3_array, parse_zarray)
+
+    bare = {"name": None, "axes": None, "level_paths": ["0"],
+            "scale": None, "channel_names": None}
+    v3_doc = _read_doc(root, "zarr.json")
+    if v3_doc is not None and json.loads(v3_doc).get(
+            "node_type") == "array":
+        attrs, attrs_doc, levels = bare, None, [
+            (0, root, parse_zarr3_array(v3_doc))]
+    else:
+        attrs_doc = v3_doc if v3_doc is not None else _read_doc(
+            root, ".zattrs")
+        attrs = parse_ngff_attrs(attrs_doc) if attrs_doc else bare
+        name, parse = (("zarr.json", parse_zarr3_array) if v3_doc
+                       else (".zarray", parse_zarray))
+        levels = []
+        for lv, lp in enumerate(attrs["level_paths"]):
+            doc = _read_doc(os.path.join(root, lp), name)
+            if doc is not None:
+                levels.append((lv, os.path.join(root, lp), parse(doc)))
+        if not levels or levels[0][0] != 0:
+            zdoc = None if v3_doc else _read_doc(root, ".zarray")
+            if zdoc is None:
+                raise ValueError(f"{root}: no {name} document at level 0")
+            levels = [(0, root, parse_zarray(zdoc))]   # bare v2 array
+    axes = attrs["axes"] or "tczyx"[-len(levels[0][2]["shape"]):]
+    for _lv, arr_dir, za in levels:
+        if len(axes) != len(za["shape"]):
+            raise ValueError(
+                f"{arr_dir}: axes {axes!r} vs shape {za['shape']}")
+    return attrs, attrs_doc, axes, levels
+
+
+def _decode_info(za: dict, axes: str) -> dict:
+    """The decode-info dict ``iter_decoded_blocks`` reads, for one
+    parsed array document."""
+    return {"axes": axes, "shape": za["shape"], "chunks": za["chunks"],
+            "dtype": np.dtype(za["dtype"]).str,
+            "compressor": za["compressor"],
+            "gzip_member": za.get("gzip_member", False),
+            "fill_value": za["fill_value"], "shard": za.get("shard")}
+
+
+def chunk_rows(arr_dir: str, za: dict, axes: str, **extent) -> list[dict]:
+    """Plan rows of one level's array: one per chunk key, or per inner
+    chunk of a shard, with the object's ``path``, its chunk-grid key
+    (``grid``), the inner chunk's C-order index (``inner``) and its
+    ``t/nt, c/nc, z/nz, y0/h, x0/w`` extent trimmed to the array
+    bounds. ``extent`` places the level (scene, res_level). Pure
+    arithmetic over the array document: no listing, no stat."""
+    shape, chunks = za["shape"], za["chunks"]
+    cell = za["shard"]["inner_chunks"] if za.get("shard") else chunks
+    info = json.dumps(_decode_info(za, axes))
+    sep, prefix = za["dimension_separator"], za.get("key_prefix")
+    root = os.path.abspath(arr_dir)
+    rows = []
+    for key in np.ndindex(*(-(-s // c) for s, c in zip(shape, chunks))):
+        comps = ([prefix] if prefix else []) + [str(k) for k in key]
+        path = (os.path.join(root, *comps) if sep == "/"
+                else os.path.join(root, sep.join(comps)))
+        cells = np.ndindex(*(c // i for c, i in zip(chunks, cell)))
+        for li, at in enumerate(cells):
+            origin = [k * c + a * i
+                      for k, c, a, i in zip(key, chunks, at, cell)]
+            if any(o >= s for o, s in zip(origin, shape)):
+                continue        # inner chunk wholly past the array edge
+            lo = dict(zip(axes, origin))
+            n = {d: min(i, s - o)
+                 for d, i, s, o in zip(axes, cell, shape, origin)}
+            rows.append({
+                "path": path, **extent,
+                "t": lo.get("t", 0), "nt": n.get("t", 1),
+                "c": lo.get("c", 0), "nc": n.get("c", 1),
+                "z": lo.get("z", 0), "nz": n.get("z", 1),
+                "y0": lo.get("y", 0), "h": n.get("y", 1),
+                "x0": lo.get("x", 0), "w": n.get("x", 1),
+                "grid": list(key), "inner": li, "info": info})
+    return rows
+
+
 class ZarrImageReader(PlannedReader):
-    """BioImage reader over OME-NGFF 0.4 / Zarr v2 stores (plugin tier)."""
+    """BioImage reader over OME-NGFF 0.4 / 0.5 (Zarr v2 / v3) stores
+    (plugin tier)."""
 
     EXTENSIONS = (".zarr", ".ome.zarr")
     DIM_ORDER_ERROR = ("OME-Zarr dimension order comes from the NGFF "
@@ -78,147 +169,52 @@ class ZarrImageReader(PlannedReader):
             or _read_doc(r, "zarr.json") is not None
             for r in roots)
 
-    def read_window(self, spark, img, t=None, c=None, z=None, y=None,
-                    x=None):
-        if len(img.scenes) == 1 and any(
-                os.path.exists(os.path.join(self._path, f))
-                for f in ("zarr.json", ".zgroup", ".zarray")):
-            return read_zarr_window(
-                spark, self._path, t=t, c=c, z=z, y=y, x=x,
-                level=img.current_resolution_level)
-        return None
+    @staticmethod
+    def decode_tiles(rows):
+        """The one Zarr chunk decoder: each row's chunk, or a shard's
+        inner chunk, read through ``fsio.read_range`` and decoded by
+        ``iter_decoded_blocks`` (a shard's index is read once per
+        batch), yielded as one ``(row, tile)`` pair per t: ``(h, w)``,
+        with a trailing ``nc`` axis and a leading ``nz`` axis where the
+        chunk is that deep. An absent chunk file yields no tile."""
+        from bioio_spark.formats.zarr import iter_decoded_blocks
 
-    def read_tiles(self, spark, img, body, schema):
-        """``PlannedReader.read_tiles`` over the current scene's level
-        array: a ``binaryFile`` scan of its chunk files, each decoded
-        chunk (or inner chunk of a shard) handed to ``body`` as its YX
-        slabs. None for a scene the store doesn't hold or an array
-        without y and x axes."""
-        from bioio_spark.fsio import local_path
+        for path, group in rows.groupby("path", sort=False):
+            first = group.iloc[0]
+            info = json.loads(first["info"])
+            try:
+                blocks = list(iter_decoded_blocks(
+                    functools.partial(read_range, path), info,
+                    first["grid"], inner=list(group["inner"])))
+            except FileNotFoundError:
+                continue        # an absent chunk file stores no values
+            axes = info["axes"]
+            order = [axes.index(d) for d in "tczyx" if d in axes]
+            for r, (_origin, block) in zip(group.itertuples(index=False),
+                                           blocks):
+                a = block.transpose(order).reshape(r.nt, r.nc, r.nz, r.h,
+                                                   r.w)
+                for i in range(r.nt):
+                    tile = a[i].transpose(1, 2, 3, 0)   # (nz, h, w, nc)
+                    if r.nc == 1:
+                        tile = tile[..., 0]
+                    yield (r._replace(t=r.t + i),
+                           tile[0] if r.nz == 1 else tile)
 
-        roots = _scene_roots(self._path)
-        if not 0 <= img.current_scene_index < len(roots):
-            return None
-        arr_dir, za, axes = _array_of(roots[img.current_scene_index],
-                                      img.current_resolution_level)
-        if "y" not in axes or "x" not in axes:
-            return None
-        info = _decode_info(za, axes)
-        arr_abs = os.path.abspath(arr_dir)
-
-        def yx_tiles(batches):
-            from bioio_spark.formats.zarr import iter_decoded_blocks
-
-            lead = [d for d in axes if d not in "yx"]
-            yx = [axes.index("y"), axes.index("x")]
-            for pdf in batches:
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    local = local_path(path)
-                    if os.path.basename(local) == "zarr.json":
-                        continue
-                    parts = os.path.relpath(local, arr_abs).replace(
-                        os.sep, ".").split(".")
-                    if info["key_prefix"] and parts[0] == info["key_prefix"]:
-                        parts = parts[1:]
-                    for origin, block in iter_decoded_blocks(
-                            bytes(content), info, [int(p) for p in parts]):
-                        slabs = np.moveaxis(block, yx, [-2, -1])
-                        for idx in np.ndindex(*slabs.shape[:-2]):
-                            at = {d: origin[axes.index(d)] + i
-                                  for d, i in zip(lead, idx)}
-                            yield (at.get("t", 0), at.get("c", 0),
-                                   at.get("z", 0), origin[yx[0]],
-                                   origin[yx[1]], slabs[idx])
-
-        binary = (spark.read.format("binaryFile")
-                  .option("recursiveFileLookup", "true")
-                  .load([f"file://{arr_abs}"]))
-        tiles = binary.select("path", "content").mapInPandas(
-            lambda it: body(yx_tiles(it)), schema=schema)
-        # rows are decoded chunks: a shard's inner chunks when sharded
-        grid = za["shard"]["inner_chunks"] if za.get("shard") \
-            else za["chunks"]
-        return with_tile(tiles, (grid[axes.index("y")],
-                                 grid[axes.index("x")]))
-
-    def to_dataset(self, spark: SparkSession):
-        from bioio_spark.formats.zarr import parse_ngff_attrs, parse_zarray
+    def plan(self) -> Plan:
         from bioio_spark.ome_utils import resolve_channel_names
-        from bioio_spark.sources.array_like import (ImageDataset,
-                                                    channel_rows, scene_row)
+        from bioio_spark.sources.array_like import channel_rows, scene_row
         from bioio_spark.types import PhysicalPixelSizes
 
         roots = _scene_roots(self._path)
         if not roots:
             raise FileNotFoundError(f"No .zarr stores under {self._path}")
-
-        scenes, channels = [], []
-        arrays: dict[str, dict] = {}   # abs array dir -> decode info
+        rows, scenes, channels = [], [], []
         for si, root in enumerate(roots):
-            v3_doc = _read_doc(root, "zarr.json")
-            if v3_doc is not None:
-                # Zarr v3 store (NGFF 0.5): group zarr.json carries the
-                # ome attributes; each level dir has its own array doc
-                import json as _json
-
-                from bioio_spark.formats.zarr import parse_zarr3_array
-
-                top = _json.loads(v3_doc)
-                if top.get("node_type") == "array":
-                    attrs_doc = None
-                    attrs = {"name": None, "axes": None,
-                             "level_paths": ["0"], "scale": None,
-                             "channel_names": None}
-                    arr_dir, za = root, parse_zarr3_array(v3_doc)
-                    extra_levels = []
-                else:
-                    attrs_doc = v3_doc
-                    attrs = parse_ngff_attrs(v3_doc)
-                    level = attrs["level_paths"][0]
-                    arr_dir = os.path.join(root, level)
-                    adoc = _read_doc(arr_dir, "zarr.json")
-                    if adoc is None:
-                        raise ValueError(f"{arr_dir}: no zarr.json")
-                    za = parse_zarr3_array(adoc)
-                    extra_levels = []
-                    for lv, lp in enumerate(attrs["level_paths"][1:],
-                                            start=1):
-                        ld = os.path.join(root, lp)
-                        ldoc = _read_doc(ld, "zarr.json")
-                        if ldoc is not None:
-                            extra_levels.append(
-                                (lv, ld, parse_zarr3_array(ldoc)))
-            else:
-                attrs_doc = _read_doc(root, ".zattrs")
-                attrs = (parse_ngff_attrs(attrs_doc) if attrs_doc
-                         else {"name": None, "axes": None,
-                               "level_paths": ["0"],
-                               "scale": None, "channel_names": None})
-                level = attrs["level_paths"][0]
-                arr_dir = os.path.join(root, level)
-                zdoc = _read_doc(arr_dir, ".zarray")
-                if zdoc is None:        # bare array store (no group level)
-                    arr_dir, zdoc = root, _read_doc(root, ".zarray")
-                if zdoc is None:
-                    raise ValueError(f"{root}: no .zarray document")
-                za = parse_zarray(zdoc)
-                # multiscale levels beyond the first (C4: every NGFF
-                # dataset path is a selectable resolution level)
-                extra_levels = []
-                if arr_dir != root:
-                    for lv, lp in enumerate(attrs["level_paths"][1:],
-                                            start=1):
-                        ld = os.path.join(root, lp)
-                        lzdoc = _read_doc(ld, ".zarray")
-                        if lzdoc is not None:
-                            extra_levels.append((lv, ld, parse_zarray(lzdoc)))
-            axes = attrs["axes"] or "tczyx"[-len(za["shape"]):]
-            if len(axes) != len(za["shape"]):
-                raise ValueError(
-                    f"{root}: axes {axes!r} vs shape {za['shape']}")
+            attrs, attrs_doc, axes, levels = store_levels(root)
+            za = levels[0][2]
             size = {d: 1 for d in "tczyx"}
-            size.update(dict(zip(axes, za["shape"])))
-
+            size.update(zip(axes, za["shape"]))
             scene = f"Image:{si}"
             pps = self._pps
             if pps is None and attrs["scale"]:
@@ -236,178 +232,8 @@ class ZarrImageReader(PlannedReader):
                 self._image_id, scene, si, za["dtype"],
                 {d.upper(): size[d] for d in "tczyx"}, pps=pps,
                 metadata=attrs_doc,
-                res_levels=[0] + [lv for lv, _, _ in extra_levels]))
-            arrays[os.path.abspath(arr_dir)] = _decode_info(
-                za, axes, scene=scene, res_level=0)
-            for lv, ld, lza in extra_levels:
-                arrays[os.path.abspath(ld)] = _decode_info(
-                    lza, axes, scene=scene, res_level=lv)
-
-        return ImageDataset(
-            pixels=lambda: standardize(decode_zarr_chunks(spark, arrays),
-                                       self._image_id),
-            scenes=scenes, channels=channels)
-
-
-def decode_zarr_chunks(spark: SparkSession,
-                       arrays: dict[str, dict],
-                       files: Optional[list[str]] = None) -> DataFrame:
-    """binaryFile scan over chunk files + mapInPandas chunk decode.
-
-    One pandas frame per chunk bounds executor memory to a single chunk;
-    edge chunks are trimmed to the array bounds (Zarr v2 stores them
-    full-shape, fill-padded). `files` restricts the scan to an explicit
-    chunk-file list (the read_zarr_window pruning path); default is every
-    chunk under every array root."""
-    from bioio_spark.fsio import local_path
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from bioio_spark.formats.zarr import iter_decoded_blocks
-
-        for pdf in it:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                local = local_path(path)
-                if os.path.basename(local) == "zarr.json":
-                    continue    # v3 metadata doc, not hidden-file-filtered
-                info = None
-                for arr_dir, cand in arrays.items():
-                    if local.startswith(arr_dir + os.sep):
-                        info = cand
-                        rel = os.path.relpath(local, arr_dir)
-                        break
-                if info is None:
-                    raise KeyError(
-                        f"decode_zarr_chunks: {path!r} not under any "
-                        f"catalogued array root")
-                # "." separator -> flat name "t.c.z.y.x"; "/" separator
-                # -> nested dirs; both normalize through relpath. v3
-                # "default" keys lead with a "c" component.
-                parts = rel.replace(os.sep, ".").split(".")
-                if info.get("key_prefix") and parts[0] == info["key_prefix"]:
-                    parts = parts[1:]
-                grid = [int(p) for p in parts]
-                if len(grid) != len(info["shape"]):
-                    raise ValueError(
-                        f"{rel}: chunk key rank {len(grid)} vs array "
-                        f"rank {len(info['shape'])}")
-                for origin, block in iter_decoded_blocks(
-                        bytes(content), info, grid):
-                    coords = {d: np.zeros(block.size, dtype=np.int32)
-                              for d in "tczyx"}
-                    idx = np.indices(block.shape, dtype=np.int32)
-                    for ai, d in enumerate(info["axes"]):
-                        coords[d] = (idx[ai].ravel()
-                                     + np.int32(origin[ai]))
-                    yield pd.DataFrame({
-                        "scene": info["scene"],
-                        "res_level": np.int32(info.get("res_level", 0)),
-                        "t": coords["t"], "c": coords["c"],
-                        "z": coords["z"], "y": coords["y"],
-                        "x": coords["x"],
-                        "value": block.ravel().astype(np.float64),
-                    })
-
-    paths = ([f"file://{os.path.abspath(f)}" for f in files]
-             if files is not None else [f"file://{d}" for d in arrays])
-    binary = (spark.read.format("binaryFile")
-              .option("recursiveFileLookup", "true")
-              .load(paths))
-    return binary.select("path", "content").mapInPandas(
-        batches,
-        schema="scene string, res_level int, t int, c int, z int, y int, "
-               "x int, value double")
-
-
-def window_chunk_keys(shape, chunks, window) -> list[tuple[int, ...]]:
-    """Grid indices of every chunk intersecting the window — pure
-    arithmetic, no IO. len(result) is the number of FILES a windowed read
-    touches: O(window volume / chunk volume), independent of store size."""
-    import itertools
-
-    ranges = []
-    for (start, stop), c in zip(window, chunks):
-        ranges.append(range(start // c, (stop - 1) // c + 1))
-    return [tuple(g) for g in itertools.product(*ranges)]
-
-
-def _array_of(root: str, level: str | int = 0) -> tuple[str, dict, str]:
-    """(array_dir, decode-info dict, axes) for one store at one level —
-    shared by the windowed and planes read paths; handles Zarr v2 group,
-    v2 bare array, and v3 (group or bare) layouts."""
-    from bioio_spark.formats.zarr import (parse_ngff_attrs,
-                                          parse_zarr3_array, parse_zarray)
-
-    root = root.rstrip("/")
-    v3_doc = _read_doc(root, "zarr.json")
-    if v3_doc is not None:
-        attrs = parse_ngff_attrs(v3_doc)
-        arr_dir = os.path.join(root, str(level))
-        adoc = _read_doc(arr_dir, "zarr.json")
-        if adoc is None:
-            arr_dir, adoc = root, v3_doc
-        za = parse_zarr3_array(adoc)
-    else:
-        attrs_doc = _read_doc(root, ".zattrs")
-        attrs = (parse_ngff_attrs(attrs_doc) if attrs_doc
-                 else {"axes": None, "level_paths": ["0"]})
-        arr_dir = os.path.join(root, str(level))
-        zdoc = _read_doc(arr_dir, ".zarray")
-        if zdoc is None:
-            arr_dir, zdoc = root, _read_doc(root, ".zarray")
-        if zdoc is None:
-            raise ValueError(f"{root}: no .zarray document")
-        za = parse_zarray(zdoc)
-    axes = attrs["axes"] or "tczyx"[-len(za["shape"]):]
-    return arr_dir, za, axes
-
-
-def _decode_info(za: dict, axes: str, **extra) -> dict:
-    """The decode-info dict ``iter_decoded_blocks`` reads, for one
-    parsed array document."""
-    return {"axes": axes, "shape": za["shape"], "chunks": za["chunks"],
-            "dtype": np.dtype(za["dtype"]).str,
-            "compressor": za["compressor"],
-            "key_prefix": za.get("key_prefix"),
-            "gzip_member": za.get("gzip_member", False),
-            "shard": za.get("shard"), **extra}
-
-
-def read_zarr_window(spark: SparkSession, store: str,
-                     t=None, c=None, z=None, y=None, x=None,
-                     level: str | int = 0) -> DataFrame:
-    """Chunk-pruned windowed read of one `.zarr` store: selectors are
-    turned into the exact set of intersecting chunk FILES driver-side
-    (catalog arithmetic only), and the binaryFile scan lists just those —
-    reading one plane of a 100 TB store touches O(plane/chunk) files, not
-    the whole store. The residual trim to exact window bounds is a codegen
-    row filter after decode.
-
-    This is the pushdown the reference gets from tifffile/zarr slicing
-    (ref bio_image.py:764-839 lazy selection); Spark-side it is listing-
-    level pruning, the same lever as parquet partition pruning.
-    """
-    arr_dir, za, axes = _array_of(store, level)
-    sel_of = {"t": t, "c": c, "z": z, "y": y, "x": x}
-    window = [norm_window(sel_of.get(d), s)
-              for d, s in zip(axes, za["shape"])]
-    keys = window_chunk_keys(za["shape"], za["chunks"], window)
-    sep = za["dimension_separator"]
-    prefix = za.get("key_prefix")
-    files = []
-    for k in keys:
-        comps = ([prefix] if prefix else []) + [str(i) for i in k]
-        p = (os.path.join(arr_dir, *comps) if sep == "/"
-             else os.path.join(arr_dir, sep.join(comps)))
-        if os.path.exists(p):       # absent chunk = all fill_value
-            files.append(p)
-    # inner-chunk pruning inside shards: decode only inner chunks
-    # intersecting the window (the local analog of ranged GETs)
-    arrays = {os.path.abspath(arr_dir): _decode_info(
-        za, axes, scene="Image:0", res_level=0,
-        window=[tuple(w) for w in window])}
-    schema = ("scene string, res_level int, t int, c int, z int, y int, "
-              "x int, value double")
-    if not files:   # whole window lives in absent (all-fill) chunks
-        return spark.createDataFrame([], schema)
-    return trim(decode_zarr_chunks(spark, arrays, files=files),
-                **dict(zip(axes, window)))
+                res_levels=[lv for lv, _, _ in levels]))
+            for lv, arr_dir, lza in levels:
+                rows += chunk_rows(arr_dir, lza, axes, scene=scene,
+                                   res_level=lv)
+        return Plan(rows, scenes, channels)

@@ -247,9 +247,10 @@ def test_l2_dedup_collapse_never_shuffles_text(spark):
 
 
 def test_zarr_reader_narrow_decode(spark, tmp_path):
-    """Zarr source: the pixel plan is a pure scan + mapInPandas chain —
-    ZERO exchanges. Decode parallelism comes from the chunk-file count, so
-    at 100 TB the plan stays embarrassingly parallel."""
+    """Zarr source: the full, window and planes reads are each a scan of
+    plan rows + mapInPandas — no Exchange of any kind and no file scan
+    (the plan lists no chunk file). Decode parallelism comes from the
+    chunk count, so at 100 TB the plan stays embarrassingly parallel."""
     import numpy as np
 
     from bioio_spark import BioImage
@@ -260,10 +261,13 @@ def test_zarr_reader_narrow_decode(spark, tmp_path):
     out = str(tmp_path / "p")
     save_ome_zarr(img, out, chunks=(1, 1, 1, 2, 3))
     back = BioImage(out + "/scene_0.zarr", spark=spark)
-    px = back.get_image_dataframe()
-    assert shuffle_count(px) == 0
-    assert "mapInPandas" in physical_plan(px) \
-        or "MapInPandas" in physical_plan(px)
+    for px in (back.get_image_dataframe(),
+               back.read_window(z=1, y=(1, 3)),
+               back.get_planes_dataframe()):
+        plan = physical_plan(px)
+        assert "Exchange" not in plan, plan
+        assert "FileScan" not in plan and "BinaryFile" not in plan, plan
+        assert "MapInPandas" in plan, plan
 
 
 def test_zarr_sink_single_shuffle(spark):

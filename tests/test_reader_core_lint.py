@@ -7,12 +7,12 @@ defaultParallelism))`` plan idiom instead of calling ``plan_scan`` /
 window normalizer that ``planned.norm_window`` now owns, if a source
 module hand-writes a scene- or channel-catalog row instead of calling
 ``array_like.scene_row`` / ``channel_rows``, if a single-raster
-format module re-inlines the scan and decode loop that
-``sources/raster.py`` owns, or if a planned reader's module grows a
-module-level ``def read_…_window(`` / ``def read_…_planes(`` again —
-a planned reader, TIFF included, builds one plan and ``PlannedReader``
-derives its window and planes reads from it; only the Zarr module, whose
-full read is a chunk-file scan rather than a plan, keeps its own."""
+format module re-inlines the decode loop that ``sources/raster.py`` owns,
+if a source module other than ``raster.py``, ``tiff_glob.py`` and
+``binary_media.py`` scans files with ``binaryFile``, or if a source
+module grows a module-level ``def read_…_window(`` / ``def read_…_planes(``
+again — every planned reader, TIFF and Zarr included, builds one plan
+and ``PlannedReader`` derives its window and planes reads from it."""
 
 import os
 import re
@@ -43,12 +43,14 @@ RULES = [
     *((lambda rel: _source_module(rel, allow=("array_like.py",)), pat,
        "catalog rows come from array_like.scene_row / channel_rows")
       for pat in ('"ome_pixel_type":', '"channel_name":')),
-    *((lambda rel: _source_module(rel)
-       and os.path.basename(rel) in RASTER_MODULES, pat,
-       "single-raster readers scan and decode through sources/raster.py")
-      for pat in ("binaryFile", "mapInPandas")),
-    (lambda rel: _source_module(rel, allow=("planned.py",
-                                            "zarr_image.py")),
+    (lambda rel: _source_module(rel)
+     and os.path.basename(rel) in RASTER_MODULES, "mapInPandas",
+     "single-raster readers scan and decode through sources/raster.py"),
+    (lambda rel: _source_module(rel, allow=("raster.py", "tiff_glob.py",
+                                            "binary_media.py")),
+     '"binaryFile"',
+     "a reader decodes its plan's rows; only whole-file readers scan"),
+    (lambda rel: _source_module(rel, allow=("planned.py",)),
      re.compile(r"^def read_\w+_(window|planes)\("),
      "window and planes reads derive from the reader's one plan"),
 ]
@@ -104,7 +106,8 @@ def test_scan_catches_planted_violations(tmp_path):
     (src / "tiff_image.py").write_text(
         "def read_tiff_window(spark, path, t=None):\n")
     (src / "zarr_image.py").write_text(
-        "def read_zarr_window(spark, path, t=None):\n")
+        "def read_zarr_window(spark, path, t=None):\n"
+        'chunks = spark.read.format("binaryFile").load(store)\n')
     (src / "planned.py").write_text(
         "n = min(n, spark.sparkContext.defaultParallelism))\n")
     catalog = ('row = {"ome_pixel_type": "uint8"}\n'
@@ -122,15 +125,18 @@ def test_scan_catches_planted_violations(tmp_path):
              str(src / "raster.py"), str(src / "tiff_image.py"),
              str(src / "zarr_image.py")]
     hits = _violations(paths, root=str(tmp_path))
-    assert len(hits) == 9, hits
+    assert len(hits) == 11, hits
     files = [os.path.basename(h.split(":")[0]) for h in hits]
-    assert not {"planned.py", "array_like.py", "raster.py",
-                "zarr_image.py"} & set(files)
+    assert not {"planned.py", "array_like.py", "raster.py"} & set(files)
     # the module-level read_fake_window, not the nested read_fake_planes
     assert files.count("fake_image.py") == 5
     assert [h for h in hits if "one plan" in h] == [
         f"bioio_spark/sources/{f} "
         "^def read_\\w+_(window|planes)\\( "
         "(window and planes reads derive from the reader's one plan)"
-        for f in ("fake_image.py:4:", "tiff_image.py:1:")]
+        for f in ("fake_image.py:4:", "tiff_image.py:1:",
+                  "zarr_image.py:1:")]
+    assert [h.split(" ")[0] for h in hits if "binaryFile" in h] == [
+        "bioio_spark/sources/gif_image.py:1:",
+        "bioio_spark/sources/zarr_image.py:2:"]
     assert files.count("gif_image.py") == 2

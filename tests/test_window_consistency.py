@@ -77,6 +77,22 @@ def _write_fixture(fmt, vol, tmp_path, spark):
         save_ome_zarr(BioImage(vol, spark=spark), str(out),
                       chunks=(1, 1, 2, 3, 4), compressor="zstd")
         return str(out / "scene_0.zarr")
+    if fmt == "zarr_tdeep":
+        # chunks two timepoints deep: a plan row spans t and t + 1
+        from bioio_spark.writers import save_ome_zarr
+
+        out = tmp_path / "w_zarr_tdeep"
+        save_ome_zarr(BioImage(vol, spark=spark), str(out),
+                      chunks=(2, 1, 1, 4, 5))
+        return str(out / "scene_0.zarr")
+    if fmt == "zarr_multiscene":
+        # a two-scene save_ome_zarr directory: the window reads scene 0
+        from bioio_spark.writers import save_ome_zarr
+
+        out = tmp_path / "w_zarr_multiscene"
+        save_ome_zarr(BioImage([vol, vol[:1] + 1], spark=spark), str(out),
+                      chunks=(1, 1, 2, 3, 4))
+        return str(out)
     if fmt == "zarr_sharded":
         # a Zarr v3 store whose shards (stored objects) hold 2x2 inner
         # chunks: reads decode inner chunks, so rows follow that grid
@@ -201,11 +217,11 @@ WINDOWS = [
 ]
 
 WINDOW_FORMATS = ["tiff", "tiff_dir", "tiff_imagej_contiguous", "zarr",
-                  "zarr_sharded", "dv", "czi", "nd2", "lif", "lsm", "oif",
+                  "zarr_sharded", "zarr_tdeep", "zarr_multiscene", "dv", "czi", "nd2", "lif", "lsm", "oif",
                   "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
                   *VIDEO, "sldy"]
 PLANES_FORMATS = {"tiff", "tiff_dir", "tiff_imagej_contiguous", "zarr",
-                  "zarr_sharded", "dv", "czi", "nd2", "lif", "lsm", "oif",
+                  "zarr_sharded", "zarr_tdeep", "zarr_multiscene", "dv", "czi", "nd2", "lif", "lsm", "oif",
                   "oib", "ims", "stk", "dicom", "mrc", "zvi", "dng", "pic",
                   *VIDEO, "sldy"}
 
@@ -355,11 +371,15 @@ def _write_data_fixture(case, tmp_path, spark):
         p = tmp_path / "mm.tif"
         p.write_bytes(_mm_tiff(vol[1, 1, 2]))
         return [vol[1:2, 1:2, 2:3]], str(p)
+    if case == "zarr_multiscene":
+        return [vol, vol[:1] + 1], _write_fixture(case, vol, tmp_path,
+                                                  spark)
     return [_fixture_vol(case)], _write_fixture(
         case, _fixture_vol(case), tmp_path, spark)
 
 
-@pytest.mark.parametrize("case", ["tiff", "zarr", "zarr_sharded", "czi",
+@pytest.mark.parametrize("case", ["tiff", "zarr", "zarr_sharded",
+                                  "zarr_tdeep", "zarr_multiscene", "czi",
                                   "tiff_uint8", "tiff_int16",
                                   "tiff_float32", "tiff_multiscene",
                                   "tiff_mm"])
@@ -383,6 +403,42 @@ def test_native_data_matches_pixel_frame(spark, tmp_path, case):
         assert img.data.dtype == want.dtype == vol.dtype, case
         np.testing.assert_array_equal(img.data, want, err_msg=case)
         np.testing.assert_array_equal(img.data, vol, err_msg=case)
+
+
+def test_sparse_zarr_absent_chunk_reads_as_no_rows(spark, tmp_path):
+    """A store with one chunk file deleted: the window, planes and full
+    reads hold no rows for that chunk and every other pixel exactly, and
+    ``data`` holds zeros there."""
+    import os
+
+    from bioio_spark.operators.planes import planes_to_pixels
+
+    vol = _vol()
+    store = _write_fixture("zarr", vol, tmp_path, spark)
+    os.remove(os.path.join(store, "0", "1.0.0.0.1"))
+    present = np.ones(vol.shape, bool)
+    present[1, 0, 0:2, 0:3, 4:8] = False
+    img = BioImage(store, spark=spark)
+    np.testing.assert_array_equal(img.data, np.where(present, vol, 0))
+
+    def rows(df):
+        return sorted(map(tuple, df.select("t", "c", "z", "y", "x",
+                                           "value").collect()))
+
+    def expect(mask):
+        return sorted((*map(int, i), float(vol[tuple(i)]))
+                      for i in np.argwhere(mask & present))
+
+    assert rows(img.get_image_dataframe()) == expect(present)
+    assert rows(planes_to_pixels(img.get_planes_dataframe())) == \
+        expect(present)
+    for win in WINDOWS:
+        assert img._reader.read_window(spark, img, **win) is not None
+        mask = np.zeros(vol.shape, bool)
+        mask[tuple(slice(s, s + 1) if isinstance(s, int)
+                   else slice(*s) if isinstance(s, tuple) else slice(None)
+                   for s in (win.get(d) for d in "tczyx"))] = True
+        assert rows(img.read_window(**win)) == expect(mask), win
 
 
 def _write_catalog_fixture(case, tmp_path, spark):

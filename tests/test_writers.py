@@ -289,11 +289,15 @@ def test_read_parquet_image_sidecar_missing_or_malformed(spark, tmp_path):
         read_parquet_image(spark, out)
 
 
-def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
+def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs,
+                                              monkeypatch):
     """A sharded Zarr source's planes read declares its inner-chunk grid,
     not its shard shape: a re-save takes the tile path only for chunks
-    inside one inner chunk, and round-trips either way. An empty scene
-    selection writes nothing and runs no job."""
+    inside one inner chunk, and round-trips either way. The grouped
+    path's exchange is no longer a sign of it: this image's plan reads
+    in one task, already grouped. An empty scene selection writes
+    nothing and runs no job."""
+    import bioio_spark.writers as writers
     from bioio_spark import BioImage
     from bioio_spark.sources.planned import tile_of
     from bioio_spark.sources.zarr_image import ZarrImageReader
@@ -308,6 +312,10 @@ def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
     img = BioImage(str(src / "scene_0.zarr"), reader=ZarrImageReader,
                    spark=spark)
     assert tile_of(img.get_planes_dataframe()) == (4, 4)
+    # the tile path runs exactly where _tile_writes finds tile reads
+    tile_writes, found = writers._tile_writes, []
+    monkeypatch.setattr(writers, "_tile_writes", lambda img, meta, enc: (
+        found.append(tile_writes(img, meta, enc)) or found[-1]))
     # default chunks are the whole 8x8 plane: larger than an inner chunk
     cases = {"default": {}, "wider": dict(chunks=(1, 1, 1, 4, 8)),
              "fits": dict(chunks=(1, 1, 1, 2, 4))}
@@ -315,10 +323,10 @@ def test_save_ome_zarr_resaves_sharded_source(spark, tmp_path, count_jobs):
         out = str(tmp_path / name)
         report, jobs, shuffle = count_jobs(
             lambda: save_ome_zarr(img, out, **kw))
-        if name == "fits":
+        tile_path = found.pop() is not None
+        assert tile_path == (name == "fits"), name
+        if tile_path:
             assert (jobs, shuffle) == (1, 0)
-        else:
-            assert shuffle > 0, name
         back = BioImage(out, reader=ZarrImageReader, spark=spark)
         np.testing.assert_array_equal(back.data, a, err_msg=name)
     report, jobs, _ = count_jobs(lambda: save_ome_zarr(

@@ -213,26 +213,34 @@ def test_ome_zarr_writer_class_and_save_routing(spark, tmp_path):
     np.testing.assert_array_equal(back2.get_image_data()[0, 0], a)
 
 
-def test_window_chunk_keys_arithmetic():
-    """Pruning planner is pure arithmetic: the file count a windowed read
-    touches is O(window/chunk), independent of store size."""
-    from bioio_spark.sources.zarr_image import window_chunk_keys
+def test_window_chunk_keys_arithmetic(spark, tmp_path):
+    """Window pruning is pure arithmetic over the array document: the
+    plan rows a windowed read decodes are O(window/chunk), independent
+    of store size — planned from a store that holds no chunk file."""
+    from bioio_spark import BioImage
 
     shape, chunks = (4, 2, 10, 100, 100), (1, 1, 2, 32, 32)
+    root = tmp_path / "meta_only.zarr"
+    (root / "0").mkdir(parents=True)
+    (root / ".zattrs").write_text(build_ngff_attrs(None, None))
+    (root / "0" / ".zarray").write_text(build_zarray(shape, chunks,
+                                                     "uint8"))
+    img = BioImage(str(root), spark=spark)
+    reader = img._reader
     # one z-plane window in a corner
-    keys = window_chunk_keys(
-        shape, chunks, [(1, 2), (0, 1), (4, 5), (0, 40), (0, 40)])
-    assert len(keys) == 1 * 1 * 1 * 2 * 2
-    assert keys[0] == (1, 0, 2, 0, 0)
+    rows, _ = reader.window_rows(img, t=1, c=0, z=4, y=(0, 40),
+                                 x=(0, 40))
+    assert len(rows) == 1 * 1 * 1 * 2 * 2
+    first = rows.iloc[0]
+    assert (first.t, first.c, first.z, first.y0, first.x0) == \
+        (1, 0, 4, 0, 0)
     # full-store window = full grid
-    full = window_chunk_keys(
-        shape, chunks, [(0, 4), (0, 2), (0, 10), (0, 100), (0, 100)])
-    assert len(full) == 4 * 2 * 5 * 4 * 4
+    rows, _ = reader.window_rows(img)
+    assert len(rows) == 4 * 2 * 5 * 4 * 4
 
 
 def test_read_zarr_window_prunes_and_matches(spark, tmp_path):
     from bioio_spark import BioImage
-    from bioio_spark.sources.zarr_image import read_zarr_window
     from bioio_spark.writers import save_ome_zarr
 
     rng = np.random.default_rng(23)
@@ -242,7 +250,8 @@ def test_read_zarr_window_prunes_and_matches(spark, tmp_path):
     save_ome_zarr(img, out, chunks=(1, 1, 2, 3, 4))
     store = os.path.join(out, "scene_0.zarr")
 
-    df = read_zarr_window(spark, store, t=1, z=(1, 3), y=range(2, 7),
+    back = BioImage(store, spark=spark)
+    df = back.read_window(t=1, z=(1, 3), y=range(2, 7),
                           x=(0, 9)).toPandas()
     want = a[1, :, 1:3, 2:7, :]
     assert len(df) == want.size
@@ -250,7 +259,7 @@ def test_read_zarr_window_prunes_and_matches(spark, tmp_path):
     got[df["c"], df["z"] - 1, df["y"] - 2, df["x"]] = df["value"]
     np.testing.assert_array_equal(got, want)
     # single-pixel probe
-    one = read_zarr_window(spark, store, t=0, c=1, z=3, y=7, x=8).toPandas()
+    one = back.read_window(t=0, c=1, z=3, y=7, x=8).toPandas()
     assert len(one) == 1 and one["value"].iloc[0] == a[0, 1, 3, 7, 8]
 
 
@@ -314,15 +323,15 @@ def test_reads_zarr_v3_ngff05_store(spark, tmp_path):
 
 
 def test_zarr_v3_window_read(spark, tmp_path):
-    from bioio_spark.sources.zarr_image import read_zarr_window
+    from bioio_spark import BioImage
 
     rng = np.random.default_rng(37)
     full = rng.integers(0, 255, (4, 6, 8), dtype=np.uint8)
     root = tmp_path / "v3w.zarr"
     _write_v3_store(root, full, (2, 2, 3), gzip_codec=False)
 
-    df = read_zarr_window(spark, str(root), z=(1, 3), y=2,
-                          x=(3, 7)).toPandas()
+    df = BioImage(str(root), spark=spark).read_window(
+        z=(1, 3), y=2, x=(3, 7)).toPandas()
     want = full[1:3, 2, 3:7]
     assert len(df) == want.size
     got = np.zeros_like(want)
@@ -365,15 +374,14 @@ def test_zarr_v3_bare_array_low_rank(spark, tmp_path):
     the 5D default mis-bound z/y/x selectors to t/c/z and the chunk
     enumerator raised IndexError."""
     from bioio_spark import BioImage
-    from bioio_spark.sources.zarr_image import read_zarr_window
 
     rng = np.random.default_rng(41)
     full = rng.integers(0, 255, (4, 6, 8), dtype=np.uint8)
     root = tmp_path / "bare3.zarr"
     _write_v3_bare_array(root, full, (2, 3, 3))
 
-    df = read_zarr_window(spark, str(root), z=(1, 3), y=2,
-                          x=(3, 7)).toPandas()
+    df = BioImage(str(root), spark=spark).read_window(
+        z=(1, 3), y=2, x=(3, 7)).toPandas()
     want = full[1:3, 2, 3:7]
     assert len(df) == want.size
     got = np.zeros_like(want)
@@ -526,27 +534,74 @@ def test_shard_block_roundtrip(crc, loc):
     np.testing.assert_array_equal(out, block)
 
 
-def test_shard_window_prunes_inner_chunks():
-    """Inner chunks outside the window are never inflated (their index
-    entries are skipped), and edge-overhanging inner chunks trim."""
+def test_shard_window_prunes_inner_chunks(spark, tmp_path):
+    """A sharded plan holds one row per inner chunk, so a window keeps
+    only the inner chunks it meets (the rest are never inflated), and
+    an inner chunk overhanging the array edge trims to it."""
+    from bioio_spark import BioImage
+    from bioio_spark.sources.zarr_image import ZarrImageReader
+    from bioio_spark.writers import save_ome_zarr
+
+    a = (np.arange(3)[:, None] * 10 + np.arange(6) + 1).astype(
+        np.uint8).reshape(1, 1, 1, 3, 6)
+    out = str(tmp_path / "edge")
+    save_ome_zarr(BioImage(a, spark=spark), out, chunks=(1, 1, 1, 2, 3),
+                  shards=(1, 1, 1, 4, 6), ngff_version="0.5")
+    img = BioImage(out + "/scene_0.zarr", spark=spark)
+    reader = img._reader
+    assert len(reader.window_rows(img)[0]) == 4     # one shard, 2x2
+    rows, _ = reader.window_rows(img, y=(0, 2), x=(3, 6))
+    assert len(rows) == 1 and (rows.y0.iloc[0], rows.x0.iloc[0]) == (0, 3)
+    [(r, tile)] = ZarrImageReader.decode_tiles(rows)
+    np.testing.assert_array_equal(tile, a[0, 0, 0, 0:2, 3:6])
+    # rows 2.. of the shard trim to the 3-row array: window over row 2
+    rows, _ = reader.window_rows(img, y=2)
+    assert sorted(zip(rows.y0, rows.x0)) == [(2, 0), (2, 3)]
+    got = list(ZarrImageReader.decode_tiles(rows))
+    assert all(tile.shape == (1, 3) for _, tile in got)
+    for r, tile in got:
+        np.testing.assert_array_equal(tile, a[0, 0, 0, 2:3,
+                                              r.x0:r.x0 + 3])
+
+
+def test_missing_inner_chunk_decodes_as_fill_value():
+    """An all-zero inner chunk is stored as missing; decoding reads it
+    back as the array's fill_value, the rest exactly."""
     from bioio_spark.formats.zarr import encode_shard, iter_decoded_blocks
 
-    block = np.zeros((4, 6), np.uint8)
-    block[:] = np.arange(6)[None, :] + 1
-    data = encode_shard(block, (2, 3), compressor=None)
-    info = {"shape": (3, 6), "chunks": (4, 6), "dtype": "|u1",
-            "compressor": None, "gzip_member": False,
+    block = np.arange(1, 25, dtype=np.uint16).reshape(4, 6)
+    block[0:2, 3:6] = 0
+    data = encode_shard(block, (2, 3), compressor="zlib")
+    info = {"shape": (4, 6), "chunks": (4, 6), "dtype": "<u2",
+            "compressor": "zlib", "gzip_member": True, "fill_value": 5,
             "shard": {"inner_chunks": (2, 3), "crc": True,
-                      "index_location": "end"},
-            "window": [(0, 2), (3, 6)]}
-    got = list(iter_decoded_blocks(data, info, (0, 0)))
-    assert [o for o, _ in got] == [(0, 3)]
-    np.testing.assert_array_equal(got[0][1], block[0:2, 3:6])
-    # rows 2.. of the shard trim to the 3-row array: window over row 2
-    info["window"] = [(2, 3), (0, 6)]
-    got = list(iter_decoded_blocks(data, info, (0, 0)))
-    assert sorted(o for o, _ in got) == [(2, 0), (2, 3)]
-    assert all(b.shape == (1, 3) for _, b in got)
+                      "index_location": "end"}}
+    out = np.zeros((4, 6), np.uint16)
+    for origin, b in iter_decoded_blocks(data, info, (0, 0)):
+        out[origin[0]:origin[0] + 2, origin[1]:origin[1] + 3] = b
+    want = block.copy()
+    want[0:2, 3:6] = 5
+    np.testing.assert_array_equal(out, want)
+
+
+def test_truncated_shard_file_fails_loudly(tmp_path):
+    """A shard read through ranged reads whose object is shorter than
+    its index raises the codec's clear error, not a failed seek."""
+    import functools
+
+    from bioio_spark.formats.zarr import encode_shard, iter_decoded_blocks
+    from bioio_spark.fsio import read_range
+
+    data = encode_shard(np.ones((2, 2), np.uint8), (1, 2))
+    p = tmp_path / "shard"
+    p.write_bytes(data[-10:])
+    info = {"shape": (2, 2), "chunks": (2, 2), "dtype": "|u1",
+            "compressor": "zlib", "gzip_member": True,
+            "shard": {"inner_chunks": (1, 2), "crc": True,
+                      "index_location": "end"}}
+    with pytest.raises(ValueError, match="too small"):
+        list(iter_decoded_blocks(functools.partial(read_range, str(p)),
+                                 info, (0, 0)))
 
 
 def test_zarr3_array_doc_sharded_roundtrip():
@@ -570,8 +625,7 @@ def test_save_ome_zarr_sharded_roundtrip(spark, tmp_path):
     import shutil
 
     from bioio_spark import BioImage
-    from bioio_spark.sources.zarr_image import (ZarrImageReader,
-                                                read_zarr_window)
+    from bioio_spark.sources.zarr_image import ZarrImageReader
     from bioio_spark.writers import save_ome_zarr
 
     idx = np.indices((2, 2, 2, 8, 12))
@@ -589,8 +643,8 @@ def test_save_ome_zarr_sharded_roundtrip(spark, tmp_path):
     back = BioImage(store, reader=ZarrImageReader, spark=spark)
     np.testing.assert_array_equal(
         back.get_image_data("TCZYX").astype(np.uint32), block)
-    w = read_zarr_window(spark, store, t=1, c=0, z=(0, 2),
-                         y=(2, 6), x=(3, 9)).toPandas()
+    w = back.read_window(t=1, c=0, z=(0, 2), y=(2, 6),
+                         x=(3, 9)).toPandas()
     exp = block[1, 0, 0:2, 2:6, 3:9]
     win = np.zeros_like(exp)
     win[w["z"], w["y"] - 2, w["x"] - 3] = w["value"].astype(np.uint32)

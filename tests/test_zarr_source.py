@@ -25,8 +25,8 @@ def store(spark, tmp_path_factory):
 
 
 def test_planning_time_chunk_pruning(store):
-    """Unit-level: pushed filters shrink the partition list to the chunks
-    whose coordinate ranges intersect — O(window/chunk) tasks."""
+    """Unit-level: pushed filters shrink the partition list to the plan
+    rows (chunks) whose extents intersect — O(window/chunk) tasks."""
     from pyspark.sql.datasource import EqualTo, LessThan
 
     path, a = store
@@ -40,8 +40,7 @@ def test_planning_time_chunk_pruning(store):
     # t=1 -> 1 grid slot; z=0 -> chunk z-range [0,2) -> 1 slot;
     # y<3 -> first y chunk only; c and x unconstrained (2 * 3)
     assert len(pruned) == 1 * 2 * 1 * 1 * 3
-    assert all(p.grid[0] == 1 and p.grid[2] == 0 and p.grid[3] == 0
-               for p in pruned)
+    assert all(p.t == 1 and p.z == 0 and p.y0 == 0 for p in pruned)
 
 
 def test_end_to_end_filter_equals_window(spark, store):
